@@ -1,9 +1,14 @@
 package graft.api
 
 import java.net.InetSocketAddress
+import java.util.concurrent.{Executor, ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import scala.util.control.NonFatal
+
+import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.slf4j.LoggerFactory
 
 /** The serving BOUNDARY for the reference's four HTTP entry points
   * (`src/tropology/handler.clj` Ring routes, public repo) on the JDK's
@@ -15,23 +20,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   GET /api/common/{a}/{b}     → `common-links-between` rows (JSON array)
   *   GET /api/node/{orderKey}    → `node-info` row (JSON array)
   *
-  * This is deliberately a THIN boundary, not a production server: the
-  * engine's contract is the [[TropologyApi]] library surface, every route
-  * is one library call, and the `collect()` here is the definition of
-  * serving (an HTTP response IS a driver-side materialization of a small,
-  * top-k-bounded payload) — not a hot-path anti-pattern. Anything heavier
-  * (thread pools, caching, auth) belongs to the deployment, not the
-  * engine. NetworkApiSpec round-trips GET /api/network against the golden
-  * payload byte-for-byte.
+  * Every route is one [[TropologyApi]] call, a point lookup over the
+  * maintained serving tables, and the `collect()` here is the definition
+  * of serving (an HTTP response IS a driver-side materialization of a
+  * small, top-k-bounded payload). Requests run concurrently on a pool of
+  * daemon threads sized to the session's `defaultParallelism`, so each
+  * in-flight request can keep one core busy with its small jobs; the pool
+  * is shut down by the returned server's `stop`. Unknown routes and
+  * non-numeric keys answer 404, methods other than GET 405, and a failing
+  * lookup 500 (logged). Caching and auth belong to the deployment.
+  * NetworkApiSpec round-trips every route against the in-process results.
   */
 object ApiServer {
+
+  private val log = LoggerFactory.getLogger(getClass)
 
   /** Start on 127.0.0.1:`port` (0 = ephemeral; read the bound port from
     * `getAddress.getPort`). Caller owns the lifecycle: `stop(0)` when done.
     */
   def start(s: SparkSession, dir: String, port: Int = 0): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    def rows(df: DataFrame): String = df.toJSON.collect().mkString("[", ",", "]")
+    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val threadName = s"graft-api-${http.getAddress.getPort}-"
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(s.sparkContext.defaultParallelism, (r: Runnable) => {
+      val t = new Thread(r, threadName + threads.incrementAndGet())
+      t.setDaemon(true)
+      t
+    })
+    http.setExecutor(pool)
     def route(path: List[String]): Option[String] = path match {
       // The payload builder picks its deterministic hub; a trailing code
       // segment is accepted (the reference route shape) and echoed back by
@@ -46,23 +62,55 @@ object ApiServer {
         Some(rows(TropologyApi.nodeInfo(s, dir, k.toLong)))
       case _ => None
     }
-    server.createContext("/api", (ex: HttpExchange) => {
-      val body =
-        try route(ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList)
-        catch { case _: NumberFormatException => None }
-      body match {
-        case Some(json) =>
+    http.createContext("/api", (ex: HttpExchange) => {
+      val reply =
+        if (ex.getRequestMethod != "GET") {
+          ex.getResponseHeaders.add("Allow", "GET")
+          Left(405)
+        } else
+          try route(ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList).toRight(404)
+          catch {
+            case _: NumberFormatException => Left(404)
+            case NonFatal(e) =>
+              log.error(s"${ex.getRequestMethod} ${ex.getRequestURI} failed", e)
+              Left(500)
+          }
+      try reply match {
+        case Right(json) =>
           val bytes = json.getBytes("UTF-8")
           ex.getResponseHeaders.add("Content-Type", "application/json")
           ex.sendResponseHeaders(200, bytes.length.toLong)
           ex.getResponseBody.write(bytes)
-          ex.close()
-        case None =>
-          ex.sendResponseHeaders(404, -1L)
-          ex.close()
-      }
+        case Left(status) =>
+          ex.sendResponseHeaders(status, -1L)
+      } finally ex.close()
     })
-    server.start()
-    server
+    http.start()
+    new PooledServer(http, pool)
+  }
+
+  /** A JSON array of `df`'s rows: the body of every row-returning route. */
+  private[graft] def rows(df: DataFrame): String = df.toJSON.collect().mkString("[", ",", "]")
+
+  /** `http` with its request pool: `stop` also stops the pool's threads,
+    * interrupting any request still running, so none outlives the server.
+    */
+  private final class PooledServer(http: HttpServer, pool: ExecutorService)
+      extends HttpServer {
+    def bind(addr: InetSocketAddress, backlog: Int): Unit = http.bind(addr, backlog)
+    def start(): Unit = http.start()
+    def setExecutor(e: Executor): Unit = http.setExecutor(e)
+    def getExecutor: Executor = http.getExecutor
+    def stop(delay: Int): Unit = {
+      http.stop(delay)
+      pool.shutdownNow()
+      pool.awaitTermination(30, TimeUnit.SECONDS): Unit
+    }
+    def createContext(path: String, handler: HttpHandler): HttpContext =
+      http.createContext(path, handler)
+    def createContext(path: String): HttpContext = http.createContext(path)
+    def removeContext(path: String): Unit = http.removeContext(path)
+    def removeContext(context: HttpContext): Unit = http.removeContext(context)
+    def getAddress: InetSocketAddress = http.getAddress
   }
 }

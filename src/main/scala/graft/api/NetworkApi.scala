@@ -2,14 +2,20 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** The reference's E2 entry point (SURVEY.md §4): the network/neighborhood
   * API payload — `{node, nodes:[{id,label,size,x,y}…], edges:[…]}` —
   * that `src/tropology/api.clj` (public repo) assembled in Clojure for the
-  * Sigma.js canvas, re-expressed as one declarative plan:
-  * filter hub → top-k neighbors by in-degree → resolve attributes →
+  * Sigma.js canvas, re-expressed as two lookups and one declarative plan:
+  * hub → its parts → top-k neighbors by in-degree →
   * `collect_list(struct(…))` → `to_json`.
+  *
+  * Served from [[TropologyApi]]'s maintained tables: the hub is the top-1
+  * of `orderStats` by `outgoing` (ties to the smaller order key), its
+  * parts come from one bucket of `orderLinks`, and their names and
+  * in-degrees from the buckets of `partDegrees` that hold them. A request
+  * neither dedups nor checkpoints the edges; its one whole-table step is
+  * the top-1 over the per-order stats.
   *
   * Layout coordinates: the reference used random x/y per render; an
   * unseeded rand would break golden-file testing (SURVEY.md §6.3), so
@@ -24,20 +30,20 @@ object NetworkApi {
 
   /** Single-row DataFrame with column `payload` holding the network JSON
     * for the hub order (most distinct parts) over the order↔part graph.
+    * Looks up the hub and its parts when called.
     */
   def neighborhoodPayload(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val e = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      .localCheckpoint() // eager (r16): 3 consumers, no action between (policy)
-    val hub = e.groupBy(col("o")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("o").asc).limit(1)
-      .select(col("o").as("hub_o"), col("n").as("hub_deg"))
-    val indeg = e.groupBy(col("p")).agg(count(lit(1)).as("part_indeg"))
-    val neighbors = e.join(broadcast(hub), col("o") === col("hub_o"))
-      .join(indeg, Seq("p"))
-      .join(Tables.part(s, dir), col("p") === col("p_partkey"))
-      .orderBy(col("part_indeg").desc, col("p").asc)
+    val hub = TropologyApi.orderStats(s, dir)
+      .orderBy(col("outgoing").desc, col("o_orderkey").asc).limit(1)
+      .select(col("o_orderkey"), col("outgoing")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).headOption
+    val parts = hub.toSeq.flatMap { case (o, _) => TropologyApi.partsOf(s, dir, o)(o) }
+    val (hubO, hubDeg) = hub.getOrElse((0L, 0L))
+    val neighbors = TropologyApi.partRows(s, dir, parts)
+      .orderBy(col("in_degree").desc, col("p").asc)
       .limit(k)
+      .select(lit(hubO).as("hub_o"), lit(hubDeg).as("hub_deg"), col("p"),
+        col("p_name"), col("in_degree").as("part_indeg"))
 
     neighbors
       .groupBy(col("hub_o"), col("hub_deg"))

@@ -55,7 +55,7 @@ object Graph extends QueryPack {
     * count (Spark matches equal counts; unions of pow2 tables re-bucket
     * cheaply).
     */
-  private def linkBuckets(s: SparkSession, d: String): Int = {
+  private[graft] def linkBuckets(s: SparkSession, d: String): Int = {
     val p = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
     val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getContentSummary(p).getLength

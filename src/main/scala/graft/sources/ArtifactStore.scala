@@ -56,18 +56,27 @@ object ArtifactStore {
     * bucket assignment uses the same murmur3 family, so each task holds
     * exactly one bucket's rows and the table lands as one file per bucket
     * (an unrepartitioned bucketed write fans out to tasks × buckets files).
+    * The JVM-wide lock is taken only while a table is not yet known to be
+    * built, so concurrent readers of a built table (the API server's
+    * request threads) never serialize here; `buckets` is evaluated only
+    * for a build.
     */
   def bucketedTable(s: SparkSession, d: String, name: String,
-      buckets: Int, bucketCol: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      val tbl = s"graft_${name}_${keyHash(s, d)}"
-      if (!s.catalog.tableExists(tbl)) {
+      buckets: => Int, bucketCol: String)(build: => DataFrame): DataFrame = {
+    val tbl = s"graft_${name}_${keyHash(s, d)}"
+    if (!built.contains(tbl)) synchronized {
+      if (!built.contains(tbl) && !s.catalog.tableExists(tbl)) {
         build.repartition(buckets, col(bucketCol))
           .write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
           .saveAsTable(tbl)
       }
-      s.table(tbl)
+      built.add(tbl)
     }
+    s.table(tbl)
+  }
+
+  private val built =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private val published =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.api.NetworkApi
 
@@ -14,6 +16,7 @@ class NetworkApiSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   private val golden = "src/test/resources/golden/network_payload_sf0001.json"
+  private val dir = "/root/testdata/sf0.001"
 
   test("neighborhood payload matches the golden fixture byte-for-byte") {
     val got = NetworkApi.neighborhoodPayload(spark, "/root/testdata/sf0.001")
@@ -72,7 +75,92 @@ class NetworkApiSpec extends AnyFunSuite {
       // Unknown routes and non-numeric keys are 404, not a server error.
       assert(get("/api/nope").statusCode() === 404)
       assert(get("/api/node/abc").statusCode() === 404)
+
+      // Only GET is served.
+      val post = client.send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port/api/node/1"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.noBody()).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(post.statusCode() === 405)
+      assert(post.headers().firstValue("Allow").orElse("") === "GET")
     } finally server.stop(0)
+  }
+
+  test("serving boundary: a lookup that throws answers 500, not a dropped connection") {
+    // No tables under an empty dir: every lookup fails inside the handler.
+    val empty = Files.createTempDirectory("graft_empty_sf")
+    val server = graft.api.ApiServer.start(spark, empty.toString)
+    try {
+      val get = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${server.getAddress.getPort}/api/node/1")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(get.statusCode() === 500)
+    } finally {
+      server.stop(0)
+      Files.delete(empty)
+    }
+  }
+
+  test("serving boundary: 4 concurrent clients over all four routes get the in-process results") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions._
+    import graft.api.{ApiServer, TropologyApi}
+    val spark0 = spark
+    import spark0.implicits._
+    val e = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    val orders = e.select("o").distinct().orderBy("o").as[Long].take(6).toSeq
+    val pairs = e.as("x").join(e.as("y"), col("x.p") === col("y.p") && col("x.o") < col("y.o"))
+      .select(col("x.o"), col("y.o")).orderBy(col("x.o"), col("y.o")).as[(Long, Long)]
+      .take(3).toSeq
+    // Every body as ApiServer renders the in-process TropologyApi result,
+    // including a key with no order (empty array).
+    val expected: Map[String, String] = (
+      (orders :+ -1L).flatMap(k => Seq(
+        s"/api/node/$k" -> ApiServer.rows(TropologyApi.nodeInfo(spark, dir, k)),
+        s"/api/links/$k" -> ApiServer.rows(TropologyApi.linksForArticle(spark, dir, k)))) ++
+      pairs.map { case (a, b) =>
+        s"/api/common/$a/$b" -> ApiServer.rows(TropologyApi.commonLinksBetween(spark, dir, a, b)) } :+
+      ("/api/network" -> TropologyApi.networkForNode(spark, dir).collect()(0).getString(0))
+    ).toMap
+    assert(expected.keys.map(_.split("/")(2)).toSet === Set("node", "links", "common", "network"))
+
+    val server = ApiServer.start(spark, dir)
+    val port = server.getAddress.getPort
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(s"graft-api-$port-"))
+    val clients = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val paths = expected.keys.toSeq.sorted
+      val replies = (0 until 4).map { c =>
+        clients.submit(() => {
+          val client = java.net.http.HttpClient.newHttpClient()
+          // Each client walks the whole pool from its own offset, so the
+          // four keep different routes in flight at once.
+          (paths.drop(c * paths.size / 4) ++ paths.take(c * paths.size / 4)).map { path =>
+            val r = client.send(java.net.http.HttpRequest.newBuilder(
+              java.net.URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+              java.net.http.HttpResponse.BodyHandlers.ofString())
+            (path, r.statusCode(), r.body())
+          }
+        })
+      }.flatMap(_.get())
+      assert(replies.size === 4 * paths.size)
+      replies.foreach { case (path, status, body) =>
+        assert(status === 200, path)
+        assert(body === expected(path), path)
+      }
+      assert(poolThreads.size > 1, "requests must run on the server's pool")
+    } finally {
+      clients.shutdownNow()
+      server.stop(0)
+    }
+    // A terminated pool's workers finish exiting just after stop returns.
+    eventually(timeout(Span(5, Seconds))) {
+      assert(poolThreads.isEmpty, "no pool thread may outlive stop")
+    }
   }
 
   test("TropologyApi facade: links-for-article, common-links, node-info agree with first principles") {

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * they exist for — no Exchange before the key aggregations, file scans
   * instead of per-session rederivation.
   */
-class PersistedLayoutSpec extends AnyFunSuite {
+class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -51,6 +53,36 @@ class PersistedLayoutSpec extends AnyFunSuite {
       assert(exchanges(joined.queryExecution.explainString(FormattedMode)) == 0)
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  test("node-info and links-for-article read one bucket per key: no edge aggregation, checkpoint or Exchange") {
+    import graft.api.TropologyApi
+    def scans(df: DataFrame): Seq[FileSourceScanExec] =
+      collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+    def buckets(f: FileSourceScanExec): Option[Int] = f.optionalBucketSet.map(_.cardinality())
+    val row = TropologyApi.orderStats(spark, dir).filter(col("outgoing") >= 2)
+      .orderBy("o_orderkey").select("o_orderkey", "outgoing").head()
+    val (key, parts) = (row.getLong(0), row.getLong(1).toInt)
+
+    val info = TropologyApi.nodeInfo(spark, dir, key)
+    val links = TropologyApi.linksForArticle(spark, dir, key)
+    for (df <- Seq(info, links)) {
+      val p = df.queryExecution.explainString(FormattedMode)
+      assert(!p.contains("HashAggregate") && !p.contains("ExistingRDD") &&
+        exchanges(p) == 0, p.take(3000))
+    }
+    val Seq(infoScan) = scans(info)
+    assert(infoScan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_stats_")))
+    assert(buckets(infoScan) === Some(1))
+    // links-for-article resolves the order's parts from one bucket of the
+    // o-bucketed edge table, then reads only the part buckets holding them.
+    val Seq(edgeScan) = scans(TropologyApi.edgesOf(spark, dir, key))
+    assert(edgeScan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_links_")))
+    assert(buckets(edgeScan) === Some(1))
+    val Seq(partScan) = scans(links)
+    assert(partScan.tableIdentifier.exists(_.table.startsWith("graft_serve_part_degrees_")))
+    assert(buckets(partScan).exists(n => n >= 1 && n <= parts), partScan.optionalBucketSet)
+    assert(links.count() === parts)
   }
 
   test("t15 reads the persisted standing-corpus artifacts as file scans") {
