@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -22,7 +23,7 @@ object Bench {
           "aggregate(sequence(1, 5), 0L, (x, y) -> x + y) AS h",
           "md5(s) AS m")
         .groupBy("k").count().collect()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Sorted execution order: stable run-to-run attribution of timings.
     // Each query reports its best of 2 back-to-back runs: the first run
     // carries plan-specific JIT/codegen compilation and any transient host
@@ -43,7 +44,7 @@ object Bench {
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
-          case _: Throwable => false
+          case NonFatal(_) => false
         }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
@@ -85,7 +86,7 @@ object Bench {
     try
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_last_full.json"),
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // a read-only cwd must not fail the bench
+    catch { case NonFatal(_) => () } // a read-only cwd must not fail the bench
     spark.stop()
   }
 }

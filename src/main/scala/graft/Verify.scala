@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Schema rules every ORACLE-GATED output must satisfy before it is dumped
   * for the driver's compare. Round-8 lesson: the driver hashes STRINGIFIED
@@ -82,7 +83,7 @@ object Verify {
           case g: GateViolation =>
             gateViolations += name -> g.getMessage
             System.err.println(s"[verify] $name GATE VIOLATION: ${g.getMessage}")
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Graph analysis over a directed edge DataFrame `(src, dst)` — the
   * Spark-native form of the reference's pages/links adjacency model
@@ -14,56 +15,32 @@ import org.apache.spark.sql.functions._
   * 100 TB the edge table would be bucketed by `src` (plus a `dst`-bucketed
   * copy for reverse scans) so these joins become shuffle-free.
   *
-  * Iterative algorithms (k-hop, PageRank, label propagation) are
-  * driver-side loops over DataFrames. Each iteration extends the lineage;
-  * `localCheckpoint` every `checkpointEvery` iterations truncates it so
-  * plans don't grow unboundedly (SURVEY.md §5 watch-list item).
-  * `checkpointEvery` governs [[kHop]] only: the dual-reference loops
-  * ([[pageRankFixed]], [[labelPropagation]]) reference their state frame
-  * twice per round (join + zero-row union), so they materialize EVERY
-  * round regardless — either at the round's end (on-schedule checkpoint)
-  * or at the next round's top (the guard that stops 2^n recompute growth
-  * between sparse checkpoints). A knob value > 1 is honored but cannot
-  * reduce their materialization frequency.
+  * Iterative algorithms (k-hop, PageRank, label propagation, components,
+  * k-core, HyperBall) are driver-side loops over DataFrames, each one
+  * [[Rounds.iterate]] call: `Rounds` owns per-round materialization,
+  * statistics and the round cap, so the methods here only say what one
+  * round computes and when it has converged.
   *
   * PageRank uses fixed-point integer arithmetic (ranks scaled by `scale`,
   * integer division everywhere) — deterministic regardless of partition
   * order and bit-identical across engines, unlike double sums. For display,
   * divide by `scale` at the end.
   */
-class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
+class LinkGraph(val edges: DataFrame) {
 
   /** Materialize the edge table once (local checkpoint) so iterative
     * algorithms and multi-use plans don't recompute the edge derivation
     * (scan + symmetrize + distinct) on every reuse. On a cluster this is the
-    * role of a cached/bucketed edge table.
-    *
-    * CHECKPOINT EAGERNESS POLICY (round 15): localCheckpoint sites are
-    * LAZY (`eager = false`) when the checkpointed frame's materialization
-    * is forced by an immediately-following action anyway — the per-round
-    * stat reads in connectedComponents / kCore / pageRankConverged /
-    * hyperBall* / componentsStar, and loop-invariant inputs whose first
-    * round consumes them. The logical plan is truncated at Dataset
-    * creation either way (the recompute guard), but lazily the partitions
-    * are computed and cached inside the first consuming action instead of
-    * a dedicated materialize-all-partitions job — one job dispatch +
-    * result-stage pass + AQE replan less per checkpoint. Measured on
-    * g6_components_converged (8-round loop, sf0.1, min-of-8 same-JVM
-    * reps): 2.86 s → 2.33 s wall and 1.09 s → 0.91 s executor-CPU.
-    * Sites stay EAGER where the frame is referenced TWICE with no action
-    * in between (the pageRank/labelProp/SSSP state frames, kHop's round
-    * delta, kCore's survivor set): on one executor block locks merely
-    * serialize the dual reference, but on a real cluster the two consuming
-    * stages can land on different executors and each compute the frame —
-    * the eager job guarantees exactly-once materialization before the
-    * fan-out, which is the operator's original design contract.
+    * role of a cached/bucketed edge table. Lazy: the first consuming
+    * action computes and caches the partitions, so this costs no job of
+    * its own. Round state is materialized by [[Rounds]].
     */
-  def materialized: LinkGraph = new LinkGraph(edges.localCheckpoint(false), checkpointEvery)
+  def materialized: LinkGraph = new LinkGraph(edges.localCheckpoint(false))
 
   /** Undirected view: every edge plus its reverse, deduplicated. */
   lazy val symmetrized: LinkGraph = {
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
-    new LinkGraph(edges.select("src", "dst").union(rev).distinct(), checkpointEvery)
+    new LinkGraph(edges.select("src", "dst").union(rev).distinct())
   }
 
   /** Distinct node ids appearing at either end of an edge. */
@@ -128,32 +105,19 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
 
   /** Nodes at minimum distance 1..k from `sources` (a DataFrame with an
     * `id` column), as `(id, dist)`. Sources themselves are dist 0 and
-    * excluded from the result. BFS by repeated join + anti-join.
+    * excluded from the result. BFS by repeated join + anti-join: the round
+    * state is the visited set, and round i expands its dist = i−1
+    * frontier.
     */
   def kHop(sources: DataFrame, k: Int): DataFrame = {
-    var visited  = sources.select(col("id")).distinct().withColumn("dist", lit(0))
-    var frontier = visited.select("id")
-    for (i <- 1 to k) {
-      var next = edges.join(frontier, edges("src") === frontier("id"))
+    val init = sources.select(col("id")).distinct().withColumn("dist", lit(0))
+    Rounds.iterate("kHop", init, k) { (visited, i) =>
+      val frontier = visited.filter(col("dist") === i - 1).select("id")
+      visited.union(edges.join(frontier, edges("src") === frontier("id"))
         .select(col("dst").as("id")).distinct()
-        .join(visited.select("id").withColumnRenamed("id", "vid"),
-          col("id") === col("vid"), "left_anti")
-        .withColumn("dist", lit(i))
-      if (i % checkpointEvery == 0 && i < k) {
-        // Checkpoint the ROUND DELTA once (round 15; formerly visited and
-        // frontier were checkpointed separately, which materialized `next`
-        // — the round's whole join+distinct+anti-join — TWICE per round):
-        // `visited` stays a union whose legs are all checkpointed deltas,
-        // so it needs no checkpoint of its own to stop BFS's quadratic
-        // recompute, and `frontier` is a projection of the materialized
-        // delta. One eager action per round instead of two, and the
-        // round's work runs once.
-        next = next.localCheckpoint()
-      }
-      visited = visited.union(next)
-      frontier = next.select("id")
-    }
-    visited.filter(col("dist") > 0)
+        .join(visited.select(col("id").as("vid")), col("id") === col("vid"), "left_anti")
+        .withColumn("dist", lit(i)))
+    }().state.filter(col("dist") > 0)
   }
 
   /** Multi-source BFS with per-source attribution: like [[kHop]] but each
@@ -166,24 +130,15 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     * with the landmark count. `sources` must provide (tag, id).
     */
   def kHopTagged(sources: DataFrame, k: Int): DataFrame = {
-    var visited = sources.select(col("tag"), col("id")).distinct()
-      .withColumn("dist", lit(0))
-    var frontier = visited.select("tag", "id")
-    for (i <- 1 to k) {
-      var next = edges.join(frontier, edges("src") === frontier("id"))
+    val init = sources.select(col("tag"), col("id")).distinct().withColumn("dist", lit(0))
+    Rounds.iterate("kHopTagged", init, k) { (visited, i) =>
+      val frontier = visited.filter(col("dist") === i - 1)
+      visited.union(edges.join(frontier, edges("src") === frontier("id"))
         .select(col("tag"), col("dst").as("id")).distinct()
         .join(visited.select(col("tag").as("vtag"), col("id").as("vid")),
           col("tag") === col("vtag") && col("id") === col("vid"), "left_anti")
-        .withColumn("dist", lit(i))
-      if (i % checkpointEvery == 0 && i < k) {
-        // Single round-delta checkpoint — see [[kHop]] (round 15): halves
-        // the per-round actions and stops `next` being materialized twice.
-        next = next.localCheckpoint()
-      }
-      visited = visited.union(next)
-      frontier = next.select("tag", "id")
-    }
-    visited.filter(col("dist") > 0)
+        .withColumn("dist", lit(i)))
+    }().state.filter(col("dist") > 0)
   }
 
   /** HyperBall neighborhood-function census (ANF): per-node HLL sketches
@@ -254,38 +209,33 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     // (edges ≥ 2^(34−lgK)) does retention threaten the disk before the
     // cleaner's natural pace reclaims it.
     val gcPerRound = e.count() >= (1L << (34 - lgK))
-    var balls = packedInitBalls(e, lgK)
-    // Census per round is EAGER (one 1-row aggregate collect — the
-    // control-plane idiom the iterative loops already use for
-    // convergence checks): a lazy union of per-round censuses would keep
-    // a live reference to EVERY round's checkpointed sketch table until
-    // the final action, pinning rounds × |nodes| sketch blocks in
-    // storage memory — measured as a ~1.6× slowdown on the NEXT query in
-    // a bench sequence. Eager census lets each superseded ball table go
-    // unreferenced so the context cleaner reclaims its blocks.
-    // coalesce(…, 0): sum over zero rows is NULL — an empty edge frame must
-    // yield a 0-census, not an NPE out of a public method.
-    val laneArray = s"array(${laneCols.mkString(", ")})"
-    def census(b: DataFrame): Long =
-      b.agg(coalesce(round(sum(expr(s"graft_hll_estimate($laneArray)")), 0), lit(0))
-        .cast("long")).head().getLong(0)
-    val rows = scala.collection.mutable.ArrayBuffer(0 -> census(balls))
     val laneAggs = laneCols.map(c => expr(s"graft_lanemax_agg($c)").as(c))
-    val outCols = (col("id") +: laneCols.map(col)).map(c => c)
-    for (h <- 1 to rounds) {
-      val contrib = e.join(balls, e("dst") === balls("id"))
+    // The per-round census is a statistic, so it rides on each round's
+    // checkpoint job and no round's sketch table outlives the next round.
+    val res = Rounds.iterate("hyperBallCensus", packedInitBalls(e, lgK), rounds,
+        Seq(censusOf(laneCols))) { (balls, h) =>
+      if (gcPerRound && h > 1) System.gc() // see the gate's derivation above
+      e.join(balls, e("dst") === balls("id"))
         .select(e("src").as("id") +: laneCols.map(col): _*)
-      balls = contrib.union(balls.select(outCols: _*))
+        .union(balls.select(col("id") +: laneCols.map(col): _*))
         .groupBy(col("id"))
         .agg(laneAggs.head, laneAggs.tail: _*)
-        .localCheckpoint(false)
-      rows += h -> census(balls)
-      if (gcPerRound) System.gc() // see the gate's derivation above
-    }
+    }()
     val s = edges.sparkSession
     import s.implicits._
-    rows.toSeq.toDF("h", "est_pairs")
+    res.stats.zipWithIndex.map { case (r, h) => (h, r.getLong(0)) }.toDF("h", "est_pairs")
   }
+
+  /** Estimated census Σ_v |b(v)| over a ball table's lanes. The per-node
+    * estimates are summed as DECIMAL(38,12), which is exact: an observed
+    * aggregate merges its per-task partial sums in task-completion order,
+    * and a double sum would then depend on that order. coalesce(…, 0): a
+    * sum over zero rows is NULL, and an empty edge frame must yield a
+    * 0-census, not an NPE out of a public method.
+    */
+  private def censusOf(laneCols: Seq[String]): Column =
+    coalesce(round(sum(expr(s"graft_hll_estimate(array(${laneCols.mkString(", ")}))")
+      .cast(DecimalType(38, 12))), 0), lit(0)).cast("long")
 
   /** Round-0 packed-HLL ball table: each node's ball is {itself}, i.e.
     * exactly ONE register set — bucket = xxhash64(id) & (m-1), rho =
@@ -313,7 +263,6 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
         s"CASE WHEN w = 0 THEN ${64 - lgK + 1} " +
           "ELSE bit_count((w & -w) - 1) + 1 END AS rho"): _*)
       .selectExpr(("id" +: laneInit): _*)
-      .localCheckpoint(false)
   }
 
   /** HyperBall run to CONVERGENCE with the paper's systolic optimization
@@ -360,16 +309,11 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     * parameter. A run that hits it while sketches are still changing has
     * a TRUNCATED census, and the horizon marker computed against it is
     * simply wrong — yet the output would look exactly like a converged
-    * run (monotone, contiguous, last row flagged). The repo's "no silent
-    * caps" rule forbids that, so by default (`strict = true`) a
-    * truncated run THROWS with the changed-node count and the maxRounds
-    * to raise. Every output row also carries a constant `converged`
-    * column (1 = fixpoint reached, 0 = truncated under `strict = false`)
-    * so dump-time guards can assert convergence independently of the
-    * flag a caller passed.
+    * run (monotone, contiguous, last row flagged). So a truncated run
+    * THROWS ([[Rounds]]' cap), and every output row carries a constant
+    * `converged = 1` column that dump-time guards assert independently.
     */
-  def hyperBallDiameter(lgK: Int = 8, maxRounds: Int = 64,
-      strict: Boolean = true): DataFrame = {
+  def hyperBallDiameter(lgK: Int = 8, maxRounds: Int = 64): DataFrame = {
     require(lgK >= 4 && lgK <= 14, s"lgK must be in [4, 14], got $lgK")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val m = 1 << lgK
@@ -378,11 +322,7 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     // does not survive the checkpoint, so it was one wasted edge shuffle.
     val e = edges.localCheckpoint(false)
     val gcPerRound = e.count() >= (1L << (34 - lgK)) // see hyperBallCensus
-    var balls = packedInitBalls(e, lgK)
-    // Round 0: every ball was just created, so every node contributes.
-    var changed = balls
     val laneArray = s"array(${laneCols.mkString(", ")})"
-    val newAggs = laneCols.map(c => expr(s"graft_lanemax_agg($c)").as(c))
     // Changed-flag carrier (round 15): ONE aggregated long — the standing
     // ball's register byte-sum — instead of the former second full set of
     // 2^lgK/8 max(IF(is_ball...)) lane columns. EXACT, not a hash:
@@ -393,94 +333,58 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     // round's partial-agg shuffle carries, and shrinks the generated
     // aggregate code — measured plan diff in plans/r15/ (64 agg
     // expressions → 33).
-    val oldBs = expr("max(bs)").as("o_bs")
+    val aggs = laneCols.map(c => expr(s"graft_lanemax_agg($c)").as(c)) :+
+      expr("max(bs)").as("o_bs")
     // Null-safe: a group without a standing row cannot occur (round 0
     // covers every src and dst), but IS DISTINCT FROM keeps the flag
     // total rather than null-poisoned if that invariant ever moved.
     val chgExpr = s"graft_lane_bytesum($laneArray) IS DISTINCT FROM o_bs"
-    // Row payload (h, est_pairs, n_changed): n_changed is the number of
-    // sketches that changed IN round h — the systolic frontier size,
-    // emitted so the delta-propagation tail decay is MEASURABLE from the
-    // output (the 25x adjudication reads it) instead of inferred from
-    // wall-clock. Round 0 "changed" every ball it created: |V| — counted
-    // in the SAME action as the round-0 census (round 15; formerly a
-    // separate balls.count() job).
-    val rows = {
-      val r0 = balls.agg(
-        coalesce(round(sum(expr(s"graft_hll_estimate($laneArray)")), 0), lit(0))
-          .cast("long"),
-        count(lit(1))).head()
-      scala.collection.mutable.ArrayBuffer((0, r0.getLong(0), r0.getLong(1)))
+    // Round state: the ball table plus `chg` (1 = the sketch changed in
+    // that round). Round 0 created every ball, so every node contributes
+    // to round 1. Stats per round: the census and n_changed, the systolic
+    // frontier size — emitted so the delta-propagation tail decay is
+    // measurable from the output instead of inferred from wall-clock.
+    val res = Rounds.iterate("hyperBallDiameter",
+        packedInitBalls(e, lgK).withColumn("chg", lit(1)), maxRounds,
+        Seq(censusOf(laneCols), coalesce(sum(col("chg")), lit(0)).cast("long"))) {
+      (balls, h) =>
+        // SHUFFLE_HASH on the changed frontier (round 16, guide §3.1): under
+        // the 64 MB broadcast threshold AQE picked a broadcast of the
+        // loop-invariant edge table and REBUILT its HashedRelation every
+        // round (driver-side, off the job timeline — JobProfile showed
+        // 0.4-0.5 s gaps per round). Hinting the shrinking frontier as the
+        // hash build side takes the shuffled-hash path every round instead:
+        // measured min-of-4 same-JVM 12.5 -> 7.3 s wall (and the 17-51 s
+        // broadcast-build outlier runs disappear), executor CPU 97 -> 76 s.
+        // This is also the plan shape 100 TB forces anyway (the edge side is
+        // far over any broadcast threshold), so local and at-scale behavior
+        // now match. The fixed-round census keeps the AQE default: at 3
+        // rounds with a non-shrinking balls side the broadcast wins locally
+        // (4.1 vs 6.9 s) and the threshold demotes it at scale on its own.
+        if (gcPerRound && h > 1) System.gc()
+        val changed = balls.filter(col("chg") === 1)
+          .select(col("id") +: laneCols.map(col): _*)
+        e.join(changed.hint("shuffle_hash"), e("dst") === changed("id"))
+          .select(e("src").as("id") +:
+            (laneCols.map(col) :+ lit(null).cast("long").as("bs")): _*)
+          .union(balls.select(col("id") +:
+            (laneCols.map(col) :+ expr(s"graft_lane_bytesum($laneArray)").as("bs")): _*))
+          .groupBy(col("id"))
+          .agg(aggs.head, aggs.tail: _*)
+          .selectExpr((Seq("id") ++ laneCols :+ s"CAST(($chgExpr) AS INT) AS chg"): _*)
+    }(Some(_.last.getLong(1) == 0))
+    // A no-change round's census equals the previous round's — the
+    // fixpoint confirmation is not a new census row.
+    val rows = res.stats.zipWithIndex.collect {
+      case (r, h) if h == 0 || r.getLong(1) > 0 => (h, r.getLong(0), r.getLong(1))
     }
-    var h = 1
-    var nChanged = 1L
-    while (h <= maxRounds && nChanged > 0) {
-      // SHUFFLE_HASH on the changed frontier (round 16, guide §3.1): under
-      // the 64 MB broadcast threshold AQE picked a broadcast of the
-      // loop-invariant edge table and REBUILT its HashedRelation every
-      // round (driver-side, off the job timeline — JobProfile showed
-      // 0.4-0.5 s gaps per round). Hinting the shrinking frontier as the
-      // hash build side takes the shuffled-hash path every round instead:
-      // measured min-of-4 same-JVM 12.5 -> 7.3 s wall (and the 17-51 s
-      // broadcast-build outlier runs disappear), executor CPU 97 -> 76 s.
-      // This is also the plan shape 100 TB forces anyway (the edge side is
-      // far over any broadcast threshold), so local and at-scale behavior
-      // now match. The fixed-round census keeps the AQE default: at 3
-      // rounds with a non-shrinking balls side the broadcast wins locally
-      // (4.1 vs 6.9 s) and the threshold demotes it at scale on its own.
-      val contrib = e.join(changed.hint("shuffle_hash"), e("dst") === changed("id"))
-        .select(e("src").as("id") +:
-          (laneCols.map(col) :+ lit(null).cast("long").as("bs")): _*)
-      val aggPlan = contrib
-        .union(balls.select(col("id") +:
-          (laneCols.map(col) :+ expr(s"graft_lane_bytesum($laneArray)").as("bs")): _*))
-        .groupBy(col("id"))
-        .agg((newAggs :+ oldBs).head, (newAggs :+ oldBs).tail: _*)
-        .selectExpr((Seq("id") ++ laneCols :+ s"CAST(($chgExpr) AS INT) AS chg"): _*)
-      // Plan-audit hook: the query-level explain of this loop query is just
-      // a LocalTableScan of the census rows, so the informative plan (the
-      // per-round union+agg) is dumpable on demand for plans/r15|16/. The
-      // system-property form lets LinkGraphSpec pin the round-join strategy
-      // (an ignored/renamed hint would be silently dropped by the planner).
-      if (h == 1 && (sys.env.contains("GRAFT_EXPLAIN_HYPERBALL") ||
-          sys.props.contains("graft.explain.hyperball"))) {
-        val planStr = aggPlan.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        LinkGraph.lastHyperBallRoundPlan = Some(planStr)
-        if (sys.env.contains("GRAFT_EXPLAIN_HYPERBALL")) println(planStr)
-      }
-      val agg = aggPlan.localCheckpoint(false)
-      // ONE action per round: census + changed count together, which also
-      // materializes the lazily-checkpointed round aggregate (the
-      // same control-plane idiom as hyperBallCensus's per-round census).
-      val stat = agg.agg(
-        coalesce(round(sum(expr(s"graft_hll_estimate($laneArray)")), 0), lit(0))
-          .cast("long"),
-        coalesce(sum(col("chg")), lit(0)).cast("long")).head()
-      nChanged = stat.getLong(1)
-      // A no-change round's census equals the previous round's — the
-      // fixpoint confirmation is not a new census row.
-      if (nChanged > 0) rows += ((h, stat.getLong(0), nChanged))
-      balls = agg.select(col("id") +: laneCols.map(col): _*)
-      changed = agg.filter(col("chg") === 1)
-        .select(col("id") +: laneCols.map(col): _*)
-      if (gcPerRound) System.gc()
-      h += 1
-    }
-    val converged = nChanged == 0
-    if (strict && !converged) throw new IllegalStateException(
-      s"hyperBallDiameter: truncated at maxRounds=$maxRounds with " +
-        s"$nChanged sketches still changing — the graph's horizon exceeds " +
-        "the round budget, so the census and the effective-diameter marker " +
-        "would be wrong. Raise maxRounds (or pass strict = false to get " +
-        "the truncated census with converged = 0).")
     val s = edges.sparkSession
     import s.implicits._
     val finalPairs = rows.last._2
-    rows.toSeq.toDF("h", "est_pairs", "n_changed")
+    rows.toDF("h", "est_pairs", "n_changed")
       .withColumn("at_eff_horizon",
         (col("est_pairs") * 10 >= lit(finalPairs) * 9).cast("int"))
-      .withColumn("converged", lit(if (converged) 1 else 0))
+      .withColumn("converged", lit(1))
   }
 
   /** Fixed-point PageRank: `iters` rounds of
@@ -489,41 +393,30 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     * Nodes must all have out-degree ≥ 1 (true for symmetrized graphs).
     */
   def pageRankFixed(iters: Int, scale: Long = 1000000000000L): DataFrame = {
-    // Loop-invariant inputs materialize ONCE: the degree-annotated edge
-    // list and the node table are reused every iteration — without this
-    // each iteration re-runs the distinct/groupBy that derives them.
-    val nodes = nodeIds.localCheckpoint()
-    val e = edges
+    val e = degreeEdges
+    Rounds.iterate("pageRankFixed", nodeIds.withColumn("rank", lit(scale)), iters) {
+      (ranks, _) =>
+        // One shuffle per round: neighbor contributions unioned with a zero
+        // row per node (ranks holds every node id, so the zero row both
+        // guarantees presence and removes the join-back onto the node
+        // table — the former left-outer join cost a sort-merge join + two
+        // exchanges per round).
+        e.join(ranks, e("src") === ranks("id"))
+          .select(col("dst").as("nid"), expr("rank DIV out_deg").as("c"))
+          .union(ranks.select(col("id").as("nid"), lit(0L).as("c")))
+          .groupBy(col("nid").as("id"))
+          .agg(expr(s"(15 * ${scale}L + 85 * sum(c)) DIV 100").as("rank"))
+    }().state
+  }
+
+  /** Loop-invariant `(src, dst, out_deg)` edge list of the PageRank loops,
+    * materialized once so no round re-runs the degree aggregation.
+    */
+  private def degreeEdges: DataFrame =
+    edges
       .join(outDegrees.withColumnRenamed("id", "__did"), col("src") === col("__did"))
       .select(col("src"), col("dst"), col("out_deg"))
       .localCheckpoint(false)
-    var ranks = nodes.withColumn("rank", lit(scale))
-    // `contribs` references ranks TWICE (join + zero-row union): with
-    // un-truncated lineage each reference doubles the recompute between
-    // checkpoints (2^n growth vs the old single-reference left-outer
-    // formulation's linear growth). So ranks is materialized before the
-    // dual reference whenever the previous round didn't checkpoint it —
-    // a no-op at the default checkpointEvery=1.
-    var ranksFresh = true // round-1 ranks is one projection over checkpointed nodes
-    for (i <- 1 to iters) {
-      if (!ranksFresh) ranks = ranks.localCheckpoint()
-      // One shuffle per iteration: neighbor contributions unioned with a
-      // zero row per node (ranks holds every node id, so the zero row both
-      // guarantees presence and removes the join-back onto the node table —
-      // the former left-outer join cost a sort-merge join + two exchanges
-      // per round).
-      val contribs = e
-        .join(ranks, e("src") === ranks("id"))
-        .select(col("dst").as("nid"), expr("rank DIV out_deg").as("c"))
-        .union(ranks.select(col("id").as("nid"), lit(0L).as("c")))
-      ranks = contribs
-        .groupBy(col("nid").as("id"))
-        .agg(expr(s"(15 * ${scale}L + 85 * sum(c)) DIV 100").as("rank"))
-      ranksFresh = i % checkpointEvery == 0 && i < iters
-      if (ranksFresh) ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
 
   /** PERSONALIZED PageRank, fixed rounds: identical recurrence to
     * [[pageRankFixed]] except the teleport mass lands only on `sources`
@@ -537,12 +430,7 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
   def personalizedPageRankFixed(sources: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame = {
     val nodes = nodeIds.localCheckpoint(false)
-    val e = edges
-      .join(outDegrees.withColumnRenamed("id", "__did"), col("src") === col("__did"))
-      .select(col("src"), col("dst"), col("out_deg"))
-      .localCheckpoint(false)
-    // EAGER tele (round 15): see pageRankFixed — ranks r0 projects tele and
-    // round 1 dual-references ranks, plus every round's union reads tele.
+    val e = degreeEdges
     // Teleport indicator per node (1 on a seed, 0 elsewhere), materialized
     // once: it is both the r0 mass and every round's restart term.
     val tele = nodes
@@ -550,35 +438,26 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
         Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("__s"), lit(0L)).as("t"))
       .localCheckpoint()
-    var ranks = tele.select(col("id"), (col("t") * scale).as("rank"))
-    var ranksFresh = true
-    for (i <- 1 to iters) {
-      if (!ranksFresh) ranks = ranks.localCheckpoint()
-      val contribs = e
-        .join(ranks, e("src") === ranks("id"))
+    Rounds.iterate("personalizedPageRankFixed",
+        tele.select(col("id"), (col("t") * scale).as("rank")), iters) { (ranks, _) =>
+      e.join(ranks, e("src") === ranks("id"))
         .select(col("dst").as("nid"), expr("rank DIV out_deg").as("c"), lit(0L).as("t"))
         .union(tele.select(col("id").as("nid"), lit(0L).as("c"), col("t")))
-      ranks = contribs
         .groupBy(col("nid").as("id"))
         .agg(expr(s"(15 * ${scale}L * max(t) + 85 * sum(c)) DIV 100").as("rank"))
-      ranksFresh = i % checkpointEvery == 0 && i < iters
-      if (ranksFresh) ranks = ranks.localCheckpoint()
-    }
-    ranks
+    }().state
   }
 
   /** Connected components: minimum-label propagation iterated to FIXPOINT —
-    * rounds run until no node's label changes (or `maxIters`, a runaway
-    * guard), so the result is the true per-component minimum id, not a
-    * fixed-round partial labeling.
+    * rounds run until no node's label changes (or `maxIters`, past which
+    * [[Rounds]] throws), so the result is the true per-component minimum
+    * id, not a fixed-round partial labeling.
     *
-    * The convergence check costs one extra aggregation per round, not an
-    * extra shuffle of the data: each round's aggregation carries the node's
-    * PREVIOUS label alongside the new minimum (the self-contribution row
-    * tags it), the round materializes via `localCheckpoint`, and the
-    * changed-count is a cheap scan of that materialized result. On a real
-    * cluster the same loop runs with reliable checkpoints; rounds needed =
-    * max eccentricity of a component min, typically O(log n) for real-world
+    * The convergence check costs no extra shuffle or job: each round's
+    * aggregation carries the node's PREVIOUS label alongside the new
+    * minimum (the self-contribution row tags it), and the changed-count
+    * is a statistic on the round's checkpoint job. Rounds needed = max
+    * eccentricity of a component min, typically O(log n) for real-world
     * graphs.
     *
     * Returns (labels, roundsRun): `labels` is `(id, lbl)` with `lbl` the
@@ -590,29 +469,19 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     // Nodes derive from the CHECKPOINTED edges, not the raw plan, so the
     // edge derivation truly runs once.
     val e = edges.localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
+    val init = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
-    val lblType = nodes.schema("id").dataType
-    var labels  = nodes.withColumn("lbl", col("id"))
-    var changed = 1L
-    var rounds  = 0
-    while (changed > 0 && rounds < maxIters) {
-      val contribs = e
-        .join(labels, e("src") === labels("id"))
-        .select(col("dst").as("nid"), col("lbl"),
-          lit(null).cast(lblType).as("self_lbl"))
-        .union(labels.select(col("id").as("nid"), col("lbl"),
-          col("lbl").as("self_lbl")))
-      val next = contribs
+      .select(col("id"), col("id").as("lbl"), col("id").as("prev"))
+    val lblType = init.schema("id").dataType
+    val res = Rounds.iterate("connectedComponents", init, maxIters,
+        Seq(count(when(col("lbl") =!= col("prev"), 1)))) { (labels, _) =>
+      e.join(labels, e("src") === labels("id"))
+        .select(col("dst").as("nid"), col("lbl"), lit(null).cast(lblType).as("self_lbl"))
+        .union(labels.select(col("id").as("nid"), col("lbl"), col("lbl").as("self_lbl")))
         .groupBy(col("nid").as("id"))
         .agg(min(col("lbl")).as("lbl"), max(col("self_lbl")).as("prev"))
-        .localCheckpoint(false)
-      changed = next.filter(col("lbl") =!= col("prev")).count()
-      labels = next.select(col("id"), col("lbl"))
-      rounds += 1
-    }
-    (labels, rounds)
+    }(Some(_.last.getLong(0) == 0))
+    (res.state.select(col("id"), col("lbl")), res.rounds)
   }
 
   /** Connected components by alternating large-star/small-star contraction
@@ -635,7 +504,8 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     * spec-pinned (LinkGraphSpec) on both the fixture and a long path.
     *
     * Returns (labels, roundsRun) with the same `(id, lbl)` shape as
-    * [[connectedComponents]].
+    * [[connectedComponents]]; `roundsRun` and `maxIters` count the
+    * initial small-star pass as round 1.
     */
   def connectedComponentsStar(maxIters: Int = 50): (DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
@@ -676,85 +546,56 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     // DECIMAL(38,0) — a long sum of 64-bit hashes overflows under ANSI. A
     // sum collision masking a real change is vanishingly unlikely and
     // would be caught by the spec's equivalence checks.
-    def fingerprint(e: DataFrame): (Long, BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("src"), col("dst"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-      (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
-    }
-
-    var cur = smallStar(e0).localCheckpoint(false)
-    var fp = fingerprint(cur)
-    var rounds = 1
-    var stable = false
-    while (!stable && rounds < maxIters) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(false)
-      val nfp = fingerprint(next)
-      stable = nfp == fp
-      cur = next; fp = nfp
-      rounds += 1
-    }
+    val fingerprint = Seq(count(lit(1)),
+      sum(xxhash64(col("src"), col("dst")).cast(DecimalType(38, 0))))
     // An unconverged edge set is not a star forest: a node could appear
-    // under two labels and the join below would emit duplicate rows. Fail
-    // loudly instead (mirrors g6_components_converged's margin require).
-    require(stable,
-      s"connectedComponentsStar did not converge in $maxIters rounds — raise maxIters")
+    // under two labels and the join below would emit duplicate rows, so
+    // the cap must throw, which [[Rounds]] does.
+    val res = Rounds.iterate("connectedComponentsStar", smallStar(e0), maxIters - 1,
+        fingerprint) { (cur, _) => smallStar(largeStar(cur)) }(
+      Some(fps => fps.last == fps(fps.size - 2)))
     // Component minima never appear as src in the final star set; they
     // (and any isolated node) label themselves.
     val labels = nodes
-      .join(cur.withColumnRenamed("src", "id"), Seq("id"), "left_outer")
+      .join(res.state.withColumnRenamed("src", "id"), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("dst"), col("id")).as("lbl"))
-    (labels, rounds)
+    (labels, res.rounds + 1)
   }
 
   /** PageRank iterated to a rank-delta tolerance: rounds run until
-    * `max |rank_i − rank_{i−1}| <= tol × scale` (or `maxIters`). Same
-    * fixed-point integer arithmetic as [[pageRankFixed]] — deterministic and
-    * engine-portable — with the per-round delta read from the materialized
-    * round result (one cheap agg, no extra shuffle), mirroring
-    * [[connectedComponents]]' convergence machinery.
+    * `max |rank_i − rank_{i−1}| <= tol × scale` (or `maxIters`, past which
+    * [[Rounds]] throws). Same fixed-point integer arithmetic as
+    * [[pageRankFixed]] — deterministic and engine-portable — with the
+    * per-round max delta a statistic on the round's checkpoint job,
+    * mirroring [[connectedComponents]]' convergence machinery.
     *
     * Returns (ranks, roundsRun). Unlike component labels, ranks are NOT
     * idempotent past the stopping round, so an oracle mirroring this must
     * unroll EXACTLY roundsRun rounds — callers gate that with a hard
-    * `require` (see g6_pagerank_converged). `onRound` observes each round's
-    * max delta (diagnostics / tolerance calibration).
+    * `require` (see g6_pagerank_converged).
     */
   def pageRankConverged(tol: Double, maxIters: Int = 50,
-      scale: Long = 1000000000000L,
-      onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, Int) = {
+      scale: Long = 1000000000000L): (DataFrame, Int) = {
     require(tol > 0 && maxIters > 0)
-    val nodes = nodeIds.localCheckpoint()
-    val e = edges
-      .join(outDegrees.withColumnRenamed("id", "__did"), col("src") === col("__did"))
-      .select(col("src"), col("dst"), col("out_deg"))
-      .localCheckpoint(false)
+    val e = degreeEdges
     val tolFixed = math.max((tol * scale).toLong, 1L)
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var delta = Long.MaxValue
-    var i = 0
-    while (delta > tolFixed && i < maxIters) {
+    val init = nodeIds.select(col("id"), lit(scale).as("rank"), lit(null).cast("long").as("prev"))
+    val res = Rounds.iterate("pageRankConverged", init, maxIters,
+        Seq(max(abs(col("rank") - col("prev"))))) { (ranks, _) =>
       // Same single-shuffle round as [[pageRankFixed]]; the per-node zero
       // row doubles as the previous-rank carrier for the delta check.
-      val contribs = e
-        .join(ranks, e("src") === ranks("id"))
+      e.join(ranks, e("src") === ranks("id"))
         .select(col("dst").as("nid"), expr("rank DIV out_deg").as("c"),
           lit(null).cast("long").as("prev_in"))
-        .union(ranks.select(col("id").as("nid"), lit(0L).as("c"),
-          col("rank").as("prev_in")))
-      val next = contribs
+        .union(ranks.select(col("id").as("nid"), lit(0L).as("c"), col("rank").as("prev_in")))
         .groupBy(col("nid").as("id"))
-        .agg(expr(s"(15 * ${scale}L + 85 * sum(c)) DIV 100").as("new_rank"),
+        .agg(expr(s"(15 * ${scale}L + 85 * sum(c)) DIV 100").as("rank"),
           max(col("prev_in")).as("prev"))
-        .localCheckpoint(false)
+    }(Some { deltas =>
       // max over an empty frame is NULL (empty graph) — converged trivially.
-      val deltaRow = next.agg(max(abs(col("new_rank") - col("prev")))).head()
-      delta = if (deltaRow.isNullAt(0)) 0L else deltaRow.getLong(0)
-      ranks = next.select(col("id"), col("new_rank").as("rank"))
-      i += 1
-      onRound(i, delta)
-    }
-    (ranks, i)
+      deltas.last.isNullAt(0) || deltas.last.getLong(0) <= tolFixed
+    })
+    (res.state.select(col("id"), col("rank")), res.rounds)
   }
 
   /** `iters` rounds of minimum-label propagation (connected-components
@@ -763,29 +604,17 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     * converges to per-component minima; a fixed `iters` gives a
     * deterministic partial labeling (oracle-comparable).
     */
-  def labelPropagation(iters: Int): DataFrame = {
-    val nodes = nodeIds.localCheckpoint()
-    var labels = nodes.withColumn("lbl", col("id"))
-    // Same dual-reference guard as [[pageRankFixed]]: contribs references
-    // labels twice, so materialize before the references whenever the
-    // previous round didn't checkpoint (no-op at checkpointEvery=1).
-    var labelsFresh = true
-    for (i <- 1 to iters) {
-      if (!labelsFresh) labels = labels.localCheckpoint()
-      // One shuffle per round: neighbor labels (edge join, broadcastable
-      // labels side) unioned with self labels, then a single min-agg —
-      // no separate join-back onto the node table.
-      val contribs = edges
-        .join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("nid"), col("lbl"))
-        .union(labels.select(col("id").as("nid"), col("lbl")))
-      labels = contribs.groupBy(col("nid").as("id")).agg(min(col("lbl")).as("lbl"))
-        .select(col("id"), col("lbl"))
-      labelsFresh = i % checkpointEvery == 0 && i < iters
-      if (labelsFresh) labels = labels.localCheckpoint()
-    }
-    labels
-  }
+  def labelPropagation(iters: Int): DataFrame =
+    Rounds.iterate("labelPropagation", nodeIds.withColumn("lbl", col("id")), iters) {
+      (labels, _) =>
+        // One shuffle per round: neighbor labels (edge join, broadcastable
+        // labels side) unioned with self labels, then a single min-agg —
+        // no separate join-back onto the node table.
+        edges.join(labels, edges("src") === labels("id"))
+          .select(col("dst").as("nid"), col("lbl"))
+          .union(labels.select(col("id").as("nid"), col("lbl")))
+          .groupBy(col("nid").as("id")).agg(min(col("lbl")).as("lbl"))
+    }().state
 
   /** k-core: the maximal subgraph where every node keeps degree >= k,
     * computed by iterative peeling — drop all nodes below degree k,
@@ -799,46 +628,30 @@ class LinkGraph(val edges: DataFrame, checkpointEvery: Int = 1) {
     * filters read it) and two semi-joins against the shrinking survivor
     * set — the edge table is filtered in place, never rebuilt from
     * scratch, so round cost tracks the SURVIVING edge count and falls
-    * monotonically. Peel-round count is a data property (2 on the fixture
-    * graphs; pathological chains peel longer), checked against the
-    * oracle's unrolled margin by the caller.
+    * monotonically. Converged when a round keeps the edge count. Peel-round
+    * count is a data property (2 on the fixture graphs; pathological chains
+    * peel longer), checked against the oracle's unrolled margin by the
+    * caller.
     *
     * Returns (coreEdges, roundsRun) — `roundsRun` includes the final
     * confirming no-op round, matching the components convention.
     */
   def kCore(k: Int, maxIters: Int = 50): (DataFrame, Int) = {
-    var e = edges.localCheckpoint(false)
-    var n = e.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxIters) {
-      // Materialized survivor set: referenced by BOTH semi-joins, and the
-      // count it implies is tiny (one row per surviving node).
+    val res = Rounds.iterate("kCore", edges, maxIters, Seq(count(lit(1)))) { (e, _) =>
+      // Survivor set, materialized inside the round because BOTH semi-joins
+      // read it; it is tiny (one row per surviving node).
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("id"))
         .localCheckpoint()
-      val next = e
-        .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+      e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(false)
-      val m = next.count()
-      converged = m == n
-      n = m
-      e = next
-      rounds += 1
-    }
-    (e, rounds)
+    }(Some(counts => counts.last == counts(counts.size - 2)))
+    (res.state, res.rounds)
   }
 }
 
 object LinkGraph {
-
-  /** Round-1 aggregate plan of the last [[LinkGraph.hyperBallDiameter]] run,
-    * captured when the `graft.explain.hyperball` system property (or the
-    * `GRAFT_EXPLAIN_HYPERBALL` env hook) is set — test-only plan pin.
-    */
-  @volatile private[graft] var lastHyperBallRoundPlan: Option[String] = None
 
   /** `(a, b, n_common)` pairs (a < b) from a `(dst, ss)` adjacency table —
     * the pair-emission half of [[LinkGraph.coSourcePairs]], split out so a

@@ -17,11 +17,10 @@ import org.apache.spark.sql.functions._
   * oracle gate it.
   *
   * Scale: each round shuffles the frontier-joined edge list once (hash on
-  * dst) and the running distance table once (hash on id). `localCheckpoint`
-  * truncates lineage every round — the distance table is referenced twice
-  * per round (relax join + union), so un-truncated lineage would double the
-  * recompute per round. On a cluster the same loop runs with reliable
-  * checkpoints.
+  * dst) and the running distance table once (hash on id). The loop is a
+  * [[Rounds.iterate]] call, which materializes every round the next one
+  * reads: the distance table is referenced twice per round (relax join +
+  * union), so un-truncated lineage would double the recompute per round.
   */
 object ShortestPaths {
 
@@ -33,15 +32,11 @@ object ShortestPaths {
   def fixedRounds(wedges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     val e = wedges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .localCheckpoint(false) // loop-invariant: materialize once, not per round
-    var dist = sources.select(col("id")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = e.join(dist, e("src") === dist("id"))
-        .select(e("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed)
+    val init = sources.select(col("id")).distinct().withColumn("dist", lit(0L))
+    Rounds.iterate("fixedRounds", init, rounds) { (dist, _) =>
+      dist.union(e.join(dist, e("src") === dist("id"))
+          .select(e("dst").as("id"), (col("dist") + col("w")).as("dist")))
         .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-    }
-    dist
+    }().state
   }
 }

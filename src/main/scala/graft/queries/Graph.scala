@@ -605,8 +605,8 @@ object Graph extends QueryPack {
     // same reason as g13b (sketch estimates can't cross the DuckDB
     // gate); the exact sibling g13_neighborhood carries the oracle and
     // the spec pins accuracy + termination on known graphs. maxRounds
-    // is a safety valve with a loud contract: strict mode (the default)
-    // THROWS if the horizon exceeds it, and the emitted `converged`
+    // is a safety valve with a loud contract: the run THROWS if the
+    // horizon exceeds it (Rounds' cap), and the emitted `converged`
     // column is re-asserted by the dump guard below — a truncated
     // census can never masquerade as a measurement.
     "g16_effective_diameter" -> { (s, d) =>
@@ -706,10 +706,10 @@ object Graph extends QueryPack {
           col("converged"))
         .orderBy("h").collect()
       require(rows.nonEmpty, "g16: empty census")
-      // Convergence contract: hyperBallDiameter's strict mode already
-      // throws on truncation, but the dump guard asserts the emitted
-      // column too so a future strict=false caller can't dump a
-      // truncated census (whose marker is wrong) as if it converged.
+      // Convergence contract: hyperBallDiameter already throws on
+      // truncation, but the dump guard asserts the emitted column too so
+      // no future caller can dump a truncated census (whose marker is
+      // wrong) as if it converged.
       require(rows.forall(_.getInt(3) == 1),
         "g16: census truncated at maxRounds (converged = 0) — the " +
           "effective-diameter marker is not trustworthy")

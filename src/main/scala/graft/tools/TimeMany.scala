@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import scala.util.control.NonFatal
 
 /** Dev tool: time a regex-selected subset of the declared queries with the
   * Bench methodology (count() action, best of 2 back-to-back runs) in ONE
@@ -27,7 +28,7 @@ object TimeMany {
           "aggregate(sequence(1, 5), 0L, (x, y) -> x + y) AS h",
           "md5(s) AS m")
         .groupBy("k").count().collect()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Aggregate executor CPU time per run via a stage listener: wall time
     // on this host swings 3-10x between back-to-back identical runs, so
     // CPU-seconds (work actually done) is the stable optimization metric.

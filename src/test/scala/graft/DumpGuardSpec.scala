@@ -73,7 +73,7 @@ class DumpGuardSpec extends AnyFunSuite {
       rows.toDF("h", "est_pairs", "n_changed", "at_eff_horizon", "converged")
     // A healthy-looking converged census passes.
     guard(df(Seq((0, 10L, 10L, 0, 1), (1, 40L, 10L, 0, 1), (2, 100L, 4L, 1, 1))))
-    // converged = 0 (strict=false truncation) must throw.
+    // converged = 0 (a truncated census) must throw.
     intercept[IllegalArgumentException] {
       guard(df(Seq((0, 10L, 10L, 0, 0), (1, 40L, 10L, 0, 0), (2, 100L, 4L, 1, 0))))
     }

@@ -129,13 +129,21 @@ class LinkGraphSpec extends AnyFunSuite {
   }
 
   test("connectedComponentsStar fails loudly when maxIters is too small to converge") {
+    // The same round cap (Rounds.iterate) guards every converging loop: a
+    // cap below the 64-node path's fixpoint must throw, naming the loop,
+    // instead of returning a truncated result.
     val n = 64
     val path = new LinkGraph(
       (0 until n - 1).map(i => (i.toLong, i + 1L)).toDF("src", "dst"))
-    val e = intercept[IllegalArgumentException] {
-      path.connectedComponentsStar(maxIters = 2)
+    val sym = path.symmetrized
+    def loud(loop: String)(run: => Any): Unit = {
+      val e = intercept[IllegalStateException](run)
+      assert(e.getMessage.contains(s"$loop did not converge"), e.getMessage)
     }
-    assert(e.getMessage.contains("did not converge"))
+    loud("connectedComponentsStar")(path.connectedComponentsStar(maxIters = 2))
+    loud("connectedComponents")(sym.connectedComponents(maxIters = 2))
+    loud("kCore")(sym.kCore(2, maxIters = 2))
+    loud("pageRankConverged")(sym.pageRankConverged(tol = 1e-12, maxIters = 2))
   }
 
   test("connectedComponentsStar matches connectedComponents on the lineitem graph") {
@@ -298,42 +306,35 @@ class LinkGraphSpec extends AnyFunSuite {
     // the loop-invariant edge table and rebuilds its HashedRelation every
     // round (measured 0.4-0.5 s/round of driver-side gap; min-of-4 wall
     // 12.5 -> 7.3 s on g16 at sf0.1). An invalid or renamed hint would be
-    // SILENTLY dropped by the planner, so pin the captured round-1 plan.
+    // SILENTLY dropped by the planner, so pin the executed round-1 plan:
+    // the first checkpoint action whose plan joins.
     val base = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
       (1L, 7L), (7L, 8L), (8L, 9L), (4L, 10L), (10L, 11L), (11L, 12L))
     val g = new LinkGraph((base ++ base.map(_.swap)).toDF("src", "dst"))
-    sys.props("graft.explain.hyperball") = "1"
-    try {
-      LinkGraph.lastHyperBallRoundPlan = None
-      g.hyperBallDiameter(lgK = 8, maxRounds = 32).collect()
-      val plan = LinkGraph.lastHyperBallRoundPlan
-        .getOrElse(fail("round-1 plan was not captured"))
-      assert(plan.contains("ShuffledHashJoin"),
-        s"round join is not shuffled-hash:\n$plan")
-      assert(!plan.contains("BroadcastHashJoin"),
-        "round join regressed to a per-round broadcast rebuild")
-    } finally sys.props.remove("graft.explain.hyperball")
+    val (_, actions) = SparkTestSession.withActions(g.hyperBallDiameter(lgK = 8, maxRounds = 32))
+    val plan = actions.collectFirst {
+      case ("localCheckpoint", p) if p.contains("Join") => p
+    }.getOrElse(fail(s"no round checkpoint joined: ${actions.map(_._1)}"))
+    assert(plan.contains("ShuffledHashJoin"),
+      s"round join is not shuffled-hash:\n$plan")
+    assert(!plan.contains("BroadcastHashJoin"),
+      "round join regressed to a per-round broadcast rebuild")
   }
 
   test("hyperBallDiameter: maxRounds below the horizon fails loudly, never silently truncates") {
     import spark.implicits._
     // Same 12-node graph (diameter 9, sketch horizon ~6-9): maxRounds = 2
     // is below the horizon, so sketches are still changing when the
-    // budget runs out. Strict mode (the default) must THROW — a truncated
-    // census is indistinguishable from a converged one by shape alone,
-    // and its at_eff_horizon marker would be wrong.
+    // budget runs out. The run must THROW — a truncated census is
+    // indistinguishable from a converged one by shape alone, and its
+    // at_eff_horizon marker would be wrong.
     val base = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
       (1L, 7L), (7L, 8L), (8L, 9L), (4L, 10L), (10L, 11L), (11L, 12L))
     val g = new LinkGraph((base ++ base.map(_.swap)).toDF("src", "dst"))
     val ex = intercept[IllegalStateException] {
       g.hyperBallDiameter(lgK = 8, maxRounds = 2)
     }
-    assert(ex.getMessage.contains("truncated at maxRounds=2"))
-    // strict = false: the truncated census is returned but every row is
-    // branded converged = 0, which the g16 dump guard rejects.
-    val lax = g.hyperBallDiameter(lgK = 8, maxRounds = 2, strict = false)
-      .orderBy("h").collect()
-    assert(lax.forall(_.getAs[Int]("converged") === 0))
+    assert(ex.getMessage.contains("hyperBallDiameter did not converge within its cap of 2 rounds"))
     // A converged run is branded converged = 1 on every row.
     val full = g.hyperBallDiameter(lgK = 8, maxRounds = 32)
       .orderBy("h").collect()

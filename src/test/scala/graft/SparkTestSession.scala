@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole forked test JVM (never stopped —
   * suites must not call spark.stop() or they'd kill sibling suites).
@@ -20,5 +25,35 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` and returns its result with the SQL actions it ran, in
+    * order, as (action name, executed plan string — the final plan under
+    * AQE). A QueryExecutionListener is registered for the call only; its
+    * events arrive asynchronously (FIFO), so a sentinel action runs last
+    * and the capture waits for it.
+    */
+  def withActions[T](body: => T): (T, Seq[(String, String)]) = {
+    val marker = s"actions-sentinel-${java.util.UUID.randomUUID()}"
+    def plan(qe: QueryExecution): String = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+    val seen = new LinkedBlockingQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.put(funcName -> plan(qe))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.put(funcName -> plan(qe))
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.sql(s"SELECT '$marker'").collect()
+      val actions = Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
+          .getOrElse(throw new AssertionError("query listener events did not arrive")))
+        .takeWhile(!_._2.contains(marker)).toVector
+      (out, actions)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
