@@ -21,9 +21,11 @@ import org.slf4j.LoggerFactory
   *   GET /api/node/{orderKey}    → `node-info` row (JSON array)
   *
   * Every route is one [[TropologyApi]] call, a point lookup over the
-  * maintained serving tables, and the `collect()` here is the definition
-  * of serving (an HTTP response IS a driver-side materialization of a
-  * small, top-k-bounded payload). Requests run concurrently on a pool of
+  * maintained serving tables: the keyed routes filter with `graft_key_in`,
+  * so each route's plan compiles once per JVM, not once per key, and
+  * `/api/network` reads the one-row maintained payload. The `collect()`
+  * here is the definition of serving (an HTTP response IS a driver-side
+  * materialization of a small, top-k-bounded payload). Requests run concurrently on a pool of
   * daemon threads sized to the session's `defaultParallelism`, so each
   * in-flight request can keep one core busy with its small jobs; the pool
   * is shut down by the returned server's `stop`. Unknown routes and

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,15 +21,20 @@ import graft.sources.ArtifactStore
   *   - [[orderLinks]]: distinct `(o, p)` edges, bucketed by `o`;
   *   - [[partDegrees]]: `(p, p_name, in_degree)`, bucketed by `p`;
   *   - [[orderStats]]: the served order attributes plus `outgoing`,
-  *     bucketed by `o_orderkey`.
+  *     bucketed by `o_orderkey`;
+  *   - the one-row network payload ([[NetworkApi.neighborhoodPayload]]),
+  *     derived from the three above.
   *
-  * Lookups filter on the bucket key with literals, so Spark prunes each
-  * scan to the buckets holding those keys, and the `sortBy` within a
-  * bucket lets parquet row-group statistics skip the rest: a request
-  * costs in proportion to its answer, not to the edge table. No route
-  * aggregates, dedups or checkpoints the edges per request. Routes that
-  * start from an order read its edges when called (one bucket) and return
-  * a plan over only the buckets of the parts they found.
+  * Lookups filter on the bucket key with [[keyIn]] (`graft_key_in`), so
+  * Spark prunes each scan to the buckets holding those keys, and the
+  * `sortBy` within a bucket lets parquet row-group statistics skip the
+  * rest: a request costs in proportion to its answer, not to the edge
+  * table. No route aggregates, dedups or checkpoints the edges per
+  * request. Routes that start from an order read its edges when called
+  * (one bucket) and return a plan over only the buckets of the parts they
+  * found. Because `graft_key_in` holds its keys by reference, a route's
+  * generated code is the same for every key: it is compiled once per JVM,
+  * not once per key.
   */
 object TropologyApi {
 
@@ -63,11 +68,18 @@ object TropologyApi {
           coalesce(col("outgoing"), lit(0L)).as("outgoing"))
     }
 
+  /** `c IN keys` through `graft_key_in`: the keys are not inlined into the
+    * generated code, so one compiled plan serves every key. `keys` must not
+    * be empty.
+    */
+  private[graft] def keyIn(c: Column, keys: Seq[Long]): Column =
+    call_function("graft_key_in", c +: keys.map(lit): _*)
+
   /** The `(o, p)` edges of `orders`: a read of one [[orderLinks]] bucket
     * per order.
     */
   private[graft] def edgesOf(s: SparkSession, dir: String, orders: Long*): DataFrame =
-    orderLinks(s, dir).filter(col("o").isin(orders: _*))
+    orderLinks(s, dir).filter(keyIn(col("o"), orders))
 
   /** The parts each of `orders` links to ([[edgesOf]], collected); an
     * order with no edges maps to no parts.
@@ -83,7 +95,7 @@ object TropologyApi {
     */
   private[graft] def partRows(s: SparkSession, dir: String, parts: Seq[Long]): DataFrame =
     partDegrees(s, dir)
-      .filter(if (parts.isEmpty) lit(false) else col("p").isin(parts: _*))
+      .filter(if (parts.isEmpty) lit(false) else keyIn(col("p"), parts))
       .coalesce(1)
 
   /** `network-for-node`: the Sigma.js neighborhood payload (E2). */
@@ -115,5 +127,5 @@ object TropologyApi {
     * out-degree (the reference's pages-row lookup with its link count).
     */
   def nodeInfo(s: SparkSession, dir: String, orderKey: Long): DataFrame =
-    orderStats(s, dir).filter(col("o_orderkey") === orderKey)
+    orderStats(s, dir).filter(keyIn(col("o_orderkey"), Seq(orderKey)))
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Divide, Expression, ExpressionInfo, MonotonicallyIncreasingID, Multiply, Rand, Randn, Sqrt, Uuid, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Divide, Expression, ExpressionInfo, InSet, MonotonicallyIncreasingID, Multiply, Rand, Randn, Sqrt, Uuid, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Engine extension point (`spark.sql.extensions=graft.plans.GraftExtensions`):
@@ -14,6 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   *   - `graft_cosine(a, b)`  — cosine similarity composed from existing
   *                             Catalyst nodes (Divide/Multiply/Sqrt over
   *                             [[DotProduct]]); no new eval code to trust.
+  *   - `graft_key_in(c, k…)` — `c IN (k…)` as Catalyst `InSet`, whose
+  *                             generated code holds the keys by reference,
+  *                             so a point-lookup plan compiles once for
+  *                             every key (the serving routes).
   *   - determinism guard     — an injected analysis CHECK rule rejecting
   *     partition-order-sensitive expressions (rand/randn/uuid/
   *     monotonically_increasing_id) whose values change under
@@ -111,6 +115,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graft_might_contain(bloom, v) - membership probe; false => definitely absent"),
       (args: Seq[Expression]) =>
         BloomFilterMightContain(args(0), new XxHash64(Seq(args(1))))))
+
+    // Key-set membership for point lookups (the serving routes). Catalyst's
+    // own `isin` inlines every key as a literal into the generated code, and
+    // OptimizeIn folds a one-key list to `=` (also inlined), so each new key
+    // compiles a new whole-stage class. InSet's generated code reads its keys
+    // through a reference object instead: one class serves every key set of
+    // the same plan. InSet still prunes buckets and pushes down to parquet.
+    // (For BYTE/SHORT/INT/DATE columns Spark emits a `switch` over the
+    // keys, which inlines them again; the serving keys are BIGINT.)
+    ext.injectFunction((
+      FunctionIdentifier("graft_key_in"),
+      info("graft_key_in",
+        "graft_key_in(col, k1, k2, ...) - col IN (k1, k2, ...) with keys held by reference"),
+      (args: Seq[Expression]) => {
+        def fail(msg: String) = throw new org.apache.spark.sql.AnalysisException(
+          errorClass = "_LEGACY_ERROR_USER_RAISED_EXCEPTION",
+          messageParameters = Map("errorMessage" -> s"graft_key_in: $msg"))
+        if (args.size < 2) fail("needs a column and at least one key")
+        val (c, keys) = (args.head, args.tail)
+        keys.foreach { k =>
+          if (!k.foldable) fail(s"key ${k.sql} is not a constant")
+          if (k.dataType != c.dataType)
+            fail(s"key ${k.sql} is ${k.dataType.sql}, column ${c.sql} is ${c.dataType.sql}")
+        }
+        // Always a HashSet: generated code casts the set reference to its
+        // runtime class, and `toSet` picks Set1..Set4 by size.
+        InSet(c, scala.collection.immutable.HashSet.from(keys.map(_.eval())))
+      }))
 
     ext.injectCheckRule { session => plan =>
       if (session.conf.get("spark.graft.determinismGuard", "true") == "true") {

@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import graft.{GraftSession, SparkEntry}
 
 /** Dev tool: a PLAN LINT over every query in the inventory — builds each
@@ -65,7 +67,7 @@ object PlanLint {
             (if (unpushed > 0) Seq(s"unpushed=$unpushed") else Nil)
           Some(Row(name, exchanges, cartesian, bnlj, unpushed, flags))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             println(s"[lint] $name ERROR ${e.getMessage}")
             None
         }

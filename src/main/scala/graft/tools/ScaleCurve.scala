@@ -1,22 +1,30 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, SparkEntry, Tables}
 
-/** BENCH-ONLY scale-curve probe (VERDICT r5 ask #8): synthesize a ~sf0.5
-  * dataset as a 5-way union of sf0.1 with shifted keys, run the most
-  * expensive queries at both scales, and report the 5× cost ratios — the
+/** BENCH-ONLY scale-curve probe (VERDICT r5 ask #8): synthesize an N×
+  * dataset as an N-way union of sf0.1 with shifted keys (N = 5 by default,
+  * `--copies=N` for the 25× and 125× curves), run the most expensive
+  * queries at both scales, and report the N× cost ratios — the
   * sub-quadratic check on the g4/g6/t5-class operators whose worst cases
-  * are super-linear. Writes `audits/bench_scale_curve.md`. Not part of the
-  * engine; the synthesized dir lives in /tmp and mimics the driver layout.
+  * are super-linear. Writes `audits/bench_scale_curve.md` (5×) or
+  * `audits/bench_scale_curve_<N>x.md`. Not part of the engine; the
+  * synthesized dir lives in /tmp and mimics the driver layout.
+  *
+  * Usage: `runMain graft.tools.ScaleCurve [--copies=N] [query …]`. Named
+  * queries run alone and APPEND their rows to the table — the dev loop for
+  * adding one row without re-measuring the whole table.
   *
   * Shift design: key columns move into disjoint ranges per copy (offset =
-  * copy × (max key + 1)), so the graph gains 5 disjoint replicas (volume
+  * copy × (max key + 1)), so the graph gains N disjoint replicas (volume
   * scales, diameter doesn't — the honest shape for "same data, more of
   * it"). Document copies get a one-token suffix so the near-dup pipeline
-  * sees 5× volume of mutually-near documents (harder than disjoint text:
+  * sees N× volume of mutually-near documents (harder than disjoint text:
   * cross-copy candidates are real and must be cap-bounded). Embeddings
   * keep their vectors (cross-copy ties broken by vec_id).
   */
@@ -160,14 +168,17 @@ object ScaleCurve {
   }
 
   def main(args: Array[String]): Unit = {
-    // Same env conventions as HyperBallKnob (ADVICE r11): this tool's base
-    // scale is ALWAYS sf0.1, but the documented single-dir variable
-    // SPARK_GRAFT_SF_DIR conventionally points at the sf0.001 gate dir —
-    // honoring it directly would silently compute the curve on gate-scale
-    // data while labeling it sf0.1. So, like HyperBallKnob, the variable's
-    // PARENT is the data root and the sf0.1 leaf is appended; a
-    // SPARK_GRAFT_SF_DIR that already names .../sf0.1 resolves identically.
+    // This tool's base scale is ALWAYS sf0.1, but the documented single-dir
+    // variable SPARK_GRAFT_SF_DIR conventionally points at the sf0.001
+    // gate dir — honoring it directly would silently compute the curve on
+    // gate-scale data while labeling it sf0.1. So the variable's PARENT is
+    // the data root and the sf0.1 leaf is appended; a SPARK_GRAFT_SF_DIR
+    // that already names .../sf0.1 resolves identically.
     // SPARK_GRAFT_DATA_DIR overrides the root explicitly.
+    val (copyArgs, queryArgs) = args.partition(_.startsWith("--copies="))
+    val copies = copyArgs.lastOption.fold(5)(_.stripPrefix("--copies=").toInt)
+    require(copies >= 2, s"ScaleCurve: --copies must be at least 2, got $copies")
+    val x = s"$copies×"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus, "graft-scale-curve")
     val dataBase = sys.env.get("SPARK_GRAFT_DATA_DIR")
@@ -178,40 +189,42 @@ object ScaleCurve {
     require(new java.io.File(base).isDirectory,
       s"ScaleCurve: resolved sf0.1 base $base does not exist " +
         "(set SPARK_GRAFT_DATA_DIR to the directory holding the sf* dirs)")
-    val big = s"${System.getProperty("java.io.tmpdir")}/graft_sf05"
+    // The synthesized dir is a deterministic function of (base, copies);
+    // events.parquet is the last table synthesize writes, so its presence
+    // marks a complete prior run.
+    val big = f"${System.getProperty("java.io.tmpdir")}/graft_sf$copies%02d"
     if (new java.io.File(s"$big/events.parquet").isDirectory)
-      println("[scale] reusing existing 5x dataset")
+      println(s"[scale] reusing existing ${copies}x dataset")
     else {
-      println("[scale] synthesizing 5x dataset...")
-      synthesize(spark, base, big)
+      println(s"[scale] synthesizing ${copies}x dataset...")
+      synthesize(spark, base, big, copies)
     }
 
-    // Args = run only the named queries and APPEND their rows (the
-    // ScaleCurve125 convention) — the dev loop for adding one row
-    // without re-measuring the whole table.
-    val selected = if (args.nonEmpty) args.toSeq else Queries
+    val selected = if (queryArgs.nonEmpty) queryArgs.toSeq else Queries
     val rows = selected.flatMap { q =>
       try {
         val (c1, t1, n1) = time(spark, q, base)
-        val (c5, t5, n5) = time(spark, q, big)
+        val (cN, tN, nN) = time(spark, q, big)
         println(f"[scale] $q%-26s sf0.1=$t1%7.2fs (build+first $c1%.2f) " +
-          f"5x=$t5%7.2fs (build+first $c5%.2f) warm ratio=${t5 / t1}%5.2f " +
-          f"rows $n1%d -> $n5%d")
-        Some((q, c1, t1, c5, t5, t5 / t1, n1, n5))
+          f"${copies}x=$tN%7.2fs (build+first $cN%.2f) warm ratio=${tN / t1}%5.2f " +
+          f"rows $n1%d -> $nN%d")
+        Some((q, c1, t1, cN, tN, tN / t1, n1, nN))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           // Margin requires may legitimately fire on the synthesized data
-          // (e.g. 5 near-identical copies per doc grow near-dup clusters
+          // (e.g. N near-identical copies per doc grow near-dup clusters
           // past a fixture-calibrated bound) — report, don't die.
           println(s"[scale] $q FAILED on synthesized data: ${e.getMessage.linesIterator.next()}")
           None
       }
     }
 
+    // The warm-ratio bar is linear growth plus 20 % headroom (~6 at 5×).
+    val bar = math.round(1.2 * copies)
     val md = new StringBuilder
-    if (args.isEmpty) {
-      md.append("# Bench scale curve — 5× synthesized data (round 12)\n\n")
-    md.append("5× dataset: union of sf0.1 with per-copy shifted keys ")
+    if (queryArgs.isEmpty) {
+      md.append(s"# Bench scale curve — $x synthesized data\n\n")
+    md.append(s"$x dataset: union of $copies copies of sf0.1 with per-copy shifted keys ")
     md.append("(disjoint graph replicas; document copies carry a one-token\n")
     md.append("suffix so near-dup candidates cross copies; see ")
     md.append("`tools/ScaleCurve.scala`).\n\nTimes at local[32]. ")
@@ -220,23 +233,23 @@ object ScaleCurve {
     md.append("LSH signature\ncheckpoints, corpus snapshots) plus JIT, costs ")
     md.append("a standing deployment amortizes\nacross every query. `warm` is ")
     md.append("best-of-2 over the built artifacts and is the\nheadline: the ")
-    md.append("**ratio column is warm-5×/warm-sf0.1**, with no build bleed.\n\n")
-    md.append("A warm ratio ≤ ~6 on 5× data means the operator's cost curve ")
+    md.append(s"**ratio column is warm-$x/warm-sf0.1**, with no build bleed.\n\n")
+    md.append(s"A warm ratio ≤ ~$bar on $x data means the operator's cost curve ")
     md.append("is bending\nsub-quadratically — caps/bucketing are doing ")
     md.append("their job. For queries whose TRUE\nworkload legitimately grows ")
     md.append("faster than the data (the synthesized corpus gives\nevery ")
-    md.append("document 4 near-identical copies, so near-dup candidate pairs ")
+    md.append(s"document ${copies - 1} near-identical copies, so near-dup candidate pairs ")
     md.append("grow\nsuper-linearly BY CONSTRUCTION), the `rows ×` column — the ")
     md.append("measured growth of\nthe query's own output (emitted pairs / ")
     md.append("verified members / cluster rows) — is\nthe denominator that ")
     md.append("matters: **`time÷rows` = warm-ratio ÷ rows-ratio is the\n")
-    md.append("structural number**. The self-certifying bar: **warm ratio ≤ ~6, ")
+    md.append(s"structural number**. The self-certifying bar: **warm ratio ≤ ~$bar, ")
     md.append("OR\ntime÷rows ≤ ~2** (linear in its measured workload). A ")
-    md.append("quadratic operator\nwould fail both — its time grows ~25× while ")
+    md.append(s"quadratic operator\nwould fail both — its time grows ~${copies * copies}× while ")
     md.append("its output can't. (For\nsmall-fixed-output queries — top-k, ")
     md.append("global aggregates — rows × sits near 1\nand the warm-ratio arm ")
     md.append("is the operative one.)\n\n")
-    md.append("| query | sf0.1 build+first (s) | sf0.1 warm (s) | 5× build+first (s) | 5× warm (s) | warm ratio | rows sf0.1 | rows 5× | rows × | time÷rows | role |\n")
+    md.append(s"| query | sf0.1 build+first (s) | sf0.1 warm (s) | $x build+first (s) | $x warm (s) | warm ratio | rows sf0.1 | rows $x | rows × | time÷rows | role |\n")
     md.append("|---|---|---|---|---|---|---|---|---|---|---|\n")
     }
     // Row-level role tags so the table reads standalone: a 100×-scale
@@ -247,17 +260,19 @@ object ScaleCurve {
         "DEMO — untier'd all-candidate verify; what happens WITHOUT tiering",
       "t21_tiered_verify" ->
         "PRODUCTION path for t19's workload (exact→LSH→char, cluster-bounded)")
-    rows.foreach { case (q, c1, t1, c5, t5, r, n1, n5) =>
-      val rowsRatio = if (n1 > 0) n5.toDouble / n1 else Double.NaN
-      md.append(f"| $q | $c1%.2f | $t1%.2f | $c5%.2f | $t5%.2f | $r%.2f " +
-        f"| $n1%d | $n5%d | $rowsRatio%.2f | ${r / rowsRatio}%.2f " +
+    rows.foreach { case (q, c1, t1, cN, tN, r, n1, nN) =>
+      val rowsRatio = if (n1 > 0) nN.toDouble / n1 else Double.NaN
+      md.append(f"| $q | $c1%.2f | $t1%.2f | $cN%.2f | $tN%.2f | $r%.2f " +
+        f"| $n1%d | $nN%d | $rowsRatio%.2f | ${r / rowsRatio}%.2f " +
         s"| ${tags.getOrElse(q, "")} |\n")
     }
-    val outPath = java.nio.file.Paths.get("audits/bench_scale_curve.md")
-    if (args.isEmpty) java.nio.file.Files.writeString(outPath, md.toString)
+    val out = if (copies == 5) "audits/bench_scale_curve.md"
+      else s"audits/bench_scale_curve_${copies}x.md"
+    val outPath = java.nio.file.Paths.get(out)
+    if (queryArgs.isEmpty) java.nio.file.Files.writeString(outPath, md.toString)
     else java.nio.file.Files.writeString(outPath, md.toString,
       java.nio.file.StandardOpenOption.APPEND, java.nio.file.StandardOpenOption.CREATE)
-    println(s"[scale] wrote audits/bench_scale_curve.md")
+    println(s"[scale] wrote $out")
     spark.stop()
   }
 }

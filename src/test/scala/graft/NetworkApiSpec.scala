@@ -26,9 +26,26 @@ class NetworkApiSpec extends AnyFunSuite {
   }
 
   test("payload is deterministic across evaluations") {
-    val a = NetworkApi.neighborhoodPayload(spark, "/root/testdata/sf0.001").collect()(0).getString(0)
-    val b = NetworkApi.neighborhoodPayload(spark, "/root/testdata/sf0.001").collect()(0).getString(0)
+    // The served payload is a maintained artifact, so comparing two reads
+    // of it would compare the table with itself: evaluate the derivation.
+    def derived = NetworkApi.derivePayload(spark, dir, 10).collect()(0).getString(0)
+    val (a, b) = (derived, derived)
     assert(a === b)
+    assert(NetworkApi.neighborhoodPayload(spark, dir).collect()(0).getString(0) === a)
+  }
+
+  test("/api/network reads one row of the maintained payload: one file scan, no top-1, no order-stats scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = graft.api.TropologyApi.networkForNode(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(plan) { case f: FileSourceScanExec => f }
+    assert(scans.size === 1, plan)
+    assert(scans.head.tableIdentifier.exists(_.table.startsWith("graft_serve_network_")), plan)
+    assert(helper.collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty, plan)
+    assert(!plan.toString.contains("serve_order_stats"), plan)
   }
 
   test("payload parses as JSON with k neighbor nodes and matching edges") {

@@ -85,6 +85,32 @@ class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(links.count() === parts)
   }
 
+  test("serving routes compile once: a second never-served key adds no code compilation") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.api.{ApiServer, TropologyApi}
+    val spark0 = spark
+    import spark0.implicits._
+    // Pairs of orders that share a part, from the top of the key range
+    // (the other suites serve keys from the bottom), so every route below
+    // has a non-empty answer for both pairs and so the same plan shape.
+    val e = TropologyApi.orderLinks(spark, dir)
+    val pairs = e.as("x").join(e.as("y"),
+        col("x.p") === col("y.p") && col("x.o") < col("y.o"))
+      .select(col("x.o"), col("y.o")).distinct()
+      .orderBy(col("x.o").desc, col("y.o").desc).as[(Long, Long)].collect().toSeq
+    val (a1, b1) = pairs.head
+    val (a2, b2) = pairs.find { case (a, b) => a != a1 && a != b1 && b != a1 && b != b1 }.get
+    def serve(a: Long, b: Long): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Seq(TropologyApi.nodeInfo(spark, dir, a), TropologyApi.linksForArticle(spark, dir, a),
+        TropologyApi.commonLinksBetween(spark, dir, a, b))
+        .foreach(df => assert(ApiServer.rows(df) !== "[]", (a, b)))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    serve(a1, b1)
+    assert(serve(a2, b2) === 0L, s"keys $a2, $b2 compiled new code after $a1, $b1")
+  }
+
   test("t15 reads the persisted standing-corpus artifacts as file scans") {
     val p = plan("t15_incremental_dedup")
     assert(p.contains("t15_corpus_fp"), "fingerprints must come from the snapshot")
