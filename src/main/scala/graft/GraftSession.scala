@@ -61,8 +61,7 @@ object GraftSession {
       // splits and the floor never binds; this only stops a SMALL input
       // from idling a large cluster.
       .config("spark.sql.files.minPartitionNum", (cores * 2).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("GRAFT_ABJT", (64L * 1024 * 1024).toString))
+      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()

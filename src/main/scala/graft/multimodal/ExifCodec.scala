@@ -163,37 +163,20 @@ object ExifCodec {
     * APP0/APP1 only leaves that Option empty.
     */
   def parseJpegMeta(b: Array[Byte]): Option[JpegMeta] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var p = 2
+    val walk = new JpegCodec.JpegWalker(b)
     var jfif: Option[(Int, Int, Int)] = None
     var exif: Option[ExifMeta] = None
-    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    while (p + 4 <= b.length && (b(p) & 0xff) == 0xff) {
-      while (p + 4 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
-      if (p + 4 > b.length) return None
-      val marker = b(p + 1) & 0xff
-      if (marker == 0xd9 || marker == 0xda) return None // no frame header
-      val len = be16(p + 2)
-      if (len < 2 || p + 2 + len > b.length) return None
-      val seg0 = p + 4; val segEnd = p + 2 + len
-      if (marker >= 0xc0 && marker <= 0xcf && marker != 0xc4 &&
-        marker != 0xc8 && marker != 0xcc) {
-        if (len < 7) return None
-        val h = be16(seg0 + 1); val w = be16(seg0 + 3)
-        if (w <= 0 || h <= 0) return None
-        return Some(JpegMeta(w, h, jfif, exif))
-      }
-      if (marker == 0xe0 && segEnd - seg0 >= 14 &&
+    walk.frameSize { marker =>
+      val seg0 = walk.seg0
+      if (marker == 0xe0 && walk.segEnd - seg0 >= 14 &&
         b(seg0) == 'J' && b(seg0 + 1) == 'F' && b(seg0 + 2) == 'I' &&
         b(seg0 + 3) == 'F' && b(seg0 + 4) == 0) {
         val units = b(seg0 + 7) & 0xff
-        val xd = be16(seg0 + 8); val yd = be16(seg0 + 10)
+        val xd = walk.be16(seg0 + 8); val yd = walk.be16(seg0 + 10)
         if (units <= 2 && xd > 0 && yd > 0) jfif = Some((units, xd, yd))
       }
       if (marker == 0xe1 && exif.isEmpty)
-        exif = parseExifPayload(b, seg0, segEnd)
-      p = segEnd
-    }
-    None
+        exif = parseExifPayload(b, seg0, walk.segEnd)
+    }.map { case (w, h) => JpegMeta(w, h, jfif, exif) }
   }
 }

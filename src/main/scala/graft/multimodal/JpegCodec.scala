@@ -671,7 +671,7 @@ object JpegCodec {
     */
   private final class BitReader(b: Array[Byte], var pos: Int) {
     private var acc = 0; private var nbits = 0
-    var atMarker = false
+    private var atMarker = false
     def bit(): Int = {
       if (nbits == 0) {
         if (atMarker || pos >= b.length) return -1
@@ -691,6 +691,21 @@ object JpegCodec {
       var v = 0; var i = 0
       while (i < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; i += 1 }
       v
+    }
+
+    /** Restart boundary (§F.2.1.3.1) after the `count`-th restart
+      * interval: the encoder byte-aligned and wrote RSTm, m = (count − 1)
+      * mod 8. This reader buffers whole bytes, so `pos` is already
+      * byte-aligned just past the consumed entropy data — the marker must
+      * sit EXACTLY there (no scanning past garbage). Consumes it and
+      * starts the next interval on a fresh byte; false when it is missing
+      * or out of sequence. The restart-marker check of every decoder.
+      */
+    def restart(count: Int): Boolean = {
+      if (pos + 1 >= b.length || (b(pos) & 0xff) != 0xff ||
+        (b(pos + 1) & 0xff) != 0xd0 + ((count - 1) & 7)) return false
+      pos += 2; nbits = 0; atMarker = false
+      true
     }
   }
 
@@ -713,6 +728,21 @@ object JpegCodec {
   private def extend(v: Int, s: Int): Int =
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
+  /** Sequential-DCT constants per sample precision (T.81 Tables F.1/F.2,
+    * §A.3.1): the largest DC-difference and AC-coefficient categories, a
+    * reject-only bound on the accumulated DC predictor, the level shift
+    * and the largest sample. Each DIFF is category-capped but the
+    * predictor accumulates across blocks; a stream of max-category diffs
+    * could walk it past Int range and mis-decode silently (ADVICE r11).
+    * Every legal quantized DC fits ±2047 (8-bit) or ±16384 (12-bit), so
+    * the bounds are generous. Progressive frames use the 8-bit DC
+    * constants.
+    */
+  private final case class Precision(maxDcCat: Int, maxAcCat: Int,
+      predBound: Int, levelShift: Int, maxVal: Int)
+  private val Precision8 = Precision(11, 10, 32767, 128, 255)
+  private val Precision12 = Precision(15, 14, 65535, 2048, 4095)
+
   // Separable IDCT basis: c(u)·cos((2x+1)uπ/16), doubles. Fixture pixel
   // values are exact integers by construction, so the ~1e-13 float error
   // here can never flip round-to-nearest; general streams get the usual
@@ -725,14 +755,8 @@ object JpegCodec {
     t
   }
 
-  private def idctBlock(coef: Array[Int], out: Array[Int]): Unit =
-    idctBlockP(coef, out, 128, 255)
-
-  /** IDCT with precision-parametrized level shift and clamp: 8-bit uses
-    * (128, 255); the 12-bit extended-sequential path (2048, 4095).
-    */
-  private def idctBlockP(coef: Array[Int], out: Array[Int],
-      levelShift: Int, maxVal: Int): Unit = {
+  /** IDCT with the precision's level shift and clamp. */
+  private def idctBlock(coef: Array[Int], out: Array[Int], pc: Precision): Unit = {
     // rows: for each y, tmp(y,x) = sum_u basis(u,x) * coef(y*8+u)
     val tmp = new Array[Double](64)
     var y = 0
@@ -752,8 +776,8 @@ object JpegCodec {
       while (yy < 8) {
         var s = 0.0; var v = 0
         while (v < 8) { val t = tmp(v * 8 + x); if (t != 0.0) s += IdctBasis(v * 8 + yy) * t; v += 1 }
-        val p = math.round(s / 4.0 + levelShift).toInt
-        out(yy * 8 + x) = if (p < 0) 0 else if (p > maxVal) maxVal else p
+        val p = math.round(s / 4.0 + pc.levelShift).toInt
+        out(yy * 8 + x) = if (p < 0) 0 else if (p > pc.maxVal) pc.maxVal else p
         yy += 1
       }
       x += 1
@@ -763,86 +787,328 @@ object JpegCodec {
   /** One frame component: id, sampling factors, quant-table selector. */
   private final case class Comp(id: Int, hi: Int, vi: Int, tq: Int)
 
-  /** Decoded frame: per-component planes, each upsampled (sample
-    * replication) and cropped to the full w×h raster. 1 plane = grayscale,
-    * 3 = YCbCr (color transform happens in [[jpegDecodeColorPixels]]),
-    * 4 = Adobe CMYK/YCCK — `adobeTransform` carries the APP14
-    * ColorTransform (0 = channels direct, 2 = YCCK; -1 = no APP14, only
-    * possible for 1/3-component frames).
+  /** Frame header (§B.2.2): the SOFn that opened it, sample precision,
+    * dimensions and components, plus the interleaved MCU grid (§A.2.3) —
+    * for one 1×1 component, the ceil(w/8)·ceil(h/8) block grid.
     */
-  private final case class DecodedFrame(w: Int, h: Int,
-      planes: Array[Array[Byte]], adobeTransform: Int = -1)
-
-  /** Parse a DQT segment (one or more (Pq/Tq, 64 zigzag values) entries,
-    * §B.2.4.1) into `qtabs` (natural order). Shared by all decoders;
-    * false on any structural violation (zero steps; Pq = 1 — 16-bit
-    * values — only where `allow16` is set, i.e. the 12-bit extended
-    * process; baseline/progressive 8-bit frames must carry 8-bit tables).
-    */
-  private def parseDqt(b: Array[Byte], seg0: Int, segEnd: Int,
-      qtabs: Array[Array[Int]], allow16: Boolean = false): Boolean = {
-    var q = seg0
-    while (q < segEnd) {
-      if (q + 1 > segEnd) return false
-      val pq = (b(q) & 0xff) >> 4; val tq = b(q) & 0x0f
-      if (pq > 1 || (pq == 1 && !allow16) || tq > 3) return false
-      val step = if (pq == 1) 2 else 1
-      if (q + 1 + 64 * step > segEnd) return false
-      val tab = new Array[Int](64)
-      for (k <- 0 until 64) {
-        val v =
-          if (pq == 1) ((b(q + 1 + 2 * k) & 0xff) << 8) | (b(q + 2 + 2 * k) & 0xff)
-          else b(q + 1 + k) & 0xff
-        if (v == 0) return false
-        tab(ZigZag(k)) = v // stored zigzag → natural
-      }
-      qtabs(tq) = tab
-      q += 1 + 64 * step
-    }
-    true
+  private final class Frame(val sof: Int, val precision: Int, val w: Int,
+      val h: Int, val comps: Array[Comp]) {
+    val hmax: Int = comps.map(_.hi).max
+    val vmax: Int = comps.map(_.vi).max
+    val mcuW: Int = (w + 8 * hmax - 1) / (8 * hmax)
+    val mcuH: Int = (h + 8 * vmax - 1) / (8 * vmax)
   }
 
-  /** Parse a DHT segment (one or more (Tc/Th, bits, vals) entries,
-    * §B.2.4.2) into the DC/AC table slots. Shared by both decoders.
+  /** Scan header (§B.2.3): per scan component its frame-component index
+    * and DC/AC table selectors; spectral selection Ss..Se and successive
+    * approximation Ah/Al (a lossless scan carries its predictor in Ss and
+    * its point transform in Al).
     */
-  private def parseDht(b: Array[Byte], seg0: Int, segEnd: Int,
-      dcTabs: Array[HuffTable], acTabs: Array[HuffTable]): Boolean = {
-    var q = seg0
-    while (q < segEnd) {
-      if (q + 17 > segEnd) return false
-      val tc = (b(q) & 0xff) >> 4; val th = b(q) & 0x0f
-      if (tc > 1 || th > 3) return false
-      val bits = Array.tabulate(16)(i => b(q + 1 + i) & 0xff)
-      val n = bits.sum
-      if (n == 0 || n > 256 || q + 17 + n > segEnd) return false
-      val vals = Array.tabulate(n)(i => b(q + 17 + i) & 0xff)
-      val tab = new HuffTable(bits, vals)
-      if (tc == 0) dcTabs(th) = tab else acTabs(th) = tab
-      q += 17 + n
+  private final class Scan(val ci: Array[Int], val td: Array[Int],
+      val ta: Array[Int], val ss: Int, val se: Int, val ah: Int, val al: Int)
+
+  /** The JPEG marker grammar (T.81 Annex B), walked once per image by
+    * every JPEG reader: the pixel decoders below, [[MediaCodec.parseJpeg]]
+    * and [[ExifCodec.parseJpegMeta]]. The walker owns five rules, each
+    * stated once:
+    *  - SOI opens the file ([[soi]]); any number of 0xFF fill bytes may
+    *    precede a marker code (§B.1.1.2); every marker but EOI carries a
+    *    2-byte length ≥ 2 that counts itself and ends inside the buffer
+    *    ([[next]]);
+    *  - a frame header is SOFn, C0–CF except DHT (C4), JPG (C8) and DAC
+    *    (CC) ([[isSof]]);
+    *  - DQT, DHT, DRI and APP14 fold into one table state, which later
+    *    segments may redefine (§B.2.4; [[readTables]]);
+    *  - each restart interval ends in the next RSTm, exactly where its
+    *    entropy-coded data stops ([[BitReader.restart]]);
+    *  - EOI, after optional fill bytes, is the last thing in the file
+    *    ([[terminalEoi]]).
+    * Frame and scan headers are parsed here as well ([[frameHeader]],
+    * [[scanHeader]]); which of them a coding process accepts is the
+    * decoder's business. Malformed bytes give -1, false, None or null,
+    * never an exception.
+    */
+  private[multimodal] final class JpegWalker(val b: Array[Byte]) {
+    val soi: Boolean =
+      !(b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
+    /** Offset of the next marker; a decoder moves it past a scan's
+      * entropy-coded data.
+      */
+    var pos = 2
+    /** The current segment's payload is [seg0, segEnd). */
+    var seg0 = 0; var segEnd = 0
+
+    // Table state: quantization tables (natural order), Huffman tables,
+    // whether any DQT carried 16-bit entries (Pq = 1), the restart
+    // interval, and the Adobe APP14 ColorTransform (-1 = none seen).
+    private[JpegCodec] val qtabs = new Array[Array[Int]](4)
+    private[JpegCodec] val dcTabs = new Array[HuffTable](4)
+    private[JpegCodec] val acTabs = new Array[HuffTable](4)
+    private[JpegCodec] var q16 = false
+    private[JpegCodec] var restartInterval = 0
+    private[JpegCodec] var adobeTransform = -1
+
+    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+
+    /** The current segment's length field (payload + 2). */
+    def len: Int = segEnd - seg0 + 2
+
+    def isSof(m: Int): Boolean =
+      m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc
+
+    /** Read the marker at `pos`, skipping fill bytes. EOI leaves `pos`
+      * on its 0xFF; any other marker's segment is bounded and `pos` moves
+      * past it. Returns the marker code, or -1 where the bytes break the
+      * grammar.
+      */
+    def next(): Int = {
+      var p = pos
+      if (p + 2 > b.length || (b(p) & 0xff) != 0xff) return -1
+      while (p + 2 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
+      if (p + 2 > b.length) return -1
+      pos = p
+      val m = b(p + 1) & 0xff
+      if (m != 0xd9) {
+        if (p + 4 > b.length) return -1
+        val l = be16(p + 2)
+        if (l < 2 || p + 2 + l > b.length) return -1
+        seg0 = p + 4; segEnd = p + 2 + l; pos = segEnd
+      }
+      m
     }
-    true
+
+    /** True when fill bytes and then EOI run from `p` to the very end —
+      * surplus entropy data or trailing bytes are structural violations,
+      * not ignorable slack (the PNG decoder's terminal-IEND rule).
+      */
+    def terminalEoi(p: Int): Boolean = {
+      var q = p
+      while (q + 2 < b.length && (b(q) & 0xff) == 0xff && (b(q + 1) & 0xff) == 0xff) q += 1
+      q + 2 == b.length && (b(q) & 0xff) == 0xff && (b(q + 1) & 0xff) == 0xd9
+    }
+
+    /** Header sniff: walk to the first frame header, handing each earlier
+      * segment's marker to `visit`. Returns the frame's (width, height) —
+      * lines and samples per line, which the SOFn segment must hold — or
+      * None when the grammar breaks, a scan or EOI comes first, or a
+      * dimension is 0. `segEnd` then ends the frame header.
+      */
+    def frameSize(visit: Int => Unit): Option[(Int, Int)] = {
+      if (!soi) return None
+      var m = next()
+      while (m >= 0 && m != 0xd9 && m != 0xda) {
+        if (isSof(m)) {
+          if (len < 7) return None
+          val h = be16(seg0 + 1); val w = be16(seg0 + 3)
+          return if (w <= 0 || h <= 0) None else Some((w, h))
+        }
+        visit(m)
+        m = next()
+      }
+      None
+    }
+
+    /** Fold the current segment into the table state when it is a DQT,
+      * DHT, DRI or APP14; any other segment (APPn, COM) is skipped. False
+      * when a table segment is malformed.
+      */
+    private[JpegCodec] def readTables(m: Int): Boolean = m match {
+      case 0xdb => readDqt()
+      case 0xc4 => readDht()
+      case 0xdd =>
+        if (len != 4) false else { restartInterval = be16(seg0); true }
+      case 0xee =>
+        if (len >= 14 && b(seg0) == 'A' && b(seg0 + 1) == 'd' &&
+          b(seg0 + 2) == 'o' && b(seg0 + 3) == 'b' && b(seg0 + 4) == 'e')
+          adobeTransform = b(seg0 + 11) & 0xff
+        true
+      case _ => true
+    }
+
+    /** DQT (§B.2.4.1): one or more (Pq/Tq, 64 zigzag values) entries.
+      * Zero steps reject; Pq = 1 (16-bit values) sets `q16`.
+      */
+    private def readDqt(): Boolean = {
+      var q = seg0
+      while (q < segEnd) {
+        val pq = (b(q) & 0xff) >> 4; val tq = b(q) & 0x0f
+        if (pq > 1 || tq > 3) return false
+        if (q + 1 + 64 * (pq + 1) > segEnd) return false
+        val tab = new Array[Int](64)
+        var k = 0
+        while (k < 64) {
+          val v = if (pq == 1) be16(q + 1 + 2 * k) else b(q + 1 + k) & 0xff
+          if (v == 0) return false
+          tab(ZigZag(k)) = v // stored zigzag → natural
+          k += 1
+        }
+        if (pq == 1) q16 = true
+        qtabs(tq) = tab
+        q += 1 + 64 * (pq + 1)
+      }
+      true
+    }
+
+    /** DHT (§B.2.4.2): one or more (Tc/Th, bits, vals) entries. */
+    private def readDht(): Boolean = {
+      var q = seg0
+      while (q < segEnd) {
+        if (q + 17 > segEnd) return false
+        val tc = (b(q) & 0xff) >> 4; val th = b(q) & 0x0f
+        if (tc > 1 || th > 3) return false
+        val bits = Array.tabulate(16)(i => b(q + 1 + i) & 0xff)
+        val n = bits.sum
+        if (n == 0 || n > 256 || q + 17 + n > segEnd) return false
+        val tab = new HuffTable(bits, Array.tabulate(n)(i => b(q + 17 + i) & 0xff))
+        if (tc == 0) dcTabs(th) = tab else acTabs(th) = tab
+        q += 17 + n
+      }
+      true
+    }
+
+    /** Parse the current SOFn segment; null when it breaks a rule of its
+      * coding process — precision (SOF0/SOF2 8, SOF1 8 or 12, SOF3
+      * 2..16), component count (SOF0 1, 3 or 4 (Adobe CMYK, checked at
+      * SOS); SOF2 1 or 3; SOF1/SOF3 1), the pixel cap, length 8 + 3·Nf,
+      * Tq ≤ 3, distinct ids (else the SOS binding is ambiguous), and
+      * sampling: YCbCr Hi/Vi ∈ {1, 2} (4:4:4 / 4:2:2 / 4:2:0), every
+      * other count 1×1. Other SOFn (hierarchical, arithmetic) reject.
+      */
+    private[JpegCodec] def frameHeader(sof: Int): Frame = {
+      if (len < 8) return null
+      val p = b(seg0) & 0xff
+      val h = be16(seg0 + 1); val w = be16(seg0 + 3)
+      val nf = b(seg0 + 5) & 0xff
+      val (precisionOk, nfOk, cap) = sof match {
+        case 0xc0 => (p == 8, nf == 1 || nf == 3 || nf == 4, MaxPixels)
+        case 0xc1 => (p == 8 || p == 12, nf == 1, MaxPixels)
+        case 0xc2 => (p == 8, nf == 1 || nf == 3, MaxProgressivePixels)
+        case 0xc3 => (p >= 2 && p <= 16, nf == 1, MaxPixels)
+        case _ => return null
+      }
+      if (!precisionOk || !nfOk || w <= 0 || h <= 0 || w.toLong * h > cap ||
+        len != 8 + 3 * nf) return null
+      val comps = new Array[Comp](nf)
+      var i = 0
+      while (i < nf) {
+        val hv = b(seg0 + 7 + 3 * i) & 0xff
+        val hi = hv >> 4; val vi = hv & 0x0f
+        val tq = b(seg0 + 8 + 3 * i) & 0xff
+        if (tq > 3) return null
+        if (nf == 3) { if (hi < 1 || hi > 2 || vi < 1 || vi > 2) return null }
+        else if (hv != 0x11) return null
+        comps(i) = Comp(b(seg0 + 6 + 3 * i) & 0xff, hi, vi, tq)
+        i += 1
+      }
+      if (comps.map(_.id).distinct.length != nf) null
+      else new Frame(sof, p, w, h, comps)
+    }
+
+    /** Parse the current SOS segment against frame `f`; null when Ns ∉
+      * 1..Nf, the length is not 6 + 2·Ns, a scan component is not in the
+      * frame or repeats (§B.2.3), or a table selector exceeds 3.
+      */
+    private[JpegCodec] def scanHeader(f: Frame): Scan = {
+      if (len < 8) return null
+      val ns = b(seg0) & 0xff
+      if (ns < 1 || ns > f.comps.length || len != 6 + 2 * ns) return null
+      val ci = new Array[Int](ns); val td = new Array[Int](ns); val ta = new Array[Int](ns)
+      var i = 0
+      while (i < ns) {
+        val cs = b(seg0 + 1 + 2 * i) & 0xff
+        ci(i) = f.comps.indexWhere(_.id == cs)
+        td(i) = (b(seg0 + 2 + 2 * i) & 0xff) >> 4
+        ta(i) = b(seg0 + 2 + 2 * i) & 0x0f
+        if (ci(i) < 0 || td(i) > 3 || ta(i) > 3) return null
+        i += 1
+      }
+      if (ci.distinct.length != ns) return null
+      val ahAl = b(seg0 + 3 + 2 * ns) & 0xff
+      new Scan(ci, td, ta, b(seg0 + 1 + 2 * ns) & 0xff,
+        b(seg0 + 2 + 2 * ns) & 0xff, ahAl >> 4, ahAl & 0x0f)
+    }
+  }
+
+  /** What one walk decodes: 8-bit component planes (SOF0, SOF2) or
+    * full-width grayscale samples (SOF1, SOF3).
+    */
+  private sealed trait Decoded
+
+  /** Per-component planes, upsampled and cropped to w×h: 1 = grayscale,
+    * 3 = YCbCr (color transform in [[jpegDecodeColorPixels]]), 4 = Adobe
+    * CMYK/YCCK with its APP14 ColorTransform (0 = channels direct, 2 =
+    * YCCK).
+    */
+  private final case class Planes(w: Int, h: Int, planes: Array[Array[Byte]],
+      adobeTransform: Int) extends Decoded
+
+  /** SOF1 (extended sequential) or SOF3 (lossless) samples. */
+  private final case class Samples(sof: Int, image: JpegImage16) extends Decoded
+
+  /** Walk the image once and decode the frame behind the first SOFn:
+    * sequential (SOF0 baseline, SOF1 extended), progressive (SOF2) or
+    * lossless (SOF3). One frame per image; DNL rejects. Sequential and
+    * lossless frames are a single scan, which EOI must end; a progressive
+    * frame reaches EOI through the walk after at least one scan — a
+    * scan-less SOF2 file would otherwise render a fabricated flat image.
+    * DQT entries of 16 bits belong to 12-bit frames only (§B.2.4.1).
+    * None on ANY structural violation, unsupported feature, truncated
+    * entropy data or invalid Huffman state — malformed bytes never throw
+    * from an executor task.
+    */
+  private def decode(b: Array[Byte]): Option[Decoded] = {
+    val walk = new JpegWalker(b)
+    if (!walk.soi) return None
+    var f: Frame = null
+    var prog: Progressive = null
+    var out: Decoded = null
+    while (out == null) {
+      val m = walk.next()
+      if (m < 0 || m == 0xdc) return None // DNL: unsupported
+      if (m == 0xd9) {
+        if (prog == null || prog.scans == 0 || !walk.terminalEoi(walk.pos)) return None
+        out = prog.render(walk)
+        if (out == null) return None
+      } else if (walk.isSof(m)) {
+        if (f != null) return None
+        f = walk.frameHeader(m)
+        if (f == null) return None
+        if (m == 0xc2) prog = new Progressive(f)
+      } else if (m == 0xda) {
+        if (f == null) return None
+        val sc = walk.scanHeader(f)
+        if (sc == null) return None
+        if (prog != null) { if (!prog.scan(walk, sc)) return None }
+        else {
+          out = if (f.sof == 0xc3) decodeLossless(walk, f, sc) else decodeSequential(walk, f, sc)
+          if (out == null || !walk.terminalEoi(walk.pos)) return None
+        }
+      } else if (!walk.readTables(m)) return None
+    }
+    if (walk.q16 && !(f.sof == 0xc1 && f.precision == 12)) None else Some(out)
   }
 
   /** Upsample (sample replication — exact for the fixtures' per-block
     * constant chroma; ImageIO interop carries the cross-codec tolerance)
     * and crop each block-padded component plane to the w×h raster.
-    * Shared by both decoders.
+    * Shared by the sequential and progressive decoders.
     */
-  private def cropPlanes(comps: Array[Comp], planes: Array[Array[Byte]],
-      planeW: Array[Int], hmax: Int, vmax: Int, w: Int, h: Int): Array[Array[Byte]] = {
-    val outPlanes = new Array[Array[Byte]](comps.length)
-    for (i <- comps.indices) {
-      val c = comps(i)
-      if (c.hi == hmax && c.vi == vmax && planeW(i) == w && planes(i).length == w * h) {
+  private def cropPlanes(f: Frame, planes: Array[Array[Byte]],
+      planeW: Array[Int]): Array[Array[Byte]] = {
+    val w = f.w; val h = f.h
+    val outPlanes = new Array[Array[Byte]](f.comps.length)
+    for (i <- f.comps.indices) {
+      val c = f.comps(i)
+      if (c.hi == f.hmax && c.vi == f.vmax && planeW(i) == w && planes(i).length == w * h) {
         outPlanes(i) = planes(i) // full-res, unpadded: use as-is
       } else {
         val outp = new Array[Byte](w * h)
         val pw = planeW(i); val plane = planes(i)
         var y = 0
         while (y < h) {
-          val srcBase = (y * c.vi / vmax) * pw; val dstBase = y * w
+          val srcBase = (y * c.vi / f.vmax) * pw; val dstBase = y * w
           var x = 0
-          while (x < w) { outp(dstBase + x) = plane(srcBase + x * c.hi / hmax); x += 1 }
+          while (x < w) { outp(dstBase + x) = plane(srcBase + x * c.hi / f.hmax); x += 1 }
           y += 1
         }
         outPlanes(i) = outp
@@ -851,135 +1117,45 @@ object JpegCodec {
     outPlanes
   }
 
-  /** Shared baseline-sequential decode core (gray 1-component
-    * non-interleaved scan, or 3-component interleaved MCU scan with
-    * per-component sampling Hi/Vi ∈ {1, 2} — 4:4:4 / 4:2:2 / 4:2:0).
-    * Returns None on ANY structural violation, unsupported feature
-    * (progressive, 12-bit, arithmetic coding, Nf ∉ {1, 3}, Hi/Vi > 2),
-    * truncated entropy data, or invalid Huffman state — malformed bytes
-    * never throw from an executor task.
+  /** The one scan of a SEQUENTIAL frame — SOF0 baseline or SOF1 extended
+    * (§F.2): grayscale, YCbCr with Hi/Vi ∈ {1, 2}, or Adobe 4-component
+    * CMYK/YCCK; the frame precision picks the [[Precision]] constants.
+    * 8-bit samples land in byte planes (never widened: 4× the memory at
+    * the pixel cap); 12-bit ones (grayscale only) in one Int plane. Moves
+    * `walk.pos` past the entropy-coded data; null on any structural
+    * violation.
     */
-  private def decodeBaseline(b: Array[Byte]): Option[DecodedFrame] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var p = 2
-    var w = -1; var h = -1
-    var comps: Array[Comp] = null
-    val qtabs = new Array[Array[Int]](4)
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
-    var restartInterval = 0
-    var sosAt = -1
-    var dcSel: Array[Int] = null; var acSel: Array[Int] = null
-    var adobeTransform = -1 // from APP14; -1 = no Adobe segment seen
-
-    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-
-    while (sosAt < 0) {
-      if (p + 4 > b.length || (b(p) & 0xff) != 0xff) return None
-      // Optional fill bytes: any number of 0xFF may pad before a marker
-      // code (§B.1.1.2) — skip them, don't misread one as a marker.
-      while (p + 4 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
-      if (p + 4 > b.length) return None
-      val marker = b(p + 1) & 0xff
-      if (marker == 0xd9) return None // EOI before SOS: no image data
-      val len = be16(p + 2)
-      if (len < 2 || p + 2 + len > b.length) return None
-      val seg0 = p + 4; val segEnd = p + 2 + len
-      marker match {
-        case 0xdb => if (!parseDqt(b, seg0, segEnd, qtabs)) return None
-        case 0xc4 => if (!parseDht(b, seg0, segEnd, dcTabs, acTabs)) return None
-        case 0xc0 => // SOF0 baseline; any other SOFn (c1-cf except c4/c8/cc) rejects
-          if (w != -1) return None // duplicate frame header
-          if (len < 8 || (b(seg0) & 0xff) != 8) return None // 8-bit precision
-          h = be16(seg0 + 1); w = be16(seg0 + 3)
-          val nf = b(seg0 + 5) & 0xff
-          // Gray, YCbCr, or Adobe 4-component CMYK (validated at SOS).
-          if (w <= 0 || h <= 0 || (nf != 1 && nf != 3 && nf != 4)) return None
-          if (w.toLong * h.toLong > MaxPixels) return None
-          if (len != 8 + 3 * nf) return None
-          comps = new Array[Comp](nf)
-          for (i <- 0 until nf) {
-            val cid = b(seg0 + 6 + 3 * i) & 0xff
-            val hv = b(seg0 + 7 + 3 * i) & 0xff
-            val hi = hv >> 4; val vi = hv & 0x0f
-            val tq = b(seg0 + 8 + 3 * i) & 0xff
-            if (tq > 3) return None
-            // Gray and CMYK keep the strict 1×1 pin; YCbCr allows
-            // Hi/Vi ∈ {1, 2} (covers 4:4:4 / 4:2:2 / 4:2:0); 3/4 rejects —
-            // honest residue.
-            if (nf == 1 || nf == 4) { if (hv != 0x11) return None }
-            else if (hi < 1 || hi > 2 || vi < 1 || vi > 2) return None
-            comps(i) = Comp(cid, hi, vi, tq)
-          }
-          // Duplicate component ids make the SOS binding ambiguous.
-          if (comps.map(_.id).distinct.length != nf) return None
-        case m if m >= 0xc1 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc =>
-          return None // progressive / extended / arithmetic: unsupported
-        case 0xdd => // DRI
-          if (len != 4) return None
-          restartInterval = be16(seg0)
-        case 0xee => // APP14: record the Adobe ColorTransform if present
-          if (len >= 14 && b(seg0) == 'A' && b(seg0 + 1) == 'd' &&
-            b(seg0 + 2) == 'o' && b(seg0 + 3) == 'b' && b(seg0 + 4) == 'e')
-            adobeTransform = b(seg0 + 11) & 0xff
-        case 0xda => // SOS
-          if (w < 0) return None // SOS before SOF
-          // A 4-component frame is accepted ONLY as Adobe CMYK with
-          // ColorTransform 0 (channels coded directly) or 2 (YCCK — the
-          // common Adobe print-scan variant; the inverse YCbCr on the CMY
-          // channels happens in jpegDecodeCmykPixels): without the APP14
-          // the channel meaning is undefined and rejects rather than
-          // mis-decodes. Transform 1 (YCbCr) is meaningless at Nf=4.
-          if (comps.length == 4 && adobeTransform != 0 && adobeTransform != 2)
-            return None
-          val ns = b(seg0) & 0xff
-          if (ns != comps.length || len != 6 + 2 * ns) return None
-          dcSel = new Array[Int](ns); acSel = new Array[Int](ns)
-          for (i <- 0 until ns) {
-            // The single baseline scan must bind every frame component in
-            // frame order (§B.2.3: Csj must match a frame Ci; interleaved
-            // order follows frame order — a permuted scan rejects).
-            if ((b(seg0 + 1 + 2 * i) & 0xff) != comps(i).id) return None
-            dcSel(i) = (b(seg0 + 2 + 2 * i) & 0xff) >> 4
-            acSel(i) = b(seg0 + 2 + 2 * i) & 0x0f
-            if (dcSel(i) > 3 || acSel(i) > 3) return None
-          }
-          // baseline spectral window: Ss=0, Se=63, Ah=Al=0
-          if ((b(seg0 + 1 + 2 * ns) & 0xff) != 0 ||
-            (b(seg0 + 2 + 2 * ns) & 0xff) != 63 ||
-            (b(seg0 + 3 + 2 * ns) & 0xff) != 0) return None
-          sosAt = segEnd
-        case _ => () // APPn, COM, others: skipped
-      }
-      p = segEnd
-    }
-
-    // Table presence per scan component.
-    val nf = comps.length
-    for (i <- 0 until nf) {
-      if (qtabs(comps(i).tq) == null) return None
-      if (dcTabs(dcSel(i)) == null || acTabs(acSel(i)) == null) return None
-    }
-
-    val hmax = comps.map(_.hi).max
-    val vmax = comps.map(_.vi).max
-    // Interleaved MCU grid (§A.2.3); for nf=1 (hmax=vmax=1) this reduces
-    // to the non-interleaved one-block-per-MCU scan over ceil(w/8)·ceil(h/8).
-    val mcuW = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcuH = (h + 8 * vmax - 1) / (8 * vmax)
-    val nMcu = mcuW * mcuH
+  private def decodeSequential(walk: JpegWalker, f: Frame, sc: Scan): Decoded = {
+    val comps = f.comps; val nf = comps.length
+    val qt = comps.map(c => walk.qtabs(c.tq))
+    val dcT = sc.td.map(walk.dcTabs(_))
+    val acT = sc.ta.map(walk.acTabs(_))
+    // The one scan binds every frame component in frame order (§B.2.3:
+    // interleaved order follows frame order — a permuted scan rejects)
+    // over the full spectrum: Ss = 0, Se = 63, Ah = Al = 0.
+    if (!sc.ci.sameElements(comps.indices) || sc.ss != 0 || sc.se != 63 ||
+      sc.ah != 0 || sc.al != 0) return null
+    if (qt.contains(null) || dcT.contains(null) || acT.contains(null)) return null
+    // A 4-component frame is Adobe CMYK only: APP14 ColorTransform 0
+    // (channels coded directly) or 2 (YCCK, undone in
+    // jpegDecodeCmykPixels). Without the APP14 the channel meaning is
+    // undefined, and transform 1 (YCbCr) is meaningless at Nf = 4 —
+    // reject rather than mis-decode.
+    if (nf == 4 && walk.adobeTransform != 0 && walk.adobeTransform != 2) return null
+    val pc = if (f.precision == 12) Precision12 else Precision8
+    val nMcu = f.mcuW * f.mcuH
     // Per-component block-padded planes; upsampled/cropped to w×h at the end.
     val planeW = new Array[Int](nf)
     val planes = new Array[Array[Byte]](nf)
+    var wide: Array[Int] = null
     for (i <- 0 until nf) {
-      planeW(i) = mcuW * comps(i).hi * 8
-      val ph = mcuH * comps(i).vi * 8
-      if (planeW(i).toLong * ph > 4L * MaxPixels) return None
-      planes(i) = new Array[Byte](planeW(i) * ph)
+      planeW(i) = f.mcuW * comps(i).hi * 8
+      val n = planeW(i) * f.mcuH * comps(i).vi * 8 // (w + 15)·(h + 15) at most
+      if (f.precision == 12) wide = new Array[Int](n) else planes(i) = new Array[Byte](n)
     }
     val coef = new Array[Int](64)
     val blockOut = new Array[Int](64)
-    var r = new BitReader(b, sosAt)
+    val r = new BitReader(walk.b, walk.pos)
     val dcPred = new Array[Int](nf)
 
     // One entropy-coded block for component ci: DC category + EXTENDed
@@ -988,21 +1164,17 @@ object JpegCodec {
     // false on any structural violation.
     def decodeBlock(ci: Int): Boolean = {
       java.util.Arrays.fill(coef, 0)
-      val qt = qtabs(comps(ci).tq)
-      val s = huffDecode(r, dcTabs(dcSel(ci)))
-      if (s < 0 || s > 11) return false
+      val q = qt(ci)
+      val s = huffDecode(r, dcT(ci))
+      if (s < 0 || s > pc.maxDcCat) return false
       val diffBits = if (s == 0) 0 else r.bits(s)
       if (diffBits < 0) return false
       dcPred(ci) += extend(diffBits, s)
-      // Each DIFF is category-capped (±2047) but the predictor accumulates
-      // across blocks; a stream of max-category diffs could walk it past
-      // Int range and mis-decode silently (ADVICE r11). Any legal 8-bit
-      // quantized DC fits ±2047, so ±32767 is a generous reject-only bound.
-      if (dcPred(ci) > 32767 || dcPred(ci) < -32767) return false
-      coef(0) = dcPred(ci) * qt(0)
+      if (dcPred(ci) > pc.predBound || dcPred(ci) < -pc.predBound) return false
+      coef(0) = dcPred(ci) * q(0)
       var k = 1
       while (k <= 63) {
-        val rs = huffDecode(r, acTabs(acSel(ci)))
+        val rs = huffDecode(r, acT(ci))
         if (rs < 0) return false
         val run = rs >> 4; val sz = rs & 0x0f
         if (sz == 0) {
@@ -1016,31 +1188,24 @@ object JpegCodec {
           } else return true // EOB
         } else {
           k += run
-          if (k > 63) return false
+          if (k > 63 || sz > pc.maxAcCat) return false
           val vb = r.bits(sz)
           if (vb < 0) return false
-          coef(ZigZag(k)) = extend(vb, sz) * qt(ZigZag(k))
+          coef(ZigZag(k)) = extend(vb, sz) * q(ZigZag(k))
           k += 1
         }
       }
       true
     }
 
+    val ri = walk.restartInterval
     var mcu = 0
     while (mcu < nMcu) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        // Restart boundary (§F.2.1.3.1): the encoder byte-aligned and wrote
-        // RSTn in sequence. Our reader buffers whole bytes, so r.pos is
-        // already byte-aligned just past the consumed entropy data — the
-        // marker must sit EXACTLY there (no scanning past garbage). Reset
-        // ALL component DC predictors and continue with a fresh bit reader.
-        if (r.pos + 1 >= b.length || (b(r.pos) & 0xff) != 0xff) return None
-        val m = b(r.pos + 1) & 0xff
-        if (m < 0xd0 || m > 0xd7 || (m - 0xd0) != ((mcu / restartInterval - 1) & 7)) return None
-        r = new BitReader(b, r.pos + 2)
-        java.util.Arrays.fill(dcPred, 0)
+      if (ri > 0 && mcu > 0 && mcu % ri == 0) {
+        if (!r.restart(mcu / ri)) return null
+        java.util.Arrays.fill(dcPred, 0) // every component's predictor
       }
-      val mx = mcu % mcuW; val my = mcu / mcuW
+      val mx = mcu % f.mcuW; val my = mcu / f.mcuW
       var ci = 0
       while (ci < nf) {
         val c = comps(ci)
@@ -1048,15 +1213,18 @@ object JpegCodec {
         while (v < c.vi) {
           var hh = 0
           while (hh < c.hi) {
-            if (!decodeBlock(ci)) return None
-            idctBlock(coef, blockOut)
+            if (!decodeBlock(ci)) return null
+            idctBlock(coef, blockOut, pc)
             val bx = (mx * c.hi + hh) * 8; val by = (my * c.vi + v) * 8
             val pw = planeW(ci); val plane = planes(ci)
             var yy = 0
             while (yy < 8) {
               val rowBase = (by + yy) * pw + bx
-              var xx = 0
-              while (xx < 8) { plane(rowBase + xx) = blockOut(yy * 8 + xx).toByte; xx += 1 }
+              if (wide != null) System.arraycopy(blockOut, yy * 8, wide, rowBase, 8)
+              else {
+                var xx = 0
+                while (xx < 8) { plane(rowBase + xx) = blockOut(yy * 8 + xx).toByte; xx += 1 }
+              }
               yy += 1
             }
             hh += 1
@@ -1067,17 +1235,16 @@ object JpegCodec {
       }
       mcu += 1
     }
-    // Strictness, mirroring the PNG decoder's IEND rule: the scan must be
-    // followed by EOI (optionally fill-padded) and EOI must be TERMINAL —
-    // surplus entropy data or trailing bytes are structural violations,
-    // not ignorable slack. The bit reader buffers whole bytes, so r.pos is
-    // byte-aligned just past the consumed entropy data.
-    var q = r.pos
-    while (q + 2 < b.length && (b(q) & 0xff) == 0xff && (b(q + 1) & 0xff) == 0xff) q += 1
-    if (q + 2 != b.length || (b(q) & 0xff) != 0xff || (b(q + 1) & 0xff) != 0xd9)
-      return None
-    Some(DecodedFrame(w, h, cropPlanes(comps, planes, planeW, hmax, vmax, w, h),
-      adobeTransform))
+    walk.pos = r.pos
+    if (wide != null) {
+      val out = new Array[Int](f.w * f.h)
+      for (y <- 0 until f.h) System.arraycopy(wide, y * planeW(0), out, y * f.w, f.w)
+      Samples(f.sof, JpegImage16(f.w, f.h, 12, out))
+    } else {
+      val px = cropPlanes(f, planes, planeW)
+      if (f.sof == 0xc1) Samples(f.sof, JpegImage16(f.w, f.h, 8, px(0).map(_ & 0xff)))
+      else Planes(f.w, f.h, px, walk.adobeTransform)
+    }
   }
 
   /** Progressive allocation cap: the mode needs full-frame QUANTIZED
@@ -1086,65 +1253,98 @@ object JpegCodec {
     */
   private val MaxProgressivePixels: Long = MaxPixels / 4
 
-  /** Full PROGRESSIVE (SOF2) decode (§G.2): multi-scan spectral selection
-    * AND successive approximation — interleaved or component-subset DC
-    * scans, single-component AC band scans with END-OF-BAND RUNS
-    * (§G.1.2.2), DC refinement (one raw bit per block, §G.1.2.1) and the
-    * AC refinement procedure (§G.1.2.3: correction bits on every
-    * nonzero-history coefficient, including inside EOB runs, newly
-    * nonzero coefficients delivered as ±1·2^Al). Coefficients accumulate
-    * quantized across scans; dequantization + IDCT + upsampling happen
-    * once at EOI, so a spec-legal stream that ends early still renders
-    * (progressive semantics) while a scan truncated MID-UNIT rejects.
-    * Same sampling support and strictness rules as [[decodeBaseline]];
-    * tables may be redefined between scans (§B.2.4.2), DNL rejects.
+  /** A PROGRESSIVE (SOF2) frame across its scans (§G.2): multi-scan
+    * spectral selection AND successive approximation — interleaved or
+    * component-subset DC scans, single-component AC band scans with
+    * END-OF-BAND RUNS (§G.1.2.2), DC refinement (one raw bit per block,
+    * §G.1.2.1) and the AC refinement procedure (§G.1.2.3: correction bits
+    * on every nonzero-history coefficient, including inside EOB runs,
+    * newly nonzero coefficients delivered as ±1·2^Al). Coefficients
+    * accumulate quantized across scans; dequantization + IDCT +
+    * upsampling happen once at EOI ([[render]]), so a spec-legal stream
+    * that ends early still renders (progressive semantics) while a scan
+    * truncated MID-UNIT rejects. Same sampling support as the sequential
+    * frames (no CMYK); tables may be redefined between scans (§B.2.4.2).
     */
-  private def decodeProgressive(b: Array[Byte]): Option[DecodedFrame] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var p = 2
-    var w = -1; var h = -1
-    var comps: Array[Comp] = null
-    val qtabs = new Array[Array[Int]](4)
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
-    var restartInterval = 0
-    var hmax = 1; var vmax = 1; var mcuW = 0; var mcuH = 0
-    var bwPad: Array[Int] = null; var bhPad: Array[Int] = null
-    var cbw: Array[Int] = null; var cbh: Array[Int] = null
-    var coefStore: Array[Array[Int]] = null
+  private final class Progressive(f: Frame) {
+    private val comps = f.comps
+    private val nf = comps.length
+    private val bwPad = comps.map(_.hi * f.mcuW)
+    private val bhPad = comps.map(_.vi * f.mcuH)
+    private val cbw = comps.map(c => ((f.w * c.hi + f.hmax - 1) / f.hmax + 7) / 8)
+    private val cbh = comps.map(c => ((f.h * c.vi + f.vmax - 1) / f.vmax + 7) / 8)
+    private val coefStore = Array.tabulate(nf)(i => new Array[Int](bwPad(i) * bhPad(i) * 64))
     // Scan-script state (§G.1.1.1.1, ADVICE r11): per component, per
     // zigzag index, the approximation low bit (Al) the coefficient was
     // last delivered/refined at; -1 = not yet delivered. Enforces DC
     // before AC, no re-delivery of a completed band, and refinement only
     // from the precision the band actually sits at.
-    var deliveredAl: Array[Array[Int]] = null
-    var sawEoi = false
-    var sawScan = false
+    private val deliveredAl = Array.fill(nf)(Array.fill(64)(-1))
+    var scans = 0
 
-    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    /** Validate scan `sc` against the scan script and decode its
+      * entropy-coded data into the coefficient store, moving `walk.pos`
+      * past it; false on any structural violation.
+      */
+    def scan(walk: JpegWalker, sc: Scan): Boolean = {
+      val ns = sc.ci.length
+      val ss = sc.ss; val se = sc.se; val ah = sc.ah; val al = sc.al
+      // §G.1.1.1: DC scans have Ss=Se=0 (and may interleave); AC
+      // scans are single-component bands; refinement steps one bit.
+      if (ss == 0) { if (se != 0) return false }
+      else { if (ns != 1 || se < ss || se > 63) return false }
+      if (al > 13 || (ah != 0 && ah != al + 1)) return false
+      for (i <- 0 until ns) {
+        if (ss == 0 && ah == 0 && walk.dcTabs(sc.td(i)) == null) return false
+        if (ss > 0 && walk.acTabs(sc.ta(i)) == null) return false
+      }
+      // Scan-script validation (§G.1.1.1.1, ADVICE r11): an AC scan
+      // needs the component's DC first pass already delivered; a
+      // first pass (Ah=0) must not overwrite an already-delivered
+      // coefficient; a refinement must step the band down from
+      // exactly the precision it was last delivered at (Ah = that
+      // Al, and Ah = Al+1 is already enforced above).
+      for (i <- 0 until ns) {
+        val st = deliveredAl(sc.ci(i))
+        if (ss > 0 && st(0) < 0) return false // AC before DC
+        var k = ss
+        while (k <= se) {
+          if (ah == 0) { if (st(k) != -1) return false }
+          else if (st(k) != ah) return false
+          k += 1
+        }
+      }
+      val end = decodeScan(walk, sc)
+      if (end < 0) return false
+      for (i <- 0 until ns) java.util.Arrays.fill(deliveredAl(sc.ci(i)), ss, se + 1, al)
+      scans += 1
+      walk.pos = end
+      true
+    }
 
-    // Decode one scan's entropy data starting at `start`; coefficients
+    // Decode one scan's entropy data starting at `walk.pos`; coefficients
     // land in coefStore. Returns the byte position just past the consumed
     // entropy data, or -1 on any structural violation.
-    def decodeScan(start: Int, scanCi: Array[Int], dcSel: Array[Int],
-        acSel: Array[Int], ss: Int, se: Int, ah: Int, al: Int): Int = {
+    private def decodeScan(walk: JpegWalker, sc: Scan): Int = {
+      val scanCi = sc.ci
       val ns = scanCi.length
-      var r = new BitReader(b, start)
+      val ss = sc.ss; val se = sc.se; val ah = sc.ah; val al = sc.al
+      val r = new BitReader(walk.b, walk.pos)
       val pred = new Array[Int](ns)
       var eobrun = 0
-      val nUnits = if (ns > 1) mcuW * mcuH else cbw(scanCi(0)) * cbh(scanCi(0))
+      val nUnits = if (ns > 1) f.mcuW * f.mcuH else cbw(scanCi(0)) * cbh(scanCi(0))
 
       def dcUnit(si: Int, off: Int): Boolean = {
         if (ah == 0) {
-          val s = huffDecode(r, dcTabs(dcSel(si)))
-          if (s < 0 || s > 11) return false
+          val s = huffDecode(r, walk.dcTabs(sc.td(si)))
+          if (s < 0 || s > Precision8.maxDcCat) return false
           val diffBits = if (s == 0) 0 else r.bits(s)
           if (diffBits < 0) return false
           pred(si) += extend(diffBits, s)
-          // Same accumulated-predictor bound as the baseline path (ADVICE
-          // r11): reject before the out-of-range value (or its << al
-          // overflow, al ≤ 13) lands in the coefficient store.
-          if (pred(si) > 32767 || pred(si) < -32767) return false
+          // Same accumulated-predictor bound as the sequential path
+          // (ADVICE r11): reject before the out-of-range value (or its
+          // << al overflow, al ≤ 13) lands in the coefficient store.
+          if (pred(si) > Precision8.predBound || pred(si) < -Precision8.predBound) return false
           coefStore(scanCi(si))(off) = pred(si) << al
         } else {
           val bit = r.bit()
@@ -1250,19 +1450,16 @@ object JpegCodec {
         true
       }
 
+      val ri = walk.restartInterval
       var u = 0
       while (u < nUnits) {
-        if (restartInterval > 0 && u > 0 && u % restartInterval == 0) {
-          if (r.pos + 1 >= b.length || (b(r.pos) & 0xff) != 0xff) return -1
-          val m = b(r.pos + 1) & 0xff
-          if (m < 0xd0 || m > 0xd7 ||
-            (m - 0xd0) != ((u / restartInterval - 1) & 7)) return -1
-          r = new BitReader(b, r.pos + 2)
+        if (ri > 0 && u > 0 && u % ri == 0) {
+          if (!r.restart(u / ri)) return -1
           java.util.Arrays.fill(pred, 0)
           eobrun = 0
         }
         if (ns > 1) { // interleaved DC scan (Ss=Se=0)
-          val mx = u % mcuW; val my = u / mcuW
+          val mx = u % f.mcuW; val my = u / f.mcuW
           var si = 0
           while (si < ns) {
             val ci = scanCi(si); val c = comps(ci)
@@ -1283,8 +1480,8 @@ object JpegCodec {
           val off = ((u / cbw(ci)) * bwPad(ci) + (u % cbw(ci))) * 64
           val ok =
             if (ss == 0) dcUnit(0, off)
-            else if (ah == 0) acFirst(coefStore(ci), off, acTabs(acSel(0)))
-            else acRefine(coefStore(ci), off, acTabs(acSel(0)))
+            else if (ah == 0) acFirst(coefStore(ci), off, walk.acTabs(sc.ta(0)))
+            else acRefine(coefStore(ci), off, walk.acTabs(sc.ta(0)))
           if (!ok) return -1
         }
         u += 1
@@ -1292,217 +1489,59 @@ object JpegCodec {
       r.pos
     }
 
-    while (!sawEoi) {
-      if (p + 2 > b.length || (b(p) & 0xff) != 0xff) return None
-      while (p + 2 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
-      if (p + 2 > b.length) return None
-      val marker = b(p + 1) & 0xff
-      if (marker == 0xd9) {
-        // EOI strictness: the frame must exist, at least one scan must have
-        // decoded (a scan-LESS SOF2 file would otherwise "render" a
-        // fabricated flat image — the baseline path rejects the equivalent
-        // EOI-before-SOS file), and EOI must be TERMINAL.
-        if (comps == null || !sawScan) return None
-        if (p + 2 != b.length) return None
-        sawEoi = true
-      } else {
-        if (p + 4 > b.length) return None
-        val len = be16(p + 2)
-        if (len < 2 || p + 2 + len > b.length) return None
-        val seg0 = p + 4; val segEnd = p + 2 + len
-        var nextP = segEnd
-        marker match {
-          case 0xdb => if (!parseDqt(b, seg0, segEnd, qtabs)) return None
-          case 0xc4 => if (!parseDht(b, seg0, segEnd, dcTabs, acTabs)) return None
-          case 0xdd =>
-            if (len != 4) return None
-            restartInterval = be16(seg0)
-          case 0xc2 => // SOF2
-            if (w != -1) return None
-            if (len < 8 || (b(seg0) & 0xff) != 8) return None
-            h = be16(seg0 + 1); w = be16(seg0 + 3)
-            val nf = b(seg0 + 5) & 0xff
-            if (w <= 0 || h <= 0 || (nf != 1 && nf != 3)) return None
-            if (w.toLong * h.toLong > MaxProgressivePixels) return None
-            if (len != 8 + 3 * nf) return None
-            comps = new Array[Comp](nf)
-            for (i <- 0 until nf) {
-              val cid = b(seg0 + 6 + 3 * i) & 0xff
-              val hv = b(seg0 + 7 + 3 * i) & 0xff
-              val hi = hv >> 4; val vi = hv & 0x0f
-              val tq = b(seg0 + 8 + 3 * i) & 0xff
-              if (tq > 3) return None
-              if (nf == 1) { if (hv != 0x11) return None }
-              else if (hi < 1 || hi > 2 || vi < 1 || vi > 2) return None
-              comps(i) = Comp(cid, hi, vi, tq)
+    /** Dequantize + IDCT every REAL block (the padded remainder is never
+      * sampled), then the shared upsample/crop into w×h planes; null when
+      * a component's quantization table never arrived.
+      */
+    def render(walk: JpegWalker): Decoded = {
+      if (comps.exists(c => walk.qtabs(c.tq) == null)) return null
+      val planes = new Array[Array[Byte]](nf)
+      val planeW = bwPad.map(_ * 8)
+      val cf = new Array[Int](64)
+      val blockOut = new Array[Int](64)
+      for (i <- 0 until nf) {
+        val plane = new Array[Byte](planeW(i) * bhPad(i) * 8)
+        val qt = walk.qtabs(comps(i).tq)
+        val store = coefStore(i)
+        var by = 0
+        while (by < cbh(i)) {
+          var bx = 0
+          while (bx < cbw(i)) {
+            val off = (by * bwPad(i) + bx) * 64
+            var j = 0
+            while (j < 64) { cf(j) = store(off + j) * qt(j); j += 1 }
+            idctBlock(cf, blockOut, Precision8)
+            val px0 = bx * 8; val py0 = by * 8
+            var yy = 0
+            while (yy < 8) {
+              val rowBase = (py0 + yy) * planeW(i) + px0
+              var xx = 0
+              while (xx < 8) { plane(rowBase + xx) = blockOut(yy * 8 + xx).toByte; xx += 1 }
+              yy += 1
             }
-            if (comps.map(_.id).distinct.length != nf) return None
-            hmax = comps.map(_.hi).max; vmax = comps.map(_.vi).max
-            mcuW = (w + 8 * hmax - 1) / (8 * hmax)
-            mcuH = (h + 8 * vmax - 1) / (8 * vmax)
-            bwPad = new Array[Int](nf); bhPad = new Array[Int](nf)
-            cbw = new Array[Int](nf); cbh = new Array[Int](nf)
-            coefStore = new Array[Array[Int]](nf)
-            for (i <- 0 until nf) {
-              val c = comps(i)
-              bwPad(i) = mcuW * c.hi; bhPad(i) = mcuH * c.vi
-              cbw(i) = ((w * c.hi + hmax - 1) / hmax + 7) / 8
-              cbh(i) = ((h * c.vi + vmax - 1) / vmax + 7) / 8
-              coefStore(i) = new Array[Int](bwPad(i) * bhPad(i) * 64)
-            }
-            deliveredAl = Array.fill(nf)(Array.fill(64)(-1))
-          case m if (m >= 0xc0 && m <= 0xcf) && m != 0xc2 && m != 0xc4 &&
-              m != 0xc8 && m != 0xcc =>
-            return None // mixed/other frame types inside a progressive stream
-          case 0xdc => return None // DNL: unsupported
-          case 0xda =>
-            if (w < 0) return None
-            val ns = b(seg0) & 0xff
-            if (ns < 1 || ns > comps.length || len != 6 + 2 * ns) return None
-            val scanCi = new Array[Int](ns)
-            val dcSel = new Array[Int](ns); val acSel = new Array[Int](ns)
-            for (i <- 0 until ns) {
-              val cs = b(seg0 + 1 + 2 * i) & 0xff
-              val ci = comps.indexWhere(_.id == cs)
-              if (ci < 0) return None
-              scanCi(i) = ci
-              dcSel(i) = (b(seg0 + 2 + 2 * i) & 0xff) >> 4
-              acSel(i) = b(seg0 + 2 + 2 * i) & 0x0f
-              if (dcSel(i) > 3 || acSel(i) > 3) return None
-            }
-            if (scanCi.distinct.length != ns) return None
-            val ss = b(seg0 + 1 + 2 * ns) & 0xff
-            val se = b(seg0 + 2 + 2 * ns) & 0xff
-            val ahAl = b(seg0 + 3 + 2 * ns) & 0xff
-            val ah = ahAl >> 4; val al = ahAl & 0x0f
-            // §G.1.1.1: DC scans have Ss=Se=0 (and may interleave); AC
-            // scans are single-component bands; refinement steps one bit.
-            if (ss == 0) { if (se != 0) return None }
-            else { if (ns != 1 || se < ss || se > 63) return None }
-            if (al > 13 || (ah != 0 && ah != al + 1)) return None
-            for (i <- 0 until ns) {
-              if (ss == 0 && ah == 0 && dcTabs(dcSel(i)) == null) return None
-              if (ss > 0 && acTabs(acSel(i)) == null) return None
-            }
-            // Scan-script validation (§G.1.1.1.1, ADVICE r11): an AC scan
-            // needs the component's DC first pass already delivered; a
-            // first pass (Ah=0) must not overwrite an already-delivered
-            // coefficient; a refinement must step the band down from
-            // exactly the precision it was last delivered at (Ah = that
-            // Al, and Ah = Al+1 is already enforced above).
-            for (i <- 0 until ns) {
-              val st = deliveredAl(scanCi(i))
-              if (ss > 0 && st(0) < 0) return None // AC before DC
-              var k = ss
-              while (k <= se) {
-                if (ah == 0) { if (st(k) != -1) return None }
-                else if (st(k) != ah) return None
-                k += 1
-              }
-            }
-            val end = decodeScan(segEnd, scanCi, dcSel, acSel, ss, se, ah, al)
-            if (end < 0) return None
-            for (i <- 0 until ns) {
-              val st = deliveredAl(scanCi(i))
-              var k = ss
-              while (k <= se) { st(k) = al; k += 1 }
-            }
-            sawScan = true
-            nextP = end
-          case _ => () // APPn, COM: skipped
-        }
-        p = nextP
-      }
-    }
-
-    // Render: dequantize + IDCT every REAL block (the padded remainder is
-    // never sampled), then the shared upsample/crop into w×h planes.
-    val nf = comps.length
-    for (i <- 0 until nf) if (qtabs(comps(i).tq) == null) return None
-    val planes = new Array[Array[Byte]](nf)
-    val planeW = new Array[Int](nf)
-    val cf = new Array[Int](64)
-    val blockOut = new Array[Int](64)
-    for (i <- 0 until nf) {
-      val c = comps(i)
-      planeW(i) = bwPad(i) * 8
-      val plane = new Array[Byte](planeW(i) * bhPad(i) * 8)
-      val qt = qtabs(c.tq)
-      val store = coefStore(i)
-      var by = 0
-      while (by < cbh(i)) {
-        var bx = 0
-        while (bx < cbw(i)) {
-          val off = (by * bwPad(i) + bx) * 64
-          var j = 0
-          while (j < 64) { cf(j) = store(off + j) * qt(j); j += 1 }
-          idctBlock(cf, blockOut)
-          val px0 = bx * 8; val py0 = by * 8
-          var yy = 0
-          while (yy < 8) {
-            val rowBase = (py0 + yy) * planeW(i) + px0
-            var xx = 0
-            while (xx < 8) { plane(rowBase + xx) = blockOut(yy * 8 + xx).toByte; xx += 1 }
-            yy += 1
+            bx += 1
           }
-          bx += 1
+          by += 1
         }
-        by += 1
+        planes(i) = plane
       }
-      planes(i) = plane
+      Planes(f.w, f.h, cropPlanes(f, planes, planeW), walk.adobeTransform)
     }
-    Some(DecodedFrame(w, h, cropPlanes(comps, planes, planeW, hmax, vmax, w, h)))
   }
-
-  /** Frame-type sniff: walk segments to the first SOF marker. Returns the
-    * SOFn index (0 baseline, 2 progressive, …) or -1 when absent/corrupt.
-    */
-  private def frameType(b: Array[Byte]): Int = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return -1
-    var p = 2
-    while (p + 4 <= b.length && (b(p) & 0xff) == 0xff) {
-      while (p + 4 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
-      if (p + 4 > b.length) return -1
-      val marker = b(p + 1) & 0xff
-      if (marker >= 0xc0 && marker <= 0xcf && marker != 0xc4 &&
-        marker != 0xc8 && marker != 0xcc) return marker - 0xc0
-      if (marker == 0xd9 || marker == 0xda) return -1 // scan/EOI before SOF
-      val len = ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
-      if (len < 2 || p + 2 + len > b.length) return -1
-      p += 2 + len
-    }
-    -1
-  }
-
-  /** Dispatch on the frame header: baseline sequential (SOF0) or
-    * progressive (SOF2); every other SOFn is unsupported → None.
-    */
-  private def decodeFrame(b: Array[Byte]): Option[DecodedFrame] =
-    frameType(b) match {
-      case 0 => decodeBaseline(b)
-      case 2 => decodeProgressive(b)
-      case _ => None
-    }
 
   /** Full grayscale JPEG pixel decode — baseline (SOF0), progressive
     * (SOF2), or 8-bit lossless (SOF3; higher precisions via
     * [[jpegDecodeLossless]], which keeps the full sample width). Returns
-    * None for color frames (use [[jpegDecodeColorPixels]]) and on any
-    * structural violation or unsupported feature — malformed bytes never
-    * throw from an executor task.
+    * None for color frames (use [[jpegDecodeColorPixels]]), for SOF1
+    * frames (use [[jpegDecode12]]) and on any structural violation or
+    * unsupported feature — malformed bytes never throw from an executor
+    * task.
     */
   def jpegDecodePixels(b: Array[Byte]): Option[JpegImage] =
-    frameType(b) match {
-      case 3 => decodeLossless(b).collect {
-        case im if im.precision == 8 =>
-          val px = new Array[Byte](im.samples.length)
-          var i = 0
-          while (i < px.length) { px(i) = im.samples(i).toByte; i += 1 }
-          JpegImage(im.width, im.height, px)
-      }
-      case _ => decodeFrame(b).collect {
-        case f if f.planes.length == 1 => JpegImage(f.w, f.h, f.planes(0))
-      }
+    decode(b).collect {
+      case Planes(w, h, Array(gray), _) => JpegImage(w, h, gray)
+      case Samples(0xc3, im) if im.precision == 8 =>
+        JpegImage(im.width, im.height, im.samples.map(_.toByte))
     }
 
   // ------------------------------------------------------- lossless (SOF3)
@@ -1622,95 +1661,45 @@ object JpegCodec {
     out.toByteArray
   }
 
-  /** Full LOSSLESS-process (SOF3) grayscale decode: marker walk, custom
-    * DHT, per-sample Huffman category + EXTEND decode, mod-2^16 predictor
-    * reconstruction (§H.1.2.1–2), inverse point transform. Supported
-    * subset: 1 component, 1×1 sampling, precision 2..16, predictors 1..7,
-    * restart intervals that are multiples of the line length (so
-    * prediction never crosses a restart boundary — other spec-legal
-    * intervals REJECT rather than guess at cross-segment neighbours).
-    * A reconstructed sample outside 0..2^(P−pt)−1 is a corrupt stream →
-    * None, per the reject-don't-mis-decode policy; malformed bytes never
-    * throw from an executor task.
+  /** The one scan of a LOSSLESS (SOF3) frame: per-sample Huffman
+    * category + EXTEND decode, mod-2^16 predictor reconstruction
+    * (§H.1.2.1–2), inverse point transform. Supported subset: 1
+    * component, 1×1 sampling, precision 2..16, predictors 1..7 (Ss),
+    * Se = 0, Ah = 0, point transform Al < P, AC selector 0, restart
+    * intervals that are multiples of the line length (so prediction
+    * never crosses a restart boundary — other spec-legal intervals
+    * REJECT rather than guess at cross-segment neighbours). A
+    * reconstructed sample outside 0..2^(P−pt)−1 is a corrupt stream →
+    * null, per the reject-don't-mis-decode policy. Moves `walk.pos` past
+    * the entropy-coded data.
     */
-  private def decodeLossless(b: Array[Byte]): Option[JpegImage16] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var p = 2
-    var w = -1; var h = -1; var precision = -1
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4) // parsed, unused by lossless scans
-    val qtabs = new Array[Array[Int]](4) // a DQT in a lossless file is legal noise
-    var restartInterval = 0
-    var sosAt = -1
-    var sel = -1; var pt = -1; var dcSel = 0
+  private def decodeLossless(walk: JpegWalker, f: Frame, sc: Scan): Decoded = {
+    val w = f.w; val precision = f.precision
+    val sel = sc.ss; val pt = sc.al
+    if (sc.ta(0) != 0 || sel < 1 || sel > 7 || sc.se != 0 || sc.ah != 0 ||
+      pt >= precision) return null
+    val dc = walk.dcTabs(sc.td(0))
+    val ri = walk.restartInterval
+    if (dc == null || (ri > 0 && ri % w != 0)) return null
 
-    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-
-    while (sosAt < 0) {
-      if (p + 4 > b.length || (b(p) & 0xff) != 0xff) return None
-      while (p + 4 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
-      if (p + 4 > b.length) return None
-      val marker = b(p + 1) & 0xff
-      if (marker == 0xd9) return None // EOI before SOS
-      val len = be16(p + 2)
-      if (len < 2 || p + 2 + len > b.length) return None
-      val seg0 = p + 4; val segEnd = p + 2 + len
-      marker match {
-        case 0xdb => if (!parseDqt(b, seg0, segEnd, qtabs)) return None
-        case 0xc4 => if (!parseDht(b, seg0, segEnd, dcTabs, acTabs)) return None
-        case 0xc3 => // SOF3 lossless
-          if (len < 8) return None
-          precision = b(seg0) & 0xff
-          if (precision < 2 || precision > 16) return None
-          h = be16(seg0 + 1); w = be16(seg0 + 3)
-          val nf = b(seg0 + 5) & 0xff
-          if (w <= 0 || h <= 0 || nf != 1 || len != 8 + 3 * nf) return None
-          if (w.toLong * h > MaxPixels) return None
-          if ((b(seg0 + 7) & 0xff) != 0x11) return None // Hi = Vi = 1
-        case 0xdc => return None // DNL: unsupported
-        case 0xdd =>
-          if (len != 4) return None
-          restartInterval = be16(seg0)
-        case 0xda =>
-          if (w < 0) return None // SOS before SOF
-          if (len != 8 || (b(seg0) & 0xff) != 1) return None // Ns = 1
-          dcSel = (b(seg0 + 2) & 0xff) >> 4
-          if (((b(seg0 + 2) & 0x0f)) != 0) return None // Ta must be 0
-          sel = b(seg0 + 3) & 0xff
-          val se = b(seg0 + 4) & 0xff
-          val ahAl = b(seg0 + 5) & 0xff
-          pt = ahAl & 0x0f
-          if (sel < 1 || sel > 7 || se != 0 || (ahAl >> 4) != 0) return None
-          if (pt >= precision) return None
-          sosAt = segEnd
-        case _ => () // APPn, COM, others
-      }
-      p = segEnd
-    }
-    if (dcTabs(dcSel) == null) return None
-    if (restartInterval > 0 && restartInterval % w != 0) return None // subset
-
-    val n = w * h
+    val n = w * f.h
     val pts = new Array[Int](n)
     val defaultPred = 1 << (precision - pt - 1)
     val span = precision - pt // reconstructed samples live in 0..2^span−1
-    var r = new BitReader(b, sosAt)
+    val r = new BitReader(walk.b, walk.pos)
     var segStart = 0
     var i = 0
     while (i < n) {
-      if (restartInterval > 0 && i > 0 && i % restartInterval == 0) {
-        if (r.pos + 1 >= b.length || (b(r.pos) & 0xff) != 0xff) return None
-        val m = b(r.pos + 1) & 0xff
-        if (m < 0xd0 || m > 0xd7 || (m - 0xd0) != ((i / restartInterval - 1) & 7)) return None
-        r = new BitReader(b, r.pos + 2)
+      if (ri > 0 && i > 0 && i % ri == 0) {
+        if (!r.restart(i / ri)) return null
         segStart = i
       }
-      val s = huffDecode(r, dcTabs(dcSel))
-      if (s < 0 || s > 16) return None
+      val s = huffDecode(r, dc)
+      if (s < 0 || s > 16) return null
       val diff =
         if (s == 16) 32768 // §H.1.2.2: SSSS 16 carries no appended bits
         else if (s == 0) 0
-        else { val vb = r.bits(s); if (vb < 0) return None; extend(vb, s) }
+        else { val vb = r.bits(s); if (vb < 0) return null; extend(vb, s) }
       val x = i % w; val y = i / w
       val pred =
         if (i == segStart) defaultPred
@@ -1718,18 +1707,13 @@ object JpegCodec {
         else if (x == 0) pts(i - w)
         else losslessPredict(sel, pts(i - 1), pts(i - w), pts(i - w - 1))
       val v = (pred + diff) & 0xffff
-      if (span < 16 && v >= (1 << span)) return None // corrupt: out of range
+      if (span < 16 && v >= (1 << span)) return null // corrupt: out of range
       pts(i) = v
       i += 1
     }
-    // Same terminal strictness as the baseline decoder: fill-padded EOI,
-    // nothing after it.
-    var q = r.pos
-    while (q + 2 < b.length && (b(q) & 0xff) == 0xff && (b(q + 1) & 0xff) == 0xff) q += 1
-    if (q + 2 != b.length || (b(q) & 0xff) != 0xff || (b(q + 1) & 0xff) != 0xd9)
-      return None
+    walk.pos = r.pos
     if (pt > 0) { var j = 0; while (j < n) { pts(j) = pts(j) << pt; j += 1 } }
-    Some(JpegImage16(w, h, precision, pts))
+    Samples(f.sof, JpegImage16(w, f.h, precision, pts))
   }
 
   /** Public lossless (SOF3) decode keeping the full sample width; None
@@ -1737,7 +1721,7 @@ object JpegCodec {
     * [[jpegDecodePixels]].
     */
   def jpegDecodeLossless(b: Array[Byte]): Option[JpegImage16] =
-    if (frameType(b) == 3) decodeLossless(b) else None
+    decode(b).collect { case Samples(0xc3, im) => im }
 
   // -------------------------------------- 12-bit extended sequential (SOF1)
 
@@ -1818,155 +1802,12 @@ object JpegCodec {
     out.toByteArray
   }
 
-  /** Full 12-bit EXTENDED-SEQUENTIAL (SOF1) grayscale decode: the
-    * baseline walk with the 12-bit deltas — Pq = 1 quantization tables,
-    * DC categories ≤ 15 / AC ≤ 14, level shift 2048, clamp 0..4095.
-    * Supported subset: 1 component, 1×1 sampling, precision 12 (an
-    * 8-bit SOF1 stream is baseline-shaped and equally accepted);
-    * 3-component extended frames REJECT. Same terminal strictness and
-    * reject-don't-mis-decode policy as the other decoders.
-    */
-  private def decodeExtended(b: Array[Byte]): Option[JpegImage16] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var p = 2
-    var w = -1; var h = -1; var precision = -1; var tq = 0
-    val qtabs = new Array[Array[Int]](4)
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
-    var restartInterval = 0
-    var sosAt = -1
-    var dcSel = 0; var acSel = 0
-
-    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-
-    while (sosAt < 0) {
-      if (p + 4 > b.length || (b(p) & 0xff) != 0xff) return None
-      while (p + 4 <= b.length && (b(p + 1) & 0xff) == 0xff) p += 1
-      if (p + 4 > b.length) return None
-      val marker = b(p + 1) & 0xff
-      if (marker == 0xd9) return None
-      val len = be16(p + 2)
-      if (len < 2 || p + 2 + len > b.length) return None
-      val seg0 = p + 4; val segEnd = p + 2 + len
-      marker match {
-        case 0xdb => if (!parseDqt(b, seg0, segEnd, qtabs, allow16 = true)) return None
-        case 0xc4 => if (!parseDht(b, seg0, segEnd, dcTabs, acTabs)) return None
-        case 0xc1 => // SOF1 extended sequential
-          if (len < 8) return None
-          precision = b(seg0) & 0xff
-          if (precision != 8 && precision != 12) return None
-          h = be16(seg0 + 1); w = be16(seg0 + 3)
-          val nf = b(seg0 + 5) & 0xff
-          if (w <= 0 || h <= 0 || nf != 1 || len != 8 + 3 * nf) return None
-          if (w.toLong * h > MaxPixels) return None
-          if ((b(seg0 + 7) & 0xff) != 0x11) return None
-          tq = b(seg0 + 8) & 0xff
-          if (tq > 3) return None
-        case 0xdc => return None // DNL
-        case 0xdd =>
-          if (len != 4) return None
-          restartInterval = be16(seg0)
-        case 0xda =>
-          if (w < 0) return None
-          if (len != 8 || (b(seg0) & 0xff) != 1) return None
-          dcSel = (b(seg0 + 2) & 0xff) >> 4
-          acSel = b(seg0 + 2) & 0x0f
-          if ((b(seg0 + 3) & 0xff) != 0 || (b(seg0 + 4) & 0xff) != 63 ||
-            (b(seg0 + 5) & 0xff) != 0) return None
-          sosAt = segEnd
-        case _ => ()
-      }
-      p = segEnd
-    }
-    if (qtabs(tq) == null || dcTabs(dcSel) == null || acTabs(acSel) == null)
-      return None
-
-    val maxDcCat = if (precision == 12) 15 else 11
-    val maxAcCat = if (precision == 12) 14 else 10
-    val levelShift = if (precision == 12) 2048 else 128
-    val maxVal = (1 << precision) - 1
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    val planeW = bw * 8
-    val plane = new Array[Int](planeW * bh * 8)
-    val qt = qtabs(tq)
-    val coef = new Array[Int](64)
-    val blockOut = new Array[Int](64)
-    var r = new BitReader(b, sosAt)
-    var dcPred = 0
-
-    def decodeOneBlock(): Boolean = {
-      java.util.Arrays.fill(coef, 0)
-      val s = huffDecode(r, dcTabs(dcSel))
-      if (s < 0 || s > maxDcCat) return false
-      val diffBits = if (s == 0) 0 else r.bits(s)
-      if (diffBits < 0) return false
-      dcPred += extend(diffBits, s)
-      // Reject-only predictor bound, as in the baseline decoder: any legal
-      // 12-bit quantized DC fits ±16384 (q ≥ 1), so ±65535 is generous.
-      if (dcPred > 65535 || dcPred < -65535) return false
-      coef(0) = dcPred * qt(0)
-      var k = 1
-      while (k <= 63) {
-        val rs = huffDecode(r, acTabs(acSel))
-        if (rs < 0) return false
-        val run = rs >> 4; val sz = rs & 0x0f
-        if (sz == 0) {
-          if (run == 15) { k += 16; if (k > 64) return false }
-          else return true // EOB
-        } else {
-          if (sz > maxAcCat) return false
-          k += run
-          if (k > 63) return false
-          val vb = r.bits(sz)
-          if (vb < 0) return false
-          coef(ZigZag(k)) = extend(vb, sz) * qt(ZigZag(k))
-          k += 1
-        }
-      }
-      true
-    }
-
-    val nBlocks = bw * bh
-    var i = 0
-    while (i < nBlocks) {
-      if (restartInterval > 0 && i > 0 && i % restartInterval == 0) {
-        if (r.pos + 1 >= b.length || (b(r.pos) & 0xff) != 0xff) return None
-        val m = b(r.pos + 1) & 0xff
-        if (m < 0xd0 || m > 0xd7 || (m - 0xd0) != ((i / restartInterval - 1) & 7)) return None
-        r = new BitReader(b, r.pos + 2)
-        dcPred = 0
-      }
-      if (!decodeOneBlock()) return None
-      idctBlockP(coef, blockOut, levelShift, maxVal)
-      val bx = (i % bw) * 8; val by = (i / bw) * 8
-      var yy = 0
-      while (yy < 8) {
-        val rowBase = (by + yy) * planeW + bx
-        var xx = 0
-        while (xx < 8) { plane(rowBase + xx) = blockOut(yy * 8 + xx); xx += 1 }
-        yy += 1
-      }
-      i += 1
-    }
-    var q = r.pos
-    while (q + 2 < b.length && (b(q) & 0xff) == 0xff && (b(q + 1) & 0xff) == 0xff) q += 1
-    if (q + 2 != b.length || (b(q) & 0xff) != 0xff || (b(q + 1) & 0xff) != 0xd9)
-      return None
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      System.arraycopy(plane, y * planeW, out, y * w, w)
-      y += 1
-    }
-    Some(JpegImage16(w, h, precision, out))
-  }
-
   /** Public extended-sequential (SOF1) decode keeping the full sample
     * width (precision 12, or 8 for a baseline-shaped SOF1 stream); None
     * for any other frame type.
     */
   def jpegDecode12(b: Array[Byte]): Option[JpegImage16] =
-    if (frameType(b) == 1) decodeExtended(b) else None
+    decode(b).collect { case Samples(0xc1, im) => im }
 
   /** Full YCbCr color JPEG pixel decode → interleaved RGB — baseline
     * (SOF0) or progressive (SOF2). JFIF inverse matrix (R = Y +
@@ -1979,11 +1820,10 @@ object JpegCodec {
     * any structural violation.
     */
   def jpegDecodeColorPixels(b: Array[Byte]): Option[JpegColorImage] =
-    decodeFrame(b).collect {
-      case f if f.planes.length == 3 =>
-        val n = f.w * f.h
+    decode(b).collect {
+      case Planes(w, h, Array(py, pcb, pcr), _) =>
+        val n = w * h
         val rgb = new Array[Byte](n * 3)
-        val py = f.planes(0); val pcb = f.planes(1); val pcr = f.planes(2)
         def clamp8(x: Int): Byte = (if (x < 0) 0 else if (x > 255) 255 else x).toByte
         var i = 0
         while (i < n) {
@@ -1995,7 +1835,7 @@ object JpegCodec {
           rgb(3 * i + 2) = clamp8(math.floor(y + 1.772 * cbp + 0.5).toInt)
           i += 1
         }
-        JpegColorImage(f.w, f.h, rgb)
+        JpegColorImage(w, h, rgb)
     }
 
   /** Decoded CMYK image, interleaved ink values (4 bytes per pixel,
@@ -2016,14 +1856,14 @@ object JpegCodec {
     * structural violation.
     */
   def jpegDecodeCmykPixels(b: Array[Byte]): Option[JpegCmykImage] =
-    decodeFrame(b).collect {
-      case f if f.planes.length == 4 =>
-        val n = f.w * f.h
+    decode(b).collect {
+      case Planes(w, h, planes, adobeTransform) if planes.length == 4 =>
+        val n = w * h
         val out = new Array[Byte](n * 4)
         var i = 0
-        if (f.adobeTransform == 2) {
-          val py = f.planes(0); val pcb = f.planes(1)
-          val pcr = f.planes(2); val pk = f.planes(3)
+        if (adobeTransform == 2) {
+          val py = planes(0); val pcb = planes(1)
+          val pcr = planes(2); val pk = planes(3)
           def clamp8(x: Int): Int = if (x < 0) 0 else if (x > 255) 255 else x
           while (i < n) {
             val y = py(i) & 0xff
@@ -2042,13 +1882,13 @@ object JpegCodec {
           while (i < n) {
             var c = 0
             while (c < 4) {
-              out(4 * i + c) = (255 - (f.planes(c)(i) & 0xff)).toByte
+              out(4 * i + c) = (255 - (planes(c)(i) & 0xff)).toByte
               c += 1
             }
             i += 1
           }
         }
-        JpegCmykImage(f.w, f.h, out)
+        JpegCmykImage(w, h, out)
     }
 
 }

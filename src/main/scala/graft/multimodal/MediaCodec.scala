@@ -657,9 +657,6 @@ object MediaCodec {
     ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
       ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
 
-  private def be16(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-
   /** Sniff + parse: PNG first (unambiguous 8-byte magic), then JPEG. */
   def parseImageHeader(b: Array[Byte]): Option[ImageHeader] =
     parsePng(b).orElse(parseJpeg(b))
@@ -1021,27 +1018,12 @@ object MediaCodec {
     Some(AviVideo(w, h, usPerFrame, frames.result()))
   }
 
-  /** JPEG: verify SOI, walk marker segments (each FF xx + 2-byte length
-    * covering itself) until a frame header SOFn; dimensions are lines @+5,
-    * samples-per-line @+7, both 2-byte big-endian. DHT/JPG/DAC markers
-    * share the SOF range but aren't frame headers — skipped like any other
-    * segment.
+  /** JPEG: walk marker segments ([[JpegCodec.JpegWalker]]) to the first
+    * frame header SOFn; dimensions are its lines and samples per line.
+    * The header length ends at that segment.
     */
   def parseJpeg(b: Array[Byte]): Option[ImageHeader] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var p = 2
-    while (p + 9 <= b.length && (b(p) & 0xff) == 0xff) {
-      val marker = b(p + 1) & 0xff
-      val len = be16(b, p + 2)
-      if (len < 2 || p + 2 + len > b.length) return None
-      val isSof = marker >= 0xc0 && marker <= 0xcf &&
-        marker != 0xc4 && marker != 0xc8 && marker != 0xcc
-      if (isSof) {
-        val (h, w) = (be16(b, p + 5), be16(b, p + 7))
-        return if (w <= 0 || h <= 0) None else Some(ImageHeader(w, h, p + 2 + len))
-      }
-      p += 2 + len
-    }
-    None
+    val walk = new JpegCodec.JpegWalker(b)
+    walk.frameSize(_ => ()).map { case (w, h) => ImageHeader(w, h, walk.segEnd) }
   }
 }

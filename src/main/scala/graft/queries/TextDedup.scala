@@ -367,14 +367,6 @@ object TextDedup extends QueryPack {
   private def lsh3(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
     lshSig(s, d, n = 3, nHashes = 8)
 
-  // Dev-probe forwarders (graft.tools stage-timing only; no query uses them).
-  private[graft] def probeLsh3(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
-    lsh3(s, d)
-  private[graft] def probeCandidatePairs(capped: DataFrame): DataFrame =
-    candidatePairs(capped)
-  private[graft] def probeJaccard(cand: DataFrame, sh: DataFrame, th: Double): DataFrame =
-    jaccard(cand, sh, th)
-
   /** 20-token blocks of each document — the sub-document dedup unit for
     * t22/t23 ("paragraphs" for newline-free text; the machinery is
     * unit-agnostic). One row per (doc_id, block index, block text); the

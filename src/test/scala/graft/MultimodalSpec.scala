@@ -530,6 +530,38 @@ class MultimodalSpec extends AnyFunSuite {
     assert(JpegCodec.jpegDecodePixels(filled).isDefined)
   }
 
+  test("JPEG marker grammar: the header sniffers read fill bytes too; each decoder takes only its own process") {
+    // Fill bytes before a marker code (§B.1.1.2): the file the pixel
+    // decoder reads, both header sniffers must read to the same frame.
+    val (w, h, _, good, _) = jpegFixture(9L)
+    val filled = good.take(2) ++ Array(0xff.toByte) ++ good.drop(2)
+    assert(JpegCodec.jpegDecodePixels(filled).map(i => (i.width, i.height)) === Some((w, h)))
+    assert(MediaCodec.parseImageHeader(filled).map(i => (i.width, i.height)) === Some((w, h)))
+    assert(graft.multimodal.ExifCodec.parseJpegMeta(filled)
+      .map(m => (m.width, m.height)) === Some((w, h)))
+    // Decoder × coding process: each fixture is accepted by exactly the
+    // decoders named for it and rejected (None) by every other one.
+    val decoders = Seq[(String, Array[Byte] => Option[Any])](
+      "gray" -> JpegCodec.jpegDecodePixels, "color" -> JpegCodec.jpegDecodeColorPixels,
+      "cmyk" -> JpegCodec.jpegDecodeCmykPixels, "12-bit" -> JpegCodec.jpegDecode12,
+      "lossless" -> JpegCodec.jpegDecodeLossless)
+    val q = Array.fill(64)(16); q(0) = 8
+    val dc = Array.tabulate(4) { b => val c = new Array[Int](64); c(0) = 10 * b; c }
+    val cases = Seq(
+      ("SOF0 gray", good, Set("gray")),
+      ("SOF0 color", colorJpegFixture(5L)._3, Set("color")),
+      ("SOF0 CMYK", JpegCodec.jpegEncodeCmyk(16, 16, q, Array.fill(4)(dc)), Set("cmyk")),
+      ("SOF1 12-bit", JpegCodec.jpegEncode12(16, 16, q, dc), Set("12-bit")),
+      ("SOF2 gray", progressiveGrayFixture(4L)._3, Set("gray")),
+      ("SOF2 color", progressiveColorFixture(4L)._3, Set("color")),
+      ("SOF3 8-bit", JpegCodec.jpegEncodeLossless(6, 4, 8, 1, 0,
+        Array.tabulate(24)(i => i * 9)), Set("gray", "lossless")),
+      ("SOF3 12-bit", JpegCodec.jpegEncodeLossless(6, 4, 12, 1, 0,
+        Array.tabulate(24)(i => i * 150)), Set("lossless")))
+    for ((name, bytes, accepts) <- cases; (dec, decode) <- decoders)
+      assert(decode(bytes).isDefined === accepts(dec), s"$dec decoder on $name")
+  }
+
   test("decoder fuzz: random bytes and random mutations of valid files never throw") {
     // The executor-task contract for every decoder: malformed input is
     // None (or a parse miss), NEVER an exception. Random byte blobs plus
@@ -1811,7 +1843,7 @@ class MultimodalSpec extends AnyFunSuite {
     while (!((asSof0(p) & 0xff) == 0xff && (asSof0(p + 1) & 0xff) == 0xc1)) p += 1
     asSof0(p + 1) = 0xc0.toByte
     assert(JpegCodec.jpegDecodePixels(asSof0).isEmpty, "12-bit SOF0 must reject")
-    assert(JpegCodec.jpegDecode12(asSof0).isEmpty, "frameType dispatch")
+    assert(JpegCodec.jpegDecode12(asSof0).isEmpty, "SOF dispatch")
     // Precision 10 in the SOF1 header rejects.
     val p10 = good.clone(); p10(p + 4) = 10
     assert(JpegCodec.jpegDecode12(p10).isEmpty)
