@@ -20,10 +20,13 @@ import org.slf4j.LoggerFactory
   *   GET /api/common/{a}/{b}     → `common-links-between` rows (JSON array)
   *   GET /api/node/{orderKey}    → `node-info` row (JSON array)
   *
-  * Every route is one [[TropologyApi]] call, a point lookup over the
-  * maintained serving tables: the keyed routes filter with `graft_key_in`,
-  * so each route's plan compiles once per JVM, not once per key, and
-  * `/api/network` reads the one-row maintained payload. The `collect()`
+  * Every route is one [[TropologyApi]] call that runs ONE Spark query, a
+  * point lookup over one maintained serving table: node reads
+  * `serve_order_stats`, links and common read the order's buckets of
+  * `serve_order_links` (whose rows carry the part names and in-degrees),
+  * and `/api/network` reads the one-row maintained payload. The keyed
+  * routes filter with `graft_key_in`, so each route's plan compiles once
+  * per JVM, not once per key. The `collect()`
   * here is the definition of serving (an HTTP response IS a driver-side
   * materialization of a small, top-k-bounded payload). Requests run concurrently on a pool of
   * daemon threads sized to the session's `defaultParallelism`, so each

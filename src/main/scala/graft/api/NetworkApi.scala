@@ -8,8 +8,8 @@ import graft.sources.ArtifactStore
 /** The reference's E2 entry point (SURVEY.md §4): the network/neighborhood
   * API payload — `{node, nodes:[{id,label,size,x,y}…], edges:[…]}` —
   * that `src/tropology/api.clj` (public repo) assembled in Clojure for the
-  * Sigma.js canvas, re-expressed as two lookups and one declarative plan:
-  * hub → its parts → top-k neighbors by in-degree →
+  * Sigma.js canvas, re-expressed as one lookup and one declarative plan:
+  * hub → its parts, with their in-degrees → top-k neighbors by in-degree →
   * `collect_list(struct(…))` → `to_json`.
   *
   * Served as a MAINTAINED one-row artifact: the payload takes no request
@@ -22,8 +22,8 @@ import graft.sources.ArtifactStore
   * `read.parquet` of a snapshot infers the schema with a Spark job of its
   * own, which every request would pay. The derivation ([[derivePayload]]) takes the hub as the
   * top-1 of `orderStats` by `outgoing` (ties to the smaller order key),
-  * its parts from one bucket of `orderLinks`, and their names and
-  * in-degrees from the buckets of `partDegrees` that hold them.
+  * and its parts with their names and in-degrees from the hub's one
+  * bucket of `orderLinks` ([[TropologyApi.linkedParts]]).
   *
   * Layout coordinates: the reference used random x/y per render; an
   * unseeded rand would break golden-file testing (SURVEY.md §6.3), so
@@ -47,17 +47,16 @@ object NetworkApi {
     }
 
   /** The payload derivation [[neighborhoodPayload]] maintains: looks up the
-    * hub and its parts when called, and returns the one-row plan over the
-    * hub's top-`k` parts.
+    * hub when called, and returns the one-row plan over the hub's top-`k`
+    * parts.
     */
   private[graft] def derivePayload(s: SparkSession, dir: String, k: Int): DataFrame = {
     val hub = TropologyApi.orderStats(s, dir)
       .orderBy(col("outgoing").desc, col("o_orderkey").asc).limit(1)
       .select(col("o_orderkey"), col("outgoing")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).headOption
-    val parts = hub.toSeq.flatMap { case (o, _) => TropologyApi.partsOf(s, dir, o)(o) }
     val (hubO, hubDeg) = hub.getOrElse((0L, 0L))
-    val neighbors = TropologyApi.partRows(s, dir, parts)
+    val neighbors = TropologyApi.linkedParts(s, dir, hub.map(_._1).toSeq: _*)
       .orderBy(col("in_degree").desc, col("p").asc)
       .limit(k)
       .select(lit(hubO).as("hub_o"), lit(hubDeg).as("hub_deg"), col("p"),

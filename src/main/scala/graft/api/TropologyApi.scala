@@ -14,46 +14,50 @@ import graft.sources.ArtifactStore
   * the remaining three over the same order↔part link graph, so the whole
   * reference API maps 1:1 onto library calls.
   *
-  * Every route is a POINT LOOKUP over three MAINTAINED serving tables,
-  * built once per session through [[ArtifactStore.bucketedTable]] with the
-  * edge tables' bucket count ([[Graph.linkBuckets]]):
+  * Every route is ONE POINT-LOOKUP QUERY over two MAINTAINED serving
+  * tables, built once per session through [[ArtifactStore.bucketedTable]]
+  * with the edge tables' bucket count ([[Graph.linkBuckets]]), plus the
+  * payload they derive:
   *
-  *   - [[orderLinks]]: distinct `(o, p)` edges, bucketed by `o`;
-  *   - [[partDegrees]]: `(p, p_name, in_degree)`, bucketed by `p`;
+  *   - [[orderLinks]]: distinct `(o, p)` edges carrying the part's name and
+  *     in-degree (`p_name`, `in_degree`), bucketed by `o`;
   *   - [[orderStats]]: the served order attributes plus `outgoing`,
   *     bucketed by `o_orderkey`;
   *   - the one-row network payload ([[NetworkApi.neighborhoodPayload]]),
-  *     derived from the three above.
+  *     derived from the two above.
   *
   * Lookups filter on the bucket key with [[keyIn]] (`graft_key_in`), so
   * Spark prunes each scan to the buckets holding those keys, and the
   * `sortBy` within a bucket lets parquet row-group statistics skip the
   * rest: a request costs in proportion to its answer, not to the edge
-  * table. No route aggregates, dedups or checkpoints the edges per
-  * request. Routes that start from an order read its edges when called
-  * (one bucket) and return a plan over only the buckets of the parts they
-  * found. Because `graft_key_in` holds its keys by reference, a route's
-  * generated code is the same for every key: it is compiled once per JVM,
-  * not once per key.
+  * table. An order's edge rows already hold what the routes serve about
+  * its parts, so no route looks up a second table, and [[linkedParts]]
+  * reads them into one partition, where sorting and grouping need no
+  * Exchange. No route dedups or checkpoints the edges per request.
+  * Because `graft_key_in` holds its keys by reference, a route's
+  * generated code is the same for every key: it is compiled once per
+  * JVM, not once per key.
   */
 object TropologyApi {
 
-  /** Serving table: distinct order→part edges, bucketed by `o`. */
+  /** Serving table: distinct order→part edges, bucketed by `o`, each with
+    * its part's name and in-degree from [[partDegrees]]. Both are null for
+    * a part with no `part` row; its edge still counts in `outgoing`.
+    */
   private[graft] def orderLinks(s: SparkSession, dir: String): DataFrame =
     ArtifactStore.bucketedTable(s, dir, "serve_order_links", Graph.linkBuckets(s, dir), "o") {
-      Graph.edges(s, dir)
+      Graph.edges(s, dir).join(partDegrees(s, dir), Seq("p"), "left")
+        .select(col("o"), col("p"), col("p_name"), col("in_degree"))
     }
 
-  /** Serving table: each linked part's name and in-degree over the
-    * distinct edges, bucketed by `p`. Parts with no `part` row are left
-    * out, as the routes' join to `part` always did.
+  /** Each linked part's name and in-degree over the distinct edges: the
+    * derivation [[orderLinks]] is built from. Parts with no `part` row are
+    * left out, as the routes' join to `part` always did.
     */
   private[graft] def partDegrees(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.bucketedTable(s, dir, "serve_part_degrees", Graph.linkBuckets(s, dir), "p") {
-      Graph.edges(s, dir).groupBy(col("p")).agg(count(lit(1)).as("in_degree"))
-        .join(Tables.part(s, dir), col("p") === col("p_partkey"))
-        .select(col("p"), col("p_name"), col("in_degree"))
-    }
+    Graph.edges(s, dir).groupBy(col("p")).agg(count(lit(1)).as("in_degree"))
+      .join(Tables.part(s, dir), col("p") === col("p_partkey"))
+      .select(col("p"), col("p_name"), col("in_degree"))
 
   /** Serving table: the order attributes node-info serves plus the
     * order's out-degree (`outgoing`, 0 for an order with no edges),
@@ -75,27 +79,15 @@ object TropologyApi {
   private[graft] def keyIn(c: Column, keys: Seq[Long]): Column =
     call_function("graft_key_in", c +: keys.map(lit): _*)
 
-  /** The `(o, p)` edges of `orders`: a read of one [[orderLinks]] bucket
-    * per order.
+  /** The `(o, p, p_name, in_degree)` rows of the parts `orders` link to
+    * that have a `part` row: one [[orderLinks]] bucket per order, read
+    * into one partition, so sorts, top-k and aggregates over the result
+    * need no Exchange. No `orders` reads no rows.
     */
-  private[graft] def edgesOf(s: SparkSession, dir: String, orders: Long*): DataFrame =
-    orderLinks(s, dir).filter(keyIn(col("o"), orders))
-
-  /** The parts each of `orders` links to ([[edgesOf]], collected); an
-    * order with no edges maps to no parts.
-    */
-  private[graft] def partsOf(s: SparkSession, dir: String,
-      orders: Long*): Map[Long, Seq[Long]] =
-    edgesOf(s, dir, orders: _*).collect().toSeq
-      .groupMap(_.getLong(0))(_.getLong(1)).withDefaultValue(Nil)
-
-  /** The [[partDegrees]] rows of `parts` in one partition: the scan reads
-    * only the buckets holding them, and sorts or top-k over the result need
-    * no Exchange.
-    */
-  private[graft] def partRows(s: SparkSession, dir: String, parts: Seq[Long]): DataFrame =
-    partDegrees(s, dir)
-      .filter(if (parts.isEmpty) lit(false) else keyIn(col("p"), parts))
+  private[graft] def linkedParts(s: SparkSession, dir: String, orders: Long*): DataFrame =
+    orderLinks(s, dir)
+      .filter((if (orders.isEmpty) lit(false) else keyIn(col("o"), orders)) &&
+        col("in_degree").isNotNull)
       .coalesce(1)
 
   /** `network-for-node`: the Sigma.js neighborhood payload (E2). */
@@ -107,18 +99,22 @@ object TropologyApi {
     * "tropes used by this work" listing.
     */
   def linksForArticle(s: SparkSession, dir: String, orderKey: Long): DataFrame =
-    partRows(s, dir, partsOf(s, dir, orderKey)(orderKey))
+    linkedParts(s, dir, orderKey)
       .select(col("p").as("p_partkey"), col("p_name"), col("in_degree"))
       .orderBy(col("in_degree").desc, col("p_partkey").asc)
 
   /** `common-links-between`: the references two orders share — the
     * reference's "tropes common to two works" intersection of the two
-    * orders' part sets.
+    * orders' part sets: the parts linked from every distinct key (all of
+    * `a`'s parts when `a == b`).
     */
   def commonLinksBetween(s: SparkSession, dir: String,
       a: Long, b: Long): DataFrame = {
-    val parts = partsOf(s, dir, a, b)
-    partRows(s, dir, parts(a).intersect(parts(b)))
+    val orders = Seq(a, b).distinct
+    linkedParts(s, dir, orders: _*)
+      .groupBy(col("p"), col("p_name"))
+      .agg(count(lit(1)).as("orders"))
+      .filter(col("orders") === orders.size)
       .select(col("p").as("p_partkey"), col("p_name"))
       .orderBy(col("p_partkey").asc)
   }

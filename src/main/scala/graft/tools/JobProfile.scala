@@ -44,8 +44,9 @@ object JobProfile {
     val t0 = System.nanoTime()
     val n = fn(spark, sfDir).count()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(1000) // let the listener bus drain
-    val rows = done.toArray(Array.empty[(Int, Double, String, Int)]).sortBy(_._1)
+    ListenerDrain(spark.sparkContext)
+    val rows = done.toArray(Array.empty[(Int, Double, String, Int)])
+      .filter(_._3 != ListenerDrain.Marker).sortBy(_._1)
     var sum = 0.0
     var prevEnd = -1L
     rows.foreach { case (id, secs, site, tasks) =>

@@ -53,7 +53,7 @@ object TimeMany {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(100) // let stage-completed events drain
+        ListenerDrain(spark.sparkContext)
         (wall, (cpuNs.get() - c0) / 1e9, (runNs.get() - r0) / 1e9)
       }
       total += runs.map(_._1).min

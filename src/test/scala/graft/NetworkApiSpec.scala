@@ -206,9 +206,24 @@ class NetworkApiSpec extends AnyFunSuite {
     val expectCommon = e.filter(col("o") === a).select("p").as[Long].collect().toSet
       .intersect(e.filter(col("o") === b).select("p").as[Long].collect().toSet)
     assert(common === expectCommon && common.nonEmpty)
+    // An order shares every one of its parts with itself.
+    assert(TropologyApi.commonLinksBetween(spark, dir, a, a).collect().toSeq ===
+      linksA.select("p_partkey", "p_name").orderBy("p_partkey").collect().toSeq)
+    // A key with no edges links to nothing and shares nothing.
+    val none = -1L
+    assert(e.filter(col("o") === none).isEmpty)
+    for (df <- Seq(TropologyApi.linksForArticle(spark, dir, none),
+        TropologyApi.commonLinksBetween(spark, dir, a, none),
+        TropologyApi.commonLinksBetween(spark, dir, none, none)))
+      assert(graft.api.ApiServer.rows(df) === "[]")
 
     val info = TropologyApi.nodeInfo(spark, dir, a)
     val row = info.select("o_orderkey", "outgoing").as[(Long, Long)].head()
     assert(row === ((a, expectParts.size.toLong)))
+
+    // The payload derivation, which reads the hub's parts the same way,
+    // still gives the golden bytes.
+    assert(NetworkApi.derivePayload(spark, dir, 10).collect()(0).getString(0) ===
+      Files.readString(Paths.get(golden)))
   }
 }

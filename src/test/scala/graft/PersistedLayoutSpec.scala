@@ -46,20 +46,22 @@ class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(exchanges(deg.queryExecution.explainString(FormattedMode)) == 0)
     // The pageRank edge preparation: edges ⋈ out-degrees on src — both
     // sides derive from the same bucketed scan, so neither exchanges.
+    val wasBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val joined = e.join(deg.withColumnRenamed("src", "__did"),
         e("src") === col("__did"))
       assert(exchanges(joined.queryExecution.explainString(FormattedMode)) == 0)
     } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", wasBroadcast)
   }
+
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+  private def buckets(f: FileSourceScanExec): Option[Int] = f.optionalBucketSet.map(_.cardinality())
 
   test("node-info and links-for-article read one bucket per key: no edge aggregation, checkpoint or Exchange") {
     import graft.api.TropologyApi
-    def scans(df: DataFrame): Seq[FileSourceScanExec] =
-      collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
-    def buckets(f: FileSourceScanExec): Option[Int] = f.optionalBucketSet.map(_.cardinality())
     val row = TropologyApi.orderStats(spark, dir).filter(col("outgoing") >= 2)
       .orderBy("o_orderkey").select("o_orderkey", "outgoing").head()
     val (key, parts) = (row.getLong(0), row.getLong(1).toInt)
@@ -74,15 +76,42 @@ class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val Seq(infoScan) = scans(info)
     assert(infoScan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_stats_")))
     assert(buckets(infoScan) === Some(1))
-    // links-for-article resolves the order's parts from one bucket of the
-    // o-bucketed edge table, then reads only the part buckets holding them.
-    val Seq(edgeScan) = scans(TropologyApi.edgesOf(spark, dir, key))
-    assert(edgeScan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_links_")))
-    assert(buckets(edgeScan) === Some(1))
-    val Seq(partScan) = scans(links)
-    assert(partScan.tableIdentifier.exists(_.table.startsWith("graft_serve_part_degrees_")))
-    assert(buckets(partScan).exists(n => n >= 1 && n <= parts), partScan.optionalBucketSet)
+    // links-for-article reads the order's parts, names and in-degrees from
+    // its one bucket of the o-bucketed edge table, and nothing else.
+    val Seq(linkScan) = scans(links)
+    assert(linkScan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_links_")))
+    assert(buckets(linkScan) === Some(1))
     assert(links.count() === parts)
+  }
+
+  test("every serving route runs one SQL action; links and common scan only the order-bucketed link table") {
+    import graft.api.{ApiServer, TropologyApi}
+    val spark0 = spark
+    import spark0.implicits._
+    val e = TropologyApi.orderLinks(spark, dir)
+    val (a, b) = e.as("x").join(e.as("y"),
+        col("x.p") === col("y.p") && col("x.o") < col("y.o"))
+      .select(col("x.o"), col("y.o")).orderBy(col("x.o"), col("y.o")).as[(Long, Long)].head()
+    val routes: Seq[(String, () => String)] = Seq(
+      "node" -> (() => ApiServer.rows(TropologyApi.nodeInfo(spark, dir, a))),
+      "links" -> (() => ApiServer.rows(TropologyApi.linksForArticle(spark, dir, a))),
+      "common" -> (() => ApiServer.rows(TropologyApi.commonLinksBetween(spark, dir, a, b))),
+      "network" -> (() => TropologyApi.networkForNode(spark, dir).collect()(0).getString(0)))
+    // The first request of a session builds the serving tables.
+    routes.foreach { case (_, serve) => serve() }
+    for ((route, serve) <- routes) {
+      val (reply, actions) = SparkTestSession.withActions(serve())
+      assert(reply !== "[]", route)
+      assert(actions.size === 1, s"$route ran ${actions.map(_._1)}")
+    }
+    for ((df, most) <- Seq(TropologyApi.linksForArticle(spark, dir, a) -> 1,
+        TropologyApi.commonLinksBetween(spark, dir, a, b) -> 2)) {
+      val p = df.queryExecution.explainString(FormattedMode)
+      assert(exchanges(p) === 0, p.take(3000))
+      val Seq(scan) = scans(df)
+      assert(scan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_links_")), p.take(3000))
+      assert(buckets(scan).exists(n => n >= 1 && n <= most), scan.optionalBucketSet)
+    }
   }
 
   test("serving routes compile once: a second never-served key adds no code compilation") {

@@ -30,11 +30,14 @@ object SparkTestSession {
   /** Runs `body` and returns its result with the SQL actions it ran, in
     * order, as (action name, executed plan string — the final plan under
     * AQE). A QueryExecutionListener is registered for the call only; its
-    * events arrive asynchronously (FIFO), so a sentinel action runs last
-    * and the capture waits for it.
+    * events arrive asynchronously (FIFO), so one sentinel action runs first
+    * and one last: the capture skips the events of actions that ran before
+    * the call (they can still be in flight when the listener registers)
+    * and waits for the last sentinel.
     */
   def withActions[T](body: => T): (T, Seq[(String, String)]) = {
-    val marker = s"actions-sentinel-${java.util.UUID.randomUUID()}"
+    val id = java.util.UUID.randomUUID()
+    val (first, marker) = (s"actions-start-$id", s"actions-sentinel-$id")
     def plan(qe: QueryExecution): String = qe.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan.toString
       case p => p.toString
@@ -48,10 +51,12 @@ object SparkTestSession {
     }
     spark.listenerManager.register(listener)
     try {
+      spark.sql(s"SELECT '$first'").collect()
       val out = body
       spark.sql(s"SELECT '$marker'").collect()
       val actions = Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
           .getOrElse(throw new AssertionError("query listener events did not arrive")))
+        .dropWhile(!_._2.contains(first)).drop(1)
         .takeWhile(!_._2.contains(marker)).toVector
       (out, actions)
     } finally spark.listenerManager.unregister(listener)
