@@ -8,22 +8,7 @@ object Bench {
     // Session comes from GraftSession so the bench runs with the engine's
     // real settings (AQE coalesce/skew, broadcast threshold, UTC).
     val spark = GraftSession.local(cpus, "graft-bench")
-    // Warmup: absorb session/codegen/parquet-footer init so the first timed
-    // query isn't charged ~3s of one-off JVM cost.
-    try {
-      spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
-      // Exercise the join/window/HOF/shuffle machinery once on tiny data so
-      // Janino/JIT infrastructure is compiled before timing starts.
-      val a = spark.range(1000L).selectExpr("id", "id % 13 AS k", "CAST(id AS STRING) AS s")
-      val b = spark.range(100L).selectExpr("id AS k2")
-      a.join(b, a("k") === b("k2"))
-        .selectExpr("k", "s",
-          "row_number() OVER (PARTITION BY k ORDER BY id) AS rn",
-          "aggregate(sequence(1, 5), 0L, (x, y) -> x + y) AS h",
-          "md5(s) AS m")
-        .groupBy("k").count().collect()
-    } catch { case NonFatal(_) => () }
+    warmup(spark, sfDir)
     // Sorted execution order: stable run-to-run attribution of timings.
     // Each query reports its best of 2 back-to-back runs: the first run
     // carries plan-specific JIT/codegen compilation and any transient host
@@ -89,4 +74,24 @@ object Bench {
     catch { case NonFatal(_) => () } // a read-only cwd must not fail the bench
     spark.stop()
   }
+
+  /** Absorb session/codegen/parquet-footer init so the first timed query
+    * isn't charged ~3s of one-off JVM cost. Best effort: a failure here
+    * surfaces in the timed runs instead.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.range(1000000L).selectExpr("sum(id % 7)").collect()
+      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
+      // Exercise the join/window/HOF/shuffle machinery once on tiny data so
+      // Janino/JIT infrastructure is compiled before timing starts.
+      val a = spark.range(1000L).selectExpr("id", "id % 13 AS k", "CAST(id AS STRING) AS s")
+      val b = spark.range(100L).selectExpr("id AS k2")
+      a.join(b, a("k") === b("k2"))
+        .selectExpr("k", "s",
+          "row_number() OVER (PARTITION BY k ORDER BY id) AS rn",
+          "aggregate(sequence(1, 5), 0L, (x, y) -> x + y) AS h",
+          "md5(s) AS m")
+        .groupBy("k").count().collect()
+    } catch { case NonFatal(_) => () }
 }

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -40,24 +41,25 @@ import graft.sources.ArtifactStore
   */
 object TropologyApi {
 
-  /** Serving table: distinct order→part edges, bucketed by `o`, each with
-    * its part's name and in-degree from [[partDegrees]]. Both are null for
-    * a part with no `part` row; its edge still counts in `outgoing`.
-    */
+  /** Serving table: [[orderLinkRows]], bucketed by `o`. */
   private[graft] def orderLinks(s: SparkSession, dir: String): DataFrame =
     ArtifactStore.bucketedTable(s, dir, "serve_order_links", Graph.linkBuckets(s, dir), "o") {
-      Graph.edges(s, dir).join(partDegrees(s, dir), Seq("p"), "left")
-        .select(col("o"), col("p"), col("p_name"), col("in_degree"))
+      orderLinkRows(s, dir)
     }
 
-  /** Each linked part's name and in-degree over the distinct edges: the
-    * derivation [[orderLinks]] is built from. Parts with no `part` row are
-    * left out, as the routes' join to `part` always did.
+  /** The distinct order→part edges, each with its part's name and
+    * in-degree over the distinct edges: the derivation [[orderLinks]] is
+    * built from. Both are null for a part with no `part` row; its edge
+    * still counts in `outgoing`. One scan and one dedup of the p-bucketed
+    * link table: the in-degree is a count over a window partitioned by
+    * `p`, which the bucketed edges already are.
     */
-  private[graft] def partDegrees(s: SparkSession, dir: String): DataFrame =
-    Graph.edges(s, dir).groupBy(col("p")).agg(count(lit(1)).as("in_degree"))
-      .join(Tables.part(s, dir), col("p") === col("p_partkey"))
-      .select(col("p"), col("p_name"), col("in_degree"))
+  private[graft] def orderLinkRows(s: SparkSession, dir: String): DataFrame =
+    Graph.edges(s, dir)
+      .withColumn("in_degree", count(lit(1)).over(Window.partitionBy(col("p"))))
+      .join(Tables.part(s, dir), col("p") === col("p_partkey"), "left")
+      .select(col("o"), col("p"), col("p_name"),
+        when(col("p_partkey").isNotNull, col("in_degree")).as("in_degree"))
 
   /** Serving table: the order attributes node-info serves plus the
     * order's out-degree (`outgoing`, 0 for an order with no edges),

@@ -299,72 +299,46 @@ object TextDedup extends QueryPack {
     */
   private[queries] val MaxEdit = 64
 
-  /** One materialized (n-gram shingles, capped band keys) pair per
-    * (application, shuffle-partition conf, sf dir, n, nHashes) — t4/t13/
-    * t15/t19 all run the 3-gram signature pipeline and t5 the 2-gram one
-    * over the same documents, so each builds once per session instead of
-    * once per query. Policy and caveats match the IVF-model cache:
-    * [[graft.operators.BoundedCache]] eviction, and the shuffle-partition
-    * conf in the key so DeterminismSpec's 3-vs-16 runs rebuild instead of
-    * trivially reusing one build.
+  /** Every document reduced to (doc_id, lang, keep, fp, n_tok): the
+    * curation base e6 (pipeline) and e7 (lineage) each build for their own
+    * query. The repetition-metrics chain and the text hashing run once per
+    * query, and the query's several consumers read the ~30-byte-row
+    * checkpoint instead of re-executing the two explode→count→max
+    * aggregations per reference (plan lint: e6 was 20 exchanges, e7 25,
+    * from exactly this recompute).
     */
-  private val lshCache =
-    new graft.operators.BoundedCache[(DataFrame, DataFrame, DataFrame)]()
-
-  /** Session-cached CURATION BASE shared by e6 (pipeline) and e7
-    * (lineage): every document reduced to (doc_id, lang, keep, fp, n_tok)
-    * — the repetition-metrics chain and the text hashing run ONCE per
-    * (session, shuffle-conf, sf dir) and both queries' multiple consumers
-    * read the ~30-byte-row checkpoint instead of re-executing the two
-    * explode→count→max aggregations per reference (plan lint: e6 was 20
-    * exchanges, e7 25, from exactly this recompute). Same key discipline
-    * as [[lshSig]]'s cache.
-    */
-  private val curationCache = new graft.operators.BoundedCache[DataFrame]()
-
   private def curationBase(s: SparkSession, d: String): DataFrame = {
-    val key = s.sparkContext.applicationId + "|" +
-      s.conf.get("spark.sql.shuffle.partitions") + "|" + d
-    curationCache.getOrBuild(key) {
-      val docs = Tables.documents(s, d)
-      val metrics = repetitionMetrics(docs).select(col("doc_id").as("mid"), col("keep"))
-      docs.join(metrics, col("doc_id") === col("mid")).drop("mid")
-        .select(col("doc_id"), col("lang"), col("keep"),
-          md5(col("text")).as("fp"),
-          size(split(col("text"), " ")).as("n_tok"))
-        // Eager (r16): e6/e7 each read this 3+ times (keeper derivation,
-        // counts, fate join) before their single action (policy).
-        .localCheckpoint()
-    }
+    val docs = Tables.documents(s, d)
+    val metrics = repetitionMetrics(docs).select(col("doc_id").as("mid"), col("keep"))
+    docs.join(metrics, col("doc_id") === col("mid")).drop("mid")
+      .select(col("doc_id"), col("lang"), col("keep"),
+        md5(col("text")).as("fp"),
+        size(split(col("text"), " ")).as("n_tok"))
+      // Eager (r16): e6/e7 each read this 3+ times (keeper derivation,
+      // counts, fate join) before their single action (policy).
+      .localCheckpoint()
   }
 
+  /** The word-`n`-gram shingles and the capped band keys of every
+    * document, built for the calling query. EAGER checkpoints (round 16,
+    * the LinkGraph eagerness policy): each frame is consumed by MULTIPLE
+    * branches of one downstream action with no action in between — sh by
+    * banding AND the caller's [[docSets]], the capped bands by both legs
+    * of the candidate self-join. Lazily, concurrent consuming stages on a
+    * real cluster can each compute the frame before any block is
+    * published; the eager job guarantees exactly-once materialization
+    * before the fan-out (ADVICE r15). Bench evidence for the lazy risk:
+    * t21's same-shaped lazy frames measured 2.2x in BENCH_r15.
+    */
   private def lshSig(s: SparkSession, d: String, n: Int, nHashes: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val key = s.sparkContext.applicationId + "|" +
-      s.conf.get("spark.sql.shuffle.partitions") + "|" + d +
-      s"|n=$n|h=$nHashes"
-    lshCache.getOrBuild(key) {
-      // EAGER checkpoints (round 16, the LinkGraph eagerness policy): every
-      // frame here is consumed by MULTIPLE branches of one downstream
-      // action with no action in between — sh by banding AND docSets,
-      // capped by both legs of the candidate self-join, sets by both sides
-      // of the jaccard join. Lazily, concurrent consuming stages on a real
-      // cluster can each compute the frame before any block is published;
-      // the eager job guarantees exactly-once materialization before the
-      // fan-out (ADVICE r15). Driver-bench evidence for the lazy risk:
-      // t21's same-shaped lazy frames measured 2.2x in BENCH_r15.
-      val sh = shingles(Tables.documents(s, d), n).localCheckpoint()
-      val bands = capBuckets(bandKeys(sh, nHashes, bandSize = 2), BucketCap)
-        .localCheckpoint()
-      // The per-doc hash-set arrays the set-array jaccard verify joins
-      // to — built once per session alongside sh/capped so the verify's
-      // warm path reads a checkpoint instead of re-aggregating shingles.
-      val sets = docSets(sh).localCheckpoint()
-      (sh, bands, sets)
-    }
+      : (DataFrame, DataFrame) = {
+    val sh = shingles(Tables.documents(s, d), n).localCheckpoint()
+    val bands = capBuckets(bandKeys(sh, nHashes, bandSize = 2), BucketCap)
+      .localCheckpoint()
+    (sh, bands)
   }
 
-  private def lsh3(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
+  private def lsh3(s: SparkSession, d: String): (DataFrame, DataFrame) =
     lshSig(s, d, n = 3, nHashes = 8)
 
   /** 20-token blocks of each document — the sub-document dedup unit for
@@ -468,10 +442,10 @@ object TextDedup extends QueryPack {
     * continuously-ingesting deployment keeps alongside the corpus:
     * distinct normalized fingerprints, the corpus rows of the all-docs
     * capped band table, and the corpus shingle sets. Built once per JVM
-    * per sf dir from the shared [[lsh3]] pipeline, published atomically
-    * via [[graft.sources.ArtifactStore.snapshot]], and read back as plain
-    * parquet — consuming plans show FileSourceScanExec over the published
-    * files, not the text-processing derivation.
+    * per sf dir, the band and shingle snapshots from one [[lsh3]] build,
+    * published atomically via [[graft.sources.ArtifactStore.snapshot]], and
+    * read back as plain parquet — consuming plans show FileSourceScanExec
+    * over the published files, not the text-processing derivation.
     */
   private def standingCorpus(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -481,11 +455,14 @@ object TextDedup extends QueryPack {
       Tables.documents(s, d).filter(corpus)
         .select(TextFunctions.fingerprint(col("text")).as("fp")).distinct()
     }
+    // Lazy: if both artifacts are already published, no signature build
+    // runs; on first publish the two writes share one build.
+    lazy val (allSh, allBands) = lsh3(s, d)
     val bands = ArtifactStore.snapshot(s, d, "t15_corpus_bands") {
-      lsh3(s, d)._2.filter(corpus)
+      allBands.filter(corpus)
     }
     val sh = ArtifactStore.snapshot(s, d, "t15_corpus_shingles") {
-      lsh3(s, d)._1.filter(corpus)
+      allSh.filter(corpus)
     }
     (fp, bands, sh)
   }
@@ -534,7 +511,7 @@ object TextDedup extends QueryPack {
       .join(exBands.toDF("doc_b", "band_b", "key_b"),
         col("band_a") === col("band_b") && col("key_a") === col("key_b"))
       .select("doc_a", "doc_b").distinct()
-    val nearDups = jaccard(cand, inSh.union(exSh), 0.5)
+    val nearDups = jaccard(cand, docSets(inSh.union(exSh)), 0.5)
       .select(col("doc_a").as("doc_id")).distinct()
       .withColumn("is_near", lit(true))
     batch.select(col("doc_id"))
@@ -547,9 +524,10 @@ object TextDedup extends QueryPack {
   }
 
   /** Same-band pairs (doc_a < doc_b) from an ALREADY-capped band table.
-    * All callers pass [[lshSig]]'s capped localCheckpoint, so the signature
-    * pipeline (shingle scan → minhash agg → banding → cap) materializes
-    * once and feeds BOTH sides of the self-join.
+    * Callers pass their query's capped localCheckpoint ([[lshSig]], or
+    * t21's own), so the signature pipeline (shingle scan → minhash agg →
+    * banding → cap) materializes once and feeds BOTH sides of the
+    * self-join.
     */
   private def candidatePairs(capped: DataFrame): DataFrame = {
     val a = capped.toDF("doc_a", "band_a", "key_a")
@@ -574,15 +552,15 @@ object TextDedup extends QueryPack {
     * Arrays hold distinct values by construction ([[shingles]] applies
     * array_distinct per doc), so |array_intersect| is the set intersection
     * size and na/nb are the array lengths — same numbers, same rounding,
-    * same oracle SQL as before.
+    * same oracle SQL as before. The verify reads `sets` ([[docSets]]) on
+    * both sides of its join, so callers with no action in between
+    * checkpoint it eagerly, as [[lshSig]] does its frames.
     */
   private def docSets(sh: DataFrame): DataFrame =
     sh.groupBy(col("doc_id"))
       .agg(collect_list(xxhash64(col("sh"))).as("shs"))
 
-  private def jaccard(cand: DataFrame, sh: DataFrame, threshold: Double,
-      prebuilt: Option[DataFrame] = None): DataFrame = {
-    val sets = prebuilt.getOrElse(docSets(sh))
+  private def jaccard(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
     val a = sets.select(col("doc_id").as("da"), col("shs").as("sha"),
       size(col("shs")).cast("long").as("na"))
     val b = sets.select(col("doc_id").as("db"), col("shs").as("shb"),
@@ -812,10 +790,11 @@ object TextDedup extends QueryPack {
     // T4: MinHash+LSH near-dup pairs — word-trigram shingles, 8 minhashes
     // in 4 bands of 2, exact-Jaccard verification of candidates at ≥ 0.5.
     "t4_minhash_neardup" -> { (s, d) =>
-      // Shingles + capped bands come from the session-shared [[lsh3]]
-      // materialization (t13/t15 reuse the same signature pipeline).
-      val (sh, capped, sets) = lsh3(s, d)
-      jaccard(candidatePairs(capped), sh, 0.5, Some(sets))
+      // Three eager checkpoints (shingles, capped bands, hash sets), then
+      // the verify action.
+      val (sh, capped) = lsh3(s, d)
+      val sets = docSets(sh).localCheckpoint()
+      jaccard(candidatePairs(capped), sets, 0.5)
     },
 
     // T19: EDIT-DISTANCE verification of the LSH candidates — the
@@ -833,7 +812,7 @@ object TextDedup extends QueryPack {
     // identical on any engine — inside codegen, no UDF; the text join is
     // two id-keyed hash joins against the small candidate set.
     "t19_fuzzy_verify" -> { (s, d) =>
-      val (_, capped, _) = lsh3(s, d)
+      val (_, capped) = lsh3(s, d)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       candidatePairs(capped)
         .join(docs.toDF("doc_a", "text_a"), "doc_a")
@@ -902,7 +881,7 @@ object TextDedup extends QueryPack {
       val sh = shingles(dedup, 3).localCheckpoint()
       val capped = capBuckets(bandKeys(sh, nHashes = 8, bandSize = 2), BucketCap)
         .localCheckpoint()
-      val pairs = jaccard(candidatePairs(capped), sh, 0.5)
+      val pairs = jaccard(candidatePairs(capped), docSets(sh), 0.5)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = new graft.operators.LinkGraph(pairs).connectedComponentsStar()
       // Tier 2: one bounded char verify per member, against its rep.
@@ -1033,14 +1012,12 @@ object TextDedup extends QueryPack {
     },
 
     // T5: n-gram Jaccard near-dup — word-bigram variant with lighter banding
-    // (4 minhashes, 2 bands), higher threshold 0.6. The (shingles, capped
-    // bands) build comes from the session-shared [[lshSig]] cache keyed by
-    // n — a second t5 invocation reads the localCheckpoint instead of
-    // re-running the scan → minhash agg → cap pipeline (same policy as
-    // the 3-gram pipeline t4/t13/t15/t19 share).
+    // (4 minhashes, 2 bands), higher threshold 0.6. Same three eager
+    // checkpoints as t4, over bigram shingles.
     "t5_ngram_jaccard" -> { (s, d) =>
-      val (sh, capped, sets) = lshSig(s, d, n = 2, nHashes = 4)
-      jaccard(candidatePairs(capped), sh, 0.6, Some(sets))
+      val (sh, capped) = lshSig(s, d, n = 2, nHashes = 4)
+      val sets = docSets(sh).localCheckpoint()
+      jaccard(candidatePairs(capped), sets, 0.6)
     },
 
     // T13: near-dup CLUSTER RESOLUTION — the action a dedup pipeline takes
@@ -1051,8 +1028,9 @@ object TextDedup extends QueryPack {
     // (representative, member count, max member) is oracle-gated against
     // the same pair CTEs + 16 unrolled propagation rounds.
     "t13_neardup_clusters" -> { (s, d) =>
-      val (sh, capped, sets) = lsh3(s, d)
-      val pairs = jaccard(candidatePairs(capped), sh, 0.5, Some(sets))
+      val (sh, capped) = lsh3(s, d)
+      val sets = docSets(sh).localCheckpoint()
+      val pairs = jaccard(candidatePairs(capped), sets, 0.5)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = new graft.operators.LinkGraph(pairs).connectedComponentsStar()
       labels.groupBy(col("lbl").as("cluster_rep"))
@@ -1490,7 +1468,7 @@ object TextDedup extends QueryPack {
       // Keeper identity is min doc_id (unique), so the dedup struct can
       // carry the REDUCED text (token count) instead of the document. The
       // [[curationBase]] checkpoint feeds every consumer, so the metrics
-      // chain runs once per session, not per branch.
+      // chain runs once per query, not per branch.
       val deduped = curationBase(s, d).filter(col("keep") === 1)
         .groupBy(col("fp"))
         .agg(min(struct(col("doc_id"), col("lang"), col("n_tok"))).as("r"))
@@ -1720,10 +1698,10 @@ object TextDedup extends QueryPack {
     // ordered so gate columns are only consulted on keeper rows, where
     // the LEFT joins are guaranteed to have matched.
     "e7_curation_lineage" -> { (s, d) =>
-      // [[curationBase]]: the session-cached ~30-byte-row checkpoint of
+      // [[curationBase]]: this query's ~30-byte-row checkpoint of
       // (doc_id, lang, keep, fp, n_tok) — the metrics chain and text
-      // hashing run once per session, and the keeper derivation, counts,
-      // and fate join all read it (plan lint: 25 exchanges before).
+      // hashing run once, and the keeper derivation, counts, and fate
+      // join all read it (plan lint: 25 exchanges before).
       val base = curationBase(s, d)
       val keepers = base.filter(col("keep") === 1)
         .groupBy(col("fp")).agg(min(col("doc_id")).as("keeper_id"),
@@ -1854,7 +1832,8 @@ object TextDedup extends QueryPack {
     // already pays; at 100 TB the audit runs on a sampled candidate
     // stream, same plan.
     "t32_minhash_estimate" -> { (s, d) =>
-      val (sh, capped, sets) = lsh3(s, d)
+      val (sh, capped) = lsh3(s, d)
+      val sets = docSets(sh).localCheckpoint()
       val pairs = candidatePairs(capped)
       val sig = signatures(sh, 8)
       val sa = sig.toDF("doc_a" +: (0 until 8).map(i => s"a$i"): _*)
@@ -1862,7 +1841,7 @@ object TextDedup extends QueryPack {
       val nMatch = (0 until 8)
         .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
         .reduce(_ + _)
-      val truth = jaccard(pairs, sh, 0.0, Some(sets))
+      val truth = jaccard(pairs, sets, 0.0)
         .select(col("doc_a"), col("doc_b"), col("jaccard").as("true_jaccard"))
       pairs.join(sa, "doc_a").join(sb, "doc_b")
         .select(col("doc_a"), col("doc_b"), nMatch.as("n_match"))

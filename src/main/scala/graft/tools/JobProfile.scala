@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Dev tool: run one declared query and print every Spark job's wall time
   * and call site, so driver-loop queries (whose final plan hides the loop)
@@ -15,7 +16,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-jobprofile")
-    spark.range(1000000L).selectExpr("sum(id % 7)").collect()
+    Bench.warmup(spark, sfDir)
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).count() // cold run: JIT + artifact builds
 
@@ -23,13 +24,23 @@ object JobProfile {
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
+      // A SQL execution starts before its jobs and carries the call site of
+      // the action that ran it; AQE submits its query stages as jobs whose
+      // own stage names point into Spark's thread pool.
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sqlSites.put(x.executionId.toString, x.description)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         // properties can be null (ADVICE r15) — an NPE in a listener would
-        // silently drop the job row from the profile.
-        val props = Option(js.properties)
-        val site = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(props.flatMap(p => Option(p.getProperty("callSite.short")))).getOrElse("?")
+        // silently drop the job row from the profile. Outside SQL, Spark
+        // names the result stage (the job's last) after the call site.
+        def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        val site = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id").flatMap(id => Option(sqlSites.get(id))))
+          .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?")
         jobs.put(js.jobId, (js.time, site, js.stageInfos.map(_.numTasks).sum))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {

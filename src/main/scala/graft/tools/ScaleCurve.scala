@@ -141,13 +141,13 @@ object ScaleCurve {
   }
 
   /** (build+first, warm) seconds. The FIRST run pays every one-time cost —
-    * bucketed-table/snapshot artifact builds, LSH localCheckpoint caches,
-    * JIT — and is reported as its own column; the headline number is the
-    * best-of-2 WARM run, which reads the maintained artifacts the way a
-    * standing deployment does. Keeping the two apart is the r6-verdict
-    * fix: g4's headline 5× ratio used to print 7.93 because its 5×-side
-    * artifact build bled into the timed window; its true warm ratio is
-    * ~4.6 and now the table says so on its own.
+    * bucketed-table/snapshot artifact builds, JIT — and is reported as its
+    * own column; the headline number is the best-of-2 WARM run, which
+    * reads the maintained artifacts the way a standing deployment does.
+    * Keeping the two apart is the r6-verdict fix: g4's headline 5× ratio
+    * used to print 7.93 because its 5×-side artifact build bled into the
+    * timed window; its true warm ratio is ~4.6 and now the table says so
+    * on its own.
     */
   private[tools] def time(s: SparkSession, name: String, dir: String): (Double, Double, Long) = {
     def once(): Double = {

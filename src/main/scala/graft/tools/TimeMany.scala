@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
-import scala.util.control.NonFatal
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Dev tool: time a regex-selected subset of the declared queries with the
   * Bench methodology (count() action, best of 2 back-to-back runs) in ONE
@@ -16,19 +15,7 @@ object TimeMany {
     val re = args(1).r
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-timemany")
-    // Same warmup as Bench.
-    try {
-      spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
-      val a = spark.range(1000L).selectExpr("id", "id % 13 AS k", "CAST(id AS STRING) AS s")
-      val b = spark.range(100L).selectExpr("id AS k2")
-      a.join(b, a("k") === b("k2"))
-        .selectExpr("k", "s",
-          "row_number() OVER (PARTITION BY k ORDER BY id) AS rn",
-          "aggregate(sequence(1, 5), 0L, (x, y) -> x + y) AS h",
-          "md5(s) AS m")
-        .groupBy("k").count().collect()
-    } catch { case NonFatal(_) => () }
+    Bench.warmup(spark, sfDir)
     // Aggregate executor CPU time per run via a stage listener: wall time
     // on this host swings 3-10x between back-to-back identical runs, so
     // CPU-seconds (work actually done) is the stable optimization metric.

@@ -114,6 +114,12 @@ class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("the serve_order_links derivation scans the p-bucketed link table once") {
+    val df = graft.api.TropologyApi.orderLinkRows(spark, dir)
+    val links = scans(df).filter(_.tableIdentifier.exists(_.table.startsWith("graft_links_")))
+    assert(links.size === 1, df.queryExecution.explainString(FormattedMode).take(3000))
+  }
+
   test("serving routes compile once: a second never-served key adds no code compilation") {
     import org.apache.spark.metrics.source.CodegenMetrics
     import graft.api.{ApiServer, TropologyApi}

@@ -69,6 +69,15 @@ class VectorAndDedupSpec extends AnyFunSuite {
     assert(pairs.forall { case (a, b, j) => a < b && j >= 0.5 && j <= 1.0 })
   }
 
+  test("every t5 and t19 call builds the LSH frames it reads: eager checkpoints per call") {
+    def actions(name: String): Seq[String] =
+      SparkTestSession.withActions(graft.queries.TextDedup.queries(name)(spark, dir))._2.map(_._1)
+    // Shingles, capped bands and hash sets; t19 verifies by edit distance,
+    // so it builds no hash sets.
+    for ((name, n) <- Seq("t5_ngram_jaccard" -> 3, "t19_fuzzy_verify" -> 2); call <- 1 to 2)
+      assert(actions(name) === Seq.fill(n)("localCheckpoint"), s"$name call $call")
+  }
+
   test("LSH banding recalls every pair with true Jaccard >= 0.9 (exhaustive check)") {
     import org.apache.spark.sql.functions._
     // Ground truth: exact word-trigram Jaccard over ALL pairs (test-scale only).
