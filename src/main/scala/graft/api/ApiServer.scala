@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.slf4j.LoggerFactory
 
 /** The serving BOUNDARY for the reference's four HTTP entry points
@@ -35,10 +36,23 @@ import org.slf4j.LoggerFactory
   * non-numeric keys answer 404, methods other than GET 405, and a failing
   * lookup 500 (logged). Caching and auth belong to the deployment.
   * NetworkApiSpec round-trips every route against the in-process results.
+  *
+  * Replies go out with TCP_NODELAY. The JDK server flushes the response
+  * headers as one segment before the body; with Nagle on, the small body
+  * segment then waits for the client's delayed ACK of the headers, about
+  * 40 ms on Linux, which dwarfs a point lookup. The JDK reads its switch,
+  * `sun.net.httpserver.nodelay`, once per JVM (in `ServerConfig`'s static
+  * initializer, at the first `HttpServer.create`), so this object sets it
+  * before its first server unless the JVM was started with it. If a JDK
+  * `HttpServer` was created earlier in the same JVM, the JDK has already
+  * read it, and every server of that JVM, these included, keeps Nagle on.
   */
 object ApiServer {
 
   private val log = LoggerFactory.getLogger(getClass)
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
+  if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
 
   /** Start on 127.0.0.1:`port` (0 = ephemeral; read the bound port from
     * `getAddress.getPort`). Caller owns the lifecycle: `stop(0)` when done.
@@ -94,8 +108,13 @@ object ApiServer {
     new PooledServer(http, pool)
   }
 
-  /** A JSON array of `df`'s rows: the body of every row-returning route. */
-  private[graft] def rows(df: DataFrame): String = df.toJSON.collect().mkString("[", ",", "]")
+  /** A JSON array of `df`'s rows: the body of every row-returning route.
+    * Each row is rendered inside the plan by `to_json(struct(*))`, which
+    * writes the same bytes as `df.toJSON` (the same generator and options)
+    * without its round trip from rows to objects and back.
+    */
+  private[graft] def rows(df: DataFrame): String =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).mkString("[", ",", "]")
 
   /** `http` with its request pool: `stop` also stops the pool's threads,
     * interrupting any request still running, so none outlives the server.

@@ -34,10 +34,14 @@ import graft.sources.ArtifactStore
   * table. An order's edge rows already hold what the routes serve about
   * its parts, so no route looks up a second table, and [[linkedParts]]
   * reads them into one partition, where sorting and grouping need no
-  * Exchange. No route dedups or checkpoints the edges per request.
+  * Exchange; links sorts within that partition, so only common, which
+  * aggregates, runs under adaptive execution. No route dedups or
+  * checkpoints the edges per request.
   * Because `graft_key_in` holds its keys by reference, a route's
   * generated code is the same for every key: it is compiled once per
-  * JVM, not once per key.
+  * JVM, not once per key. [[ApiServer]] renders a route's rows as JSON
+  * inside the same plan and sends the reply with TCP_NODELAY, so a reply
+  * adds no object round trip and no Nagle wait to the lookup.
   */
 object TropologyApi {
 
@@ -83,8 +87,9 @@ object TropologyApi {
 
   /** The `(o, p, p_name, in_degree)` rows of the parts `orders` link to
     * that have a `part` row: one [[orderLinks]] bucket per order, read
-    * into one partition, so sorts, top-k and aggregates over the result
-    * need no Exchange. No `orders` reads no rows.
+    * into exactly one partition, so sorts, top-k and aggregates over the
+    * result need no Exchange, and a sort within partitions is a total
+    * order. No `orders` reads no rows.
     */
   private[graft] def linkedParts(s: SparkSession, dir: String, orders: Long*): DataFrame =
     orderLinks(s, dir)
@@ -99,11 +104,18 @@ object TropologyApi {
   /** `links-for-article`: everything the given order references, resolved
     * to part attributes and ranked by global in-degree — the reference's
     * "tropes used by this work" listing.
+    *
+    * [[linkedParts]] reads the rows into one partition, so sorting within
+    * it is the global order. A global `orderBy` would give the same rows
+    * but require an ordered distribution, and any required distribution
+    * puts the query under adaptive execution: a re-optimization, a thread
+    * hand-off and a plan-update event per request, with no Exchange to
+    * adapt. A sort within partitions requires none.
     */
   def linksForArticle(s: SparkSession, dir: String, orderKey: Long): DataFrame =
     linkedParts(s, dir, orderKey)
       .select(col("p").as("p_partkey"), col("p_name"), col("in_degree"))
-      .orderBy(col("in_degree").desc, col("p_partkey").asc)
+      .sortWithinPartitions(col("in_degree").desc, col("p_partkey").asc)
 
   /** `common-links-between`: the references two orders share — the
     * reference's "tropes common to two works" intersection of the two

@@ -333,10 +333,15 @@ object TextDedup extends QueryPack {
   private def lshSig(s: SparkSession, d: String, n: Int, nHashes: Int)
       : (DataFrame, DataFrame) = {
     val sh = shingles(Tables.documents(s, d), n).localCheckpoint()
-    val bands = capBuckets(bandKeys(sh, nHashes, bandSize = 2), BucketCap)
-      .localCheckpoint()
-    (sh, bands)
+    (sh, cappedBands(sh, nHashes))
   }
+
+  /** The capped band keys of the shingles `sh`, eagerly checkpointed for
+    * the two legs of the candidate self-join. `sh` need not be
+    * materialized when banding is its only reader (t19).
+    */
+  private def cappedBands(sh: DataFrame, nHashes: Int): DataFrame =
+    capBuckets(bandKeys(sh, nHashes, bandSize = 2), BucketCap).localCheckpoint()
 
   private def lsh3(s: SparkSession, d: String): (DataFrame, DataFrame) =
     lshSig(s, d, n = 3, nHashes = 8)
@@ -812,7 +817,8 @@ object TextDedup extends QueryPack {
     // identical on any engine — inside codegen, no UDF; the text join is
     // two id-keyed hash joins against the small candidate set.
     "t19_fuzzy_verify" -> { (s, d) =>
-      val (_, capped) = lsh3(s, d)
+      // Banding is the shingles' only reader here: one checkpoint, the bands.
+      val capped = cappedBands(shingles(Tables.documents(s, d), 3), nHashes = 8)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       candidatePairs(capped)
         .join(docs.toDF("doc_a", "text_a"), "doc_a")

@@ -104,6 +104,65 @@ class NetworkApiSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("serving boundary: a reply's body follows its headers without a Nagle stall") {
+    import java.nio.charset.StandardCharsets.US_ASCII
+    val server = graft.api.ApiServer.start(spark, dir)
+    val socket = new java.net.Socket("127.0.0.1", server.getAddress.getPort)
+    try {
+      socket.setSoTimeout(30000)
+      val (in, out) = (socket.getInputStream, socket.getOutputStream)
+      val request = "GET /api/node/1 HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n".getBytes(US_ASCII)
+      // One GET on the keep-alive connection: the time from the end of the
+      // header block to the last body byte. With Nagle on, the body
+      // segment waits for this client's delayed ACK of the headers.
+      def gapMs(): Double = {
+        out.write(request)
+        out.flush()
+        val head = new java.lang.StringBuilder
+        while (head.length < 4 || head.substring(head.length - 4) != "\r\n\r\n") {
+          val c = in.read()
+          assert(c >= 0, s"connection closed after: $head")
+          head.append(c.toChar)
+        }
+        val headEnd = System.nanoTime()
+        val length = "(?i)content-length: *(\\d+)".r.findFirstMatchIn(head).get.group(1).toInt
+        assert(head.toString.startsWith("HTTP/1.1 200") && length > 0, head)
+        assert(in.readNBytes(length).length === length)
+        (System.nanoTime() - headEnd) / 1e6
+      }
+      Seq.fill(5)(gapMs())
+      val gaps = Seq.fill(20)(gapMs())
+      assert(gaps.min < 20.0, gaps)
+    } finally {
+      socket.close()
+      server.stop(0)
+    }
+  }
+
+  test("ApiServer.rows renders the same bytes as df.toJSON") {
+    import org.apache.spark.sql.functions.col
+    import graft.api.{ApiServer, TropologyApi}
+    val spark0 = spark
+    import spark0.implicits._
+    val e = TropologyApi.orderLinks(spark, dir)
+    val (a, b) = e.as("x").join(e.as("y"), col("x.p") === col("y.p") && col("x.o") < col("y.o"))
+      .select(col("x.o"), col("y.o")).orderBy(col("x.o"), col("y.o")).as[(Long, Long)].head()
+    // A null field, a date, a decimal and a string that JSON escapes.
+    val typed = spark.sql("""SELECT * FROM VALUES
+      (1L, CAST(NULL AS STRING), DATE'1995-03-15', CAST(12.30 AS DECIMAL(12,2))),
+      (2L, 'say "hi"\\n', DATE'2000-02-29', CAST(-0.05 AS DECIMAL(12,2)))
+      AS t(id, s, d, m)""")
+    val frames = Seq(
+      TropologyApi.nodeInfo(spark, dir, a), TropologyApi.nodeInfo(spark, dir, -1L),
+      TropologyApi.linksForArticle(spark, dir, a), TropologyApi.linksForArticle(spark, dir, -1L),
+      TropologyApi.commonLinksBetween(spark, dir, a, b),
+      TropologyApi.commonLinksBetween(spark, dir, a, -1L), typed)
+    for (df <- frames)
+      assert(ApiServer.rows(df) === df.toJSON.collect().mkString("[", ",", "]"))
+    assert(ApiServer.rows(TropologyApi.linksForArticle(spark, dir, -1L)) === "[]")
+    assert(ApiServer.rows(typed).contains("\"d\":\"1995-03-15\",\"m\":12.30}"))
+  }
+
   test("serving boundary: a lookup that throws answers 500, not a dropped connection") {
     // No tables under an empty dir: every lookup fails inside the handler.
     val empty = Files.createTempDirectory("graft_empty_sf")

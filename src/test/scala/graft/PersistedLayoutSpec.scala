@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, FormattedMode,
+  MapPartitionsExec, SerializeFromObjectExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -100,9 +101,16 @@ class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // The first request of a session builds the serving tables.
     routes.foreach { case (_, serve) => serve() }
     for ((route, serve) <- routes) {
-      val (reply, actions) = SparkTestSession.withActions(serve())
+      val (reply, actions) = SparkTestSession.withQueries(serve())
       assert(reply !== "[]", route)
       assert(actions.size === 1, s"$route ran ${actions.map(_._1)}")
+      // Only common, which aggregates, runs under adaptive execution, and
+      // no reply is rendered through JVM objects (`toJSON`).
+      val p = actions.head._2.executedPlan
+      assert(p.isInstanceOf[AdaptiveSparkPlanExec] === (route == "common"), s"$route: $p")
+      assert(collect(p) {
+        case n @ (_: DeserializeToObjectExec | _: MapPartitionsExec | _: SerializeFromObjectExec) => n
+      }.isEmpty, s"$route: $p")
     }
     for ((df, most) <- Seq(TropologyApi.linksForArticle(spark, dir, a) -> 1,
         TropologyApi.commonLinksBetween(spark, dir, a, b) -> 2)) {
@@ -112,6 +120,25 @@ class PersistedLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(scan.tableIdentifier.exists(_.table.startsWith("graft_serve_order_links_")), p.take(3000))
       assert(buckets(scan).exists(n => n >= 1 && n <= most), scan.optionalBucketSet)
     }
+  }
+
+  test("links ranks by in-degree descending, then part key, where in-degrees tie") {
+    import graft.api.TropologyApi
+    val spark0 = spark
+    import spark0.implicits._
+    val edges = TropologyApi.orderLinks(spark, dir).filter(col("in_degree").isNotNull)
+    // The first order with two parts of equal in-degree, and more than one
+    // distinct in-degree, so both sort keys decide something.
+    val key = edges.groupBy("o")
+      .agg(count(lit(1)).as("n"), countDistinct("in_degree").as("degrees"))
+      .filter(col("degrees") > 1 && col("degrees") < col("n"))
+      .orderBy("o").select("o").as[Long].head()
+    val got = TropologyApi.linksForArticle(spark, dir, key)
+      .as[(Long, String, Long)].collect().toSeq
+    val expected = edges.filter(col("o") === key).select("p", "p_name", "in_degree")
+      .as[(Long, String, Long)].collect().toSeq.sortBy { case (p, _, d) => (-d, p) }
+    assert(got === expected)
+    assert(got.map(_._3).distinct.size < got.size, got)
   }
 
   test("the serve_order_links derivation scans the p-bucketed link table once") {

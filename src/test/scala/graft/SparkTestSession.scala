@@ -29,25 +29,30 @@ object SparkTestSession {
 
   /** Runs `body` and returns its result with the SQL actions it ran, in
     * order, as (action name, executed plan string — the final plan under
-    * AQE). A QueryExecutionListener is registered for the call only; its
-    * events arrive asynchronously (FIFO), so one sentinel action runs first
-    * and one last: the capture skips the events of actions that ran before
-    * the call (they can still be in flight when the listener registers)
-    * and waits for the last sentinel.
+    * AQE). See [[withQueries]].
     */
   def withActions[T](body: => T): (T, Seq[(String, String)]) = {
+    val (out, queries) = withQueries(body)
+    (out, queries.map { case (name, qe) => name -> plan(qe) })
+  }
+
+  /** Runs `body` and returns its result with the SQL actions it ran, in
+    * order, as (action name, query execution). A QueryExecutionListener is
+    * registered for the call only; its events arrive asynchronously
+    * (FIFO), so one sentinel action runs first and one last: the capture
+    * skips the events of actions that ran before the call (they can still
+    * be in flight when the listener registers) and waits for the last
+    * sentinel.
+    */
+  def withQueries[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
     val id = java.util.UUID.randomUUID()
     val (first, marker) = (s"actions-start-$id", s"actions-sentinel-$id")
-    def plan(qe: QueryExecution): String = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case p => p.toString
-    }
-    val seen = new LinkedBlockingQueue[(String, String)]()
+    val seen = new LinkedBlockingQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.put(funcName -> plan(qe))
+        seen.put(funcName -> qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        seen.put(funcName -> plan(qe))
+        seen.put(funcName -> qe)
     }
     spark.listenerManager.register(listener)
     try {
@@ -56,9 +61,14 @@ object SparkTestSession {
       spark.sql(s"SELECT '$marker'").collect()
       val actions = Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
           .getOrElse(throw new AssertionError("query listener events did not arrive")))
-        .dropWhile(!_._2.contains(first)).drop(1)
-        .takeWhile(!_._2.contains(marker)).toVector
+        .dropWhile(a => !plan(a._2).contains(first)).drop(1)
+        .takeWhile(a => !plan(a._2).contains(marker)).toVector
       (out, actions)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def plan(qe: QueryExecution): String = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+    case p => p.toString
   }
 }

@@ -73,8 +73,9 @@ class VectorAndDedupSpec extends AnyFunSuite {
     def actions(name: String): Seq[String] =
       SparkTestSession.withActions(graft.queries.TextDedup.queries(name)(spark, dir))._2.map(_._1)
     // Shingles, capped bands and hash sets; t19 verifies by edit distance,
-    // so it builds no hash sets.
-    for ((name, n) <- Seq("t5_ngram_jaccard" -> 3, "t19_fuzzy_verify" -> 2); call <- 1 to 2)
+    // so it builds no hash sets, and banding reads its shingles once, so
+    // only the capped bands are materialized.
+    for ((name, n) <- Seq("t5_ngram_jaccard" -> 3, "t19_fuzzy_verify" -> 1); call <- 1 to 2)
       assert(actions(name) === Seq.fill(n)("localCheckpoint"), s"$name call $call")
   }
 
