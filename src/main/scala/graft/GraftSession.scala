@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *     AQE's coalescing from `spark.sql.adaptive.coalescePartitions.*`.
   *   - session timezone pinned to UTC so timestamp semantics are deterministic
   *     and match the DuckDB oracle.
+  *   - no per-session artifact isolation: graft adds no session artifacts,
+  *     and with isolation on every SQL task runs under a per-session class
+  *     loader that fetches executor-side codegen's class lookups from the
+  *     driver (SessionSettingsSpec).
   */
 object GraftSession {
   def local(cores: String, appName: String): SparkSession =
@@ -62,6 +66,13 @@ object GraftSession {
       // from idling a large cluster.
       .config("spark.sql.files.minPartitionNum", (cores * 2).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      // graft adds no session artifacts (jars, classes, files). With
+      // isolation on, Spark 4 still runs every SQL task under a
+      // per-session `ExecutorClassLoader`, and each class name that
+      // Janino cannot resolve while compiling on an executor becomes a
+      // lookup through the application jars and then an RPC to the
+      // driver's class server.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()

@@ -27,7 +27,10 @@ import org.slf4j.LoggerFactory
   * `serve_order_links` (whose rows carry the part names and in-degrees),
   * and `/api/network` reads the one-row maintained payload. The keyed
   * routes filter with `graft_key_in`, so each route's plan compiles once
-  * per JVM, not once per key. The `collect()`
+  * per JVM, not once per key. A server plans each route once ([[Routes]],
+  * a [[PreparedRoute]] per route): per request it copies that plan, binds
+  * the request's keys and runs it, so no request analyzes, optimizes or
+  * physically plans the route's DataFrames again. The `collect()`
   * here is the definition of serving (an HTTP response IS a driver-side
   * materialization of a small, top-k-bounded payload). Requests run concurrently on a pool of
   * daemon threads sized to the session's `defaultParallelism`, so each
@@ -35,7 +38,9 @@ import org.slf4j.LoggerFactory
   * is shut down by the returned server's `stop`. Unknown routes and
   * non-numeric keys answer 404, methods other than GET 405, and a failing
   * lookup 500 (logged). Caching and auth belong to the deployment.
-  * NetworkApiSpec round-trips every route against the in-process results.
+  * NetworkApiSpec round-trips every route against the in-process results,
+  * and ServedRouteSpec holds each prepared route to its [[TropologyApi]]
+  * call.
   *
   * Replies go out with TCP_NODELAY. The JDK server flushes the response
   * headers as one segment before the body; with Nagle on, the small body
@@ -67,18 +72,15 @@ object ApiServer {
       t
     })
     http.setExecutor(pool)
+    val routes = new Routes(s, dir)
     def route(path: List[String]): Option[String] = path match {
       // The payload builder picks its deterministic hub; a trailing code
       // segment is accepted (the reference route shape) and echoed back by
       // the payload's own `node.id` field.
-      case "api" :: "network" :: _ =>
-        Some(TropologyApi.networkForNode(s, dir).collect()(0).getString(0))
-      case List("api", "links", k) =>
-        Some(rows(TropologyApi.linksForArticle(s, dir, k.toLong)))
-      case List("api", "common", a, b) =>
-        Some(rows(TropologyApi.commonLinksBetween(s, dir, a.toLong, b.toLong)))
-      case List("api", "node", k) =>
-        Some(rows(TropologyApi.nodeInfo(s, dir, k.toLong)))
+      case "api" :: "network" :: _ => Some(routes.network())
+      case List("api", "links", k) => Some(routes.links(k.toLong))
+      case List("api", "common", a, b) => Some(routes.common(a.toLong, b.toLong))
+      case List("api", "node", k) => Some(routes.node(k.toLong))
       case _ => None
     }
     http.createContext("/api", (ex: HttpExchange) => {
@@ -114,7 +116,38 @@ object ApiServer {
     * without its round trip from rows to objects and back.
     */
   private[graft] def rows(df: DataFrame): String =
-    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).mkString("[", ",", "]")
+    array(objects(df).collect().map(_.getString(0)))
+
+  private def objects(df: DataFrame): DataFrame = df.select(to_json(struct(col("*"))))
+  private def array(objects: Array[String]): String = objects.mkString("[", ",", "]")
+
+  /** The four routes of one server, each a [[PreparedRoute]]: its reply
+    * plan is its [[TropologyApi]] call for fixed template keys, with
+    * [[rows]]' projection (the network payload is one string already),
+    * planned on the route's first request and kept for the server's life;
+    * each request runs a copy with its own keys bound. It replies exactly
+    * what [[rows]] gives for the same call with the request's keys. A
+    * preparation that fails (no tables under `dir`, say) fails its request
+    * and is tried again by the route's next one.
+    */
+  private[graft] final class Routes(s: SparkSession, dir: String) {
+    // Any keys serve as template keys; common's two must differ, so that
+    // its plan holds both a two-key set and the count filter for 2.
+    private val (a0, b0) = (1L, 2L)
+    private lazy val nodePlan =
+      new PreparedRoute(objects(TropologyApi.nodeInfo(s, dir, a0)), Seq(a0))
+    private lazy val linksPlan =
+      new PreparedRoute(objects(TropologyApi.linksForArticle(s, dir, a0)), Seq(a0))
+    private lazy val commonPlan =
+      new PreparedRoute(objects(TropologyApi.commonLinksBetween(s, dir, a0, b0)), Seq(a0, b0),
+        count = Some(TropologyApi.SharedBy))
+    private lazy val networkPlan = new PreparedRoute(TropologyApi.networkForNode(s, dir), Nil)
+
+    def node(k: Long): String = array(nodePlan.run(k))
+    def links(k: Long): String = array(linksPlan.run(k))
+    def common(a: Long, b: Long): String = array(commonPlan.run(a, b))
+    def network(): String = networkPlan.run()(0)
+  }
 
   /** `http` with its request pool: `stop` also stops the pool's threads,
     * interrupting any request still running, so none outlives the server.

@@ -42,6 +42,15 @@ import graft.sources.ArtifactStore
   * JVM, not once per key. [[ApiServer]] renders a route's rows as JSON
   * inside the same plan and sends the reply with TCP_NODELAY, so a reply
   * adds no object round trip and no Nagle wait to the lookup.
+  *
+  * These functions are each route's one definition. [[ApiServer]] plans a
+  * route once from its function for template keys and rebinds only what
+  * depends on the keys per request ([[PreparedRoute]]): the
+  * `graft_key_in` sets, the scan's bucket set, and common's count of
+  * distinct keys ([[SharedBy]]). A key-dependent part that a new route
+  * or a change here adds must be one of those, or the served plan would
+  * keep the template's; ServedRouteSpec compares every served route with
+  * its function.
   */
 object TropologyApi {
 
@@ -117,6 +126,11 @@ object TropologyApi {
       .select(col("p").as("p_partkey"), col("p_name"), col("in_degree"))
       .sortWithinPartitions(col("in_degree").desc, col("p_partkey").asc)
 
+  /** The column of [[commonLinksBetween]] that counts a part's linking
+    * orders; a part is common when it equals the number of distinct keys.
+    */
+  private[graft] val SharedBy = "orders"
+
   /** `common-links-between`: the references two orders share — the
     * reference's "tropes common to two works" intersection of the two
     * orders' part sets: the parts linked from every distinct key (all of
@@ -127,8 +141,8 @@ object TropologyApi {
     val orders = Seq(a, b).distinct
     linkedParts(s, dir, orders: _*)
       .groupBy(col("p"), col("p_name"))
-      .agg(count(lit(1)).as("orders"))
-      .filter(col("orders") === orders.size)
+      .agg(count(lit(1)).as(SharedBy))
+      .filter(col(SharedBy) === orders.size)
       .select(col("p").as("p_partkey"), col("p_name"))
       .orderBy(col("p_partkey").asc)
   }

@@ -18,6 +18,11 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   *                             generated code holds the keys by reference,
   *                             so a point-lookup plan compiles once for
   *                             every key (the serving routes).
+  *   - prepared plans        — a planner strategy that plans a
+  *     [[PreparedPlan]] leaf as the physical plan it instantiates, so the
+  *     serving routes run a per-request copy of a plan prepared once:
+  *     per request Catalyst optimizes one analyzed leaf, and plans it
+  *     as the copy.
   *   - determinism guard     — an injected analysis CHECK rule rejecting
   *     partition-order-sensitive expressions (rand/randn/uuid/
   *     monotonically_increasing_id) whose values change under
@@ -34,6 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => new TopKPerKeyStrategy)
+    ext.injectPlannerStrategy(_ => PreparedPlanStrategy)
     // Key-only Filters commute with per-key top-k; without this rule the
     // custom node is a pushdown barrier (see PushFilterThroughTopKPerKey).
     ext.injectOptimizerRule(_ => PushFilterThroughTopKPerKey)

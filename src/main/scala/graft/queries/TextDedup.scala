@@ -565,6 +565,14 @@ object TextDedup extends QueryPack {
     sh.groupBy(col("doc_id"))
       .agg(collect_list(xxhash64(col("sh"))).as("shs"))
 
+  /** Drops the blocks of `checkpointed`, a `localCheckpoint` result that
+    * nothing reads any more.
+    */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = true))
+
   private def jaccard(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
     val a = sets.select(col("doc_id").as("da"), col("shs").as("sha"),
       size(col("shs")).cast("long").as("na"))
@@ -878,11 +886,16 @@ object TextDedup extends QueryPack {
       // it to the session's parallelism ONLY when it arrived narrower —
       // at scale the survivor frame already has ≫ defaultParallelism
       // partitions and this branch is a no-op (guide §2.6 idle capacity).
+      // The widened checkpoint replaces dedup0 for every reader, so
+      // dedup0's blocks are released at once instead of staying pinned
+      // for the rest of the session.
       val par = s.sparkContext.defaultParallelism
       val dedup =
-        if (dedup0.rdd.getNumPartitions < par)
-          dedup0.repartition(par).localCheckpoint()
-        else dedup0
+        if (dedup0.rdd.getNumPartitions < par) {
+          val wide = dedup0.repartition(par).localCheckpoint()
+          release(dedup0)
+          wide
+        } else dedup0
       // Tier 1: LSH → Jaccard ≥ 0.5 → star components over the survivors.
       val sh = shingles(dedup, 3).localCheckpoint()
       val capped = capBuckets(bandKeys(sh, nHashes = 8, bandSize = 2), BucketCap)

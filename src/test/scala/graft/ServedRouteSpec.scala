@@ -1,0 +1,162 @@
+package graft
+
+import java.util.{Collections, IdentityHashMap}
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.datasources.BucketingUtils
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.api.{ApiServer, TropologyApi}
+import graft.plans.PreparedPlan
+
+/** The served path: [[ApiServer.Routes]], each route a plan prepared once
+  * and run per request with its keys rebound. A served reply must be what
+  * the route's own [[TropologyApi]] call gives for the request's keys, and
+  * each request must stay one SQL action over exactly its keys' buckets.
+  */
+class ServedRouteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+
+  private lazy val spark = SparkTestSession.spark
+  private val dir = "/root/testdata/sf0.001"
+  private lazy val routes = new ApiServer.Routes(spark, dir)
+
+  /** Every (order key, bucket id) of `serve_order_links`, the bucket read
+    * from the name of the file that stores the key's edges.
+    */
+  private lazy val buckets: Map[Long, Int] = {
+    val spark0 = spark
+    import spark0.implicits._
+    TropologyApi.orderLinks(spark, dir).select(col("o"), input_file_name())
+      .distinct().as[(Long, String)].collect()
+      .map { case (o, f) => o -> BucketingUtils.getBucketId(f.split("/").last).get }.toMap
+  }
+  private lazy val numBuckets = graft.queries.Graph.linkBuckets(spark, dir)
+
+  /** The bucket Spark's bucketing assigns to `k`: for keys with no rows. */
+  private def bucketOf(k: Long): Int = BucketingUtils.getBucketIdFromValue(
+    org.apache.spark.sql.catalyst.expressions.AttributeReference("o",
+      org.apache.spark.sql.types.LongType)(), numBuckets, k)
+
+  /** The lowest order key of every bucket. */
+  private lazy val keyPerBucket: Seq[Long] =
+    buckets.groupBy(_._2).values.map(_.keys.min).toSeq.sorted
+
+  /** Order pairs that share a part, lowest first. */
+  private lazy val sharing: Seq[(Long, Long)] = {
+    val spark0 = spark
+    import spark0.implicits._
+    val e = TropologyApi.orderLinks(spark, dir)
+    e.as("x").join(e.as("y"), col("x.p") === col("y.p") && col("x.o") < col("y.o"))
+      .select(col("x.o"), col("y.o")).distinct().orderBy(col("x.o"), col("y.o"))
+      .as[(Long, Long)].take(4).toSeq
+  }
+
+  /** A key with no order and no edges. */
+  private lazy val absent: Long = {
+    val spark0 = spark
+    import spark0.implicits._
+    val keys = Tables.orders(spark, dir).select("o_orderkey").as[Long].collect().toSet
+    Iterator.from(1).map(_.toLong).find(k => !keys(k) && !buckets.contains(k)).get
+  }
+
+  private def network(): String = TropologyApi.networkForNode(spark, dir).collect()(0).getString(0)
+
+  test("every served route replies what ApiServer.rows gives for its TropologyApi call") {
+    assert(keyPerBucket.size === numBuckets, "the fixture must have a key in every bucket")
+    for (k <- keyPerBucket ++ Seq(-1L, absent)) {
+      assert(routes.node(k) === ApiServer.rows(TropologyApi.nodeInfo(spark, dir, k)), k)
+      assert(routes.links(k) === ApiServer.rows(TropologyApi.linksForArticle(spark, dir, k)), k)
+    }
+    assert(routes.node(absent) === "[]" && routes.links(absent) === "[]")
+    assert(routes.links(keyPerBucket.head) !== "[]")
+    // a == b and a != b interleaved on one server: the count filter is
+    // rebound per request in both directions.
+    val commons = sharing.flatMap { case (a, b) => Seq((a, b), (a, a), (b, a), (b, b)) } ++
+      Seq((sharing.head._1, absent), (absent, absent), (-1L, sharing.head._2))
+    for ((a, b) <- commons)
+      assert(routes.common(a, b) ===
+        ApiServer.rows(TropologyApi.commonLinksBetween(spark, dir, a, b)), (a, b))
+    assert(commons.count { case (a, b) => routes.common(a, b) !== "[]" } >= 4 * sharing.size)
+    assert(routes.network() === network())
+  }
+
+  test("each served request is one SQL action over the prepared leaf that scans only its keys' buckets") {
+    val Seq(a, b) = keyPerBucket.take(2)
+    val requests: Seq[(String, () => String, Option[Set[Int]])] = Seq(
+      ("node", () => routes.node(a), Some(Set(buckets(a)))),
+      ("links", () => routes.links(b), Some(Set(buckets(b)))),
+      ("common", () => routes.common(a, b), Some(Set(buckets(a), buckets(b)))),
+      ("common", () => routes.common(b, b), Some(Set(buckets(b)))),
+      ("links", () => routes.links(absent), Some(Set(bucketOf(absent)))),
+      ("network", () => routes.network(), None))
+    requests.foreach(_._2())
+    for ((route, serve, keyBuckets) <- requests) {
+      val (_, actions) = SparkTestSession.withQueries(serve())
+      assert(actions.size === 1, s"$route ran ${actions.map(_._1)}")
+      val qe = actions.head._2
+      assert(qe.logical.isInstanceOf[PreparedPlan], s"$route: ${qe.logical}")
+      assert(qe.optimizedPlan.isInstanceOf[PreparedPlan], s"$route: ${qe.optimizedPlan}")
+      // Only common, which aggregates, runs under adaptive execution.
+      assert(qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec] === (route == "common"), route)
+      val Seq(scan) = collect(qe.executedPlan) { case f: FileSourceScanExec => f }
+      assert(scan.optionalBucketSet.map(_.iterator.toSet) === keyBuckets, s"$route: $scan")
+    }
+  }
+
+  /** Every node of `p`, into the adaptive plan and its query stages, by identity. */
+  private def nodes(p: SparkPlan): java.util.Set[SparkPlan] = {
+    val all = Collections.newSetFromMap(new IdentityHashMap[SparkPlan, java.lang.Boolean])
+    foreach(p) { n => all.add(n); () }
+    all
+  }
+  private def shared(p: SparkPlan, q: SparkPlan): java.util.Set[SparkPlan] = {
+    val common = nodes(p)
+    common.retainAll(nodes(q))
+    common
+  }
+
+  test("two served requests' executed plans share no node instance") {
+    val (a, b) = sharing.head
+    def executed(serve: => String): SparkPlan = {
+      val (_, Seq((_, qe))) = SparkTestSession.withQueries(serve)
+      qe.executedPlan
+    }
+    for (serve <- Seq(() => routes.node(a), () => routes.links(a), () => routes.common(a, b),
+        () => routes.network())) {
+      serve()
+      val (first, second) = (executed(serve()), executed(serve()))
+      assert(nodes(first).size > 1)
+      assert(shared(first, second).isEmpty, first)
+    }
+    // The copy is fresh before any preparation, too, where a route has
+    // nothing to rebind.
+    val network = new graft.api.PreparedRoute(TropologyApi.networkForNode(spark, dir), Nil)
+    val (x, y) = (network.bind(Nil), network.bind(Nil))
+    assert(shared(x, y).isEmpty, x)
+  }
+
+  test("serving routes compile once through the served path: a second never-served key adds no code compilation") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // Pairs of orders that share a part, from the top of the key range
+    // (the other tests serve keys from the bottom).
+    val spark0 = spark
+    import spark0.implicits._
+    val e = TropologyApi.orderLinks(spark, dir)
+    val pairs = e.as("x").join(e.as("y"),
+        col("x.p") === col("y.p") && col("x.o") < col("y.o"))
+      .select(col("x.o"), col("y.o")).distinct()
+      .orderBy(col("x.o").desc, col("y.o").desc).as[(Long, Long)].collect().toSeq
+    val (a1, b1) = pairs.head
+    val (a2, b2) = pairs.find { case (a, b) => a != a1 && a != b1 && b != a1 && b != b1 }.get
+    def serve(a: Long, b: Long): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Seq(routes.node(a), routes.links(a), routes.common(a, b))
+        .foreach(reply => assert(reply !== "[]", (a, b)))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    serve(a1, b1)
+    assert(serve(a2, b2) === 0L, s"keys $a2, $b2 compiled new code after $a1, $b1")
+  }
+}

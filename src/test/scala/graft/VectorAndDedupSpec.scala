@@ -79,6 +79,35 @@ class VectorAndDedupSpec extends AnyFunSuite {
       assert(actions(name) === Seq.fill(n)("localCheckpoint"), s"$name call $call")
   }
 
+  test("t21 releases its narrow survivor checkpoint once the widened copy replaces it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    import org.apache.spark.storage.RDDBlockId
+    val sc = spark.sparkContext
+    // (rdd, partition) of every RDD block stored during the call, in order.
+    val stored = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(rdd, split) if e.blockUpdatedInfo.storageLevel.isValid =>
+            stored.add(rdd -> split): Unit
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    // withQueries returns once the listener bus has delivered every event
+    // of the body, block updates included.
+    try SparkTestSession.withQueries(
+      graft.queries.TextDedup.queries("t21_tiered_verify")(spark, dir).collect())
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // t21's first checkpoint is dedup0, the exact-dedup survivors.
+    val dedup0 = stored.asScala.head._1
+    val partitions = stored.asScala.filter(_._1 == dedup0).map(_._2).toSet
+    assert(partitions.size < sc.defaultParallelism, "the survivor frame must take the narrow branch")
+    assert(!sc.getPersistentRDDs.contains(dedup0))
+    assert(!sc.getRDDStorageInfo.exists(_.id == dedup0))
+  }
+
   test("LSH banding recalls every pair with true Jaccard >= 0.9 (exhaustive check)") {
     import org.apache.spark.sql.functions._
     // Ground truth: exact word-trigram Jaccard over ALL pairs (test-scale only).
