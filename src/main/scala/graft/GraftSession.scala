@@ -16,8 +16,22 @@ import org.apache.spark.sql.SparkSession
   *     and with isolation on every SQL task runs under a per-session class
   *     loader that fetches executor-side codegen's class lookups from the
   *     driver (SessionSettingsSpec).
+  *   - broadcast blocks of [[BroadcastBlockSize]], not humongous G1
+  *     objects (SessionSettingsSpec).
   */
 object GraftSession {
+
+  /** `spark.broadcast.blockSize`. Every broadcast (each parquet scan's
+    * Hadoop conf, each job's task binary) starts its serialized value in
+    * one buffer of the block size, Spark's 4 MB by default. G1 allocates
+    * an object of half a heap region or more as humongous, in regions of
+    * its own: with the default and the 4 MB regions of a 7 or 8 GB heap,
+    * every served request allocates two such buffers. G1's smallest region
+    * is 1 MB (a heap of up to 2 GB), so 256 KB stays under half of any
+    * region.
+    */
+  val BroadcastBlockSize = "256k"
+
   def local(cores: String, appName: String): SparkSession =
     local(cores.toInt, appName)
 
@@ -73,6 +87,7 @@ object GraftSession {
       // lookup through the application jars and then an RPC to the
       // driver's class server.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.broadcast.blockSize", BroadcastBlockSize)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()

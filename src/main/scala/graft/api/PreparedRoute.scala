@@ -2,9 +2,12 @@ package graft.api
 
 import scala.collection.immutable.HashSet
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, InSet, Literal}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SQLExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.util.collection.BitSet
@@ -30,11 +33,20 @@ import graft.plans.PreparedPlan
   *     distinct template keys, compares with the number of distinct
   *     request keys.
   * The copy runs as one SQL action (`collect`) over a [[PreparedPlan]]
-  * leaf: Catalyst optimizes that one node, and the physical preparations
-  * (the adaptive wrapper where the plan needs one, bucketed-scan choice,
+  * leaf, which is also the action's optimized plan, so neither analyzer
+  * nor optimizer runs per request. The physical preparations (the
+  * adaptive wrapper where the plan needs one, bucketed-scan choice,
   * whole-stage codegen) run on the copy as on any query. Because the keys
   * are held by reference (`graft_key_in`), the copy's generated code is
   * the template's, so it compiles once.
+  *
+  * The action is one `runJob` over the executed plan's RDD with
+  * [[PreparedRoute.replies]] as the task function, which reads each
+  * row's reply string in the task, so Spark cleans one closure, of a small
+  * class. Not `executeCollect`: its `RDD.collect` goes through two nested
+  * `runJob` calls that each clean a closure declared in `RDD` or
+  * `SparkContext`, reading and walking that large class from its jar, and
+  * it returns the rows as compressed `UnsafeRow` bytes to decode.
   *
   * The template must show every key-dependent part that is rebound: one
   * whose plan holds no set of its keys, a keyed scan that is not pruned to
@@ -76,9 +88,14 @@ private[graft] final class PreparedRoute(template: DataFrame, templateKeys: Seq[
   def run(keys: Long*): Array[String] = {
     require(keys.isEmpty == templateKeys.isEmpty,
       s"route takes ${if (templateKeys.isEmpty) "no" else "at least one"} key")
-    val qe = session.sessionState.executePlan(PreparedPlan(plan.output, estimate, () => bind(keys)))
+    val leaf = PreparedPlan(plan.output, estimate, () => bind(keys))
+    val qe = new QueryExecution(session, leaf,
+        shuffleCleanupMode = QueryExecution.determineShuffleCleanupMode(session.sessionState.conf)) {
+      override def optimizedPlan: LogicalPlan = leaf
+    }
     SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.executedPlan.executeCollect().map(_.getUTF8String(0).toString)
+      val rdd = qe.executedPlan.execute()
+      session.sparkContext.runJob(rdd, PreparedRoute.replies, 0 until rdd.getNumPartitions).flatten
     }
   }
 
@@ -108,4 +125,15 @@ private[graft] final class PreparedRoute(template: DataFrame, templateKeys: Seq[
     keys.foreach(k => bits.set(BucketingUtils.getBucketIdFromValue(column, spec.numBuckets, k)))
     Some(bits).filter(_.cardinality() < spec.numBuckets)
   }
+}
+
+private[graft] object PreparedRoute {
+
+  /** A task's reply strings: the one string column of each of its rows.
+    * Declared here, in a class of a few members, because Spark cleans
+    * the task function of every job by reading and walking the class
+    * that declares it.
+    */
+  val replies: (TaskContext, Iterator[InternalRow]) => Array[String] =
+    (_, rows) => rows.map(_.getUTF8String(0).toString).toArray
 }

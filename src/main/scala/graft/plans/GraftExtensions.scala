@@ -21,8 +21,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   *   - prepared plans        — a planner strategy that plans a
   *     [[PreparedPlan]] leaf as the physical plan it instantiates, so the
   *     serving routes run a per-request copy of a plan prepared once:
-  *     per request Catalyst optimizes one analyzed leaf, and plans it
-  *     as the copy.
+  *     per request Catalyst plans one analyzed leaf as the copy.
   *   - determinism guard     — an injected analysis CHECK rule rejecting
   *     partition-order-sensitive expressions (rand/randn/uuid/
   *     monotonically_increasing_id) whose values change under

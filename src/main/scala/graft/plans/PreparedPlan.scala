@@ -8,11 +8,12 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * analysis and optimization: [[PreparedPlanStrategy]] plans it as
   * `instantiate()`. The leaf counts as analyzed, since it stands for an
   * analyzed and checked plan, so the analyzer returns it as it is, and the
-  * optimizer has one node to visit. The physical preparations (adaptive
-  * execution, whole-stage codegen, bucketed-scan pruning) still run on the
-  * instantiated plan as on any other query. The serving routes use it to
-  * run a per-request copy of a route plan prepared once
-  * (`graft.api.PreparedRoute`).
+  * optimizer has one node to visit; the serving routes skip even that, as
+  * their query execution takes the leaf as its optimized plan. The
+  * physical preparations (adaptive execution, whole-stage codegen,
+  * bucketed-scan pruning) still run on the instantiated plan as on any
+  * other query. The serving routes use it to run a per-request copy of a
+  * route plan prepared once (`graft.api.PreparedRoute`).
   *
   * `instantiate` is called while the planner holds the session active, so
   * the nodes it builds capture the session as planned nodes do. It must

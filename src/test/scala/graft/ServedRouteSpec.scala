@@ -1,7 +1,11 @@
 package graft
 
 import java.util.{Collections, IdentityHashMap}
+import java.util.concurrent.LinkedBlockingQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.datasources.BucketingUtils
@@ -14,7 +18,8 @@ import graft.plans.PreparedPlan
 /** The served path: [[ApiServer.Routes]], each route a plan prepared once
   * and run per request with its keys rebound. A served reply must be what
   * the route's own [[TropologyApi]] call gives for the request's keys, and
-  * each request must stay one SQL action over exactly its keys' buckets.
+  * each request must stay one SQL action, and one job, over exactly its
+  * keys' buckets.
   */
 class ServedRouteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -103,6 +108,62 @@ class ServedRouteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val Seq(scan) = collect(qe.executedPlan) { case f: FileSourceScanExec => f }
       assert(scan.optionalBucketSet.map(_.iterator.toSet) === keyBuckets, s"$route: $scan")
     }
+  }
+
+  /** Runs `body` with its jobs tagged by a fresh job group; returns its
+    * result, the SQL actions it ran and the start events of its jobs.
+    * The capture returns after the event of its own last action, which the
+    * shared listener queue delivers after those of the body's jobs.
+    */
+  private def withJobs[T](body: => T): (T, Seq[String], Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val group = s"served-${java.util.UUID.randomUUID()}"
+    val jobs = new LinkedBlockingQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        if (job.properties.getProperty("spark.jobGroup.id") == group) jobs.put(job)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (out, actions) = SparkTestSession.withQueries {
+        sc.setJobGroup(group, "served request")
+        try body finally sc.clearJobGroup()
+      }
+      (out, actions.map(_._1), jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The name of `job`'s result stage: its call site. */
+  private def callSite(job: SparkListenerJobStart): String = job.stageInfos.maxBy(_.stageId).name
+
+  test("each served request is one job, submitted by PreparedRoute's runJob in its one collect action") {
+    val (a, b) = sharing.head
+    val requests = Seq("node" -> (() => routes.node(a)), "links" -> (() => routes.links(a)),
+      "common" -> (() => routes.common(a, b)), "network" -> (() => routes.network()))
+    requests.foreach(_._2())
+    for ((route, serve) <- requests) {
+      val (_, actions, jobs) = withJobs(serve())
+      assert(actions === Seq("collect"), route)
+      assert(jobs.size === 1, s"$route ran ${jobs.map(callSite)}")
+      assert(jobs.head.properties.getProperty("spark.sql.execution.id") != null, route)
+      // Not `executeCollect at …`, whose RDD.collect cleans closures
+      // declared in RDD and SparkContext for every job.
+      assert(callSite(jobs.head).startsWith("runJob at PreparedRoute.scala:"), route)
+    }
+  }
+
+  test("a prepared reply of several partitions comes back in partition order") {
+    val spark0 = spark
+    import spark0.implicits._
+    // The first partition finishes last.
+    val template = spark.range(0, 64, 1, 4).map { i =>
+      if (i == 0) Thread.sleep(300)
+      i.toString
+    }.toDF()
+    val route = new graft.api.PreparedRoute(template, Nil)
+    val (reply, _, jobs) = withJobs(route.run())
+    assert(jobs.map(_.stageInfos.maxBy(_.stageId).numTasks) === Seq(4))
+    assert(reply.toSeq === (0 until 64).map(_.toString))
   }
 
   /** Every node of `p`, into the adaptive plan and its query stages, by identity. */

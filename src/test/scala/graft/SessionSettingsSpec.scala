@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import com.sun.management.HotSpotDiagnosticMXBean
+import org.apache.spark.network.util.JavaUtils
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Session settings whose effect a query result does not show. */
@@ -19,5 +23,18 @@ class SessionSettingsSpec extends AnyFunSuite {
       .distinct().collect()
     assert(loaders.nonEmpty)
     assert(!loaders.contains("org.apache.spark.executor.ExecutorClassLoader"), loaders.toSeq)
+  }
+
+  test("a broadcast block is under half of a G1 heap region, so its buffer is not humongous") {
+    // TorrentBroadcast starts every serialized value in one buffer of the
+    // block size; G1 allocates an object of half a region or more in
+    // regions of its own. 1 MB is G1's smallest region.
+    val region = ManagementFactory.getPlatformMXBean(classOf[HotSpotDiagnosticMXBean])
+      .getVMOption("G1HeapRegionSize").getValue.toLong
+    val sizes = Map(
+      "GraftSession.local" -> JavaUtils.byteStringAsBytes(GraftSession.BroadcastBlockSize),
+      "SparkTestSession" -> spark.sparkContext.getConf.getSizeAsBytes("spark.broadcast.blockSize"))
+    for ((session, size) <- sizes; limit <- Seq(region, 1L << 20))
+      assert(size < limit / 2, s"$session's broadcast block of $size bytes, region of $limit bytes")
   }
 }

@@ -20,8 +20,10 @@ object SparkTestSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
-      // As GraftSession.local: no per-session artifact class loader.
+      // As GraftSession.local: no per-session artifact class loader, and
+      // broadcast blocks that are not humongous G1 objects.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSize)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()
