@@ -82,7 +82,7 @@ object Bench {
   def warmup(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.range(1000000L).selectExpr("sum(id % 7)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
+      Tables.lineitem(spark, sfDir).limit(1).collect()
       // Exercise the join/window/HOF/shuffle machinery once on tiny data so
       // Janino/JIT infrastructure is compiled before timing starts.
       val a = spark.range(1000L).selectExpr("id", "id % 13 AS k", "CAST(id AS STRING) AS s")

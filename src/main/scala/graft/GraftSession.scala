@@ -18,6 +18,9 @@ import org.apache.spark.sql.SparkSession
   *     driver (SessionSettingsSpec).
   *   - broadcast blocks of [[BroadcastBlockSize]], not humongous G1
   *     objects (SessionSettingsSpec).
+  *   - `file:` through [[graft.sources.LocalFiles]], which sets
+  *     permissions and reads link status without forking `chmod` or
+  *     `readlink` per written file (LocalFilesSpec).
   */
 object GraftSession {
 
@@ -88,6 +91,7 @@ object GraftSession {
       // driver's class server.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.broadcast.blockSize", BroadcastBlockSize)
+      .config(graft.sources.LocalFiles.sessionConf.toMap)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()

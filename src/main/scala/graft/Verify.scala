@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
+import graft.sources.ParquetSource
 
 /** Schema rules every ORACLE-GATED output must satisfy before it is dumped
   * for the driver's compare. Round-8 lesson: the driver hashes STRINGIFIED
@@ -72,7 +73,7 @@ object Verify {
               SparkEntry.resultChecksSf.get(name).toSeq
                 .map(c => (r: org.apache.spark.sql.DataFrame) => c(spark, sfDir, r))
           guards.foreach { check =>
-            try check(spark.read.parquet(s"$outDir/$name"))
+            try check(ParquetSource.read(spark, s"$outDir/$name"))
             catch {
               case e: Throwable =>
                 graft.sources.ArtifactStore.deleteRecursively(s"$outDir/$name")

@@ -18,9 +18,12 @@ import graft.sources.ArtifactStore
   * `serve_network_k<k>` (one bucket) that [[ArtifactStore.bucketedTable]]
   * builds once per session, as it does the other serving tables. A request
   * reads one row. It is a catalog table rather than an
-  * [[ArtifactStore.snapshot]] because the catalog holds its schema: a
-  * `read.parquet` of a snapshot infers the schema with a Spark job of its
-  * own, which every request would pay. The derivation ([[derivePayload]]) takes the hub as the
+  * [[ArtifactStore.snapshot]] so that it is planned as the other serving
+  * tables are: the catalog holds its schema and location, where a snapshot
+  * read ([[graft.sources.ParquetSource]]) lists the snapshot directory and
+  * reads a footer on the driver. Neither runs a Spark job, and the served
+  * route plans it once per server ([[PreparedRoute]]), so the choice is one
+  * of uniformity, not of per-request cost. The derivation ([[derivePayload]]) takes the hub as the
   * top-1 of `orderStats` by `outgoing` (ties to the smaller order key),
   * and its parts with their names and in-degrees from the hub's one
   * bucket of `orderLinks` ([[TropologyApi.linkedParts]]).

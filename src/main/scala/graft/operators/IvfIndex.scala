@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.VectorFunctions._
+import graft.sources.ParquetSource
 
 /** IVF (inverted-file) coarse quantizer over an embedding corpus — the
   * operator behind the v5/v7/v8 search queries, exposed for reuse and for
@@ -157,7 +158,7 @@ object IvfIndex {
     * result prunes to that partition (IvfIndexSpec pins the plan).
     */
   def loadLists(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetSource.read(spark, path)
 
   /** Scored candidates for `probes` (qid, qe: array<double>, qnrm):
     * probes assigned to their `nprobe` nearest centers (window over the

@@ -361,10 +361,13 @@ class LinkGraph(val edges: DataFrame) {
         // now match. The fixed-round census keeps the AQE default: at 3
         // rounds with a non-shrinking balls side the broadcast wins locally
         // (4.1 vs 6.9 s) and the threshold demotes it at scale on its own.
+        // Round 1 keeps the AQE default too: its frontier is every node (round
+        // 0 created every ball), the same non-shrinking side, and a shuffled-
+        // hash build side of all of V cannot spill.
         if (gcPerRound && h > 1) System.gc()
         val changed = balls.filter(col("chg") === 1)
           .select(col("id") +: laneCols.map(col): _*)
-        e.join(changed.hint("shuffle_hash"), e("dst") === changed("id"))
+        e.join(if (h > 1) changed.hint("shuffle_hash") else changed, e("dst") === changed("id"))
           .select(e("src").as("id") +:
             (laneCols.map(col) :+ lit(null).cast("long").as("bs")): _*)
           .union(balls.select(col("id") +:

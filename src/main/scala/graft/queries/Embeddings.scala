@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.VectorCentroid
+import graft.sources.ParquetSource
 
 /** Similarity search over the `embeddings` table (SURVEY.md §3.11 T5/T6 +
   * north-star ANN): brute-force cosine top-k as the correctness baseline,
@@ -584,8 +585,7 @@ object Embeddings extends QueryPack {
       val standing = s"$base/lists"
       // Dual-layout file stream (single-file driver layout vs Spark-written
       // directory) — the shared dispatch in StreamOps.tableFileStream.
-      val stream = graft.streaming.StreamOps.tableFileStream(
-          s, d, "embeddings", s.read.parquet(s"$d/embeddings.parquet").schema)
+      val stream = graft.streaming.StreamOps.tableFileStream(s, d, "embeddings")
         .filter(col("vec_id") % 7 === 0)
       val q = stream.writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -747,7 +747,7 @@ object Embeddings extends QueryPack {
     // already standing and collapses here instead of occupying a second
     // top-k slot at search time.
     SnapshotSink.overwrite(
-      s.read.parquet(standing)
+      ParquetSource.read(s, standing)
         .unionByName(appended.select("vec_id", "lid", "emb", "nrm"))
         .dropDuplicates("vec_id"),
       standing)
@@ -758,7 +758,7 @@ object Embeddings extends QueryPack {
       standing: String): DataFrame = {
     val cents = baseIndexArtifacts(s, d)._2
     graft.operators.IvfIndex.search(
-        s.read.parquet(standing), cents, probes(corpus(s, d)), k = 5, nprobe = 1)
+        ParquetSource.read(s, standing), cents, probes(corpus(s, d)), k = 5, nprobe = 1)
       .orderBy("qid", "rn")
   }
 

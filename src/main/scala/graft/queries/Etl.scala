@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.etl.Ingest
 import graft.operators.{Merge, Salting}
+import graft.sources.ParquetSource
 import graft.sql.Stable.dsum
 
 /** Ingest/ETL operators (SURVEY.md §3.1 S2/S4/S5, §3.8 F8, §3.4 A6) — the
@@ -148,7 +149,7 @@ object Etl extends QueryPack {
           .withColumn("value", col("value") * 2)
           .write.mode("overwrite").partitionBy("day").parquet(tmp)
       } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-      s.read.parquet(tmp)
+      ParquetSource.read(s, tmp)
         .groupBy(col("day"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
         .orderBy("day")
@@ -623,7 +624,7 @@ object Etl extends QueryPack {
     "st12_stream_cdc_apply" -> { (s, d) =>
       val base = scratchDir(s, d, "st12_sink")
       val snap = s"$base/snapshot"
-      val stream = s.readStream.schema(Tables.orders(s, d).schema)
+      val stream = s.readStream.schema(ParquetSource.schema(s, s"$d/orders.parquet"))
         .option("pathGlobFilter", "orders.parquet").parquet(d)
       val q = stream.writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -633,7 +634,7 @@ object Etl extends QueryPack {
         }
         .start()
       q.awaitTermination()
-      cdcFinal(s.read.parquet(snap)).orderBy("o_orderkey")
+      cdcFinal(ParquetSource.read(s, snap)).orderBy("o_orderkey")
     }
   )
 
@@ -657,7 +658,7 @@ object Etl extends QueryPack {
   private[graft] def ingestCommitted(
       s: SparkSession, base: String): (Set[String], Option[Int]) =
     if (new java.io.File(s"$base/manifest").exists()) {
-      val rows = s.read.parquet(s"$base/manifest")
+      val rows = ParquetSource.read(s, s"$base/manifest")
         .select(col("path"), col("agg_version")).collect()
       (rows.map(_.getString(0)).toSet, rows.map(_.getInt(1)).maxOption)
     } else (Set.empty, None)
@@ -679,7 +680,7 @@ object Etl extends QueryPack {
     val (done, lastVer) = ingestCommitted(s, base)
     val fresh = avail.map(ingestSlicePath(base, _)).filterNot(done)
     if (fresh.nonEmpty) {
-      val newParts = ingestPartials(s.read.parquet(fresh: _*))
+      val newParts = ingestPartials(ParquetSource.read(s, fresh: _*))
       val merged = lastVer match {
         case Some(v) =>
           SnapshotSink.readVersion(s, aggPath, v).unionByName(newParts)
@@ -770,7 +771,7 @@ object Etl extends QueryPack {
     val incoming = cdcLog(batch)
     val merged =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(snapshotPath)))
-        s.read.parquet(snapshotPath)
+        ParquetSource.read(s, snapshotPath)
           .select(col("k"), col("version"), col("op"), col("price"))
           .union(incoming)
       else incoming

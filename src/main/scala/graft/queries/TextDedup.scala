@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions
+import graft.sources.ParquetSource
 import graft.sql.Stable._
 
 /** Text analysis + deduplication over `documents` (SURVEY.md §3.11 T1–T7 and
@@ -1221,8 +1222,8 @@ object TextDedup extends QueryPack {
         .start()
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        admitBatch(s, d, s.read.parquet(s"$base/staging")), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot").orderBy("doc_id")
+        admitBatch(s, d, ParquetSource.read(s, s"$base/staging")), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot").orderBy("doc_id")
     },
 
     // T11: benchmark-contamination check — the decontamination pass a
@@ -1529,8 +1530,8 @@ object TextDedup extends QueryPack {
         .start()
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot")
         .select("doc_id", "n_tokens", "uniq_ratio", "top_tok_frac",
           "top2_frac", "keep")
         .orderBy("doc_id")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.operators.AsOfJoin
+import graft.sources.ParquetSource
 
 /** Window functions (W1–W4), batch event-time windowing (ST1/ST2 batch
   * shape over `events`), and the as-of join (J6).
@@ -262,8 +263,8 @@ object WindowsAndEvents extends QueryPack {
       val q = graft.streaming.StreamOps.parquetAppendSink(
         graft.streaming.StreamOps.eventsStream(s, d), staging, ckpt)
       q.awaitTermination()
-      graft.sources.SnapshotSink.overwrite(s.read.parquet(staging), snap)
-      s.read.parquet(snap)
+      graft.sources.SnapshotSink.overwrite(ParquetSource.read(s, staging), snap)
+      ParquetSource.read(s, snap)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(dec2(col("value"))).cast("double").as("total_value"))
@@ -291,8 +292,8 @@ object WindowsAndEvents extends QueryPack {
         s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot")
         .orderBy("user_id", "session_start")
     },
 
@@ -318,10 +319,10 @@ object WindowsAndEvents extends QueryPack {
       val rankW = Window.partitionBy(col("window_start"))
         .orderBy(col("n").desc, col("event_type").asc)
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging")
+        ParquetSource.read(s, s"$base/staging")
           .withColumn("rn", row_number().over(rankW)).filter(col("rn") <= 3),
         s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot").orderBy("window_start", "rn")
+      ParquetSource.read(s, s"$base/snapshot").orderBy("window_start", "rn")
     },
 
     // ST13: CHAINED STATEFUL AGGREGATIONS in one real stream — w13's
@@ -350,8 +351,8 @@ object WindowsAndEvents extends QueryPack {
         active, s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot").orderBy("window_start")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot").orderBy("window_start")
     },
 
     // ST14: the SAME tumbling-window pipeline as st1, fed through the
@@ -379,8 +380,8 @@ object WindowsAndEvents extends QueryPack {
         windowed, s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot").orderBy("ws", "event_type")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot").orderBy("ws", "event_type")
     },
 
     // ST4 as a REAL streaming run: the flatMapGroupsWithState
@@ -405,8 +406,8 @@ object WindowsAndEvents extends QueryPack {
         s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot")
         .orderBy("user_id", "session_start")
     },
 
@@ -440,13 +441,13 @@ object WindowsAndEvents extends QueryPack {
             val merged =
               if (java.nio.file.Files.exists(java.nio.file.Paths.get(snap)))
                 graft.operators.Merge.upsert(
-                  ss.read.parquet(snap), batch, "user_id")
+                  ParquetSource.read(ss, snap), batch, "user_id")
               else batch
             graft.sources.SnapshotSink.overwrite(merged, snap)
           }
           .start()
         q.awaitTermination()
-        s.read.parquet(snap).orderBy("user_id")
+        ParquetSource.read(s, snap).orderBy("user_id")
       } finally {
         prevProvider match {
           case Some(p) => s.conf.set(providerKey, p)
@@ -482,8 +483,8 @@ object WindowsAndEvents extends QueryPack {
           s"$base/staging", s"$base/ckpt")
         q.awaitTermination()
         graft.sources.SnapshotSink.overwrite(
-          s.read.parquet(s"$base/staging"), s"$base/snapshot")
-        s.read.parquet(s"$base/snapshot")
+          ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+        ParquetSource.read(s, s"$base/snapshot")
           .orderBy("user_id", "session_start")
       } finally {
         prevProvider match {
@@ -510,8 +511,8 @@ object WindowsAndEvents extends QueryPack {
         s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot")
         .orderBy("event_id", "purchase_id")
     },
 
@@ -532,8 +533,8 @@ object WindowsAndEvents extends QueryPack {
         s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot")
         .orderBy(col("event_id").asc, col("purchase_id").asc_nulls_first)
     },
 
@@ -644,8 +645,8 @@ object WindowsAndEvents extends QueryPack {
         alerts, s"$base/staging", s"$base/ckpt")
       q.awaitTermination()
       graft.sources.SnapshotSink.overwrite(
-        s.read.parquet(s"$base/staging"), s"$base/snapshot")
-      s.read.parquet(s"$base/snapshot").orderBy("event_id")
+        ParquetSource.read(s, s"$base/staging"), s"$base/snapshot")
+      ParquetSource.read(s, s"$base/snapshot").orderBy("event_id")
     },
 
     // J6b: interval join — error events landing within 1 day AFTER a

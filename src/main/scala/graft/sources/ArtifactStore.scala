@@ -100,7 +100,7 @@ object ArtifactStore {
       registerExitCleanup(dir)
       published.add(path)
     }
-    s.read.parquet(path)
+    ParquetSource.read(s, path)
   }
 
   /** Register `dir` for recursive delete on JVM exit (idempotent per

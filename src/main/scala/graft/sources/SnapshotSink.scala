@@ -122,5 +122,5 @@ object SnapshotSink {
   /** Read snapshot `path` as of `version` (see [[overwriteVersioned]]). */
   def readVersion(s: org.apache.spark.sql.SparkSession, path: String,
       version: Int): DataFrame =
-    s.read.parquet(path + s".versions/v$version")
+    ParquetSource.read(s, path + s".versions/v$version")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
+import graft.sources.ParquetSource
 
 /** Structured Streaming operators ST1–ST7 (SURVEY.md §3.10).
   *
@@ -416,15 +417,15 @@ object StreamOps {
     * layout → stream the table dir itself; file layout → stream the
     * parent dir with a leaf-name glob. Applying the glob to the
     * directory layout would silently match ZERO part files and land an
-    * empty stream — the bug the 5× scale curve caught on st17.
+    * empty stream — the bug the 5× scale curve caught on st17. Either
+    * way the schema is the table's footer schema ([[ParquetSource]]).
     */
-  private[graft] def tableFileStream(s: SparkSession, dir: String,
-      table: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private[graft] def tableFileStream(s: SparkSession, dir: String, table: String): DataFrame = {
     val tablePath = s"$dir/$table.parquet"
     val hp = new org.apache.hadoop.fs.Path(tablePath)
     val isDir = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getFileStatus(hp).isDirectory
-    val reader = s.readStream.schema(schema)
+    val reader = s.readStream.schema(ParquetSource.schema(s, tablePath))
     if (isDir) reader.parquet(tablePath)
     else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
@@ -433,7 +434,7 @@ object StreamOps {
     * ingesting corpus feed that the streaming dedup (t17) consumes.
     */
   def documentsStream(s: SparkSession, dir: String): DataFrame =
-    tableFileStream(s, dir, "documents", graft.Tables.documents(s, dir).schema)
+    tableFileStream(s, dir, "documents")
 
   /** JSON timestamp format for the kafka-shaped wire payload: the default
     * (`...SSSXXX`) truncates to milliseconds and the fixture carries
@@ -554,12 +555,11 @@ object StreamOps {
     */
   def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Sniff the on-disk ts type via the batch reader: older generators wrote
+    // Sniff the on-disk ts type from the footer: older generators wrote
     // TIMESTAMP(NANOS) (decoded as long under the legacy conf, truncated to
     // µs here), the current one writes TIMESTAMP(MICROS) (streamed as-is).
-    val rawBatch = s.read.parquet(s"$dir/events.parquet")
-    val raw = tableFileStream(s, dir, "events", rawBatch.schema)
-    rawBatch.schema("ts").dataType match {
+    val raw = tableFileStream(s, dir, "events")
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>

@@ -299,26 +299,43 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(dia.last._3 === 1)
   }
 
+  /** The executed plans of hyperBallDiameter's joining round checkpoints
+    * on a 12-node graph, in round order. Round 0 (the initial balls) does
+    * not join, so the first plan is round 1's.
+    */
+  private def hyperBallRoundPlans: Seq[String] = {
+    val base = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
+      (1L, 7L), (7L, 8L), (8L, 9L), (4L, 10L), (10L, 11L), (11L, 12L))
+    val g = new LinkGraph((base ++ base.map(_.swap)).toDF("src", "dst"))
+    val (_, actions) = SparkTestSession.withActions(g.hyperBallDiameter(lgK = 8, maxRounds = 32))
+    actions.collect { case ("localCheckpoint", p) if p.contains("Join") => p }
+  }
+
   test("hyperBallDiameter round join is shuffled-hash with the frontier as build side") {
-    import spark.implicits._
     // Round 16: the round join hints SHUFFLE_HASH on the shrinking changed
     // frontier — under a local broadcast threshold AQE otherwise broadcasts
     // the loop-invariant edge table and rebuilds its HashedRelation every
     // round (measured 0.4-0.5 s/round of driver-side gap; min-of-4 wall
     // 12.5 -> 7.3 s on g16 at sf0.1). An invalid or renamed hint would be
-    // SILENTLY dropped by the planner, so pin the executed round-1 plan:
-    // the first checkpoint action whose plan joins.
-    val base = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
-      (1L, 7L), (7L, 8L), (8L, 9L), (4L, 10L), (10L, 11L), (11L, 12L))
-    val g = new LinkGraph((base ++ base.map(_.swap)).toDF("src", "dst"))
-    val (_, actions) = SparkTestSession.withActions(g.hyperBallDiameter(lgK = 8, maxRounds = 32))
-    val plan = actions.collectFirst {
-      case ("localCheckpoint", p) if p.contains("Join") => p
-    }.getOrElse(fail(s"no round checkpoint joined: ${actions.map(_._1)}"))
-    assert(plan.contains("ShuffledHashJoin"),
-      s"round join is not shuffled-hash:\n$plan")
-    assert(!plan.contains("BroadcastHashJoin"),
-      "round join regressed to a per-round broadcast rebuild")
+    // SILENTLY dropped by the planner, so pin the executed plan of every
+    // round from round 2 on, where the frontier is the changed balls only.
+    val rounds = hyperBallRoundPlans
+    assert(rounds.size >= 3, s"expected several joining rounds, got ${rounds.size}")
+    rounds.drop(1).zipWithIndex.foreach { case (plan, i) =>
+      assert(plan.contains("ShuffledHashJoin"),
+        s"round ${i + 2} join is not shuffled-hash:\n$plan")
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"round ${i + 2} join regressed to a per-round broadcast rebuild")
+    }
+  }
+
+  test("hyperBallDiameter round 1 keeps AQE's join choice: its frontier is every node") {
+    // A shuffled-hash build side cannot spill, and round 1's frontier is all
+    // of V, so the hint starts at round 2. On this small graph AQE's choice
+    // is a broadcast.
+    val round1 = hyperBallRoundPlans.head
+    assert(!round1.contains("ShuffledHashJoin"), s"round 1 is hinted:\n$round1")
+    assert(round1.contains("BroadcastHashJoin"), s"round 1 left AQE's choice:\n$round1")
   }
 
   test("hyperBallDiameter: maxRounds below the horizon fails loudly, never silently truncates") {

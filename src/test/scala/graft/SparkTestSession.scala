@@ -20,10 +20,12 @@ object SparkTestSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
-      // As GraftSession.local: no per-session artifact class loader, and
-      // broadcast blocks that are not humongous G1 objects.
+      // As GraftSession.local: no per-session artifact class loader,
+      // broadcast blocks that are not humongous G1 objects, and local
+      // files written without forking a process.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSize)
+      .config(graft.sources.LocalFiles.sessionConf.toMap)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()
