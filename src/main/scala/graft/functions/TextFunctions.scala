@@ -23,24 +23,6 @@ object TextFunctions {
   /** Token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: alnum runs + each punctuation char counts as a
-    * token (regex segmentation, a cheap stand-in for a real tokenizer).
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"), t => t =!= ""))
-
-  /** Portable 32-bit token hash: first 8 hex digits of md5, as a long in
-    * [0, 2^32). md5 is identical across engines, which makes MinHash /
-    * SimHash signatures oracle-comparable (unlike xxhash64, which only
-    * Spark has). For pure-Spark pipelines where the oracle isn't involved,
-    * xxhash64 is cheaper — see [[fastHash]].
-    */
-  def portableHash(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  /** Non-portable but cheap 64-bit hash (Spark-only pipelines). */
-  def fastHash(c: Column): Column = xxhash64(c)
-
   /** Document fingerprint: md5 of the normalized text — equal fingerprints
     * ⇔ near-identical content modulo case/punct/whitespace (T3 exact-dedup
     * key).

@@ -23,9 +23,10 @@ case class JpegMeta(width: Int, height: Int,
   * structure: byte-order mark II/MM, magic 42, IFD0 as count + 12-byte
   * tag entries + next-offset, ASCII values > 4 bytes via data-area
   * offsets). The builder emits BOTH byte orders so the parser's
-  * endian-aware field readers are what the gate proves; the parser does
-  * what a production metadata sniffer does — bounds-check every offset in
-  * Long arithmetic and REJECT (None) any structural violation rather than
+  * endian-aware field readers are what the gate proves; the parser reads
+  * IFD0 through [[Ifd]], the reader TIFF decoding uses too, and does what a
+  * production metadata sniffer does — bounds-check every offset in Long
+  * arithmetic and REJECT (None) any structural violation rather than
   * mis-read or throw out of an executor task.
   */
 object ExifCodec {
@@ -94,66 +95,33 @@ object ExifCodec {
   }
 
   /** Parse an APP1 payload (past the 2-byte length field): "Exif\0\0"
-    * identifier, TIFF header, IFD0 walk extracting the four curation
-    * tags. None on ANY structural violation — wrong byte-order mark,
-    * magic ≠ 42, any offset/count leaving the segment, a non-ASCII type
-    * on an ASCII tag, a missing tag.
+    * identifier, then the TIFF structure read by [[Ifd]], from whose IFD0
+    * the four curation tags are taken. None on ANY structural violation —
+    * wrong byte-order mark, magic ≠ 42, any offset/count leaving the
+    * segment, a non-ASCII type on an ASCII tag, a missing tag. Unlike a
+    * TIFF file, EXIF IFD0 need not list its tags in ascending order.
     */
   private[multimodal] def parseExifPayload(b: Array[Byte], from: Int, to: Int): Option[ExifMeta] = {
-    if (to - from < 6 + 8) return None
-    if (b(from) != 'E' || b(from + 1) != 'x' || b(from + 2) != 'i' ||
+    if (to - from < 6 || b(from) != 'E' || b(from + 1) != 'x' || b(from + 2) != 'i' ||
       b(from + 3) != 'f' || b(from + 4) != 0 || b(from + 5) != 0) return None
-    val t0 = from + 6 // TIFF origin; all TIFF offsets are relative to it
-    val le =
-      if (b(t0) == 'I' && b(t0 + 1) == 'I') true
-      else if (b(t0) == 'M' && b(t0 + 1) == 'M') false
-      else return None
-    def u16(off: Int): Int =
-      if (le) (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-      else ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      if (le) (u16(off) & 0xffffL) | ((u16(off + 2) & 0xffffL) << 16)
-      else ((u16(off) & 0xffffL) << 16) | (u16(off + 2) & 0xffffL)
-    if (u16(t0 + 2) != 42) return None
-    val ifdOff = u32(t0 + 4)
-    if (ifdOff < 8 || t0 + ifdOff + 2 > to) return None
-    val ifd = t0 + ifdOff.toInt
-    val n = u16(ifd)
-    // Entries + the trailing next-IFD offset must fit inside the segment.
-    if (ifd + 2 + 12L * n + 4 > to) return None
+    val ifd = Ifd.first(b, from + 6, to).getOrElse(return None)
     var make: String = null; var model: String = null; var dt: String = null
-    var orient = -1
+    var orient = -1L
     var i = 0
-    while (i < n) {
-      val e = ifd + 2 + 12 * i
-      val tag = u16(e); val typ = u16(e + 2); val cnt = u32(e + 4)
-      def ascii(): Option[String] = {
-        if (typ != 2 || cnt < 1 || cnt > (to - t0)) return None
-        // Values ≤ 4 bytes are inline in the value field; longer ones sit
-        // at a data-area offset (TIFF 6.0 §2).
-        val vOff = if (cnt <= 4) e + 8 else {
-          val o = u32(e + 8)
-          if (o < 0 || t0 + o + cnt > to) return None
-          t0 + o.toInt
-        }
-        if (vOff + cnt > to) return None
-        if (b(vOff + cnt.toInt - 1) != 0) return None // NUL-terminated
-        Some(new String(b, vOff, cnt.toInt - 1, "US-ASCII"))
-      }
-      tag match {
-        case TagMake => make = ascii().getOrElse(return None)
-        case TagModel => model = ascii().getOrElse(return None)
-        case TagDateTime => dt = ascii().getOrElse(return None)
+    while (i < ifd.size) {
+      ifd.tag(i) match {
+        case TagMake => make = ifd.ascii(i).getOrElse(return None)
+        case TagModel => model = ifd.ascii(i).getOrElse(return None)
+        case TagDateTime => dt = ifd.ascii(i).getOrElse(return None)
         case TagOrientation =>
-          if (typ != 3 || cnt != 1) return None
-          orient = u16(e + 8)
+          orient = if (ifd.typ(i) == Ifd.TypeShort) ifd.scalar(i) else -1
           if (orient < 1 || orient > 8) return None
         case _ => () // other tags skipped
       }
       i += 1
     }
     if (make == null || model == null || dt == null || orient < 0) None
-    else Some(ExifMeta(make, model, orient, dt))
+    else Some(ExifMeta(make, model, orient.toInt, dt))
   }
 
   /** Pre-decode metadata sniff over a complete JPEG: walk marker segments

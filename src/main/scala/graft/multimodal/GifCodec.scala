@@ -5,8 +5,8 @@ package graft.multimodal
   * implement the real format end-to-end: logical screen descriptor,
   * global/local color tables, graphic control extensions (delay,
   * disposal, transparency), image descriptors with interlacing, and the
-  * variable-width LSB-first LZW entropy coding (clear/end codes, code
-  * width growth to 12 bits, dictionary reset at 4096). The decoder
+  * LSB-first LZW data streams, through the [[Lzw]] coder it shares with
+  * TIFF (minimum code size 2 to 8, no leading Clear required). The decoder
   * COMPOSES frames the way a viewer does — each frame's rect drawn over
   * the running canvas through its active palette, transparency skipping
   * pixels, disposal none/keep and restore-to-background supported — and
@@ -30,10 +30,7 @@ object GifCodec {
       indices: Array[Byte], delayCs: Int = 0, interlace: Boolean = false,
       transparent: Int = -1, disposal: Int = 1)
 
-  /** Same decode-side allocation cap as the PNG/JPEG decoders; frames are
-    * additionally capped so total composed output stays bounded.
-    */
-  private val MaxPixels: Long = 64L * 1024 * 1024
+  /** Frames are capped, with `MaxPixels` on the composed output. */
   private val MaxFrames = 1024
 
   // Interlace passes (spec appendix E): row origin and increment.
@@ -46,132 +43,6 @@ object GifCodec {
       rows(i) = y; i += 1
     }
     rows
-  }
-
-  // ------------------------------------------------------------- LZW
-
-  /** GIF-variant LZW encode: LSB-first bit packing, initial code width
-    * minCodeSize+1, CLEAR emitted first and again whenever the
-    * dictionary reaches 4096, END terminates.
-    */
-  private[graft] def lzwEncode(minCodeSize: Int, indices: Array[Byte]): Array[Byte] = {
-    val clear = 1 << minCodeSize
-    val end = clear + 1
-    val out = new java.io.ByteArrayOutputStream()
-    var acc = 0L; var nbits = 0
-    var codeSize = minCodeSize + 1
-    def emit(code: Int): Unit = {
-      acc |= code.toLong << nbits; nbits += codeSize
-      while (nbits >= 8) { out.write((acc & 0xff).toInt); acc >>>= 8; nbits -= 8 }
-    }
-    var dict = new java.util.HashMap[Int, Int]() // (prefix<<8)|byte -> code
-    var next = end + 1
-    emit(clear)
-    var cur = indices(0) & 0xff
-    var i = 1
-    while (i < indices.length) {
-      val k = indices(i) & 0xff
-      val key = (cur << 8) | k
-      if (dict.containsKey(key)) {
-        cur = dict.get(key)
-      } else {
-        emit(cur)
-        dict.put(key, next); next += 1
-        // Mirror of the decoder's width rule: the decoder bumps its width
-        // after ADDING entry `next-1` when next == 1<<codeSize; since it
-        // adds one entry behind us, we bump when next == (1<<codeSize)+1.
-        if (next == (1 << codeSize) + 1 && codeSize < 12) codeSize += 1
-        if (next == 4096) { // dictionary full: reset (deferred-clear-free)
-          emit(clear)
-          dict = new java.util.HashMap[Int, Int]()
-          codeSize = minCodeSize + 1
-          next = end + 1
-        }
-        cur = k
-      }
-      i += 1
-    }
-    emit(cur)
-    emit(end)
-    if (nbits > 0) out.write((acc & 0xff).toInt)
-    out.toByteArray
-  }
-
-  /** GIF-variant LZW decode into exactly `expected` indices. None on any
-    * structural violation: code beyond the dictionary, first code after
-    * clear not a literal, output over/underflow, truncated bits.
-    */
-  private[graft] def lzwDecode(minCodeSize: Int, data: Array[Byte],
-      expected: Int): Option[Array[Byte]] = {
-    if (minCodeSize < 2 || minCodeSize > 8) return None
-    val clear = 1 << minCodeSize
-    val end = clear + 1
-    val out = new Array[Byte](expected)
-    var outPos = 0
-    // Dictionary as (prefix link, last byte) pairs — O(1) append, entries
-    // materialized by walking links backward.
-    val prefix = new Array[Int](4096)
-    val last = new Array[Byte](4096)
-    val length = new Array[Int](4096)
-    for (c <- 0 until clear) { prefix(c) = -1; last(c) = c.toByte; length(c) = 1 }
-    var next = end + 1
-    var codeSize = minCodeSize + 1
-    var acc = 0L; var nbits = 0; var pos = 0
-    def read(): Int = {
-      while (nbits < codeSize) {
-        if (pos >= data.length) return -1
-        acc |= (data(pos) & 0xffL) << nbits; nbits += 8; pos += 1
-      }
-      val c = (acc & ((1L << codeSize) - 1)).toInt
-      acc >>>= codeSize; nbits -= codeSize
-      c
-    }
-    def write(code: Int): Boolean = {
-      val len = length(code)
-      if (outPos + len > expected) return false
-      var c = code; var i = outPos + len - 1
-      while (c >= 0) { out(i) = last(c); c = prefix(c); i -= 1 }
-      outPos += len
-      true
-    }
-    var prev = -1
-    var done = false
-    while (!done) {
-      val code = read()
-      if (code < 0) return None
-      if (code == clear) {
-        next = end + 1; codeSize = minCodeSize + 1; prev = -1
-      } else if (code == end) {
-        done = true
-      } else if (prev == -1) {
-        if (code >= clear) return None // first code must be a literal
-        if (!write(code)) return None
-        prev = code
-      } else {
-        if (code > next || code == next && next >= 4096) return None
-        if (code == next) { // the K-omega-K case
-          prefix(next) = prev
-          var c = prev; while (prefix(c) >= 0) c = prefix(c)
-          last(next) = last(c)
-          length(next) = length(prev) + 1
-          next += 1
-          if (!write(code)) return None // now defined
-        } else {
-          if (next < 4096) {
-            prefix(next) = prev
-            var c = code; while (prefix(c) >= 0) c = prefix(c)
-            last(next) = last(c)
-            length(next) = length(prev) + 1
-            next += 1
-          }
-          if (!write(code)) return None
-        }
-        if (next == (1 << codeSize) && codeSize < 12) codeSize += 1
-        prev = code
-      }
-    }
-    if (outPos != expected) return None
-    Some(out)
   }
 
   // ---------------------------------------------------------- encode
@@ -219,7 +90,7 @@ object GifCodec {
         System.arraycopy(f.indices, y * f.w, seq, i, f.w); i += f.w
       }
       u8(8) // LZW minimum code size (256-entry palette)
-      val lzw = lzwEncode(8, seq)
+      val lzw = Lzw.encode(Lzw.gif(8), seq)
       var p = 0
       while (p < lzw.length) {
         val n = math.min(255, lzw.length - p)
@@ -258,14 +129,35 @@ object GifCodec {
       gct = java.util.Arrays.copyOfRange(b, p, p + 3 * n)
       p += 3 * n
     }
+    // Background color: global-table entry `bg`, black when there is none.
+    val bgRgb =
+      if (gct != null && 3 * bg + 2 < gct.length) gct.slice(3 * bg, 3 * bg + 3)
+      else new Array[Byte](3)
     val canvas = new Array[Byte](w * h * 3)
-    if (gct != null && 3 * bg + 2 < gct.length) {
-      var i = 0
-      while (i < w * h) {
-        canvas(3 * i) = gct(3 * bg); canvas(3 * i + 1) = gct(3 * bg + 1)
-        canvas(3 * i + 2) = gct(3 * bg + 2)
-        i += 1
+    def clearRect(x0: Int, y0: Int, rw: Int, rh: Int): Unit = {
+      var y = y0
+      while (y < y0 + rh) {
+        var o = (y * w + x0) * 3
+        while (o < (y * w + x0 + rw) * 3) {
+          canvas(o) = bgRgb(0); canvas(o + 1) = bgRgb(1); canvas(o + 2) = bgRgb(2)
+          o += 3
+        }
+        y += 1
       }
+    }
+    clearRect(0, 0, w, h)
+    // Walks the sub-block chain at `from` into `sink` (null: skips it);
+    // returns the position after its terminator, or -1 past the end.
+    def subBlocks(from: Int, sink: java.io.ByteArrayOutputStream): Int = {
+      var q = from; var n = -1
+      while (n != 0) {
+        if (q >= b.length) return -1
+        n = b(q) & 0xff
+        if (q + 1 + n > b.length) return -1
+        if (sink != null) sink.write(b, q + 1, n)
+        q += 1 + n
+      }
+      q
     }
     val frames = Vector.newBuilder[Array[Byte]]
     val delays = Vector.newBuilder[Int]
@@ -296,14 +188,8 @@ object GifCodec {
             q += 6
           } else {
             // Application/comment/plain-text: skip the sub-block chain.
-            var done = false
-            while (!done) {
-              if (q >= b.length) return None
-              val n = b(q) & 0xff
-              if (q + 1 + n > b.length) return None
-              q += 1 + n
-              if (n == 0) done = true
-            }
+            q = subBlocks(q, null)
+            if (q < 0) return None
           }
           p = q
         case 0x2c => // image descriptor
@@ -325,22 +211,15 @@ object GifCodec {
           if (q >= b.length) return None
           val minCode = b(q) & 0xff
           q += 1
-          // Collect the LZW sub-block chain.
           val lzw = new java.io.ByteArrayOutputStream()
-          var done = false
-          while (!done) {
-            if (q >= b.length) return None
-            val n = b(q) & 0xff
-            if (q + 1 + n > b.length) return None
-            if (n == 0) done = true else lzw.write(b, q + 1, n)
-            q += 1 + n
-          }
+          q = subBlocks(q, lzw)
+          if (q < 0) return None
           if (nFrames >= MaxFrames ||
             (nFrames + 1).toLong * w * h > MaxPixels) return None
-          val seq = lzwDecode(minCode, lzw.toByteArray, fw * fh) match {
-            case Some(sq) => sq
-            case None => return None
-          }
+          if (minCode < 2 || minCode > 8) return None
+          val data = lzw.toByteArray
+          val seq = Lzw.decode(Lzw.gif(minCode), data, 0, data.length, fw * fh)
+            .getOrElse(return None)
           val rowOrder =
             if (interlaced) interlacedRowOrder(fh) else Array.range(0, fh)
           // Disposal applies AFTER this frame is snapshotted; restore-to-
@@ -362,21 +241,7 @@ object GifCodec {
           frames += canvas.clone()
           delays += delayCs
           nFrames += 1
-          if (disposal == 2) {
-            val br = if (gct != null && 3 * bg + 2 < gct.length) gct(3 * bg) else 0.toByte
-            val bgG = if (gct != null && 3 * bg + 2 < gct.length) gct(3 * bg + 1) else 0.toByte
-            val bb = if (gct != null && 3 * bg + 2 < gct.length) gct(3 * bg + 2) else 0.toByte
-            var y = 0
-            while (y < fh) {
-              var x = 0
-              while (x < fw) {
-                val o = ((ft + y) * w + (fl + x)) * 3
-                canvas(o) = br; canvas(o + 1) = bgG; canvas(o + 2) = bb
-                x += 1
-              }
-              y += 1
-            }
-          }
+          if (disposal == 2) clearRect(fl, ft, fw, fh)
           disposal = 0; transparent = -1; delayCs = 0
           p = q
         case _ => return None // unknown block type

@@ -44,9 +44,6 @@ object JpegCodec {
   /** Decoded 8-bit color image, interleaved RGB (3 bytes per pixel). */
   case class JpegColorImage(width: Int, height: Int, rgb: Array[Byte])
 
-  /** Decode-side allocation cap, same role and size as the PNG cap. */
-  private val MaxPixels: Long = 64L * 1024 * 1024
-
   // Zigzag scan order (T.81 Figure 5): ZigZag(k) = natural (row-major)
   // index of the k-th coefficient in scan order. Generated by the diagonal
   // walk rather than hand-typed; interop tests catch a wrong table (a file

@@ -72,13 +72,6 @@ object MediaCodec {
   // gray 1/2/4/8/16 and palette 1/2/4/8 (bit-packed scanlines),
   // truecolor / gray+alpha / RGBA at 8/16. Spec-invalid combos REJECT.
 
-  /** Decode-side allocation cap: (w·bpp+1)·h scanline bytes must stay
-    * under this before anything is allocated (64 MB — far above any
-    * fixture, far below an executor-killing allocation). Production
-    * knob, same role as the hub cap.
-    */
-  private val MaxPngPixels: Long = 64L * 1024 * 1024
-
   private def chunk(ctype: String, data: Array[Byte]): Array[Byte] = {
     val td = ctype.getBytes("US-ASCII") ++ data
     val crc = new CRC32(); crc.update(td)
@@ -394,7 +387,7 @@ object MediaCodec {
           interlace = b(p + 20)
           val rb = if (depth < 8) (w.toLong * depth + 7) / 8
                    else w.toLong * pngChannels(colorType) * (depth / 8)
-          if ((rb + 1L) * h.toLong > MaxPngPixels) return None
+          if ((rb + 1L) * h.toLong > MaxPixels) return None
         case "PLTE" =>
           // §5.6: after IHDR, before IDAT, at most one; §11.2.3: length a
           // multiple of 3 with 1..256 entries, and FORBIDDEN for the
@@ -452,7 +445,7 @@ object MediaCodec {
     // Interlace 1 (Adam7) stores each pass as an independent sub-image
     // with its own filter bytes; the zlib stream length is the exact sum
     // of per-pass (rowBytes+1)·ph (≤ (rowBytes(w)+1)·h + 6·h extra filter
-    // bytes, still inside the MaxPngPixels bound checked above with slack).
+    // bytes, still inside the MaxPixels bound checked above with slack).
     val passSizes: Seq[Int] =
       if (interlace == 0) Seq((rowBytesOf(w) + 1) * h)
       else (0 until 7).map { i =>

@@ -11,24 +11,19 @@ import java.io.ByteArrayOutputStream
   * (0 = WhiteIsZero — stored values are INVERTED intensities — and
   * 1 = BlackIsZero), multi-strip layouts (RowsPerStrip < height),
   * Compression 1 (none), 5 (LZW, TIFF §13 variant: MSB-first codes,
-  * 9→12-bit early-change widths, per-strip Clear/EOI) with Predictor
-  * (tag 317) 1 or 2 (horizontal differencing), and 32773 (PackBits).
-  * Anything else — other bit depths, palette/RGB, JPEG-in-TIFF, CCITT,
-  * tiled layouts — REJECTS (None) rather than mis-decodes; malformed
-  * bytes never throw out of an executor task. Every offset is
-  * bounds-checked in Long arithmetic (TIFF offsets are untrusted
-  * 32-bit values into the file).
+  * 9→12-bit early-change widths, per-strip Clear/EOI, through the [[Lzw]]
+  * coder shared with GIF) with Predictor (tag 317) 1 or 2 (horizontal
+  * differencing), and 32773 (PackBits). Anything else — other bit depths,
+  * palette/RGB, JPEG-in-TIFF, CCITT, tiled layouts — REJECTS (None) rather
+  * than mis-decodes; malformed bytes never throw out of an executor task.
+  * The IFD is read by [[Ifd]], shared with EXIF, which bounds-checks every
+  * offset in Long arithmetic (TIFF offsets are untrusted 32-bit values
+  * into the file); the decoder adds TIFF's rule that tags ascend.
   */
 object TiffCodec {
 
   /** Decoded 8-bit grayscale image, normalized to BlackIsZero intensity. */
   case class TiffImage(width: Int, height: Int, pixels: Array[Byte])
-
-  private val MaxPixels: Long = 64L * 1024 * 1024
-
-  // IFD entry types.
-  private val TShort = 3
-  private val TLong = 4
 
   // Required baseline tags.
   private val TagWidth = 256
@@ -41,15 +36,6 @@ object TiffCodec {
   private val TagRowsPerStrip = 278
   private val TagStripByteCounts = 279
   private val TagPredictor = 317
-
-  // LZW (TIFF 6.0 §13): MSB-first code packing, 9-bit initial width,
-  // 256 = Clear, 257 = EOI, first dictionary entry 258. The DECODER's
-  // widths grow EARLY (at next-entry 511/1023/2047, (1<<width)−1 — one
-  // entry before the GIF convention) because its table lags the
-  // encoder's by one; the paired encoder switch is at 512/1024/2048.
-  // The interop spec pins both directions against the JDK's TIFF codec.
-  private val LzwClear = 256
-  private val LzwEoi = 257
 
   // ---------------------------------------------------------------- encode
 
@@ -112,146 +98,6 @@ object TiffCodec {
     if (o != expected) None else Some(out)
   }
 
-  /** TIFF-variant LZW compression of one strip: MSB-first bit packing,
-    * leading Clear code, early-change width growth, table reset at the
-    * 12-bit ceiling, trailing EOI. The dictionary is a hash of
-    * (prefixCode << 8 | byte) → code, rebuilt on Clear.
-    */
-  private[graft] def lzwCompress(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    var bitBuf = 0L; var nBits = 0
-    var width = 9
-    def put(code: Int): Unit = {
-      bitBuf = (bitBuf << width) | code; nBits += width
-      while (nBits >= 8) {
-        out.write(((bitBuf >>> (nBits - 8)) & 0xff).toInt); nBits -= 8
-      }
-    }
-    val dict = new java.util.HashMap[Integer, Integer](8192)
-    var nextCode = 258
-    def reset(): Unit = { dict.clear(); nextCode = 258; width = 9 }
-    put(LzwClear)
-    var i = 0
-    if (data.nonEmpty) {
-      var prefix = data(0) & 0xff
-      i = 1
-      while (i < data.length) {
-        val c = data(i) & 0xff
-        val key = Integer.valueOf((prefix << 8) | c)
-        val hit = dict.get(key)
-        if (hit != null) prefix = hit.intValue()
-        else {
-          put(prefix)
-          dict.put(key, Integer.valueOf(nextCode)); nextCode += 1
-          // Width growth paired with the decoder's early-change points
-          // (511/1023/2047 on ITS one-entry-lagged table): the encoder
-          // switches one entry later, at 512/1024/2048 — pinned against
-          // the JDK's TIFF LZW codec in both directions.
-          if (nextCode == 512 && width == 9) width = 10
-          else if (nextCode == 1024 && width == 10) width = 11
-          else if (nextCode == 2048 && width == 11) width = 12
-          else if (nextCode == 4095) { put(LzwClear); reset() }
-          prefix = c
-        }
-        i += 1
-      }
-      put(prefix)
-    }
-    put(LzwEoi)
-    if (nBits > 0) out.write(((bitBuf << (8 - nBits)) & 0xff).toInt)
-    out.toByteArray
-  }
-
-  /** TIFF-variant LZW decompression into exactly `expected` bytes; None
-    * on any structural violation (bad code, overrun, truncation before
-    * EOI, surplus output). Dictionary as parallel prefix/suffix arrays;
-    * strings materialize by walking prefixes (depth ≤ table size, so no
-    * unbounded recursion on crafted input).
-    */
-  private def lzwDecompress(b: Array[Byte], from: Int, len: Int,
-      expected: Int): Option[Array[Byte]] = {
-    val out = new Array[Byte](expected)
-    var o = 0
-    val end = from + len
-    var pos = from
-    var bitBuf = 0L; var nBits = 0
-    var width = 9
-    def next(): Int = {
-      while (nBits < width && pos < end) {
-        bitBuf = (bitBuf << 8) | (b(pos) & 0xff); pos += 1; nBits += 8
-      }
-      if (nBits < width) return -1
-      val c = ((bitBuf >>> (nBits - width)) & ((1 << width) - 1)).toInt
-      nBits -= width
-      c
-    }
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val firstCh = new Array[Byte](4096)
-    var nextEntry = 258
-    // TIFF §13 "early change": the decoder's table lags the encoder's by
-    // one entry, and the width switch fires at (1<<width)−1 — one entry
-    // EARLIER than the GIF convention — which re-aligns the two.
-    def widthFor(): Unit =
-      if (nextEntry == 511 && width == 9) width = 10
-      else if (nextEntry == 1023 && width == 10) width = 11
-      else if (nextEntry == 2047 && width == 11) width = 12
-    // Emit the string for `code` (literal or table entry) into out; -1 on
-    // overflow. Returns the first character.
-    def emit(code: Int): Int = {
-      if (code < 256) {
-        if (o >= expected) return -1
-        out(o) = code.toByte; o += 1
-        code
-      } else {
-        // Walk prefix chain to find length.
-        var n = 0; var c = code
-        while (c >= 258) { n += 1; c = prefix(c) }
-        val total = n + 1
-        if (o + total > expected) return -1
-        var at = o + total - 1
-        c = code
-        while (c >= 258) { out(at) = suffix(c); at -= 1; c = prefix(c) }
-        out(at) = c.toByte
-        o += total
-        c
-      }
-    }
-    var oldCode = -1
-    var sawClear = false
-    var done = false
-    while (!done) {
-      val code = next()
-      if (code < 0) return None
-      if (code == LzwEoi) done = true
-      else if (code == LzwClear) { nextEntry = 258; width = 9; oldCode = -1; sawClear = true }
-      else if (!sawClear) return None // a strip must open with Clear (TIFF §13)
-      else if (oldCode < 0) {
-        if (code > 255) return None // first code after Clear must be a literal
-        if (emit(code) < 0) return None
-        oldCode = code
-      } else if (code < nextEntry) {
-        val first = emit(code)
-        if (first < 0) return None
-        if (nextEntry < 4096) {
-          prefix(nextEntry) = oldCode; suffix(nextEntry) = first.toByte
-          firstCh(nextEntry) = if (oldCode < 256) oldCode.toByte else firstCh(oldCode)
-          nextEntry += 1; widthFor()
-        }
-        oldCode = code
-      } else if (code == nextEntry && nextEntry < 4096) {
-        // KwKwK: string(old) + firstChar(old), added before it is emitted.
-        val f = if (oldCode < 256) oldCode.toByte else firstCh(oldCode)
-        prefix(nextEntry) = oldCode; suffix(nextEntry) = f; firstCh(nextEntry) = f
-        nextEntry += 1
-        if (emit(code) < 0) return None
-        widthFor()
-        oldCode = code
-      } else return None // code beyond table: corrupt stream
-    }
-    if (o != expected) None else Some(out)
-  }
-
   /** Encode a complete single-page grayscale TIFF. `photometric` 1 stores
     * intensities directly (BlackIsZero); 0 stores INVERTED values
     * (WhiteIsZero) so a decoder that ignored the tag shows a negated
@@ -292,26 +138,12 @@ object TiffCodec {
         }
       }
       compression match {
-        case 5 => lzwCompress(raw)
+        case 5 => Lzw.encode(Lzw.Tiff, raw)
         case 32773 => packBits(raw)
         case _ => raw
       }
     }
 
-    val out = new ByteArrayOutputStream()
-    def u16(v: Int): Unit =
-      if (littleEndian) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def u32(v: Long): Unit =
-      if (littleEndian) { out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt) }
-      else { out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt) }
-
-    // Header.
-    if (littleEndian) { out.write('I'); out.write('I') }
-    else { out.write('M'); out.write('M') }
-    u16(42)
     val dataStart = 8L
     val stripOffsets = strips.scanLeft(dataStart)((o, s) => o + s.length).init
     val afterStrips = dataStart + strips.map(_.length.toLong).sum
@@ -319,8 +151,17 @@ object TiffCodec {
     val offArrayAt = afterStrips
     val cntArrayAt = offArrayAt + (if (nStrips > 1) 4L * nStrips else 0L)
     val ifdAt = cntArrayAt + (if (nStrips > 1) 4L * nStrips else 0L)
+    val nEntries = if (predictor == 2) 10 else 9
+    val out = java.nio.ByteBuffer.allocate((ifdAt + 2 + 12 * nEntries + 4).toInt)
+      .order(if (littleEndian) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    def u16(v: Int): Unit = out.putShort(v.toShort)
+    def u32(v: Long): Unit = out.putInt(v.toInt)
+
+    // Header.
+    out.put((if (littleEndian) "II" else "MM").getBytes("US-ASCII"))
+    u16(42)
     u32(ifdAt) // IFD offset in header
-    strips.foreach(s => out.write(s))
+    strips.foreach(s => out.put(s))
     if (nStrips > 1) {
       stripOffsets.foreach(u32)
       strips.foreach(s => u32(s.length.toLong))
@@ -331,24 +172,24 @@ object TiffCodec {
       // A value shorter than 4 bytes sits LEFT-JUSTIFIED in the value
       // field (TIFF 6.0 §2): a SHORT occupies the first two bytes in the
       // file's byte order, the rest is padding.
-      if (typ == TShort && count == 1) { u16(value.toInt); u16(0) }
+      if (typ == Ifd.TypeShort && count == 1) { u16(value.toInt); u16(0) }
       else u32(value)
     }
-    u16(if (predictor == 2) 10 else 9)
-    entry(TagWidth, TLong, 1, w.toLong)
-    entry(TagHeight, TLong, 1, h.toLong)
-    entry(TagBits, TShort, 1, 8)
-    entry(TagCompression, TShort, 1, compression.toLong)
-    entry(TagPhotometric, TShort, 1, photometric.toLong)
-    if (nStrips > 1) entry(TagStripOffsets, TLong, nStrips.toLong, offArrayAt)
-    else entry(TagStripOffsets, TLong, 1, stripOffsets.head)
-    entry(TagSamplesPerPixel, TShort, 1, 1)
-    entry(TagRowsPerStrip, TLong, 1, rowsPerStrip.toLong)
-    if (nStrips > 1) entry(TagStripByteCounts, TLong, nStrips.toLong, cntArrayAt)
-    else entry(TagStripByteCounts, TLong, 1, strips.head.length.toLong)
-    if (predictor == 2) entry(TagPredictor, TShort, 1, 2)
+    u16(nEntries)
+    entry(TagWidth, Ifd.TypeLong, 1, w.toLong)
+    entry(TagHeight, Ifd.TypeLong, 1, h.toLong)
+    entry(TagBits, Ifd.TypeShort, 1, 8)
+    entry(TagCompression, Ifd.TypeShort, 1, compression.toLong)
+    entry(TagPhotometric, Ifd.TypeShort, 1, photometric.toLong)
+    if (nStrips > 1) entry(TagStripOffsets, Ifd.TypeLong, nStrips.toLong, offArrayAt)
+    else entry(TagStripOffsets, Ifd.TypeLong, 1, stripOffsets.head)
+    entry(TagSamplesPerPixel, Ifd.TypeShort, 1, 1)
+    entry(TagRowsPerStrip, Ifd.TypeLong, 1, rowsPerStrip.toLong)
+    if (nStrips > 1) entry(TagStripByteCounts, Ifd.TypeLong, nStrips.toLong, cntArrayAt)
+    else entry(TagStripByteCounts, Ifd.TypeLong, 1, strips.head.length.toLong)
+    if (predictor == 2) entry(TagPredictor, Ifd.TypeShort, 1, 2)
     u32(0) // no next IFD
-    out.toByteArray
+    out.array()
   }
 
   // ---------------------------------------------------------------- decode
@@ -357,87 +198,30 @@ object TiffCodec {
     * None for any structural violation or unsupported feature.
     */
   def tiffDecodePixels(b: Array[Byte]): Option[TiffImage] = {
-    if (b.length < 8) return None
-    val le =
-      if (b(0) == 'I' && b(1) == 'I') true
-      else if (b(0) == 'M' && b(1) == 'M') false
-      else return None
-
-    def u16(off: Long): Int = {
-      val o = off.toInt
-      if (off < 0 || off + 2 > b.length) return -1
-      if (le) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    }
-    def u32(off: Long): Long = {
-      val o = off.toInt
-      if (off < 0 || off + 4 > b.length) return -1L
-      if (le) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    }
-
-    if (u16(2) != 42) return None
-    val ifdAt = u32(4)
-    if (ifdAt < 8 || ifdAt + 2 > b.length) return None
-    val nEntries = u16(ifdAt)
-    if (nEntries <= 0 || ifdAt + 2 + 12L * nEntries + 4 > b.length) return None
-
-    // Tag → (type, count, value-or-offset field position). Values are read
-    // lazily with type/count checks per tag.
+    val ifd = Ifd.first(b, 0, b.length).getOrElse(return None)
     var w = -1L; var h = -1L
     var bits = 8L; var compression = 1L; var photometric = -1L
     var samples = 1L; var rowsPerStrip = Long.MaxValue
     var predictor = 1L
     var stripOffsets: Array[Long] = null
     var stripCounts: Array[Long] = null
-
-    def scalar(typ: Int, count: Long, at: Long): Long =
-      if (count != 1) -1
-      else if (typ == TShort) u16(at).toLong
-      else if (typ == TLong) u32(at)
-      else -1
-
-    def vector(typ: Int, count: Long, at: Long): Array[Long] = {
-      if (count < 1 || count > (1 << 20)) return null
-      val elemSize = if (typ == TShort) 2 else if (typ == TLong) 4 else return null
-      val base = if (count * elemSize <= 4) at else u32(at)
-      if (base < 0) return null
-      val out = new Array[Long](count.toInt)
-      var i = 0
-      while (i < count) {
-        val v = if (typ == TShort) u16(base + 2L * i).toLong else u32(base + 4L * i)
-        if (v < 0) return null
-        out(i) = v; i += 1
-      }
-      out
-    }
-
     var e = 0
     var prevTag = -1
-    while (e < nEntries) {
-      val at = ifdAt + 2 + 12L * e
-      val tag = u16(at); val typ = u16(at + 2); val count = u32(at + 4)
-      if (tag < 0 || typ < 0 || count < 0) return None
+    while (e < ifd.size) {
+      val tag = ifd.tag(e)
       if (tag <= prevTag) return None // IFD entries must ascend (TIFF 6.0 §2)
       prevTag = tag
-      val valAt = at + 8
       tag match {
-        case TagWidth => w = scalar(typ, count, valAt)
-        case TagHeight => h = scalar(typ, count, valAt)
-        case TagBits => bits = scalar(typ, count, valAt)
-        case TagCompression => compression = scalar(typ, count, valAt)
-        case TagPhotometric => photometric = scalar(typ, count, valAt)
-        case TagSamplesPerPixel => samples = scalar(typ, count, valAt)
-        case TagRowsPerStrip => rowsPerStrip = scalar(typ, count, valAt)
-        case TagPredictor => predictor = scalar(typ, count, valAt)
-        case TagStripOffsets =>
-          stripOffsets = vector(typ, count, valAt)
-          if (stripOffsets == null) return None
-        case TagStripByteCounts =>
-          stripCounts = vector(typ, count, valAt)
-          if (stripCounts == null) return None
+        case TagWidth => w = ifd.scalar(e)
+        case TagHeight => h = ifd.scalar(e)
+        case TagBits => bits = ifd.scalar(e)
+        case TagCompression => compression = ifd.scalar(e)
+        case TagPhotometric => photometric = ifd.scalar(e)
+        case TagSamplesPerPixel => samples = ifd.scalar(e)
+        case TagRowsPerStrip => rowsPerStrip = ifd.scalar(e)
+        case TagPredictor => predictor = ifd.scalar(e)
+        case TagStripOffsets => stripOffsets = ifd.values(e).getOrElse(return None)
+        case TagStripByteCounts => stripCounts = ifd.values(e).getOrElse(return None)
         case _ => () // unknown tags are legal and skipped
       }
       e += 1
@@ -472,7 +256,7 @@ object TiffCodec {
         System.arraycopy(b, off.toInt, out, r0 * wi, expected)
       } else {
         val dec =
-          if (compression == 5) lzwDecompress(b, off.toInt, len.toInt, expected)
+          if (compression == 5) Lzw.decode(Lzw.Tiff, b, off.toInt, len.toInt, expected)
           else unpackBits(b, off.toInt, len.toInt, expected)
         dec match {
           case Some(strip) => System.arraycopy(strip, 0, out, r0 * wi, expected)

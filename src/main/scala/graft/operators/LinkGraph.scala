@@ -28,15 +28,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 class LinkGraph(val edges: DataFrame) {
 
-  /** Materialize the edge table once (local checkpoint) so iterative
-    * algorithms and multi-use plans don't recompute the edge derivation
-    * (scan + symmetrize + distinct) on every reuse. On a cluster this is the
-    * role of a cached/bucketed edge table. Lazy: the first consuming
-    * action computes and caches the partitions, so this costs no job of
-    * its own. Round state is materialized by [[Rounds]].
-    */
-  def materialized: LinkGraph = new LinkGraph(edges.localCheckpoint(false))
-
   /** Undirected view: every edge plus its reverse, deduplicated. */
   lazy val symmetrized: LinkGraph = {
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))

@@ -438,8 +438,8 @@ object Graph extends QueryPack {
     // node id per component), so the oracle just unrolls enough rounds to
     // be safely past ITS fixpoint — extra rounds are no-ops.
     "g6_components_converged" -> { (s, d) =>
-      // No .materialized: connectedComponents checkpoints its edge input
-      // itself — doing both would materialize the edge table twice.
+      // No edge checkpoint here: connectedComponents checkpoints its edge
+      // input itself — doing both would materialize the edge table twice.
       val (labels, roundsRun) =
         new LinkGraph(componentsEdges(s, d)).symmetrized.connectedComponents()
       // The oracle unrolls exactly 16 rounds; the margin must be CHECKED,

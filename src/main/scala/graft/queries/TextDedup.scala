@@ -22,9 +22,8 @@ import graft.sql.Stable._
   *     shrink the candidate set to same-bucket pairs, then exact Jaccard is
   *     computed only for candidates (candidate-first join order);
   *   - hashes are md5-based and engine-portable, so the same pipeline is
-  *     expressible in ANSI SQL for the DuckDB oracle; swap in xxhash64
-  *     ([[TextFunctions.fastHash]]) for pure-Spark runs — cheaper, same
-  *     structure;
+  *     expressible in ANSI SQL for the DuckDB oracle; Spark's `xxhash64`
+  *     is cheaper for pure-Spark runs, with the same structure;
   *   - per-doc signatures (simhash, minhash bands) are one groupBy each —
   *     a single shuffle keyed by doc_id, which AQE coalesces.
   */

@@ -33,6 +33,4 @@ object Stable {
   /** SQL fragments for the DuckDB side. */
   def sqlSum(expr: String, scale: Int = S): String =
     s"CAST(SUM(CAST(($expr) AS DECIMAL(28,$scale))) AS DOUBLE)"
-  def sqlAvg(expr: String, scale: Int = S): String =
-    s"(CAST(SUM(CAST(($expr) AS DECIMAL(28,$scale))) AS DOUBLE) / COUNT($expr))"
 }

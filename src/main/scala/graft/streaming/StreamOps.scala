@@ -35,15 +35,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).cast("double").as("total_value"))
       .select(col("w.start").as("ws"), col("event_type"), col("n"), col("total_value"))
 
-  /** ST1b: sliding windows. */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes",
-      win: String = "1 hour", slide: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), win, slide).as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("ws"), col("n"))
-
   /** ST2: session windows per user (gap-based). */
   def sessionStats(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "10 minutes"): DataFrame =
@@ -393,20 +384,6 @@ object StreamOps {
     */
   def writeBatchIdempotent(batch: DataFrame, path: String, batchId: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$path/batch=$batchId")
-
-  /** ST7b as a ready-made sink: [[writeBatchIdempotent]] under an
-    * AvailableNow trigger with a checkpoint — restartable at any point
-    * with exactly-once output.
-    */
-  def idempotentParquetSink(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatchIdempotent(batch, path, id)
-      }
-      .start()
 
   /** File-stream reader over a fixture table that handles BOTH on-disk
     * layouts: a single FILE named `<table>.parquet` (the driver's

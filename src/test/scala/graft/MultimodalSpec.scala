@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.{GifCodec, ImageHeader, JpegCodec, MediaCodec, Multimodal}
+import graft.multimodal.{GifCodec, ImageHeader, JpegCodec, Lzw, MediaCodec, Multimodal, TiffCodec}
 
 /** Multimodal plumbing: container-header codec roundtrips, decode
   * determinism, fingerprint consistency with the SQL md5, resize math
@@ -1437,19 +1437,73 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("GIF LZW: roundtrip across sizes including dictionary reset at 4096") {
-    val rnd = new scala.util.Random(7L)
-    for (n <- Seq(1, 2, 255, 4096, 30000)) {
-      // Skewed small alphabet grows long dictionary strings fast (forces
-      // width bumps); the 30000 case drives the dict past 4096 → reset.
-      val data = Array.tabulate[Byte](n)(_ => (rnd.nextInt(7) * 37).toByte)
-      val decoded = GifCodec.lzwDecode(8, GifCodec.lzwEncode(8, data), n)
-      assert(decoded.isDefined, s"n=$n")
-      assert(decoded.get.sameElements(data), s"n=$n")
+    // One coder, two sets of format constants: GIF's and TIFF's.
+    for (fmt <- Seq(Lzw.gif(8), Lzw.Tiff)) {
+      def roundtrip(data: Array[Byte]): Option[Array[Byte]] = {
+        val enc = Lzw.encode(fmt, data)
+        Lzw.decode(fmt, enc, 0, enc.length, data.length)
+      }
+      val rnd = new scala.util.Random(7L)
+      for (n <- Seq(1, 2, 255, 4096, 30000)) {
+        // Skewed small alphabet grows long dictionary strings fast (forces
+        // width bumps); the 30000 case drives the dict past 4096 → reset.
+        val data = Array.tabulate[Byte](n)(_ => (rnd.nextInt(7) * 37).toByte)
+        val decoded = roundtrip(data)
+        assert(decoded.isDefined, s"$fmt n=$n")
+        assert(decoded.get.sameElements(data), s"$fmt n=$n")
+      }
+      // Full-range alphabet too.
+      val data = Array.tabulate[Byte](20000)(_ => rnd.nextInt(256).toByte)
+      assert(roundtrip(data).exists(_.sameElements(data)), s"$fmt")
     }
-    // Full-range alphabet too.
-    val data = Array.tabulate[Byte](20000)(_ => rnd.nextInt(256).toByte)
-    assert(GifCodec.lzwDecode(8, GifCodec.lzwEncode(8, data), 20000)
-      .exists(_.sameElements(data)))
+  }
+
+  /** `lzw` without its first `bits` bits (its leading Clear code), in the
+    * stream's bit order.
+    */
+  private def dropLeadingCode(lzw: Array[Byte], bits: Int,
+      msbFirst: Boolean): Array[Byte] = {
+    def mask(j: Int): Int = if (msbFirst) 0x80 >> (j % 8) else 1 << (j % 8)
+    val n = lzw.length * 8 - bits
+    val out = new Array[Byte]((n + 7) / 8)
+    for (i <- 0 until n if (lzw((i + bits) / 8) & mask(i + bits)) != 0)
+      out(i / 8) = (out(i / 8) | mask(i)).toByte
+    out
+  }
+
+  test("LZW leading Clear: a GIF stream decodes without one, a TIFF strip is rejected") {
+    val w = 24; val h = 10
+    val px = Array.tabulate[Byte](w * h)(i => (i * 7 % 13 * 19).toByte)
+    // GIF: the frame's LZW data with its leading Clear cut out decodes to
+    // the same canvas. gifEncode's layout: 13-byte screen, 768-byte table,
+    // 8-byte control extension, 10-byte descriptor, the minimum code size,
+    // sub-blocks, terminator and trailer.
+    val gif = GifCodec.gifEncode(w, h, gifPalette, Seq(GifCodec.GifFrame(0, 0, w, h, px)))
+    def subBlocks(d: Array[Byte]): Array[Byte] =
+      d.grouped(255).flatMap(c => (c.length.toByte +: c)).toArray
+    val head = gif.take(13 + 768 + 8 + 10 + 1)
+    val lzw = Lzw.encode(Lzw.gif(8), px)
+    assert(gif.sameElements(head ++ subBlocks(lzw) ++ Array[Byte](0, 0x3b)))
+    val noClear = dropLeadingCode(lzw, 9, msbFirst = false)
+    assert(Lzw.decode(Lzw.gif(8), noClear, 0, noClear.length, px.length)
+      .exists(_.sameElements(px)))
+    val gifNoClear = head ++ subBlocks(noClear) ++ Array[Byte](0, 0x3b)
+    assert(GifCodec.gifDecodeFrames(gifNoClear).get.frames.head
+      .sameElements(GifCodec.gifDecodeFrames(gif).get.frames.head))
+    // TIFF: the one strip (at offset 8) without its leading Clear, padded
+    // to its old length so no other byte of the file moves, is rejected;
+    // the same stream decodes once the leading-Clear rule is off.
+    val tiff = TiffCodec.tiffEncode(w, h, px, littleEndian = true,
+      rowsPerStrip = h, compression = 5)
+    val strip = Lzw.encode(Lzw.Tiff, px)
+    assert(tiff.slice(8, 8 + strip.length).sameElements(strip))
+    val stripNoClear = dropLeadingCode(strip, 9, msbFirst = true).padTo(strip.length, 0.toByte)
+    assert(TiffCodec.tiffDecodePixels(tiff).exists(_.pixels.sameElements(px)))
+    assert(TiffCodec.tiffDecodePixels(
+      tiff.patch(8, stripNoClear, strip.length)).isEmpty, "TIFF strip without Clear")
+    assert(Lzw.decode(Lzw.Tiff, stripNoClear, 0, strip.length, px.length).isEmpty)
+    assert(Lzw.decode(Lzw.Tiff.copy(leadingClear = false), stripNoClear, 0,
+      strip.length, px.length).exists(_.sameElements(px)))
   }
 
   test("GIF codec: multi-frame compose is pixel-exact incl. interlace, transparency, disposal") {
@@ -1641,6 +1695,36 @@ class MultimodalSpec extends AnyFunSuite {
       val mut = app1.clone()
       mut(rnd.nextInt(mut.length)) = rnd.nextInt(256).toByte
       ExifCodec.parseJpegMeta(tagged(mut))
+    }
+  }
+
+  test("IFD tag order: EXIF parses two swapped entries, TIFF rejects the same swap") {
+    def swapped(b: Array[Byte], entries: Int): Array[Byte] = {
+      val out = b.clone()
+      System.arraycopy(b, entries + 12, out, entries, 12)
+      System.arraycopy(b, entries, out, entries + 12, 12)
+      out
+    }
+    for (le <- Seq(true, false)) {
+      // APP1 layout: 4-byte segment header, "Exif\0\0", the TIFF header
+      // at 10, IFD0 at TIFF+8, its entries after the 2-byte count.
+      val app1 = graft.multimodal.ExifCodec.exifApp1("CAMx", "MODyz", 6,
+        "2026:08:14 12:34:56", littleEndian = le)
+      val (_, _, _, jpg, _) = jpegFixture(9L)
+      def exifOf(a1: Array[Byte]) =
+        graft.multimodal.ExifCodec.parseJpegMeta(jpg.take(2) ++ a1 ++ jpg.drop(2)).get.exif
+      val swappedApp1 = swapped(app1, 10 + 8 + 2)
+      assert(!swappedApp1.sameElements(app1))
+      assert(exifOf(swappedApp1).isDefined, s"le=$le")
+      assert(exifOf(swappedApp1) === exifOf(app1), s"le=$le")
+      // TIFF: the IFD offset is the header's u32 at 4; tags must ascend.
+      val px = Array.tabulate[Byte](6 * 5)(i => (i * 11).toByte)
+      val tiff = TiffCodec.tiffEncode(6, 5, px, le, rowsPerStrip = 5, compression = 1)
+      val ifd = java.nio.ByteBuffer.wrap(tiff)
+        .order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+        .getInt(4)
+      assert(TiffCodec.tiffDecodePixels(tiff).isDefined, s"le=$le")
+      assert(TiffCodec.tiffDecodePixels(swapped(tiff, ifd + 2)).isEmpty, s"le=$le")
     }
   }
 

@@ -8,30 +8,12 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole forked test JVM (never stopped —
-  * suites must not call spark.stop() or they'd kill sibling suites).
+  * suites must not call spark.stop() or they'd kill sibling suites). It is
+  * the production session, `GraftSession.local`, on 4 cores, so tests pin
+  * the plans of the configuration that ships.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
-      // As GraftSession.local: no per-session artifact class loader,
-      // broadcast blocks that are not humongous G1 objects, and local
-      // files written without forking a process.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSize)
-      .config(graft.sources.LocalFiles.sessionConf.toMap)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
 
   /** Runs `body` and returns its result with the SQL actions it ran, in
     * order, as (action name, executed plan string — the final plan under
