@@ -89,26 +89,40 @@ private[graft] object Lzw {
     out.toByteArray
   }
 
-  /** Decodes `b(from until from + len)` into exactly `expected` bytes, or
-    * None on any structural violation (see [[Lzw]]). The dictionary holds
-    * each entry as (prefix code, last byte, length), so a string is
-    * written back to front in one pass, and an entry's first byte is read
-    * from where its string already sits in the output.
+  /** A decoder dictionary for format `f`, owned by its caller: one
+    * image's strips reuse one, where a dictionary per strip would make its
+    * allocation a large share of a small strip's decode. Each entry is
+    * (prefix code, last byte, length); the literal entries are set once
+    * here, and a decode writes only the entries after End, each before it
+    * reads it. Codes and lengths stay under 4096, so Shorts hold them.
     */
+  final class Dictionary(val f: Format) {
+    private[Lzw] val prefix = new Array[Short](MaxCodes)
+    private[Lzw] val last = new Array[Byte](MaxCodes)
+    private[Lzw] val length = new Array[Short](MaxCodes)
+    locally {
+      var c = 0
+      while (c < (1 << f.minCodeSize)) { prefix(c) = -1; last(c) = c.toByte; length(c) = 1; c += 1 }
+    }
+  }
+
+  /** [[decode]] with a dictionary of its own. */
   def decode(f: Format, b: Array[Byte], from: Int, len: Int,
+      expected: Int): Option[Array[Byte]] = decode(new Dictionary(f), b, from, len, expected)
+
+  /** Decodes `b(from until from + len)` in `d`'s format into exactly
+    * `expected` bytes, or None on any structural violation (see [[Lzw]]).
+    * A string is written back to front in one pass, and an entry's first
+    * byte is read from where its string already sits in the output.
+    */
+  def decode(d: Dictionary, b: Array[Byte], from: Int, len: Int,
       expected: Int): Option[Array[Byte]] = {
+    val f = d.f
     val clear = 1 << f.minCodeSize
     val end = clear + 1
     val out = new Array[Byte](expected)
     var o = 0
-    // Codes and lengths stay under 4096, so Shorts hold them: each call
-    // (each TIFF strip) allocates its own dictionary, and for small strips
-    // that allocation is a large share of the decode.
-    val prefix = new Array[Short](MaxCodes)
-    val last = new Array[Byte](MaxCodes)
-    val length = new Array[Short](MaxCodes)
-    var c = 0
-    while (c < clear) { prefix(c) = -1; last(c) = c.toByte; length(c) = 1; c += 1 }
+    val prefix = d.prefix; val last = d.last; val length = d.length
     var next = end + 1
     var width = f.minCodeSize + 1
     val stop = from + len

@@ -244,6 +244,7 @@ object TiffCodec {
 
     val wi = w.toInt; val hi = h.toInt
     val out = new Array[Byte](wi * hi)
+    lazy val dict = new Lzw.Dictionary(Lzw.Tiff) // one per image, shared by its LZW strips
     var si = 0
     while (si < nStrips) {
       val r0 = si * rps.toInt
@@ -256,7 +257,7 @@ object TiffCodec {
         System.arraycopy(b, off.toInt, out, r0 * wi, expected)
       } else {
         val dec =
-          if (compression == 5) Lzw.decode(Lzw.Tiff, b, off.toInt, len.toInt, expected)
+          if (compression == 5) Lzw.decode(dict, b, off.toInt, len.toInt, expected)
           else unpackBits(b, off.toInt, len.toInt, expected)
         dec match {
           case Some(strip) => System.arraycopy(strip, 0, out, r0 * wi, expected)

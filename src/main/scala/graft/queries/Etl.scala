@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.etl.Ingest
 import graft.operators.{Merge, Salting}
-import graft.sources.ParquetSource
+import graft.sources.{ParquetFormat, ParquetSource}
 import graft.sql.Stable.dsum
 
 /** Ingest/ETL operators (SURVEY.md §3.1 S2/S4/S5, §3.8 F8, §3.4 A6) — the
@@ -624,8 +624,9 @@ object Etl extends QueryPack {
     "st12_stream_cdc_apply" -> { (s, d) =>
       val base = scratchDir(s, d, "st12_sink")
       val snap = s"$base/snapshot"
-      val stream = s.readStream.schema(ParquetSource.schema(s, s"$d/orders.parquet"))
-        .option("pathGlobFilter", "orders.parquet").parquet(d)
+      val stream = s.readStream.format(ParquetFormat.Name)
+        .schema(ParquetSource.schema(s, s"$d/orders.parquet"))
+        .option("pathGlobFilter", "orders.parquet").load(d)
       val q = stream.writeStream
         .option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -56,6 +56,9 @@ object ArtifactStore {
     * bucket assignment uses the same murmur3 family, so each task holds
     * exactly one bucket's rows and the table lands as one file per bucket
     * (an unrepartitioned bucketed write fans out to tasks × buckets files).
+    * The table is written with [[ParquetFormat]], so the catalog records
+    * that format as its provider and every scan of the table, the served
+    * routes' included, broadcasts its light Hadoop conf.
     * The JVM-wide lock is taken only while a table is not yet known to be
     * built, so concurrent readers of a built table (the API server's
     * request threads) never serialize here; `buckets` is evaluated only
@@ -67,7 +70,7 @@ object ArtifactStore {
     if (!built.contains(tbl)) synchronized {
       if (!built.contains(tbl) && !s.catalog.tableExists(tbl)) {
         build.repartition(buckets, col(bucketCol))
-          .write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
+          .write.format(ParquetFormat.Name).bucketBy(buckets, bucketCol).sortBy(bucketCol)
           .saveAsTable(tbl)
       }
       built.add(tbl)

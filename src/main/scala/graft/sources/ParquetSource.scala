@@ -27,14 +27,19 @@ import org.apache.spark.sql.types.StructType
   * footer, so the reader infers them from the directory names and puts
   * them last, as under inference.
   *
+  * The reader names [[ParquetFormat]], so the relation's scans broadcast
+  * a light Hadoop conf.
+  *
   * At 100 TB a catalog or table format holds the schema; reading one
   * footer is the same I/O as Spark's inference job, without the job.
   */
 object ParquetSource {
 
-  /** `paths` read as parquet with the schema of the first path's footer. */
+  /** `paths` read through [[ParquetFormat]] with the schema of the first
+    * path's footer.
+    */
   def read(s: SparkSession, paths: String*): DataFrame =
-    s.read.schema(schema(s, paths.head)).parquet(paths: _*)
+    s.read.format(ParquetFormat.Name).schema(schema(s, paths.head)).load(paths: _*)
 
   /** The data schema of the parquet file or directory at `path`. */
   def schema(s: SparkSession, path: String): StructType = {

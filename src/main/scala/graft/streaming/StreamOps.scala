@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
-import graft.sources.ParquetSource
+import graft.sources.{ParquetFormat, ParquetSource}
 
 /** Structured Streaming operators ST1–ST7 (SURVEY.md §3.10).
   *
@@ -402,9 +402,9 @@ object StreamOps {
     val hp = new org.apache.hadoop.fs.Path(tablePath)
     val isDir = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getFileStatus(hp).isDirectory
-    val reader = s.readStream.schema(ParquetSource.schema(s, tablePath))
-    if (isDir) reader.parquet(tablePath)
-    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    val reader = s.readStream.format(ParquetFormat.Name).schema(ParquetSource.schema(s, tablePath))
+    if (isDir) reader.load(tablePath)
+    else reader.option("pathGlobFilter", s"$table.parquet").load(dir)
   }
 
   /** Streaming source over the documents parquet — the continuously-
@@ -500,9 +500,10 @@ object StreamOps {
       // declared so partition discovery binds it, dropped by the decode.
       org.apache.spark.sql.types.StructField("chunk", org.apache.spark.sql.types.IntegerType)))
     s.readStream
+      .format(ParquetFormat.Name)
       .schema(wireSchema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
+      .load(landing)
       .select(from_json(col("value").cast("string"), graft.Schemas.events,
         Map("timestampFormat" -> WireTsFormat)).as("e"))
       .select(col("e.*"))

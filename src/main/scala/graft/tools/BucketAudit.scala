@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{GraftSession, Tables}
+import graft.sources.ParquetFormat
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
@@ -25,10 +26,10 @@ object BucketAudit {
 
     val edges = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("src"), col("l_partkey").as("dst")).distinct()
-    edges.write.mode("overwrite")
+    edges.write.format(ParquetFormat.Name).mode("overwrite")
       .bucketBy(8, "src").sortBy("src").saveAsTable("links_by_src")
     edges.groupBy("src").agg(countDistinct(col("dst")).as("n_parts"))
-      .write.mode("overwrite")
+      .write.format(ParquetFormat.Name).mode("overwrite")
       .bucketBy(8, "src").sortBy("src").saveAsTable("attrs_by_src")
 
     def fmt(df: org.apache.spark.sql.DataFrame): String =
@@ -43,7 +44,7 @@ object BucketAudit {
     sb ++= fmt(spark.table("links_by_src").join(spark.table("attrs_by_src"), "src"))
     sb ++= "\n-- non-bucketed baseline degree agg (Exchange present) --\n"
     sb ++= fmt(edges.groupBy("src").agg(count(lit(1)).as("deg")))
-    edges.write.mode("overwrite")
+    edges.write.format(ParquetFormat.Name).mode("overwrite")
       .bucketBy(8, "dst").sortBy("dst").saveAsTable("links_by_dst")
     sb ++= "\n-- reverse scan: in-degree agg over the dst-bucketed copy (NO Exchange) --\n"
     sb ++= fmt(spark.table("links_by_dst").groupBy("dst").agg(count(lit(1)).as("in_deg")))

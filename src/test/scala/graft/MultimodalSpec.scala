@@ -1506,6 +1506,25 @@ class MultimodalSpec extends AnyFunSuite {
       strip.length, px.length).exists(_.sameElements(px)))
   }
 
+  test("LZW: one dictionary decodes a run of strips, rejected ones included, as a fresh one per strip does") {
+    val rnd = new scala.util.Random(11L)
+    val shared = new Lzw.Dictionary(Lzw.Tiff)
+    for (i <- 0 until 40) {
+      val n = Seq(1, 40, 700, 9000)(i % 4)
+      val data = Array.tabulate[Byte](n)(_ => (rnd.nextInt(if (i % 3 == 0) 256 else 9) * 29).toByte)
+      val enc = Lzw.encode(Lzw.Tiff, data)
+      assert(Lzw.decode(shared, enc, 0, enc.length, n).exists(_.sameElements(data)), s"strip $i")
+      // Corrupt copies, each decoded on the dictionary the one before left.
+      for (j <- 0 until 10) {
+        val bad = enc.clone()
+        val at = rnd.nextInt(bad.length)
+        bad(at) = (bad(at) ^ (1 << rnd.nextInt(8))).toByte
+        assert(Lzw.decode(shared, bad, 0, bad.length, n).map(_.toSeq) ===
+          Lzw.decode(Lzw.Tiff, bad, 0, bad.length, n).map(_.toSeq), s"strip $i, byte $at")
+      }
+    }
+  }
+
   test("GIF codec: multi-frame compose is pixel-exact incl. interlace, transparency, disposal") {
     val w = 20; val h = 14
     val f0 = Array.tabulate[Byte](w * h)(i => ((7 * (i % w) + 13 * (i / w)) % 256).toByte)

@@ -9,19 +9,23 @@ import org.apache.xbean.asm9.{ClassReader, ClassVisitor, Label, MethodVisitor, O
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every batch parquet read in `src/main` goes through
-  * [[graft.sources.ParquetSource]], whose footer read runs no Spark job.
-  * The check reads the compiled classes, not the source text, so an alias
-  * of a reader (`val r = s.read; r.parquet(p)`) is caught as well as a
-  * chained call. The one other call allowed is `s17_schema_evolution`'s
+  * [[graft.sources.ParquetSource]], whose footer read runs no Spark job,
+  * and every parquet read, batch or stream, names
+  * [[graft.sources.ParquetFormat]] (`format(...).load`) rather than
+  * Spark's own format (`.parquet`). The check reads the compiled classes,
+  * not the source text, so an alias of a reader
+  * (`val r = s.read; r.parquet(p)`) is caught as well as a chained call.
+  * The one `.parquet` read allowed is `s17_schema_evolution`'s
   * `mergeSchema` read, whose point is Spark's schema merge.
   */
 class OneReadPathSpec extends AnyFunSuite {
 
-  /** (source file, line) of every `DataFrameReader.parquet` call compiled
-    * into the classes under `root`.
+  /** (source file, line, method) of every `DataFrameReader` or
+    * `DataStreamReader` call named `parquet` or `load` compiled into the
+    * classes under `root`.
     */
-  private def parquetReads(root: Path): Seq[(String, Int)] = {
-    val calls = ArrayBuffer.empty[(String, Int)]
+  private def readerCalls(root: Path): Seq[(String, Int, String)] = {
+    val calls = ArrayBuffer.empty[(String, Int, String)]
     val classes = {
       val st = Files.walk(root)
       try st.iterator.asScala.filter(_.toString.endsWith(".class")).toVector finally st.close()
@@ -36,7 +40,9 @@ class OneReadPathSpec extends AnyFunSuite {
           override def visitLineNumber(l: Int, start: Label): Unit = line = l
           override def visitMethodInsn(op: Int, owner: String, name: String, desc: String,
               itf: Boolean): Unit =
-            if (name == "parquet" && owner.endsWith("/DataFrameReader")) calls += source -> line
+            if ((name == "parquet" || name == "load") &&
+                (owner.endsWith("/DataFrameReader") || owner.endsWith("/DataStreamReader")))
+              calls += ((source, line, s"${owner.split('/').last}.$name"))
         }
       }, 0)
     }
@@ -46,14 +52,18 @@ class OneReadPathSpec extends AnyFunSuite {
   test("src/main reads parquet only through ParquetSource, and merges schemas at one named site") {
     val root = Paths.get(classOf[graft.sources.ParquetSource.type].getProtectionDomain
       .getCodeSource.getLocation.toURI)
-    val calls = parquetReads(root)
+    val calls = readerCalls(root)
     val etl = Files.readAllLines(Paths.get("src/main/scala/graft/queries/Etl.scala")).asScala
     val mergeSite = etl.indexWhere(_.contains("""option("mergeSchema", "true")""")) + 1
     assert(mergeSite > 0, "the s17 mergeSchema read is gone from Etl.scala")
-    // Non-vacuous: the helper's own read and the merge read are both seen.
-    assert(calls.count(_._1 == "ParquetSource.scala") === 1, calls)
-    assert(calls.contains("Etl.scala" -> mergeSite), calls)
-    val stray = calls.filterNot(c => c._1 == "ParquetSource.scala" || c == ("Etl.scala" -> mergeSite))
-    assert(stray.isEmpty, s"parquet reads outside ParquetSource: ${stray.mkString(", ")}")
+    // Non-vacuous: the helper's own load and the merge read are both seen.
+    assert(calls.filter(_._1 == "ParquetSource.scala").map(_._3) === Seq("DataFrameReader.load"),
+      calls)
+    val merge = ("Etl.scala", mergeSite, "DataFrameReader.parquet")
+    assert(calls.contains(merge), calls)
+    val stray = calls.filter(c => c._3.endsWith(".parquet") && c != merge)
+    assert(stray.isEmpty, s"parquet reads outside ParquetFormat: ${stray.mkString(", ")}")
+    val batch = calls.filter(c => c._3 == "DataFrameReader.load" && c._1 != "ParquetSource.scala")
+    assert(batch.isEmpty, s"batch loads outside ParquetSource: ${batch.mkString(", ")}")
   }
 }
