@@ -36,15 +36,14 @@ object ExifCodec {
   private val TagOrientation = 0x0112
   private val TagDateTime = 0x0132
 
-  private def seg(marker: Int, payload: Array[Byte]): Array[Byte] =
-    ByteBuffer.allocate(4 + payload.length)
-      .put(0xff.toByte).put(marker.toByte)
-      .putShort((payload.length + 2).toShort).put(payload).array()
-
   /** JFIF APP0 segment (version 1.02, no thumbnail) with explicit
     * density fields.
     */
-  def jfifApp0(units: Int, xDensity: Int, yDensity: Int): Array[Byte] = {
+  def jfifApp0(units: Int, xDensity: Int, yDensity: Int): Array[Byte] =
+    JpegWriter.seg(0xe0, jfif(units, xDensity, yDensity))
+
+  /** The JFIF APP0 payload; [[MediaCodec.jpegHeader]] writes it too. */
+  private[multimodal] def jfif(units: Int, xDensity: Int, yDensity: Int): Array[Byte] = {
     require(units >= 0 && units <= 2)
     require(xDensity > 0 && xDensity <= 0xffff && yDensity > 0 && yDensity <= 0xffff)
     val p = ByteBuffer.allocate(14)
@@ -53,7 +52,7 @@ object ExifCodec {
     p.put(units.toByte)
     p.putShort(xDensity.toShort).putShort(yDensity.toShort)
     p.put(0.toByte).put(0.toByte) // no thumbnail
-    seg(0xe0, p.array())
+    p.array()
   }
 
   /** EXIF APP1 segment carrying an IFD0 with Make/Model/Orientation/
@@ -91,7 +90,7 @@ object ExifCodec {
     asciiEntry(TagDateTime, dt)
     t.putInt(0) // next IFD
     t.put(mk).put(0.toByte).put(md).put(0.toByte).put(dt).put(0.toByte)
-    seg(0xe1, "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ t.array())
+    JpegWriter.seg(0xe1, "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ t.array())
   }
 
   /** Parse an APP1 payload (past the 2-byte length field): "Exif\0\0"

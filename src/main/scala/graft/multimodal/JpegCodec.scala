@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import java.nio.ByteBuffer
+import JpegWriter.{Component, Huffman}
 
 /** Baseline JPEG codec (ITU-T T.81) — pure JVM, no codec libraries.
   * Completes the image-column decode story next to the PNG codec:
@@ -13,7 +13,11 @@ import java.nio.ByteBuffer
   * [[Multimodal.realJpegTable]]); interop with an independent codec
   * (the JDK's javax.imageio) is pinned in MultimodalSpec in both directions,
   * so encoder and decoder cannot be "self-consistently wrong" about zigzag
-  * order, Huffman canonicalization, or byte stuffing.
+  * order, Huffman canonicalization, or byte stuffing. Every encoder writes
+  * through [[JpegWriter]], the only JPEG writer, which owns segment
+  * framing, the table segments, restarts and entropy coding; an encoder
+  * supplies its segment order and tables, and progressive and lossless
+  * their scan script and predictor.
   *
   * Supported subset: 8-bit baseline sequential (SOF0) AND progressive
   * (SOF2, §G.2 — multi-scan spectral selection with end-of-band runs plus
@@ -67,13 +71,11 @@ object JpegCodec {
   // code order. Any canonical table is spec-legal (the DHT segment carries
   // it), but emitting the Annex K tables makes the fixture files what a
   // real encoder produces.
-  private val DcBits: Array[Int] =
-    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val DcVals: Array[Int] = (0 to 11).toArray
+  private val LumaDc = new Huffman(
+    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0), (0 to 11).toArray)
 
-  private val AcBits: Array[Int] =
-    Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d)
-  private val AcVals: Array[Int] = Array(
+  private val LumaAc = new Huffman(
+    Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d), Array(
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
     0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
     0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xa1, 0x08,
@@ -94,7 +96,7 @@ object JpegCodec {
     0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda, 0xe1, 0xe2,
     0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea,
     0xf1, 0xf2, 0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8,
-    0xf9, 0xfa)
+    0xf9, 0xfa))
 
   // Standard Huffman tables for chrominance, T.81 Annex K.3 (tables
   // K.4/K.6) — emitted by the color encoder for the Cb/Cr components so
@@ -102,13 +104,11 @@ object JpegCodec {
   // canonical table would be spec-legal (DHT carries it); the ImageIO
   // interop test cross-checks that the DHT we write matches the codes we
   // emit.
-  private val DcChromaBits: Array[Int] =
-    Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
-  private val DcChromaVals: Array[Int] = (0 to 11).toArray
+  private val ChromaDc = new Huffman(
+    Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0), (0 to 11).toArray)
 
-  private val AcChromaBits: Array[Int] =
-    Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77)
-  private val AcChromaVals: Array[Int] = Array(
+  private val ChromaAc = new Huffman(
+    Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77), Array(
     0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
     0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
     0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
@@ -129,7 +129,7 @@ object JpegCodec {
     0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda,
     0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9,
     0xea, 0xf2, 0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8,
-    0xf9, 0xfa)
+    0xf9, 0xfa))
 
   // Progressive AC scans need EOBn symbols (0x10..0xE0) that the Annex K
   // SEQUENTIAL tables do not contain — real progressive encoders always
@@ -137,27 +137,17 @@ object JpegCodec {
   // canonical over every symbol the progressive encoder can produce
   // (EOB0..EOB14, ZRL, every run/size pair with size ≤ 10); 176 codes of
   // length 8 leave the all-ones code word unassigned as T.81 §C.2 requires.
-  private val ProgAcBits: Array[Int] =
-    Array(0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val ProgAcVals: Array[Int] =
+  private val ProgAc = new Huffman(
+    Array(0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0, 0),
     ((0 to 14).map(_ << 4) ++ Seq(0xf0) ++
-      (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray
+      (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray)
 
-  /** Canonical Huffman code assignment (T.81 §C.2): symbols get
-    * consecutive codes within each length, lengths ascending. Returns
-    * symbol → (code, length).
-    */
-  private def canonicalCodes(bits: Array[Int], vals: Array[Int]): Map[Int, (Int, Int)] = {
-    var code = 0; var vi = 0
-    val out = Map.newBuilder[Int, (Int, Int)]
-    for (len <- 1 to 16) {
-      for (_ <- 0 until bits(len - 1)) {
-        out += vals(vi) -> (code, len); vi += 1; code += 1
-      }
-      code <<= 1
-    }
-    out.result()
-  }
+  // Frame components: Y (also the one gray component, and each CMYK
+  // channel under its own id) with Tq 0 and table pair 0; Cb and Cr with
+  // Tq 1 and table pair 1.
+  private val Y = Component(1, 1, 1, 0, 0, 0)
+  private val Cb = Component(2, 1, 1, 1, 1, 1)
+  private val Cr = Component(3, 1, 1, 1, 1, 1)
 
   /** Decode-side canonical table (T.81 §F.2.2.3 DECODE): per-length
     * min/max code and the index of the first value at each length.
@@ -182,68 +172,9 @@ object JpegCodec {
   }
 
   // ---------------------------------------------------------------- encode
-
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0; private var nbits = 0
-    def put(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((code >>> i) & 1); nbits += 1
-        if (nbits == 8) {
-          out.write(acc)
-          if (acc == 0xff) out.write(0x00) // byte stuffing (§B.1.1.5)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    /** Pad the final partial byte with 1-bits (§F.1.2.3). */
-    def flush(): Unit = if (nbits > 0) put(0x7f, 8 - nbits)
-  }
-
-  /** Magnitude category (SSSS) of a coefficient value: bit length of |v|. */
-  private def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-
-  /** Entropy-encode one quantized block (natural order) against a DC/AC
-    * code pair: differential DC (§F.1.2.1), run-length AC with ZRL/EOB
-    * (§F.1.2.2). Returns the new DC predictor. Baseline 8-bit caps the DC
-    * difference category at 11 (±2047) and AC categories at 10 (±1023) —
-    * out-of-range quantized coefficients (incl. Int.MinValue, whose abs
-    * overflow makes category = 32) must fail with a descriptive error
-    * here, not an opaque key-miss in the canonical code map (ADVICE r10).
-    */
-  private def encodeBlock(blk: Array[Int], label: String,
-      dcCodes: Map[Int, (Int, Int)], acCodes: Map[Int, (Int, Int)],
-      bits: BitWriter, dcPred: Int,
-      maxDcCat: Int = 11, maxAcCat: Int = 10): Int = {
-    val diff = blk(0) - dcPred
-    val s = category(diff)
-    require(s <= maxDcCat,
-      s"jpegEncode: DC difference $diff in block $label exceeds the process's range (category <= $maxDcCat)")
-    val (c, l) = dcCodes(s); bits.put(c, l)
-    if (s > 0) bits.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-    var run = 0
-    for (k <- 1 until 64) {
-      val v = blk(ZigZag(k))
-      if (v == 0) run += 1
-      else {
-        while (run > 15) { val (zc, zl) = acCodes(0xf0); bits.put(zc, zl); run -= 16 }
-        val sz = category(v)
-        require(sz <= maxAcCat,
-          s"jpegEncode: AC coefficient $v at zigzag $k in block $label exceeds the process's range (category <= $maxAcCat)")
-        val (ac, al) = acCodes((run << 4) | sz); bits.put(ac, al)
-        bits.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
-        run = 0
-      }
-    }
-    if (run > 0) { val (ec, el) = acCodes(0x00); bits.put(ec, el) } // EOB
-    blk(0)
-  }
-
-  private def seg(marker: Int, payload: Array[Byte]): Array[Byte] =
-    ByteBuffer.allocate(4 + payload.length)
-      .put(0xff.toByte).put(marker.toByte)
-      .putShort((payload.length + 2).toShort).put(payload).array()
+  // Every encoder below checks only what is its own; the DQT step range,
+  // the frame dimensions, the restart-interval range, the block counts and
+  // the category caps are checked once, by [[JpegWriter]].
 
   /** Encode a complete baseline grayscale JPEG from QUANTIZED coefficient
     * blocks (natural row-major order, 64 ints each; blocks in MCU scan
@@ -255,66 +186,10 @@ object JpegCodec {
     * tests can feed the output to an independent decoder.
     */
   def jpegEncode(w: Int, h: Int, qtabNatural: Array[Int],
-      coefBlocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
-    require(qtabNatural.length == 64 && qtabNatural.forall(q => q >= 1 && q <= 255))
-    require(restartInterval >= 0 && restartInterval <= 0xffff)
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    require(coefBlocks.length == bw * bh && coefBlocks.forall(_.length == 64))
-
-    val dqt = new Array[Byte](65)
-    dqt(0) = 0 // Pq=0 (8-bit), Tq=0
-    for (k <- 0 until 64) dqt(k + 1) = qtabNatural(ZigZag(k)).toByte
-
-    val sof = ByteBuffer.allocate(9)
-      .put(8.toByte).putShort(h.toShort).putShort(w.toShort) // P, Y, X
-      .put(1.toByte)                                         // Nf = 1
-      .put(1.toByte).put(0x11.toByte).put(0.toByte)          // id 1, 1x1, Tq 0
-      .array()
-
-    def dht(tc: Int, bits: Array[Int], vals: Array[Int]): Array[Byte] = {
-      val b = ByteBuffer.allocate(1 + 16 + vals.length)
-      b.put(((tc << 4) | 0).toByte) // Tc, Th=0
-      bits.foreach(n => b.put(n.toByte))
-      vals.foreach(v => b.put(v.toByte))
-      b.array()
-    }
-
-    val sos = Array[Byte](1, 1, 0x00, 0, 63, 0) // Ns=1, comp 1 → DC0/AC0, Ss, Se, AhAl
-
-    val dcCodes = canonicalCodes(DcBits, DcVals)
-    val acCodes = canonicalCodes(AcBits, AcVals)
-    val entropy = new java.io.ByteArrayOutputStream()
-    var bits = new BitWriter(entropy)
-    var dcPred = 0
-    coefBlocks.zipWithIndex.foreach { case (blk, mcu) =>
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        // Byte-align (pad with 1s), emit RSTn in sequence, reset the DC
-        // predictor (§F.1.2.3 / §E.2.4) — exercised by the decoder's
-        // restart-boundary path.
-        bits.flush()
-        entropy.write(0xff); entropy.write(0xd0 + ((mcu / restartInterval - 1) & 7))
-        bits = new BitWriter(entropy)
-        dcPred = 0
-      }
-      dcPred = encodeBlock(blk, mcu.toString, dcCodes, acCodes, bits, dcPred)
-    }
-    bits.flush()
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(seg(0xdb, dqt))
-    if (restartInterval > 0)
-      out.write(seg(0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte)))
-    out.write(seg(0xc0, sof))
-    out.write(seg(0xc4, dht(0, DcBits, DcVals)))
-    out.write(seg(0xc4, dht(1, AcBits, AcVals)))
-    out.write(seg(0xda, sos))
-    out.write(entropy.toByteArray)
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
-  }
+      coefBlocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] =
+    new JpegWriter().dqt(0, qtabNatural).dri(restartInterval)
+      .sof(0xc0, 8, w, h, Y).dht(0, 0, LumaDc).dht(1, 0, LumaAc)
+      .sequentialScan(Array(coefBlocks), 11, 10).eoi()
 
   /** Encode a complete baseline YCbCr color JPEG from QUANTIZED coefficient
     * blocks. Components: Y with sampling `lumaH`×`lumaV` (1×1 → 4:4:4,
@@ -337,90 +212,12 @@ object JpegCodec {
       lumaH: Int = 1, lumaV: Int = 1,
       restartInterval: Int = 0): Array[Byte] = {
     require(lumaH >= 1 && lumaH <= 2 && lumaV >= 1 && lumaV <= 2)
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
     require(w % (8 * lumaH) == 0 && h % (8 * lumaV) == 0,
       s"jpegEncodeColor is fixture-grade: dims ${w}x$h must be multiples of the ${8 * lumaH}x${8 * lumaV} MCU")
-    require(qLumaNatural.length == 64 && qLumaNatural.forall(q => q >= 1 && q <= 255))
-    require(qChromaNatural.length == 64 && qChromaNatural.forall(q => q >= 1 && q <= 255))
-    require(restartInterval >= 0 && restartInterval <= 0xffff)
-    val ybw = w / 8; val ybh = h / 8
-    val mcuW = w / (8 * lumaH); val mcuH = h / (8 * lumaV)
-    require(yBlocks.length == ybw * ybh && yBlocks.forall(_.length == 64))
-    require(cbBlocks.length == mcuW * mcuH && cbBlocks.forall(_.length == 64))
-    require(crBlocks.length == mcuW * mcuH && crBlocks.forall(_.length == 64))
-
-    def dqt(tq: Int, tab: Array[Int]): Array[Byte] = {
-      val p = new Array[Byte](65)
-      p(0) = tq.toByte // Pq=0 (8-bit), Tq
-      for (k <- 0 until 64) p(k + 1) = tab(ZigZag(k)).toByte
-      p
-    }
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Int]): Array[Byte] = {
-      val b = ByteBuffer.allocate(1 + 16 + vals.length)
-      b.put(((tc << 4) | th).toByte)
-      bits.foreach(n => b.put(n.toByte))
-      vals.foreach(v => b.put(v.toByte))
-      b.array()
-    }
-
-    val sof = ByteBuffer.allocate(15)
-      .put(8.toByte).putShort(h.toShort).putShort(w.toShort)  // P, Y, X
-      .put(3.toByte)                                          // Nf = 3
-      .put(1.toByte).put(((lumaH << 4) | lumaV).toByte).put(0.toByte) // Y
-      .put(2.toByte).put(0x11.toByte).put(1.toByte)           // Cb 1x1, Tq1
-      .put(3.toByte).put(0x11.toByte).put(1.toByte)           // Cr 1x1, Tq1
-      .array()
-    // Ns=3; per-component entropy selectors: Y → DC0/AC0, chroma → DC1/AC1.
-    val sos = Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)
-
-    val dcLum = canonicalCodes(DcBits, DcVals)
-    val acLum = canonicalCodes(AcBits, AcVals)
-    val dcChr = canonicalCodes(DcChromaBits, DcChromaVals)
-    val acChr = canonicalCodes(AcChromaBits, AcChromaVals)
-    val entropy = new java.io.ByteArrayOutputStream()
-    var bits = new BitWriter(entropy)
-    var dcY = 0; var dcCb = 0; var dcCr = 0
-    var mcu = 0
-    while (mcu < mcuW * mcuH) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bits.flush()
-        entropy.write(0xff); entropy.write(0xd0 + ((mcu / restartInterval - 1) & 7))
-        bits = new BitWriter(entropy)
-        dcY = 0; dcCb = 0; dcCr = 0
-      }
-      val mx = mcu % mcuW; val my = mcu / mcuW
-      var v = 0
-      while (v < lumaV) {
-        var hh = 0
-        while (hh < lumaH) {
-          val yb = (my * lumaV + v) * ybw + (mx * lumaH + hh)
-          dcY = encodeBlock(yBlocks(yb), s"Y$yb", dcLum, acLum, bits, dcY)
-          hh += 1
-        }
-        v += 1
-      }
-      dcCb = encodeBlock(cbBlocks(mcu), s"Cb$mcu", dcChr, acChr, bits, dcCb)
-      dcCr = encodeBlock(crBlocks(mcu), s"Cr$mcu", dcChr, acChr, bits, dcCr)
-      mcu += 1
-    }
-    bits.flush()
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(seg(0xdb, dqt(0, qLumaNatural)))
-    out.write(seg(0xdb, dqt(1, qChromaNatural)))
-    if (restartInterval > 0)
-      out.write(seg(0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte)))
-    out.write(seg(0xc0, sof))
-    out.write(seg(0xc4, dht(0, 0, DcBits, DcVals)))
-    out.write(seg(0xc4, dht(1, 0, AcBits, AcVals)))
-    out.write(seg(0xc4, dht(0, 1, DcChromaBits, DcChromaVals)))
-    out.write(seg(0xc4, dht(1, 1, AcChromaBits, AcChromaVals)))
-    out.write(seg(0xda, sos))
-    out.write(entropy.toByteArray)
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
+    new JpegWriter().dqt(0, qLumaNatural).dqt(1, qChromaNatural).dri(restartInterval)
+      .sof(0xc0, 8, w, h, Y.copy(h = lumaH, v = lumaV), Cb, Cr)
+      .dht(0, 0, LumaDc).dht(1, 0, LumaAc).dht(0, 1, ChromaDc).dht(1, 1, ChromaAc)
+      .sequentialScan(Array(yBlocks, cbBlocks, crBlocks), 11, 10).eoi()
   }
 
   /** Encode an Adobe 4-component CMYK baseline JPEG from quantized
@@ -440,77 +237,16 @@ object JpegCodec {
       blocks: Array[Array[Array[Int]]], restartInterval: Int = 0,
       colorTransform: Int = 0): Array[Byte] = {
     require(colorTransform == 0 || colorTransform == 2)
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
     require(w % 8 == 0 && h % 8 == 0,
       s"jpegEncodeCmyk is fixture-grade: dims ${w}x$h must be block-aligned")
-    require(qNatural.length == 64 && qNatural.forall(q => q >= 1 && q <= 255))
     require(blocks.length == 4)
-    require(restartInterval >= 0 && restartInterval <= 0xffff)
-    val nb = (w / 8) * (h / 8)
-    require(blocks.forall(cb => cb.length == nb && cb.forall(_.length == 64)))
-
-    val dqtPayload = {
-      val pl = new Array[Byte](65)
-      pl(0) = 0 // Pq=0, Tq=0
-      for (k <- 0 until 64) pl(k + 1) = qNatural(ZigZag(k)).toByte
-      pl
-    }
-    def dht(tc: Int, bits: Array[Int], vals: Array[Int]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(1 + 16 + vals.length)
-      bb.put((tc << 4).toByte)
-      bits.foreach(n => bb.put(n.toByte))
-      vals.foreach(v => bb.put(v.toByte))
-      bb.array()
-    }
-    val sof = ByteBuffer.allocate(6 + 3 * 4)
-      .put(8.toByte).putShort(h.toShort).putShort(w.toShort)
-      .put(4.toByte)
-      .put(1.toByte).put(0x11.toByte).put(0.toByte)
-      .put(2.toByte).put(0x11.toByte).put(0.toByte)
-      .put(3.toByte).put(0x11.toByte).put(0.toByte)
-      .put(4.toByte).put(0x11.toByte).put(0.toByte)
-      .array()
-    val sos = Array[Byte](4, 1, 0x00, 2, 0x00, 3, 0x00, 4, 0x00, 0, 63, 0)
     // APP14 "Adobe": version 100, flags 0/0, ColorTransform as given.
-    val adobe = Array[Byte]('A', 'd', 'o', 'b', 'e', 0, 100, 0, 0, 0, 0,
-      colorTransform.toByte)
-
-    val dc = canonicalCodes(DcBits, DcVals)
-    val ac = canonicalCodes(AcBits, AcVals)
-    val entropy = new java.io.ByteArrayOutputStream()
-    var bits = new BitWriter(entropy)
-    val dcPred = new Array[Int](4)
-    var mcu = 0
-    while (mcu < nb) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bits.flush()
-        entropy.write(0xff); entropy.write(0xd0 + ((mcu / restartInterval - 1) & 7))
-        bits = new BitWriter(entropy)
-        java.util.Arrays.fill(dcPred, 0)
-      }
-      var ci = 0
-      while (ci < 4) {
-        dcPred(ci) = encodeBlock(blocks(ci)(mcu), s"c$ci/$mcu", dc, ac, bits, dcPred(ci))
-        ci += 1
-      }
-      mcu += 1
-    }
-    bits.flush()
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8)
-    out.write(seg(0xee, adobe))
-    out.write(seg(0xdb, dqtPayload))
-    if (restartInterval > 0)
-      out.write(seg(0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte)))
-    out.write(seg(0xc0, sof))
-    out.write(seg(0xc4, dht(0, DcBits, DcVals)))
-    out.write(seg(0xc4, dht(1, AcBits, AcVals)))
-    out.write(seg(0xda, sos))
-    out.write(entropy.toByteArray)
-    out.write(0xff); out.write(0xd9)
-    out.toByteArray
+    new JpegWriter()
+      .segment(0xee, Array[Byte]('A', 'd', 'o', 'b', 'e', 0, 100, 0, 0, 0, 0, colorTransform.toByte))
+      .dqt(0, qNatural).dri(restartInterval)
+      .sof(0xc0, 8, w, h, (1 to 4).map(id => Y.copy(id = id)): _*)
+      .dht(0, 0, LumaDc).dht(1, 0, LumaAc)
+      .sequentialScan(blocks, 11, 10).eoi()
   }
 
   /** Encode a PROGRESSIVE (SOF2) JPEG from quantized coefficient blocks —
@@ -533,131 +269,22 @@ object JpegCodec {
       compBlocks: Array[Array[Array[Int]]]): Array[Byte] = {
     val nc = compBlocks.length
     require(nc == 1 || nc == 3)
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
     require(w % 8 == 0 && h % 8 == 0,
       s"jpegEncodeProgressive is fixture-grade: dims ${w}x$h must be block multiples")
-    require(qLumaNatural.length == 64 && qLumaNatural.forall(q => q >= 1 && q <= 255))
-    require(nc == 1 ||
-      (qChromaNatural.length == 64 && qChromaNatural.forall(q => q >= 1 && q <= 255)))
-    val nb = (w / 8) * (h / 8)
-    require(compBlocks.forall(cb => cb.length == nb && cb.forall(_.length == 64)))
-
-    def dqt(tq: Int, tab: Array[Int]): Array[Byte] = {
-      val p = new Array[Byte](65)
-      p(0) = tq.toByte
-      for (k <- 0 until 64) p(k + 1) = tab(ZigZag(k)).toByte
-      p
-    }
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Int]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(1 + 16 + vals.length)
-      bb.put(((tc << 4) | th).toByte)
-      bits.foreach(n => bb.put(n.toByte))
-      vals.foreach(v => bb.put(v.toByte))
-      bb.array()
-    }
-    val sof = {
-      val bb = ByteBuffer.allocate(6 + 3 * nc)
-      bb.put(8.toByte).putShort(h.toShort).putShort(w.toShort).put(nc.toByte)
-      for (i <- 0 until nc)
-        bb.put((i + 1).toByte).put(0x11.toByte).put((if (i == 0) 0 else 1).toByte)
-      bb.array()
-    }
-    val dcLum = canonicalCodes(DcBits, DcVals)
-    val dcChr = canonicalCodes(DcChromaBits, DcChromaVals)
-    val acProg = canonicalCodes(ProgAcBits, ProgAcVals)
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8)
-    out.write(seg(0xdb, dqt(0, qLumaNatural)))
-    if (nc == 3) out.write(seg(0xdb, dqt(1, qChromaNatural)))
-    out.write(seg(0xc2, sof))
-    out.write(seg(0xc4, dht(0, 0, DcBits, DcVals)))
-    out.write(seg(0xc4, dht(1, 0, ProgAcBits, ProgAcVals)))
-    if (nc == 3) out.write(seg(0xc4, dht(0, 1, DcChromaBits, DcChromaVals)))
-
-    // --- scan 1: DC, all components interleaved, Ss=Se=0, Ah=Al=0.
-    val sosDc = {
-      val bb = ByteBuffer.allocate(4 + 2 * nc)
-      bb.put(nc.toByte)
-      for (i <- 0 until nc)
-        bb.put((i + 1).toByte).put((if (i == 0) 0x00 else 0x11).toByte)
-      bb.put(0.toByte).put(0.toByte).put(0.toByte) // Ss=0, Se=0, AhAl=0
-      bb.array()
-    }
-    out.write(seg(0xda, sosDc))
-    locally {
-      val entropy = new java.io.ByteArrayOutputStream()
-      val bits = new BitWriter(entropy)
-      val pred = new Array[Int](nc)
-      var u = 0
-      while (u < nb) {
-        var ci = 0
-        while (ci < nc) {
-          val blk = compBlocks(ci)(u)
-          val diff = blk(0) - pred(ci); pred(ci) = blk(0)
-          val s = category(diff)
-          require(s <= 11, s"progressive DC diff $diff out of range in block $u comp $ci")
-          val (c, l) = (if (ci == 0) dcLum else dcChr)(s); bits.put(c, l)
-          if (s > 0) bits.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-          ci += 1
-        }
-        u += 1
+    val comps = Seq(Y, Cb, Cr).take(nc)
+    val jw = new JpegWriter().dqt(0, qLumaNatural)
+    if (nc == 3) jw.dqt(1, qChromaNatural)
+    jw.sof(0xc2, 8, w, h, comps: _*).dht(0, 0, LumaDc).dht(1, 0, ProgAc)
+    if (nc == 3) jw.dht(0, 1, ChromaDc)
+    // DC first: all components interleaved, Ss = Se = 0.
+    jw.mcuScan(comps, compBlocks, 0, 0)((i, blk, b) => jw.dc(i, blk(0), 11, b))
+    // Then per component the bands [1,5] and [6,63], every one coded in
+    // the shared progressive AC table (Ta = 0).
+    for (i <- 0 until nc; (ss, se) <- Seq((1, 5), (6, 63)))
+      jw.mcuScan(Seq(comps(i).copy(td = 0, ta = 0)), Array(compBlocks(i)), ss, se) {
+        (_, blk, b) => jw.band(0, blk, ss, se, 10, b)
       }
-      bits.flush()
-      out.write(entropy.toByteArray)
-    }
-
-    // --- AC band scans per component: [1,5] then [6,63], EOB-run coded.
-    // All AC scans select the shared progressive table (Ta = 0).
-    for (ci <- 0 until nc; (ss, se) <- Seq((1, 5), (6, 63))) {
-      val sosAc = Array[Byte](1, (ci + 1).toByte, 0x00, ss.toByte, se.toByte, 0)
-      out.write(seg(0xda, sosAc))
-      val entropy = new java.io.ByteArrayOutputStream()
-      val bits = new BitWriter(entropy)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun) // floor(log2)
-        val (c, l) = acProg(r << 4); bits.put(c, l)
-        if (r > 0) bits.put(eobrun - (1 << r), r)
-        eobrun = 0
-      }
-      var u = 0
-      while (u < nb) {
-        val blk = compBlocks(ci)(u)
-        var allZero = true
-        var k = ss
-        while (k <= se) { if (blk(ZigZag(k)) != 0) allZero = false; k += 1 }
-        if (allZero) {
-          eobrun += 1
-          if (eobrun == 0x7fff) flushEob() // EOBn caps at 2^14 range
-        } else {
-          flushEob()
-          var run = 0
-          k = ss
-          while (k <= se) {
-            val v = blk(ZigZag(k))
-            if (v == 0) run += 1
-            else {
-              while (run > 15) { val (zc, zl) = acProg(0xf0); bits.put(zc, zl); run -= 16 }
-              val s = category(v)
-              require(s <= 10, s"progressive AC coeff $v out of range in block $u comp $ci")
-              val (ac, al) = acProg((run << 4) | s); bits.put(ac, al)
-              bits.put(if (v < 0) v + (1 << s) - 1 else v, s)
-              run = 0
-            }
-            k += 1
-          }
-          if (run > 0) eobrun = 1 // zero tail of THIS band starts a new EOB run
-        }
-        u += 1
-      }
-      flushEob()
-      bits.flush()
-      out.write(entropy.toByteArray)
-    }
-
-    out.write(0xff); out.write(0xd9)
-    out.toByteArray
+    jw.eoi()
   }
 
   // ---------------------------------------------------------------- decode
@@ -1554,9 +1181,8 @@ object JpegCodec {
   // sequential DC table stops at 11, so lossless encoders always carry a
   // custom DHT; this canonical table is flat 5-bit over all 17 symbols
   // (codes 17..31, including all-ones, stay unassigned as §C.2 requires).
-  private val LosslessDcBits: Array[Int] =
-    Array(0, 0, 0, 0, 17, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val LosslessDcVals: Array[Int] = (0 to 16).toArray
+  private val LosslessDc = new Huffman(
+    Array(0, 0, 0, 0, 17, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), (0 to 16).toArray)
 
   /** Predictor (T.81 Table H.1, selectors 1..7) over reconstructed
     * point-transformed neighbours Ra (left), Rb (above), Rc (above-left).
@@ -1588,7 +1214,6 @@ object JpegCodec {
     */
   def jpegEncodeLossless(w: Int, h: Int, precision: Int, sel: Int, pt: Int,
       samples: Array[Int], restartInterval: Int = 0): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
     require(precision >= 2 && precision <= 16,
       s"jpegEncodeLossless: precision $precision outside 2..16")
     require(sel >= 1 && sel <= 7, s"jpegEncodeLossless: predictor $sel outside 1..7")
@@ -1599,43 +1224,19 @@ object JpegCodec {
     val maxV = (1 << precision) - 1
     require(samples.forall(v => v >= 0 && v <= maxV),
       s"jpegEncodeLossless: sample outside 0..$maxV")
+    // DHT: one DC-class table carrying the lossless category alphabet.
+    // SOF3: one 1×1-sampled component (Tq unused).
+    val jw = new JpegWriter().dht(0, 0, LosslessDc).dri(restartInterval)
+      .sof(0xc3, precision, w, h, Y)
+    // After the SOF, which has checked w > 0.
     require(restartInterval == 0 || restartInterval % w == 0,
       s"jpegEncodeLossless: restart interval $restartInterval not a multiple of line length $w")
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    // DHT: one DC-class table carrying the lossless category alphabet.
-    val dht = new java.io.ByteArrayOutputStream()
-    dht.write(0x00)
-    LosslessDcBits.foreach(dht.write)
-    LosslessDcVals.foreach(dht.write)
-    out.write(seg(0xc4, dht.toByteArray))
-    if (restartInterval > 0)
-      out.write(seg(0xdd, Array[Byte]((restartInterval >> 8).toByte, restartInterval.toByte)))
-    // SOF3: precision, dimensions, one 1×1-sampled component (Tq unused).
-    out.write(seg(0xc3, Array[Byte](precision.toByte,
-      (h >> 8).toByte, h.toByte, (w >> 8).toByte, w.toByte,
-      1, 1, 0x11, 0)))
-    // SOS: Ss = predictor selector, Se = 0, Ah = 0, Al = point transform.
-    out.write(seg(0xda, Array[Byte](1, 1, 0x00, sel.toByte, 0, pt.toByte)))
-
-    val codes = canonicalCodes(LosslessDcBits, LosslessDcVals)
     val defaultPred = 1 << (precision - pt - 1)
-    val pts = new Array[Int](samples.length) // point-transformed raster
-    var i = 0
-    while (i < samples.length) { pts(i) = samples(i) >>> pt; i += 1 }
-    val entropy = new java.io.ByteArrayOutputStream()
-    var bits = new BitWriter(entropy)
-    var segStart = 0 // linear index where the current restart segment began
-    var rstN = 0
-    i = 0
-    while (i < samples.length) {
-      if (restartInterval > 0 && i > 0 && i % restartInterval == 0) {
-        bits.flush()
-        entropy.write(0xff); entropy.write(0xd0 + (rstN & 7)); rstN += 1
-        bits = new BitWriter(entropy)
-        segStart = i
-      }
+    val pts = samples.map(_ >>> pt) // point-transformed raster
+    // SOS: Ss = predictor selector, Se = 0, Ah = 0, Al = point transform.
+    jw.scan(Seq(Y), sel, 0, pt, pts.length) { i =>
+      // Linear index where the current restart interval began.
+      val segStart = if (restartInterval > 0) i - i % restartInterval else 0
       val x = i % w; val y = i / w
       val pred =
         if (i == segStart) defaultPred
@@ -1643,19 +1244,8 @@ object JpegCodec {
         else if (x == 0) pts(i - w)            // line start: Rb
         else losslessPredict(sel, pts(i - 1), pts(i - w), pts(i - w - 1))
       val d16 = (pts(i) - pred) & 0xffff // difference modulo 2^16 (§H.1.2.1)
-      if (d16 == 0x8000) { val (c, l) = codes(16); bits.put(c, l) }
-      else {
-        val diff = if (d16 >= 0x8000) d16 - 0x10000 else d16
-        val s = category(diff)
-        val (c, l) = codes(s); bits.put(c, l)
-        if (s > 0) bits.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      }
-      i += 1
-    }
-    bits.flush()
-    out.write(entropy.toByteArray)
-    out.write(0xff); out.write(0xd9)
-    out.toByteArray
+      jw.diff(0, if (d16 >= 0x8000) d16 - 0x10000 else d16)
+    }.eoi()
   }
 
   /** The one scan of a LOSSLESS (SOF3) frame: per-sample Huffman
@@ -1728,14 +1318,12 @@ object JpegCodec {
   // canonical: 16 DC codes of length 5 (all-ones 31 unassigned per §C.2);
   // 226 AC codes of length 8 (EOB + ZRL + 16 runs × 14 sizes; all-ones
   // 255 unassigned).
-  private val Ext12DcBits: Array[Int] =
-    Array(0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val Ext12DcVals: Array[Int] = (0 to 15).toArray
-  private val Ext12AcBits: Array[Int] =
-    Array(0, 0, 0, 0, 0, 0, 0, 226, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val Ext12AcVals: Array[Int] =
+  private val Ext12Dc = new Huffman(
+    Array(0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), (0 to 15).toArray)
+  private val Ext12Ac = new Huffman(
+    Array(0, 0, 0, 0, 0, 0, 0, 226, 0, 0, 0, 0, 0, 0, 0, 0),
     (Seq(0x00, 0xf0) ++
-      (for (r <- 0 to 15; s <- 1 to 14) yield (r << 4) | s)).sorted.toArray
+      (for (r <- 0 to 15; s <- 1 to 14) yield (r << 4) | s)).sorted.toArray)
 
   /** Encode a complete 12-bit EXTENDED-SEQUENTIAL (SOF1, §B.2.2 with
     * P = 12) grayscale JPEG from QUANTIZED coefficient blocks — the
@@ -1745,59 +1333,10 @@ object JpegCodec {
     * categories ≤ 15 / AC ≤ 14. Quantization steps may exceed 255.
     */
   def jpegEncode12(w: Int, h: Int, qtabNatural: Array[Int],
-      coefBlocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
-    require(qtabNatural.length == 64 && qtabNatural.forall(q => q >= 1 && q <= 0xffff))
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    require(coefBlocks.length == bw * bh,
-      s"jpegEncode12: ${coefBlocks.length} blocks for ${w}x$h (want ${bw * bh})")
-    require(coefBlocks.forall(_.length == 64))
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    // DQT, Pq = 1 (16-bit values), zigzag order.
-    val dqt = new java.io.ByteArrayOutputStream()
-    dqt.write(0x10)
-    for (k <- 0 until 64) {
-      val v = qtabNatural(ZigZag(k)); dqt.write(v >> 8); dqt.write(v & 0xff)
-    }
-    out.write(seg(0xdb, dqt.toByteArray))
-    // SOF1, precision 12, one 1×1-sampled component.
-    out.write(seg(0xc1, Array[Byte](12,
-      (h >> 8).toByte, h.toByte, (w >> 8).toByte, w.toByte,
-      1, 1, 0x11, 0)))
-    def dht(cls: Int, bits: Array[Int], vals: Array[Int]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(cls << 4); bits.foreach(o.write); vals.foreach(o.write)
-      seg(0xc4, o.toByteArray)
-    }
-    out.write(dht(0, Ext12DcBits, Ext12DcVals))
-    out.write(dht(1, Ext12AcBits, Ext12AcVals))
-    if (restartInterval > 0)
-      out.write(seg(0xdd, Array[Byte]((restartInterval >> 8).toByte, restartInterval.toByte)))
-    out.write(seg(0xda, Array[Byte](1, 1, 0x00, 0, 63, 0)))
-
-    val dcCodes = canonicalCodes(Ext12DcBits, Ext12DcVals)
-    val acCodes = canonicalCodes(Ext12AcBits, Ext12AcVals)
-    val entropy = new java.io.ByteArrayOutputStream()
-    var bits = new BitWriter(entropy)
-    var dcPred = 0
-    var rstN = 0
-    for (i <- coefBlocks.indices) {
-      if (restartInterval > 0 && i > 0 && i % restartInterval == 0) {
-        bits.flush()
-        entropy.write(0xff); entropy.write(0xd0 + (rstN & 7)); rstN += 1
-        bits = new BitWriter(entropy)
-        dcPred = 0
-      }
-      dcPred = encodeBlock(coefBlocks(i), s"#$i", dcCodes, acCodes, bits,
-        dcPred, maxDcCat = 15, maxAcCat = 14)
-    }
-    bits.flush()
-    out.write(entropy.toByteArray)
-    out.write(0xff); out.write(0xd9)
-    out.toByteArray
-  }
+      coefBlocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] =
+    new JpegWriter().dqt(0, qtabNatural, pq = 1).sof(0xc1, 12, w, h, Y)
+      .dht(0, 0, Ext12Dc).dht(1, 0, Ext12Ac).dri(restartInterval)
+      .sequentialScan(Array(coefBlocks), 15, 14).eoi()
 
   /** Public extended-sequential (SOF1) decode keeping the full sample
     * width (precision 12, or 8 for a baseline-shaped SOF1 stream); None

@@ -623,27 +623,15 @@ object MediaCodec {
     Some(PngPixels(ow, oh, out))
   }
 
-  /** 39-byte JPEG prefix: SOI + JFIF APP0 (16-byte segment) + baseline
-    * SOF0 (8-bit precision, 3 components, height THEN width per T.81).
+  /** 39-byte JPEG prefix: SOI + JFIF APP0 (16-byte segment, version
+    * 1.02, no density units, 1:1) + baseline SOF0 (8-bit precision, 3
+    * components: Y 2×2 with Tq 0, Cb and Cr 1×1 with Tq 1).
     */
   def jpegHeader(w: Int, h: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
-    val b = ByteBuffer.allocate(39)
-    b.put(0xff.toByte).put(0xd8.toByte)                       // SOI
-    b.put(0xff.toByte).put(0xe0.toByte).putShort(16)          // APP0, len 16
-    b.put("JFIF".getBytes("US-ASCII")).put(0.toByte)          // identifier
-    b.put(1.toByte).put(2.toByte)                             // version 1.02
-    b.put(0.toByte)                                           // density units
-    b.putShort(1).putShort(1)                                 // x/y density
-    b.put(0.toByte).put(0.toByte)                             // no thumbnail
-    b.put(0xff.toByte).put(0xc0.toByte).putShort(17)          // SOF0, len 17
-    b.put(8.toByte)                                           // precision
-    b.putShort(h.toShort).putShort(w.toShort)                 // lines, samples
-    b.put(3.toByte)                                           // 3 components
-    b.put(1.toByte).put(0x22.toByte).put(0.toByte)            // Y  2x2 q0
-    b.put(2.toByte).put(0x11.toByte).put(1.toByte)            // Cb 1x1 q1
-    b.put(3.toByte).put(0x11.toByte).put(1.toByte)            // Cr 1x1 q1
-    b.array()
+    import JpegWriter.Component
+    new JpegWriter().segment(0xe0, ExifCodec.jfif(0, 1, 1))
+      .sof(0xc0, 8, w, h, Component(1, 2, 2, 0, 0, 0), Component(2, 1, 1, 1, 1, 1),
+        Component(3, 1, 1, 1, 1, 1)).bytes
   }
 
   private def be32(b: Array[Byte], off: Int): Int =

@@ -2501,4 +2501,148 @@ class MultimodalSpec extends AnyFunSuite {
       assert(st.max_lum === px.max, s"id=$id")
     }
   }
+
+  // Quantized blocks for the byte pins: sparse AC (ZRL runs, EOB, all-zero
+  // bands for progressive EOB runs), and blocks 0 and 1 carry a DC
+  // difference and AC values at the process's category caps.
+  private def pinBlocks(n: Int, seed: Long, dcMax: Int, acMax: Int): Array[Array[Int]] = {
+    val r = new scala.util.Random(seed)
+    Array.tabulate(n) { b =>
+      val c = new Array[Int](64)
+      c(0) = if (b < 2) (2 * b - 1) * dcMax else r.nextInt(2 * dcMax + 1) - dcMax
+      if (b < 2) { c(1) = -acMax; c(63) = acMax }
+      else if (r.nextInt(4) != 0)
+        for (k <- 1 until 64 if r.nextInt(5) == 0) c(k) = r.nextInt(2 * acMax + 1) - acMax
+      c
+    }
+  }
+
+  private def pinQuant(seed: Long, max: Int): Array[Int] = {
+    val r = new scala.util.Random(seed)
+    Array.fill(64)(1 + r.nextInt(max))
+  }
+
+  test("JPEG writer: every encoder and header builder emits its pinned bytes (SHA-256)") {
+    val q = pinQuant(1, 255); val qc = pinQuant(2, 255)
+    def gray(w: Int, h: Int, seed: Long) = pinBlocks(((w + 7) / 8) * ((h + 7) / 8), seed, 1023, 1023)
+    def color(w: Int, h: Int, lh: Int, lv: Int, ri: Int) = {
+      val nc = (w / (8 * lh)) * (h / (8 * lv))
+      JpegCodec.jpegEncodeColor(w, h, q, qc, gray(w, h, 3), pinBlocks(nc, 4, 1023, 1023),
+        pinBlocks(nc, 5, 1023, 1023), lumaH = lh, lumaV = lv, restartInterval = ri)
+    }
+    val lossRnd = new scala.util.Random(6)
+    def lossless(w: Int, h: Int, p: Int, sel: Int, pt: Int, ri: Int) =
+      JpegCodec.jpegEncodeLossless(w, h, p, sel, pt,
+        Array.fill(w * h)(lossRnd.nextInt(1 << p)), restartInterval = ri)
+    val q12 = pinQuant(7, 255); q12(0) = 1000; q12(9) = 65535
+    def cmyk(ct: Int, ri: Int) = JpegCodec.jpegEncodeCmyk(16, 24, q,
+      Array.tabulate(4)(c => pinBlocks(6, 10 + c, 1023, 1023)), ri, ct)
+    val cases: Seq[(String, () => Array[Byte])] = Seq(
+      "gray 16x16" -> (() => JpegCodec.jpegEncode(16, 16, q, gray(16, 16, 8))),
+      "gray 20x12 ri1" -> (() => JpegCodec.jpegEncode(20, 12, q, gray(20, 12, 9), 1)),
+      "gray 64x32 ri1" -> (() => JpegCodec.jpegEncode(64, 32, q, gray(64, 32, 9), 1)),
+      "gray 24x24 ri4" -> (() => JpegCodec.jpegEncode(24, 24, q, gray(24, 24, 9), 4)),
+      "color 1x1" -> (() => color(32, 32, 1, 1, 0)),
+      "color 1x1 ri3" -> (() => color(32, 32, 1, 1, 3)),
+      "color 2x1" -> (() => color(32, 32, 2, 1, 0)),
+      "color 2x1 ri1" -> (() => color(32, 32, 2, 1, 1)),
+      "color 1x2" -> (() => color(32, 32, 1, 2, 0)),
+      "color 1x2 ri2" -> (() => color(32, 32, 1, 2, 2)),
+      "color 2x2" -> (() => color(32, 48, 2, 2, 0)),
+      "color 2x2 ri1" -> (() => color(32, 48, 2, 2, 1)),
+      "progressive gray" -> (() => JpegCodec.jpegEncodeProgressive(16, 24, q, null,
+        Array(pinBlocks(6, 11, 1023, 1023)))),
+      "progressive color" -> (() => JpegCodec.jpegEncodeProgressive(24, 16, q, qc,
+        Array.tabulate(3)(c => pinBlocks(6, 12 + c, 1023, 1023)))),
+      // 32,768 blocks with all-zero AC: the EOB run reaches its 0x7FFF cap.
+      "progressive eob cap" -> (() => JpegCodec.jpegEncodeProgressive(2048, 1024, q, null,
+        Array(Array.tabulate(32768) { b => val c = new Array[Int](64); c(0) = b % 5; c }))),
+      "cmyk ct0" -> (() => cmyk(0, 0)),
+      "cmyk ct2 ri2" -> (() => cmyk(2, 2)),
+      "lossless p8 sel1" -> (() => lossless(9, 6, 8, 1, 0, 0)),
+      "lossless p8 sel2" -> (() => lossless(9, 6, 8, 2, 0, 0)),
+      "lossless p8 sel3" -> (() => lossless(9, 6, 8, 3, 0, 0)),
+      "lossless p8 sel4" -> (() => lossless(9, 6, 8, 4, 0, 0)),
+      "lossless p8 sel5" -> (() => lossless(9, 6, 8, 5, 0, 0)),
+      "lossless p8 sel6" -> (() => lossless(9, 6, 8, 6, 0, 0)),
+      "lossless p8 sel7" -> (() => lossless(9, 6, 8, 7, 0, 0)),
+      "lossless p2 sel7 pt1" -> (() => lossless(7, 5, 2, 7, 1, 0)),
+      "lossless p12 sel4 pt2 ri" -> (() => lossless(11, 7, 12, 4, 2, 11)),
+      "lossless p16 sel5 ri2w" -> (() => lossless(6, 9, 16, 5, 0, 12)),
+      "lossless ssss16" -> (() => JpegCodec.jpegEncodeLossless(4, 2, 16, 1, 0,
+        Array(0, 32768, 65535, 0, 65535, 1, 65534, 2))),
+      "12-bit" -> (() => JpegCodec.jpegEncode12(24, 16, q12, pinBlocks(6, 13, 16383, 16383))),
+      "12-bit ri3" -> (() => JpegCodec.jpegEncode12(24, 16, q12, pinBlocks(6, 14, 16383, 16383), 3)),
+      "jpegHeader 1024x768" -> (() => MediaCodec.jpegHeader(1024, 768)),
+      "jpegHeader 1x65535" -> (() => MediaCodec.jpegHeader(1, 65535)),
+      "jfifApp0 0" -> (() => graft.multimodal.ExifCodec.jfifApp0(0, 1, 1)),
+      "jfifApp0 2" -> (() => graft.multimodal.ExifCodec.jfifApp0(2, 300, 65535)),
+      "exifApp1 II" -> (() => graft.multimodal.ExifCodec.exifApp1("CAM1", "MODEL-2", 6,
+        "2024:01:02 03:04:05", true)),
+      "exifApp1 MM" -> (() => graft.multimodal.ExifCodec.exifApp1("Cam", "M", 1,
+        "1999:12:31 23:59:59", false)))
+    // SHA-256 of each call's output, taken before the encoders shared one
+    // writer; any change to a segment's order or bytes shows here.
+    val pinned = Map[String, String](
+      "gray 16x16" -> "02c2a4028eb465faf6c59b088304e5567d2e8c6e2a43403485e21471d1704571",
+      "gray 20x12 ri1" -> "645bc715b073181f83b9d3c240de174ec892790c098b100281c26a44777ab982",
+      "gray 64x32 ri1" -> "d9e0bd961b3774c999b1f3e818a047396c504ca65befc92366ed0292a8b98423",
+      "gray 24x24 ri4" -> "6433efdb4d66e32d1645566540f7fe3b2daf8bfa5bd2d7a0bb89b5a20c729e28",
+      "color 1x1" -> "78ea4d9864d4384c8678d07acb7be5feaaa66d1e5ecc5e7f89a1b14cf1903fe9",
+      "color 1x1 ri3" -> "02277e7c90937aaa7ad997812956bba8c6bd2910175589f311bd522b92c9af58",
+      "color 2x1" -> "b65fd4204d999ff2618ff897b395259400cb14742805706c30fbecb59bb81406",
+      "color 2x1 ri1" -> "5d20338ec9226888b0cc66d6d9b755a21a4928b753b68ceb87b40383a4961924",
+      "color 1x2" -> "f31ce0c04cfb3982d65499422a98471b80c201ff36599a49dd57fa1f9e4676fb",
+      "color 1x2 ri2" -> "7f9305f1b6cb23670fa86f9686897507e0e24a5ad99b9cde9f763dbcc5133f3e",
+      "color 2x2" -> "74f54544dca508b5381ca340287b877e5d3461a67cbc8fd71ea6aa12d268d42d",
+      "color 2x2 ri1" -> "e279c6d528d43ec60a7f729b86cdb65a309191da2d162d7ba1933683adae963d",
+      "progressive gray" -> "0a032551f07d641bc75cb843aa7d357445532aab7b7a53628333734299e410fa",
+      "progressive color" -> "15bb77d03906a7a2966a0bfcc02601f313523a4fdd2ffd067394f0d1958de763",
+      "progressive eob cap" -> "56563c48beb1b922ef371d0bc92db7859105d505b087edb4778f6bca5d53fcd2",
+      "cmyk ct0" -> "c8f532db972afe302e98892fe179a85b3501b9c8a062ba73c7dd59b19d9e3e1c",
+      "cmyk ct2 ri2" -> "5595dba1b1fb3d7d34786e18523b19802aa5b98df250ef581aebb209b93b3e8b",
+      "lossless p8 sel1" -> "aaab6e51f997093feba96dff55904fe9759927fd307b758d36c36511a7a129cb",
+      "lossless p8 sel2" -> "4bdf61aab1c9c23ca04588409150f42e03a123e5153378605d1b318dc8693bb4",
+      "lossless p8 sel3" -> "fa25bc21c2c0a1316b26454d439638582a30af7274b782a814471f9addd9b132",
+      "lossless p8 sel4" -> "e06ee83137bdd1b4ba6e4ffc59a8318cabcb133a1d26108d9a7c90535d0e5c37",
+      "lossless p8 sel5" -> "88fd5fbab85d015da4783d4caa1e5ffd9b53ed15f806727f2d26b38016f46534",
+      "lossless p8 sel6" -> "8112d12c0dbf9e457f01a899a1670499b632e502bf24a2938fdae13882f0fb5d",
+      "lossless p8 sel7" -> "a3fbe6864346c99ced24f4e31436dcde349bf69b139ee289cac72e0cee1173df",
+      "lossless p2 sel7 pt1" -> "a7844ca4fcdac26acae71f0877505f82a126e59cfccc3265aebb64fa313c5697",
+      "lossless p12 sel4 pt2 ri" -> "4b880bbf899bf55d6f7906ef2aa7b39ef0c6675ef1305cebecec81096fc34326",
+      "lossless p16 sel5 ri2w" -> "c81583415e248eb61c4b1fcbde39b4cc2f6e7a3bc5ff85a94aaddb383f994fb2",
+      "lossless ssss16" -> "3361142f2ee63bda444ffdc6bdb9f30278e5f149bedccd38028f9e1f6a79092d",
+      "12-bit" -> "d553f173652e43ad363e2fd0b7a0575dbba60b13cc1397efac4265eef012fe2a",
+      "12-bit ri3" -> "92ce28e3518231481127bea58275874c96e29e63ddf0476dcbba78bc49c0169b",
+      "jpegHeader 1024x768" -> "b444657206e92d88a7fd34d4ff7577f71ac04f3583a4e4fdecaea01c2fc9fb41",
+      "jpegHeader 1x65535" -> "38ddf9cff7fd6942356442c6c51ee9093740f6750daf687cfa21c45898aa990f",
+      "jfifApp0 0" -> "4ee93f04ce50acbb8abde17758e15ab55ac708c92dccaefb0c48f7c4a7a608bf",
+      "jfifApp0 2" -> "4af82d5d83aa2c7ef5dcb4558ab5354fd1a66f1d2ae8f72b0c923ddcbd9631e2",
+      "exifApp1 II" -> "913490407815b5fe76daf63616162efeaba3845914717d8c94fcf588720a64b2",
+      "exifApp1 MM" -> "1eb8d3bba8ccf62d5558623a148c421cc8fb76c55649acd6d796f861556ed591")
+    def sha(b: Array[Byte]) =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    val got = cases.map { case (name, f) => name -> sha(f()) }
+    val wrong = got.filter { case (name, h) => !pinned.get(name).contains(h) }
+    assert(wrong.isEmpty, wrong.map { case (n, h) => s"\"$n\" -> \"$h\"," }.mkString("\n", "\n", ""))
+  }
+
+  test("JPEG encoders reject a restart interval outside 0..0xFFFF instead of truncating its DRI") {
+    val q = Array.fill(64)(4)
+    val blocks = pinBlocks(4, 15, 100, 100)
+    for (ri <- Seq(0x10000, 0x10001, -1)) {
+      // Width 1 makes every interval a multiple of the line length, the
+      // lossless encoder's own restart rule.
+      val calls: Seq[(String, () => Array[Byte])] = Seq(
+        "baseline" -> (() => JpegCodec.jpegEncode(16, 16, q, blocks, ri)),
+        "color" -> (() => JpegCodec.jpegEncodeColor(16, 16, q, q, blocks, blocks, blocks,
+          restartInterval = ri)),
+        "cmyk" -> (() => JpegCodec.jpegEncodeCmyk(16, 16, q, Array.fill(4)(blocks), ri)),
+        "12-bit" -> (() => JpegCodec.jpegEncode12(16, 16, q, blocks, ri)),
+        "lossless" -> (() => JpegCodec.jpegEncodeLossless(1, 4, 8, 1, 0, Array(1, 2, 3, 4), ri)))
+      calls.foreach { case (name, f) =>
+        withClue(s"$name, interval $ri: ")(intercept[IllegalArgumentException](f()))
+      }
+    }
+  }
 }
